@@ -1,11 +1,13 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.expr.VectorCodec
 import graft.ledger.Ledger
 import graft.ml.{Chunker, Keywords, ModelRegistry, SdgClassifier}
+import graft.operators.ReleaseSlot
 import graft.schema.Warehouse.Step
 import graft.sinks.{CollectionRouter, Merge}
 
@@ -18,8 +20,54 @@ import graft.sinks.{CollectionRouter, Merge}
   * Each stage takes and returns DataFrames so the whole flow is testable
   * in-memory; Verify/production wire the same functions to parquet
   * tables.
+  *
+  * Shared stage frames: `vectorize`, `classify`, `keywords` and `sync`
+  * each persist the one frame their outputs share (the embedded slices,
+  * the binary-scored slices, the extracted keywords, the routed slices),
+  * so a stage's sink write, its ledger append and any count over them
+  * run the stage's lineage once. The frame stays cached until the next
+  * call of the same stage, which releases it through a [[ReleaseSlot]]
+  * (persist only, never a checkpoint: an output evaluated after the
+  * release recomputes from its lineage). The frame carries each
+  * selected document's latest `operation_order`, so the stage's
+  * `newStates` is a projection of it — one state per document at
+  * `prev + 1`, what [[Ledger.withNextOperationOrder]] gives for one new
+  * state per document — instead of the stage lineage again plus two
+  * shuffles over the whole ledger.
   */
 object Pipeline {
+
+  /** The selected document's latest ledger order, carried on a shared
+    * stage frame. */
+  private val PrevOrder = "__prev_order"
+
+  private val vectorizeSlot = ReleaseSlot()
+  private val classifySlot = ReleaseSlot()
+  private val keywordsSlot = ReleaseSlot()
+  private val syncSlot = ReleaseSlot()
+
+  /** Persist `frame` for this call of a stage, releasing the frame the
+    * stage's previous call persisted (swap first: the ReleaseSlot
+    * ordering contract). */
+  private def shared(slot: ReleaseSlot, frame: DataFrame): DataFrame = {
+    slot.swap(frame.sparkSession, () => { frame.unpersist(); () })
+    frame.persist(StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** Latest state per document among `steps`, with its order as
+    * [[PrevOrder]]. */
+  private def selectWithOrder(ledger: DataFrame,
+      steps: Seq[String]): DataFrame =
+    Ledger.selectByLastStep(ledger, steps)
+      .select(col("document_id"), col("operation_order").as(PrevOrder))
+
+  /** One new state per row of `perDocument` (one row per document), at
+    * the document's latest order + 1 (`coalesce(prev, 0) + 1`, as
+    * withNextOperationOrder). Columns: (document_id, title,
+    * operation_order). */
+  private def nextStates(perDocument: DataFrame, title: Column): DataFrame =
+    perDocument.select(col("document_id"), title.as("title"),
+      (coalesce(col(PrevOrder), lit(0L)) + 1L).as("operation_order"))
 
   /** Stage "generate_to_vectorize + document_vectorizer" (SURVEY §3.1,
     * reference DocumentVectorizer): select scraped docs (latest state ==
@@ -27,9 +75,13 @@ object Pipeline {
     * content, chunk + embed each document, emit (slices, newStates).
     *
     * Scale: selection is one window over the ledger; admission bounds the
-    * working set BEFORE the expensive chunk+embed; chunk+embed is
+    * working set BEFORE the expensive chunk+embed; the admitted batch is
+    * then spread over `spark.sql.shuffle.partitions` tasks (an explicit
+    * count, so AQE cannot coalesce the small batch back to the one
+    * partition the admission window leaves it in) and chunk+embed is
     * row-local (UDF + posexplode) — executors stream documents through
-    * with no shuffle after the initial repartition.
+    * with no shuffle after that repartition. The embedded slices are the
+    * stage's shared frame; newStates is one distinct over it.
     */
   def vectorize(documents: DataFrame, ledger: DataFrame,
       pickQtyMax: Int = 1000, byteCap: Long = 10000000000L,
@@ -38,18 +90,18 @@ object Pipeline {
     // modelName keys the executor-side ModelRegistry (stub-<dim>,
     // safetensors:<path>, ...); null falls back to the stub at embedDim.
     val model = Option(modelName).getOrElse(s"stub-$embedDim")
-    val selected = Ledger
-      .selectByLastStep(ledger, Seq(Step.DocumentScraped))
-      .select(col("document_id"), col("operation_order"))
+    val selected = selectWithOrder(ledger, Seq(Step.DocumentScraped))
     val candidates = documents.join(selected,
         documents("id") === selected("document_id"))
       .withColumn("content_bytes", octet_length(col("full_content")))
     val admitted = Ledger.byteCapAdmit(
       candidates,
-      Seq(col("operation_order").desc, col("document_id")),
+      Seq(col(PrevOrder).desc, col("document_id")),
       "content_bytes", byteCap, limitRows = pickQtyMax)
-    val slices = admitted
-      .select(col("id").as("document_id"),
+    val parts = documents.sparkSession.sessionState.conf.numShufflePartitions
+    val frame = shared(vectorizeSlot, admitted
+      .repartition(parts, col("id"))
+      .select(col("id").as("document_id"), col(PrevOrder),
         posexplode(Chunker.slices(col("full_content"), maxWordsPerSlice))
           .as(Seq("order_sequence", "body")))
       .withColumn("embedding_vec",
@@ -58,28 +110,27 @@ object Pipeline {
         VectorCodec.floatVectorToBytes(col("embedding_vec")))
       .withColumn("id",
         concat(col("document_id"), lit("#"), col("order_sequence")))
-      .withColumn("embedding_model_name", lit(model))
-    val newStates = Ledger.withNextOperationOrder(
-      slices.select("document_id").distinct()
-        .withColumn("title", lit(Step.DocumentVectorized)),
-      ledger)
-    (slices, newStates)
+      .withColumn("embedding_model_name", lit(model)))
+    val newStates = nextStates(frame.select("document_id", PrevOrder)
+      .distinct(), lit(Step.DocumentVectorized))
+    (frame.drop(PrevOrder), newStates)
   }
 
   /** Stage "document_classifier" (SURVEY §3, reference
     * DocumentClassifier): classify each vectorized document's slices,
     * split into sdg / non-sdg doc states (J6 anti-join semantics for the
-    * non-sdg side). */
+    * non-sdg side). The binary-scored slices are the stage's shared
+    * frame; the n-way scores and newStates both read it. */
   def classify(slices: DataFrame, ledger: DataFrame, biModel: DataFrame,
       nModel: DataFrame, forcedCol: Option[String] = None)
       : (DataFrame, DataFrame) = {
-    val vectorized = Ledger
-      .selectByLastStep(ledger, Seq(Step.DocumentVectorized))
-      .select(col("document_id"))
-    val inScope = slices.join(vectorized, Seq("document_id"), "left_semi")
+    val vectorized = selectWithOrder(ledger, Seq(Step.DocumentVectorized))
+    // an inner join keeps the semi-join's rows: one ledger row per doc
+    val inScope = slices.join(vectorized, Seq("document_id"))
       .withColumn("embedding_vec",
         VectorCodec.bytesToFloatVector(col("embedding")))
-    val bi = SdgClassifier.classifyBinary(inScope, biModel, "embedding_vec")
+    val bi = shared(classifySlot,
+      SdgClassifier.classifyBinary(inScope, biModel, "embedding_vec"))
     // forced docs (M5) bypass the binary gate like the reference's
     // forced-corpus/external-sdg branch
     val nInput = forcedCol match {
@@ -91,12 +142,10 @@ object Pipeline {
       nInput, nModel, "embedding_vec", "id", forcedCol)
     val sliceSdgs = n.select(col("id").as("slice_id"), col("document_id"),
       col("sdg_number"), col("n_score"), col("n_model_id"))
-    val docFlag = SdgClassifier.documentIsSdg(bi)
-    val newStates = Ledger.withNextOperationOrder(
-      docFlag.select(col("document_id"),
-        when(col("document_is_sdg"), lit(Step.DocumentClassifiedSdg))
-          .otherwise(lit(Step.DocumentClassifiedNonSdg)).as("title")),
-      ledger)
+    val docFlag = SdgClassifier.documentIsSdg(bi, carry = Seq(PrevOrder))
+    val newStates = nextStates(docFlag,
+      when(col("document_is_sdg"), lit(Step.DocumentClassifiedSdg))
+        .otherwise(lit(Step.DocumentClassifiedNonSdg)))
     (sliceSdgs, newStates)
   }
 
@@ -105,20 +154,19 @@ object Pipeline {
     * MMR-diverse keywords for classified-sdg documents, upsert the
     * keyword dimension insert-if-absent (J9 semantics —
     * Merge.insertIfAbsentDf), link doc->keyword, advance to
-    * document_with_keywords. Returns (keywordDim, docKeywordLinks,
-    * newStates). */
+    * document_with_keywords. The extracted keywords are the stage's
+    * shared frame. Returns (keywordDim, docKeywordLinks, newStates). */
   def keywords(documents: DataFrame, ledger: DataFrame,
       existingKeywords: DataFrame, embedDim: Int = 64)
       : (DataFrame, DataFrame, DataFrame) = {
-    val eligible = Ledger
-      .selectByLastStep(ledger, Seq(Step.DocumentClassifiedSdg))
-      .select(col("document_id"))
-    val extracted = documents
+    val eligible = selectWithOrder(ledger, Seq(Step.DocumentClassifiedSdg))
+    val extracted = shared(keywordsSlot, documents
       .join(eligible, documents("id") === eligible("document_id"))
-      .select(col("id").as("document_id"),
+      .select(col("id").as("document_id"), col(PrevOrder),
         explode(Keywords.extract(col("full_content"), embedDim, topN = 5))
           .as("kw"))
-      .select(col("document_id"), col("kw.keyword").as("keyword"))
+      .select(col("document_id"), col(PrevOrder),
+        col("kw.keyword").as("keyword")))
     // J9: insert-if-absent into the keyword dim, then surrogate join
     val newKeywords = Merge.insertIfAbsentDf(existingKeywords,
       extracted.select("keyword").distinct()
@@ -128,10 +176,11 @@ object Pipeline {
     val links = extracted.join(dim, "keyword")
       .select(col("document_id"), col("id").as("keyword_id"))
       .distinct()
-    val newStates = Ledger.withNextOperationOrder(
-      links.select("document_id").distinct()
-        .withColumn("title", lit(Step.DocumentWithKeywords)),
-      ledger)
+    // every non-null extracted keyword is in `dim`, so these are the
+    // documents with at least one link
+    val newStates = nextStates(extracted.where(col("keyword").isNotNull)
+      .select("document_id", PrevOrder).distinct(),
+      lit(Step.DocumentWithKeywords))
     (dim, links, newStates)
   }
 
@@ -140,26 +189,26 @@ object Pipeline {
     * top-2 SDG payload; rows that route nowhere go to the error channel
     * (reference None-collection bucket). Eligibility matches
     * generate_to_syncronize_batch.py:66-75: sdg docs arrive only AFTER
-    * the keywords stage. */
+    * the keywords stage. The joined slices with their routed collection
+    * are the stage's shared frame. */
   def sync(slices: DataFrame, documents: DataFrame, ledger: DataFrame,
       sliceSdgs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
-    val eligible = Ledger.selectByLastStep(ledger,
-        Seq(Step.DocumentWithKeywords, Step.DocumentClassifiedNonSdg,
-          Step.DocumentIsInvalid))
-      .select(col("document_id"))
+    val eligible = selectWithOrder(ledger,
+      Seq(Step.DocumentWithKeywords, Step.DocumentClassifiedNonSdg,
+        Step.DocumentIsInvalid))
     val top2 = SdgClassifier.topKSdgsPerDocument(sliceSdgs, 2)
     val enriched = slices
-      .join(eligible, Seq("document_id"), "left_semi")
+      .join(eligible, Seq("document_id"))
       .join(broadcast(documents.select(col("id").as("document_id"),
         col("url"), col("title"), col("lang"))), Seq("document_id"))
       .join(top2, Seq("document_id"), "left")
-    val (routable, errors) = CollectionRouter.route(
-      enriched, "lang", "embedding_model_name")
-    val newStates = Ledger.withNextOperationOrder(
-      routable.select("document_id").distinct()
-        .withColumn("title", lit(Step.DocumentInQdrant)),
-      ledger)
-    (routable, errors, newStates)
+    val routed = shared(syncSlot, enriched.withColumn("collection",
+      CollectionRouter.collectionFor(col("lang"),
+        col("embedding_model_name"))))
+    val (routable, errors) = CollectionRouter.split(routed)
+    val newStates = nextStates(routable.select("document_id", PrevOrder)
+      .distinct(), lit(Step.DocumentInQdrant))
+    (routable.drop(PrevOrder), errors.drop(PrevOrder), newStates)
   }
 
   /** Model-selection-as-data (reference J4/J5/M7:

@@ -92,10 +92,12 @@ object SdgClassifier {
 
   /** Doc-level SDG flag: a document is SDG iff ANY slice is (reference
     * A8: sdgs_classifiers.py:16-28, doc-level union
-    * document_classifier.py:129-155). */
+    * document_classifier.py:129-155). `carry` columns are kept
+    * alongside the key; they must be constant per document. */
   def documentIsSdg(slicesClassified: DataFrame,
-      docId: String = "document_id"): DataFrame =
-    slicesClassified.groupBy(docId)
+      docId: String = "document_id",
+      carry: Seq[String] = Nil): DataFrame =
+    slicesClassified.groupBy((docId +: carry).map(col): _*)
       .agg(max(when(col("is_sdg"), 1).otherwise(0)).cast("boolean")
         .as("document_is_sdg"))
 

@@ -90,6 +90,13 @@ object ModelRegistry extends Serializable {
       }
     })
 
+  /** Register (or replace) the backend for `modelName`. It must be
+    * registered in every JVM that runs tasks — in local mode, the
+    * application's own. */
+  def register(modelName: String, fn: EmbedFn): Unit = {
+    models.put(modelName, fn); ()
+  }
+
   /** Column form: embed `text` with the backend `modelName` resolves to.
     * Only the NAME is captured in the task closure — the model itself
     * loads lazily executor-side and stays JVM-resident. */

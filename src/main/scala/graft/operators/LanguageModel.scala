@@ -155,19 +155,23 @@ object LanguageModel {
   }
 
   /** Tokens -> space-joined consecutive pairs ("w1 w2"); tokens are
-    * whitespace-split so the single space is an unambiguous separator. */
-  private val bigramsUdf = udf { (ws: Seq[String]) =>
-    if (ws == null || ws.length < 2) Array.empty[String]
+    * whitespace-split so the single space is an unambiguous separator.
+    * Spark hands an array argument over as a `List` (linear `length`
+    * and `apply`), so it is copied to an array once: O(n), not O(n²). */
+  private[graft] def bigrams(tokens: Seq[String]): Array[String] =
+    if (tokens == null) Array.empty[String]
     else {
-      val out = new Array[String](ws.length - 1)
+      val ws = tokens.toArray
+      val out = new Array[String](math.max(ws.length - 1, 0))
       var i = 0
-      while (i < ws.length - 1) {
+      while (i < out.length) {
         out(i) = ws(i) + " " + ws(i + 1)
         i += 1
       }
       out
     }
-  }
+
+  private val bigramsUdf = udf(bigrams _)
 
   def bigramSurprisalBackoffScoped(docs: DataFrame, idCol: String,
       textCol: String, minCount: Long = 2L, backoff: Double = 0.4)

@@ -16,12 +16,23 @@ import org.apache.spark.sql.functions._
   */
 object CollectionRouter {
 
+  private val Upper = ('A' to 'Z').mkString
+  private val LowerAscii = ('a' to 'z').mkString
+
   /** Routing expression. `multilingualModels` mirrors the reference's
-    * model-name convention (models with "mul" in their lang tag). */
+    * model-name convention (models with "mul" in their lang tag).
+    *
+    * An all-ASCII name (as many UTF-8 bytes as characters) is lowercased
+    * with `translate(A-Z -> a-z)`, which is what `lower` does to ASCII;
+    * only other names go through `lower`, whose first call in a JVM
+    * initialises the ICU case mapping (over a second). */
   def collectionFor(lang: Column, modelName: Column,
       knownLangs: Seq[String] = Seq("en", "fr", "es", "de", "it", "pt"),
       multilingualMarker: String = "mul"): Column = {
-    val sanitizedModel = regexp_replace(lower(modelName), "[^a-z0-9]+", "_")
+    val lowered = when(octet_length(modelName) === length(modelName),
+        translate(modelName, Upper, LowerAscii))
+      .otherwise(lower(modelName))
+    val sanitizedModel = regexp_replace(lowered, "[^a-z0-9]+", "_")
     when(modelName.contains(multilingualMarker),
         concat(lit("collection_welearn_mul_"), sanitizedModel))
       .when(lang.isin(knownLangs.map(x => x: Any): _*),
@@ -46,12 +57,15 @@ object CollectionRouter {
 
   /** Split a routed frame into (routable, errorBucket). */
   def route(df: DataFrame, langCol: String, modelCol: String)
-      : (DataFrame, DataFrame) = {
-    val routed = df.withColumn("collection",
-      collectionFor(col(langCol), col(modelCol)))
+      : (DataFrame, DataFrame) =
+    split(df.withColumn("collection",
+      collectionFor(col(langCol), col(modelCol))))
+
+  /** Split a frame that already carries its `collection` column into
+    * (routable, errorBucket). */
+  def split(routed: DataFrame): (DataFrame, DataFrame) =
     (routed.where(col("collection").isNotNull),
       routed.where(col("collection").isNull).drop("collection"))
-  }
 
   /** Write one parquet dir per collection under `baseDir` (delete-then-
     * insert per document id happens upstream via Merge.replaceByKey; this

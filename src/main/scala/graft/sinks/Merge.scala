@@ -2,6 +2,8 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.storage.StorageLevel
 
 /** Warehouse writers with the reference's idempotency semantics
   * (SURVEY R9/S16-S18), re-expressed as set operations + partitioned
@@ -42,7 +44,8 @@ object Merge {
 
   /** S16 semantics, pure form: rows from `incoming` whose `key` is not
     * already in `existing`, de-duplicated within the batch (first by
-    * `orderCol` wins, deterministic). */
+    * `orderCol` wins, deterministic). The existing side needs no
+    * distinct: a left-anti join ignores duplicate keys. */
   def insertIfAbsentDf(existing: DataFrame, incoming: DataFrame,
       key: String, orderCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -50,7 +53,7 @@ object Merge {
     incoming
       .withColumn("__rn", row_number().over(w))
       .where(col("__rn") === 1).drop("__rn")
-      .join(existing.select(key).distinct(), Seq(key), "left_anti")
+      .join(existing.select(key), Seq(key), "left_anti")
   }
 
   /** S18 semantics, pure form: `table` with every row whose `key` appears
@@ -63,16 +66,40 @@ object Merge {
   }
 
   /** Disk form of insert-if-absent against a parquet table dir. Creates
-    * the table if missing. Returns the number of appended rows. */
+    * the table if missing. Returns the number of appended rows.
+    *
+    * One evaluation per append: the rows to write (the anti-join, or
+    * `incoming` for a new table) are persisted, counted, written only
+    * when there are any (so a no-new-rows append adds no file), and
+    * released before returning. A frame the caller already cached is
+    * used as is and left cached. The cached rows keep the partitioning
+    * they were computed with, which AQE cannot coalesce, so the write
+    * coalesces them to about one file per advisory partition size
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`) of cached data,
+    * as AQE would have. */
   def insertIfAbsent(spark: SparkSession, tableDir: String,
       incoming: DataFrame, key: String, orderCol: String): Long = {
     val (fs, tablePath) = hfs(spark, tableDir)
     val toWrite = if (fs.exists(tablePath)) {
       insertIfAbsentDf(spark.read.parquet(tableDir), incoming, key, orderCol)
     } else incoming
-    val n = toWrite.count()
-    if (n > 0) toWrite.write.mode(SaveMode.Append).parquet(tableDir)
-    n
+    val owned = toWrite.storageLevel == StorageLevel.NONE
+    if (owned) toWrite.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val n = toWrite.count()
+      if (n > 0) {
+        val qe = toWrite.queryExecution
+        val bytes = spark.sharedState.cacheManager
+          .lookupCachedData(qe.sparkSession, qe.analyzed)
+          .map(_.cachedRepresentation.stats.sizeInBytes)
+          .getOrElse(BigInt(Long.MaxValue))
+        val advisory = spark.sessionState.conf
+          .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+        val files = (bytes / advisory + 1).min(Int.MaxValue).toInt
+        toWrite.coalesce(files).write.mode(SaveMode.Append).parquet(tableDir)
+      }
+      n
+    } finally if (owned) toWrite.unpersist()
   }
 
   /** Disk form of delete-then-insert, keyed overwrite. The table is

@@ -302,8 +302,11 @@ object TxnLog {
       attempt += 1
       if (attempt > 50) throw new IllegalStateException(
         "txn commit: 50 consecutive version collisions")
-      validate(snapshot(tableDir))
+      // `next` first: the snapshot read after it holds every commit
+      // before `next`, so none of them escapes validation (read the
+      // other way round, a commit landing in between would)
       val next = latestVersion(tableDir).getOrElse(-1L) + 1
+      validate(snapshot(tableDir))
       val tmp = new Path(logDir(tableDir),
         s".commit-${java.util.UUID.randomUUID().toString.take(12)}.tmp")
       writeBytes(fs, tmp,

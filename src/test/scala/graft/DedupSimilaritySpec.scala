@@ -932,6 +932,27 @@ class DedupSimilaritySpec extends SparkSuite {
       docs, "doc_id", "text", minCount = 100L).count() === 0L)
   }
 
+  test("LM bigrams: a 20k-token document, passed as the List Spark " +
+      "hands a UDF, yields every consecutive pair in order") {
+    val s = initSpark()
+    import s.implicits._
+    import graft.operators.LanguageModel
+    val n = 20000
+    val tokens = List.tabulate(n)(i => s"t$i")
+    val out = LanguageModel.bigrams(tokens)
+    assert(out.length === n - 1)
+    assert(out.indices.forall(i => out(i) == s"t$i t${i + 1}"))
+    assert(LanguageModel.bigrams(List("solo")).isEmpty)
+    assert(LanguageModel.bigrams(Nil).isEmpty)
+    assert(LanguageModel.bigrams(null).isEmpty)
+    // through Spark: same pairs, same order
+    val bigramsUdf = udf(LanguageModel.bigrams _)
+    val viaSpark = Seq(tokens.mkString(" ")).toDF("text")
+      .select(bigramsUdf(split(col("text"), " ")))
+      .head().getSeq[String](0)
+    assert(viaSpark === out.toSeq)
+  }
+
   test("fast LM scorers equal the oracled relational forms " +
       "bit-for-bit (broadcast model, zero scoring exchanges)") {
     val s = initSpark()

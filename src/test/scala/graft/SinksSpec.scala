@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.sinks.{CollectionRouter, Merge}
@@ -105,6 +106,41 @@ class SinksSpec extends SparkSuite {
     assert(m("d2") === "collection_welearn_fr_stub_64")
     assert(m("d4") === "collection_welearn_mul_granite_mul_107m")
     assert(errors.collect().map(_.getString(0)).toSeq === Seq("d3"))
+  }
+
+  test("collection routing lowercases ASCII names without lower() and " +
+      "matches the lower() form on every name") {
+    val s = initSpark()
+    import s.implicits._
+    // the routing expression as it was, with lower() on every name
+    def viaLower(lang: Column, model: Column): Column = {
+      val sanitized = regexp_replace(lower(model), "[^a-z0-9]+", "_")
+      when(model.contains("mul"),
+          concat(lit("collection_welearn_mul_"), sanitized))
+        .when(lang.isin("en", "fr", "es", "de", "it", "pt"),
+          concat(lit("collection_welearn_"), lang, lit("_"), sanitized))
+        .otherwise(lit(null))
+    }
+    val names = Seq("stub-64", "MiniLM-L6-v2", "safetensors:/m/Stack.ST",
+      "granite-MUL-107m", "Modèle-Été", "ÉCOLE mul", "İstanbul-BERT",
+      "\u212Aelvin-Model", "straße", "ALL_CAPS_Z9", "", null)
+    val df = for (lang <- Seq("en", "xx"); m <- names) yield (lang, m)
+    val routed = df.toDF("lang", "model").select(
+      col("lang"), col("model"),
+      CollectionRouter.collectionFor(col("lang"), col("model")).as("now"),
+      viaLower(col("lang"), col("model")).as("before"))
+      .collect()
+    assert(routed.length === 24)
+    routed.foreach { r =>
+      assert(r.get(2) == r.get(3), s"${r.get(1)} / ${r.get(0)}")
+    }
+    val got = routed.map(r => (r.getString(0), r.getString(1)) -> r.get(2))
+      .toMap
+    assert(got(("en", "MiniLM-L6-v2")) ===
+      "collection_welearn_en_minilm_l6_v2")
+    // Kelvin sign lowercases to ASCII k
+    assert(got(("en", "\u212Aelvin-Model")) ===
+      "collection_welearn_en_kelvin_model")
   }
 
   test("catalog routing: multilingual wins, else mono, else error (S19)") {
