@@ -1,71 +1,163 @@
 package graft
+import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import scala.collection.mutable
+
+/** The query harness, on the engine's GraftSession (local[SPARK_GRAFT_CPUS],
+  * default 32):
+  *
+  *   Bench                                      timed suite, JSON lines
+  *   Bench plan <sfDir> <outDir> <suffix> [only] formatted plans
+  *   Bench profile <query> [sfDir] [warmReps]   per-job breakdown
+  *
+  * `only` is a comma-separated list of name prefixes, and
+  * SPARK_GRAFT_BENCH_ONLY the same filter for the suite; `query` is one
+  * exact query name.
+  */
 object Bench {
+  private type Query = (SparkSession, String) => DataFrame
+  private val defaultSf = "/root/testdata/sf0.1"
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // 63 queries x several codegen stages each blow through the
-      // default 100-entry Janino class cache, so the warm-up pass's
-      // compiled classes are evicted before the measured pass reaches
-      // them (q21 re-paid ~6s of compilation in round 2's bench)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val mode: SparkSession => Unit = args.toList match {
+      case Nil => suite
+      case "plan" :: sfDir :: outDir :: suffix :: only =>
+        plan(_, sfDir, outDir, suffix, only.headOption)
+      case "profile" :: query :: rest =>
+        val fn = SparkEntry.queries.getOrElse(query,
+          throw new IllegalArgumentException(s"unknown query: $query"))
+        profile(_, query, fn, rest.headOption.getOrElse(defaultSf),
+          rest.lift(1).fold(2)(_.toInt))
+      case _ => throw new IllegalArgumentException(
+        "usage: Bench | Bench plan <sfDir> <outDir> <suffix> [only] | " +
+          "Bench profile <query> [sfDir] [warmReps]")
+    }
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try mode(spark) finally spark.stop()
+  }
+
+  /** Declared queries in name order (a deterministic execution sequence
+    * run-to-run), restricted to the comma-separated name prefixes in
+    * `only` when given; a filter that selects nothing is an error. */
+  private def selected(only: Option[String]): Seq[(String, Query)] = {
+    val prefixes = only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val picked = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => prefixes.forall(_.exists(n.startsWith)) }
+    require(picked.nonEmpty, s"no query matches ${only.getOrElse("")}")
+    picked
+  }
+
+  // Watchdog-guarded rep — the SHARED ScaleProof.timedBody behind
+  // every rep of every mode (round-18 review, twice over: a hung query
+  // used to block an unguarded count() forever and lose the WHOLE
+  // artifact, and the first fix re-implemented the watchdog instead of
+  // sharing it). The job group is cancelled after
+  // SPARK_GRAFT_BENCH_TIMEOUT seconds (default 120, an order of
+  // magnitude above any sf0.1 query) and the rep records as failed (-1
+  // sentinel downstream) WITH its reason ("timeout" vs the exception
+  // class) — a 120 s hang and an instant analysis error are different
+  // regressions.
+  private lazy val timeoutSec = sys.env.get("SPARK_GRAFT_BENCH_TIMEOUT")
+    .flatMap(_.trim.toIntOption).getOrElse(120).max(1)
+
+  private def timedRep(spark: SparkSession, label: String)(body: => Unit)
+      : (Double, Boolean, String) = {
+    val t0 = System.nanoTime()
+    graft.jobs.ScaleProof.timedBody(spark, label, timeoutSec) {
+      body; 0L
+    } match {
+      case Right((_, sec)) => (sec, true, null)
+      case Left(reason) =>
+        ((System.nanoTime() - t0) / 1e9, false, reason)
+    }
+  }
+
+  /** `.explain("formatted")` of every selected query into
+    * `<outDir>/<query><suffix>.txt` — the plan evidence committed under
+    * plans/. Plans are captured WITHOUT executing the query (initial AQE
+    * plan); queries that execute eagerly inside their body (q76/q81
+    * plan-asserts) still run, as declared. */
+  private def plan(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, only: Option[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    selected(only).foreach { case (name, fn) =>
+      try {
+        val txt = fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode)
+        Files.write(Paths.get(outDir, s"$name$suffix.txt"),
+          txt.getBytes("UTF-8"))
+        println(s"[plan] $name ok")
+      } catch { case e: Exception =>
+        System.err.println(s"[plan] $name FAILED: $e")
+      }
+    }
+  }
+
+  /** Per-job breakdown of one warm rep of a query: at sf0.1 the heavy
+    * queries are many-job pipelines (census actions, persist
+    * materializations, AQE stages), and the bench number is the sum of
+    * those jobs plus the driver gaps between them. */
+  private def profile(spark: SparkSession, name: String, fn: Query,
+      sfDir: String, warmReps: Int): Unit = {
+    (1 to warmReps).foreach { i =>
+      val (sec, ok, reason) =
+        timedRep(spark, s"$name-warm$i") { fn(spark, sfDir).count(); () }
+      println(f"[profile] $name warm rep$i: $sec%.3f s" +
+        (if (ok) "" else s" FAILED:$reason"))
+    }
+    val profiler = new JobProfiler
+    spark.sparkContext.addSparkListener(profiler)
+    var rows = -1L
+    val (wall, ok, reason) = timedRep(spark, name) {
+      // the jobs keep the watchdog's group but not its description,
+      // so each is labelled by the call that launched it
+      spark.sparkContext.setJobDescription(null)
+      rows = fn(spark, sfDir).count()
+    }
+    org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(profiler)
+    println(f"[profile] $name measured: $rows rows, $wall%.3f s, " +
+      s"${profiler.jobs.size} jobs" + (if (ok) "" else s" FAILED:$reason"))
+    profiler.jobs.foreach { j =>
+      println(f"[profile] job ${j.id}%3d ${j.sec}%7.3f s " +
+        f"gap=${j.gapSec}%6.3f s stages=${j.stages}%2d " +
+        f"tasks=${j.tasks}%4d shufW=${j.shuffleWrite / 1048576.0}%8.2fMB " +
+        f"shufR=${j.shuffleRead / 1048576.0}%8.2fMB ${j.label.take(90)}")
+    }
+    val jobSum = profiler.jobs.map(_.sec).sum
+    val busy = profiler.jobs.map(_.busySec).sum
+    println(f"[profile] job-sum=$jobSum%.3f s  jobs-running=$busy%.3f s  " +
+      f"driver-only=${wall - busy}%.3f s")
+  }
+
+  /** The timed suite: the driver contract (stdout JSON lines plus
+    * SPARK_GRAFT_BENCH_OUT, default bench_summary.json). */
+  private def suite(spark: SparkSession): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSf)
     // Warm-up pass at the smallest scale factor: identical plans compile
     // identical generated code, so Janino's cache + the JIT are hot when
     // the measured run starts. Measures engine throughput, not compiler
     // cold-start (plan-compile cost is amortized over a real deployment's
     // job lifetime).
-    // fixed name order: deterministic execution sequence run-to-run
-    // (Map iteration order varies with hashing and would otherwise move
-    // JIT/GC noise between queries across rounds)
     // SPARK_GRAFT_BENCH_ONLY=q83,q86 runs just the named prefixes —
     // iteration aid; the driver never sets it, so round artifacts
     // always cover the full suite
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-    // Watchdog-guarded rep — the SHARED ScaleProof.timedBody behind
-    // the warm-up, the sweep, and the fenced warm pass (round-18
-    // review, twice over: a hung query used to block an unguarded
-    // count() forever and lose the WHOLE artifact, and the first fix
-    // re-implemented the watchdog instead of sharing it). The job
-    // group is cancelled after SPARK_GRAFT_BENCH_TIMEOUT seconds
-    // (default 120, an order of magnitude above any sf0.1 query) and
-    // the rep records as failed (-1 sentinel downstream) WITH its
-    // reason ("timeout" vs the exception class) — a 120 s hang and an
-    // instant analysis error are different regressions.
-    val timeoutSec = sys.env.get("SPARK_GRAFT_BENCH_TIMEOUT")
-      .flatMap(_.trim.toIntOption).getOrElse(120).max(1)
-    def timedRep(label: String)(body: => Unit)
-        : (Double, Boolean, String) = {
-      val t0 = System.nanoTime()
-      graft.jobs.ScaleProof.timedBody(spark, label, timeoutSec) {
-        body; 0L
-      } match {
-        case Right((_, sec)) => (sec, true, null)
-        case Left(reason) =>
-          ((System.nanoTime() - t0) / 1e9, false, reason)
-      }
-    }
-    def timedReps(name: String, fn: (SparkSession, String) => DataFrame,
-        n: Int): Seq[(Double, Boolean, String)] =
+    val ordered = selected(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+    def timedReps(name: String, fn: Query, n: Int)
+        : Seq[(Double, Boolean, String)] =
       (0 until n).map(_ =>
-        timedRep(name) { fn(spark, sfDir).count(); () })
+        timedRep(spark, name) { fn(spark, sfDir).count(); () })
     def repsStr(timed: Seq[(Double, Boolean, String)]): String =
       timed.map { case (t, ok, reason) =>
         f"$t%.3f" + (if (ok) "" else s"(FAILED:$reason)") }
         .mkString(",")
     val warmDir = "/root/testdata/sf0.001"
     ordered.foreach { case (name, fn) =>
-      timedRep(s"$name-warmup") { fn(spark, warmDir).count(); () }
+      timedRep(spark, s"$name-warmup") { fn(spark, warmDir).count(); () }
     }
     // Repeated-min measurement: each query runs `reps` times back-to-back
     // and reports the minimum. A single-shot pass conflates engine
@@ -88,7 +180,7 @@ object Bench {
       // first-execution JIT for the replanned stages — round 9 saw
       // spreads of 2.3-2.8 on q108/q84 from exactly that. Warming at
       // sfDir makes every timed rep a steady-state measurement.
-      timedRep(s"$name-rewarm") { fn(spark, sfDir).count(); () }
+      timedRep(spark, s"$name-rewarm") { fn(spark, sfDir).count(); () }
       // GC fence: garbage from the previous query's executions (and
       // the warm rep above) otherwise lands as a collection pause
       // inside a RANDOM later query's timed rep — q123 measured spread
@@ -245,10 +337,89 @@ object Bench {
       s""","max_spread":${fmt(maxSpread)},"spread":$spreadJson,"warm":$warmJson,"rep_errs":$repErrsJson,"reps_sec":$repsJson}"""
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       "bench_summary.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (fileLine + "\n").getBytes("UTF-8"))
+    try Files.write(Paths.get(out), (fileLine + "\n").getBytes("UTF-8"))
     catch { case e: java.io.IOException =>
       System.err.println(s"bench summary write failed: $e") }
-    spark.stop()
   }
+}
+
+/** Per-job breakdown from listener events: wall time, the gap since
+  * the last earlier job ended, stages, tasks and shuffle bytes. A
+  * job is labelled by its `spark.job.description`, else by the call
+  * site of the action behind it: its SQL execution's description
+  * (Spark names an execution after the action's call site, and AQE
+  * stage jobs, launched from other threads, share it), else its
+  * result stage's name. That names the operator line each job serves.
+  * A retried stage completes once per attempt; its figures come from
+  * its last completed attempt only. */
+private[graft] class JobProfiler extends SparkListener {
+  import JobProfiler._
+  private val started = mutable.LinkedHashMap[Int, (String, Long)]()
+  private val ended = mutable.HashMap[Int, Long]()
+  private val stageJob = mutable.HashMap[Int, Int]()
+  private val lastAttempt = mutable.HashMap[Int, Attempt]()
+  private val executions = mutable.HashMap[Long, String]()
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    def prop(k: String) = Option(e.properties).flatMap(p =>
+      Option(p.getProperty(k)))
+    val label = prop("spark.job.description")
+      .orElse(prop("spark.sql.execution.id")
+        .flatMap(id => executions.get(id.toLong)))
+      .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
+      .getOrElse("")
+    started(e.jobId) = (label, e.time)
+    e.stageIds.foreach(stageJob(_) = e.jobId)
+  }
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    ended(e.jobId) = e.time
+  }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case x: SparkListenerSQLExecutionStart => synchronized {
+      executions(x.executionId) = x.description
+    }
+    case _ =>
+  }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    synchronized {
+      val s = e.stageInfo
+      if (lastAttempt.get(s.stageId).forall(_.attempt <= s.attemptNumber())) {
+        val m = Option(s.taskMetrics)
+        lastAttempt(s.stageId) = Attempt(stageJob.getOrElse(s.stageId, -1),
+          s.attemptNumber(), s.numTasks,
+          m.fold(0L)(_.shuffleWriteMetrics.bytesWritten),
+          m.fold(0L)(_.shuffleReadMetrics.totalBytesRead))
+      }
+    }
+
+  /** Jobs in start order, each with its completed stages. AQE runs
+    * independent stages as concurrent jobs, so a job's gap counts from
+    * the latest end of any earlier job, and its busy time is the part of
+    * its run no earlier job covers: the busy times sum to the time some
+    * job was running. */
+  def jobs: Seq[Job] = synchronized {
+    val byJob = lastAttempt.values.groupBy(_.job)
+    var lastEnd = -1L
+    started.toSeq.map { case (id, (label, t0)) =>
+      val t1 = ended.getOrElse(id, t0)
+      val gap = if (lastEnd > 0) (t0 - lastEnd).max(0L) / 1e3 else 0.0
+      val busy = (t1 - t0.max(lastEnd)).max(0L) / 1e3
+      lastEnd = lastEnd.max(t1)
+      val st = byJob.getOrElse(id, Nil)
+      Job(id, label, (t1 - t0) / 1e3, gap, busy, st.size,
+        st.map(_.tasks).sum, st.map(_.shuffleWrite).sum,
+        st.map(_.shuffleRead).sum)
+    }
+  }
+}
+
+private[graft] object JobProfiler {
+  private case class Attempt(job: Int, attempt: Int, tasks: Int,
+    shuffleWrite: Long, shuffleRead: Long)
+  case class Job(id: Int, label: String, sec: Double, gapSec: Double,
+    busySec: Double, stages: Int, tasks: Int, shuffleWrite: Long,
+    shuffleRead: Long)
 }

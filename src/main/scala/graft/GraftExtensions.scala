@@ -13,9 +13,7 @@ import graft.expr.{BytesToFloatVector, CosineSimF32, DotF32,
   * expressions, making them first-class SQL functions:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)
-  *   ...
+  * val spark = GraftSession.builder("local[*]").getOrCreate() // installs them
   * spark.sql("SELECT cosine_f32(a.embedding, b.embedding) FROM ...")
   * }}}
   *
@@ -123,10 +121,12 @@ object GraftFunctions {
   }
 }
 
-/** Recommended session defaults for this engine (local + cluster): AQE
-  * with skew handling, right-sized shuffle parallelism, partition-size
-  * caps that keep 100-TB scans within executor memory, and the graft SQL
-  * functions registered. */
+/** The engine's one session factory (local + cluster), used by every
+  * main, the test suites and the benchmark: AQE with skew handling,
+  * right-sized shuffle parallelism, partition-size caps that keep 100-TB
+  * scans within executor memory, and the graft SQL functions and
+  * optimizer rule installed. Callers add only what is theirs (a state
+  * store provider) on the returned builder. */
 object GraftSession {
   def builder(master: String = "local[*]",
       shufflePartitions: Int = 32): SparkSession.Builder =
@@ -140,4 +140,9 @@ object GraftSession {
       .config("spark.sql.files.maxPartitionBytes", 128 * 1024 * 1024)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // static conf, so it must be set here: a long-lived session
+      // compiles more codegen classes than Spark's default 100-entry
+      // cache holds (a workflow cycle ~171, the query suite far more),
+      // and evicted classes are recompiled on their next use
+      .config("spark.sql.codegen.cache.maxEntries", 5000)
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TextClean, TextMetrics, VectorFunctions}
 import graft.ledger.Ledger
-import graft.operators.{Decontaminate, Dedup, ImportanceSampling,
+import graft.operators.{Decontaminate, Dedup, Fan, ImportanceSampling,
   LanguageModel, Mixing, Similarity, SubstringDedup}
 
 /** Driver contract — one entry per implemented operator from SURVEY.md §2
@@ -49,39 +49,27 @@ object SparkEntry {
   private[graft] def table(s: SparkSession, dir: String, name: String): DataFrame =
     t(s, dir, name)
 
-  /** Fan a thin scan out to all cores before a CPU-heavy per-row stage
-    * (chunking, embedding, MMR, shingling, tokenizing). The testdata
-    * parquet is one row group per table, so the scan itself is a single
-    * task; without this the per-doc UDF work runs single-threaded. Same
-    * discipline as the reference's Argo pod fan-out (SURVEY R6,
-    * repartition(15)) — the shuffled payload is the raw text, tiny next
-    * to the compute it unlocks. Round-robin keeps sizes even regardless
-    * of key skew.
-    *
-    * SCALE-ADAPTIVE since round 18: the repartition is inserted only
-    * when the scan's natural parallelism is below the session's — at
-    * corpus scale the input has thousands of splits and an
-    * unconditional repartition would be a pure full-corpus shuffle
-    * (the guide's accidental-exchange class), while on the one-row-
-    * group bench corpus it remains the fan-out it always was.
-    *
-    * The probe reads the FileScan leaves' planned split counts from
-    * the physical plan (round 19, ADVICE r18): the previous
-    * `df.rdd.getNumPartitions` was job-free only for bare scans —
-    * under AQE, `.rdd` on a plan containing exchanges or subqueries
-    * eagerly materializes every upstream query stage. Reading the
-    * scan nodes' file-split math keeps the probe plan-time-only for
-    * ANY input frame (a non-file leaf, e.g. a local relation,
-    * conservatively counts as parallelism 1 and keeps the fan). */
-  private def fan(s: SparkSession, df: DataFrame): DataFrame = {
-    val parts = s.sessionState.conf.numShufflePartitions
-    val scanParts = df.queryExecution.sparkPlan.collectLeaves().map {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.inputRDD.getNumPartitions
-      case _ => 1
-    }.sum
-    if (scanParts >= parts) df
-    else df.repartition(parts)
+  /** Run independent driver-side actions concurrently, one thread
+    * each, and return when all have finished. Any `Throwable` a task
+    * throws — an `Error` too — fails the call from the calling thread:
+    * the first as the cause, the others as suppressed. */
+  private[graft] def runAll(what: String, tasks: Seq[() => Unit]): Unit = {
+    import scala.jdk.CollectionConverters._
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    val failures = try {
+      pool.invokeAll(tasks.map(task =>
+          (() => task()): java.util.concurrent.Callable[Unit]).asJava)
+        .asScala.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException =>
+            Some(e.getCause) }
+        }
+    } finally pool.shutdownNow()
+    failures.headOption.foreach { first =>
+      val ex = new RuntimeException(s"$what failed", first)
+      failures.tail.foreach(ex.addSuppressed)
+      throw ex
+    }
   }
 
   /** Floor seconds from the nanos-long `ts` column. DIV = integer
@@ -496,7 +484,7 @@ object SparkEntry {
     // default minCount=2 left the backoff branch with ZERO rows at
     // sf0.1, an oracle that could not catch a broken backoff). ----
     "q77_bigram_backoff" -> ((s, dir) => {
-      LanguageModel.bigramSurprisalBackoff(fan(s, t(s, dir, "documents")),
+      LanguageModel.bigramSurprisalBackoff(Fan(t(s, dir, "documents")),
           "doc_id", "text", minCount = 21L)
         .withColumnRenamed("id", "doc_id")
     }),
@@ -581,7 +569,7 @@ object SparkEntry {
       // the two table writes are INDEPENDENT jobs — overlap them from
       // two driver threads (guide §2.6) so the smaller write's tasks
       // back-fill cores the larger one leaves idle; failures propagate
-      val writes: Seq[() => Unit] = Seq(
+      runAll("q81_colocated_join: bucketed write", Seq(
         () => BucketedWarehouse.writeBucketed(
           t(s, dir, "orders").select(col("o_custkey").as("custkey"),
             col("o_totalprice")),
@@ -591,28 +579,7 @@ object SparkEntry {
           t(s, dir, "customer").select(col("c_custkey").as("custkey"),
             col("c_name")),
           customerTbl, "custkey", buckets = 16,
-          path = Some(s"$tmp/customer")))
-      val errs =
-        new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-      val threads = writes.map { w =>
-        // NonFatal only (ADVICE r18): an OutOfMemoryError must kill
-        // the JVM, not be queued and re-wrapped
-        val th = new Thread(() =>
-          try w() catch {
-            case scala.util.control.NonFatal(e) => errs.add(e)
-          })
-        th.start(); th
-      }
-      threads.foreach(_.join())
-      if (!errs.isEmpty) {
-        // re-throw from the DRIVER thread with the worker failure as
-        // cause (keeps this stack context); any second failure is
-        // recorded as suppressed instead of silently dropped
-        val ex = new RuntimeException(
-          "q81_colocated_join: bucketed write failed", errs.poll())
-        while (!errs.isEmpty) ex.addSuppressed(errs.poll())
-        throw ex
-      }
+          path = Some(s"$tmp/customer"))))
       // broadcast disabled in a CHILD session: newSession() shares the
       // SparkContext and catalog (the bucketed tables are visible) but
       // carries its OWN conf, so concurrent queries on `s` keep their
@@ -709,7 +676,7 @@ object SparkEntry {
     "q84_dsir_weights" -> ((s, dir) => {
       // fan: the hashed-gram UDF + explode otherwise runs inside the
       // one-task scan stage (round 18; profile: 0.78 s single-task job)
-      val docs = fan(s, t(s, dir, "documents"))
+      val docs = Fan(t(s, dir, "documents"))
       ImportanceSampling.dsirScore(docs,
           docs.where(col("source") === "src0"), "doc_id", "text")
         .withColumnRenamed("id", "doc_id")
@@ -735,7 +702,7 @@ object SparkEntry {
     // tallies. n = 13 shares the q78 contamination width. ----
     "q88_dup_substrings" -> ((s, dir) => {
       SubstringDedup.duplicatedWindowStats(
-        fan(s, t(s, dir, "documents")), "doc_id", "text", n = 13)
+        Fan(t(s, dir, "documents")), "doc_id", "text", n = 13)
     }),
 
     // ---- Lexical diversity (type-token profile): distinct-word and
@@ -823,7 +790,7 @@ object SparkEntry {
     // broadcast bloom of the (small) test side, so the shuffle never
     // carries the corpus. ----
     "q89_bloom_decontaminate" -> ((s, dir) => {
-      val docs = fan(s, t(s, dir, "documents"))
+      val docs = Fan(t(s, dir, "documents"))
       Decontaminate.contaminationPairsBloom(
         docs.where(pmod(col("doc_id"), lit(2)) === 0),
         docs.where(pmod(col("doc_id"), lit(2)) === 1),
@@ -899,7 +866,7 @@ object SparkEntry {
     // membership, so mass-duplicated corpora no longer blow up the
     // candidate stage (the former 30x-tier domain boundary). ----
     "q68_jaccard_prefix" -> ((s, dir) => {
-      Dedup.jaccardPairsPrefix(fan(s, t(s, dir, "documents")), "doc_id", "text",
+      Dedup.jaccardPairsPrefix(Fan(t(s, dir, "documents")), "doc_id", "text",
         n = 3, threshold = 0.6)
     }),
 
@@ -907,7 +874,7 @@ object SparkEntry {
     // scala-murmur3 signer AND Spark's bucket hash() are replayed in
     // DuckDB SQL (MurmurOracleSql.q22) ----
     "q22_minhash_pairs" -> ((s, dir) => {
-      Dedup.minhashLshPairs(fan(s, t(s, dir, "documents")), "doc_id", "text",
+      Dedup.minhashLshPairs(Fan(t(s, dir, "documents")), "doc_id", "text",
         shingleN = 3, numHashes = 16, bands = 4)
     }),
 
@@ -919,7 +886,7 @@ object SparkEntry {
     // clique lands whole in EVERY band bucket — d²/2 candidates per
     // band was the 100x timeout), re-expansion bit-identical. ----
     "q23_simhash_pairs" -> ((s, dir) => {
-      Dedup.simhashPairs(fan(s, t(s, dir, "documents")), "doc_id", "text",
+      Dedup.simhashPairs(Fan(t(s, dir, "documents")), "doc_id", "text",
         maxHamming = 7)
     }),
 
@@ -1157,7 +1124,7 @@ object SparkEntry {
     // ---- Chunk + embed + byte-codec (SURVEY M1/M2/F33/W3; rows-only:
     // the chunker/embedder are engine-defined, no SQL equivalent) ----
     "q38_chunk_embed" -> ((s, dir) => {
-      fan(s, t(s, dir, "documents"))
+      Fan(t(s, dir, "documents"))
         .select(col("doc_id"),
           posexplode(graft.ml.Chunker.slices(col("text"), 32))
             .as(Seq("order_sequence", "body")))
@@ -1177,7 +1144,7 @@ object SparkEntry {
     // the greedy loop replays in SQL; the murmur stub tier remains the
     // spec-covered production shape (extract/extractUdf).
     "q39_keywords" -> ((s, dir) => {
-      fan(s, t(s, dir, "documents"))
+      Fan(t(s, dir, "documents"))
         .select(col("doc_id"),
           explode(graft.ml.Keywords.extractPortable(col("text"), topN = 5))
             .as("kw"))
@@ -1231,7 +1198,7 @@ object SparkEntry {
     // the verify's 4-dp round absorbs the sqrt ulp). ----
     "q44_embedding_neardup" -> ((s, dir) => {
       graft.operators.Dedup.embeddingNearDupPairsPortable(
-        fan(s, t(s, dir, "documents")), "doc_id", "text", threshold = 0.8)
+        Fan(t(s, dir, "documents")), "doc_id", "text", threshold = 0.8)
     }),
 
     // ---- approx distinct counts (A5 scale variant: HLL sketch beats
@@ -1609,7 +1576,7 @@ object SparkEntry {
     // probability, not raw frequency. minCount=21 shared with q77 so
     // both the discounted and the continuation branches bite. ----
     "q103_kneser_ney" -> ((s, dir) => {
-      LanguageModel.kneserNeySurprisal(fan(s, t(s, dir, "documents")),
+      LanguageModel.kneserNeySurprisal(Fan(t(s, dir, "documents")),
           "doc_id", "text", minCount = 21L)
         .withColumnRenamed("id", "doc_id")
     }),
@@ -1841,7 +1808,7 @@ object SparkEntry {
     // (q78/q89's lexical complement). Eval side broadcasts; portable
     // q44 algebra, so the decision is fully oracled. ----
     "q121_semantic_decontaminate" -> ((s, dir) => {
-      val docs = fan(s, t(s, dir, "documents"))
+      val docs = Fan(t(s, dir, "documents"))
       graft.operators.Dedup.semanticDecontaminate(
         docs.where(col("source") =!= "src0"),
         docs.where(col("source") === "src0"),
@@ -1855,7 +1822,7 @@ object SparkEntry {
     // q38 remains the production surface with BreakIterator
     // boundaries (quantified in ChunkerParitySpec). ----
     "q122_chunks_portable" -> ((s, dir) => {
-      fan(s, t(s, dir, "documents"))
+      Fan(t(s, dir, "documents"))
         .select(col("doc_id"),
           posexplode(graft.ml.Chunker.chunkPortable(col("text"), 32))
             .as(Seq("order_sequence", "slice_text")))
@@ -1871,7 +1838,7 @@ object SparkEntry {
     // pure tables (integer ranks from embedded public samples), so
     // the whole decision replays in generated oracle SQL. ----
     "q123_lang_trigram" -> ((s, dir) => {
-      fan(s, t(s, dir, "documents"))
+      Fan(t(s, dir, "documents"))
         .select(col("doc_id"), col("lang").as("declared_lang"),
           graft.functions.LangId.detectLang(col("text"))
             .as("detected_lang"))

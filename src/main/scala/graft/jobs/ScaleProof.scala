@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Scale-up proof harness (round-9 brief item 9): no sf1 testdata
   * exists in this environment, so the scaled corpus is derived from
@@ -397,411 +397,6 @@ object ScaleProof {
       System.err.println(s"[scaleproof] write failed: $e") }
   }
 
-  // ---- round-14 diagnostics tier (verdict items 2-4) ----
-
-  /** q91 SemDeDup cost decomposition (round-14 verdict item 2): the
-    * 100× ratio 120.6 is decomposed into its three plan stages —
-    * k-means centroid build (iterative, driver-coordinated), map-side
-    * assignment, and the cluster-local pair join — timed separately
-    * over the SAME persisted assignment the operator uses, plus the
-    * cluster-size census that decides whether the pair join has a
-    * clique term (Σ|c|² is its candidate volume) and the
-    * identical-vector census that decides whether the adaptive
-    * contraction could engage. Parameters mirror q91 verbatim
-    * (eps 0.97, stride 20, iters 2). */
-  def q91Decomposition(spark: SparkSession, dir: String): String = {
-    import org.apache.spark.storage.StorageLevel
-    import graft.operators.Similarity
-    import graft.expr.VectorOps.cosineF32
-    val emb = SparkEntry.table(spark, dir, "embeddings")
-    val t0 = System.nanoTime()
-    val cents = Similarity.kMeansCentroids(emb, stride = 20, iters = 2,
-      "vec_id", "embedding")
-    val nCents = cents.count()
-    val tKmeans = (System.nanoTime() - t0) / 1e9
-    val t1 = System.nanoTime()
-    val assigned = Similarity.assignToCentroids(emb, cents,
-        "vec_id", "embedding")
-      .where(col("centroid_id").isNotNull)
-      .select(col("vec_id").as("id"), col("embedding").as("vec"),
-        col("centroid_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nAssigned = assigned.count()
-    val tAssign = (System.nanoTime() - t1) / 1e9
-    // candidate-volume census: Σ|c|² is exactly the cluster-local
-    // join's pre-filter row count (including the rid<id half dropped
-    // by the predicate)
-    val cs = assigned.groupBy("centroid_id").agg(count(lit(1)).as("c"))
-      .agg(count(lit(1)).as("k"), sum(col("c") * col("c")).as("c2"),
-        max(col("c")).as("cmax")).head()
-    // identical-vector census: the contraction lever, if one is needed
-    val cq = assigned.groupBy("vec").agg(count(lit(1)).as("c"))
-      .agg(max(col("c")).as("maxclique"),
-        coalesce(sum(when(col("c") > 1, col("c"))), lit(0L)).as("dupes"))
-      .head()
-    val t2 = System.nanoTime()
-    def pairDrops(frame: DataFrame): DataFrame = {
-      val right = frame.select(col("centroid_id"),
-        col("id").as("rid"), col("vec").as("rvec"))
-      frame.join(right, "centroid_id")
-        .where(col("rid") < col("id") &&
-          cosineF32(col("vec"), col("rvec")) >= lit(0.97))
-        .select("id").distinct()
-    }
-    val nDropped = pairDrops(assigned).count()
-    val tJoin = (System.nanoTime() - t2) / 1e9
-    // round-16 A/B: the duplication-adaptive contraction SemDedup now
-    // applies (identical vectors contract to their min-id rep before
-    // the centroid_id self-join) — same stage, measured over the SAME
-    // persisted assignment. contracted_sum_c2 is the pair join's
-    // candidate volume AFTER contraction (the Σ|c|² term over class
-    // representatives); contracted_keep_false must equal `dropped`
-    // plus nothing — non-rep members are keep=false by construction,
-    // so it is the cross-check that the contracted path computes the
-    // identical drop set.
-    val t3 = System.nanoTime()
-    val sd = coalesce(cosineF32(col("vec"), col("vec")) >= lit(0.97),
-      lit(false))
-    val base = assigned.where(sd).groupBy("vec")
-      .agg(min(col("id")).as("id"), min(col("centroid_id"))
-        .as("centroid_id"))
-      .select(col("id"), col("vec"), col("centroid_id"))
-      .unionByName(assigned.where(!sd))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cs2 = base.groupBy("centroid_id").agg(count(lit(1)).as("c"))
-      .agg(coalesce(sum(col("c") * col("c")), lit(0L)).as("c2"),
-        coalesce(max(col("c")), lit(0L)).as("cmax"),
-        coalesce(sum(col("c")), lit(0L)).as("n")).head()
-    val tContract = (System.nanoTime() - t3) / 1e9
-    val t4 = System.nanoTime()
-    val repDropped = pairDrops(base).count()
-    val others = assigned.select(col("id"))
-      .join(base.select("id"), Seq("id"), "left_anti").count()
-    val tJoinC = (System.nanoTime() - t4) / 1e9
-    base.unpersist()
-    assigned.unpersist()
-    s"""{"metric":"q91_decomposition","rows":$nAssigned""" +
-      s""","kmeans_sec":${fmt(tKmeans)},"assign_sec":${fmt(tAssign)}""" +
-      s""","pair_join_sec":${fmt(tJoin)},"centroids":$nCents""" +
-      s""","clusters":${cs.getLong(0)},"sum_c2":${cs.getLong(1)}""" +
-      s""","max_cluster":${cs.getLong(2)}""" +
-      s""","max_vec_clique":${cq.getLong(0)}""" +
-      s""","dup_vec_rows":${cq.getLong(1)},"dropped":$nDropped""" +
-      s""","contracted_rows":${cs2.getLong(2)}""" +
-      s""","contracted_sum_c2":${cs2.getLong(0)}""" +
-      s""","contracted_max_cluster":${cs2.getLong(1)}""" +
-      s""","contract_sec":${fmt(tContract)}""" +
-      s""","contracted_pair_join_sec":${fmt(tJoinC)}""" +
-      s""","contracted_keep_false":${repDropped + others}}"""
-  }
-
-  /** q23 100× window-variance decomposition (round-14 verdict item 4):
-    * three same-window repetitions of the full query, plus isolated
-    * timings of its two raw-scan-bound stages (the xxhash64 census agg
-    * and the signing pass) repeated three times each — if the spread
-    * lives in the probes, it is scan/box noise; if only in the full
-    * query, it is the contracted banding/verify term.
-    *
-    * Round 16 (verdict item 2): the stages INSIDE the warm band are
-    * now named too — over a persisted signature frame, the contraction
-    * groupBy (classes on the exact simhash key), the band-blocked
-    * candidate emission (pre-verify distinct volume), and the full
-    * banded join + popcount verify over the contracted reps (the
-    * operator's own simhashPairsOverSigs, q23's maxHamming = 7). The
-    * full query's residual above census + signing + contraction +
-    * core is the lift/re-expansion term. */
-  def q23VarianceProbe(spark: SparkSession, dir: String,
-      timeoutSec: Int): String = {
-    import org.apache.spark.storage.StorageLevel
-    import graft.operators.Dedup
-    val fn = SparkEntry.queries("q23_simhash_pairs")
-    def t3(body: => Unit): Seq[Double] = (1 to 3).map { _ =>
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    // full reps capture the query's output cardinality too (round 17
-    // — the residual's "output-volume-bound" attribution becomes a
-    // ratio read off the artifact, not hand-derived from rep_pairs ×
-    // clique sizes)
-    val fullR = (1 to 3).map(_ => timedBody(spark, "q23_var",
-      timeoutSec)(fn(spark, dir).count()))
-    val full = fullR.map(_.map(_._2))
-    val fullRows = fullR.collectFirst { case Right((n, _)) => n }
-      .getOrElse(-1L)
-    val docs = SparkEntry.table(spark, dir, "documents")
-    val census = t3 {
-      docs.select(xxhash64(col("text")).as("dg"))
-        .groupBy("dg").agg(count(lit(1)).as("c"))
-        .agg(sum(col("c")), sum(when(col("c") > lit(1L), col("c"))))
-        .head(); ()
-    }
-    val signing = t3 {
-      Dedup.simhash(docs, "doc_id", "text")
-        .agg(count(col("simhash"))).head(); ()
-    }
-    // stage decomposition over a persisted signature frame (what the
-    // group-all tier re-reads from cache): contraction, candidate
-    // emission, core (candidates + verify). Stages ride timedBody and
-    // the persisted frames release on ANY exit (the q125/q44
-    // discipline — round 17).
-    def stage(name: String)(body: => Long): (Long, Double, String) = {
-      val r = timedBody(spark, name, timeoutSec)(body)
-      r.fold(e => (-1L, -1.0, "\"" + e + "\""),
-        { case (n, s) => (n, s, "null") })
-    }
-    var sh: DataFrame = null
-    var reps: DataFrame = null
-    try {
-      sh = Dedup.simhash(docs, "doc_id", "text")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val (nSigs, tMat, eMat) = stage("q23_sigframe")(sh.count())
-      val (nReps, tContract, eContract) = stage("q23_contract") {
-        reps = sh.groupBy("simhash").agg(min(col("id")).as("id"))
-          .select(col("id"), col("simhash"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        reps.count()
-      }
-      // a contract-stage timeout leaves `reps` ASSIGNED (the watchdog
-      // cancels the count, not the assignment), so the null guards on
-      // the later stages would wave the hung plan through for up to
-      // two more timeout windows — drop the frame on ANY stage
-      // failure (ADVICE r17)
-      if (eContract != "null" && reps != null) {
-        reps.unpersist(); reps = null
-      }
-      // candidate volume: the 8x8-bit band blocking's distinct pre-
-      // verify pair count over the contracted reps (maxHamming 7 -> 8
-      // bands), inlined because the fused core never materializes it
-      val (nCand, tCand, eCand) = stage("q23_candidates") {
-        if (reps == null) -1L
-        else {
-          val bandCols = (0 until 8).map { b =>
-            struct(lit(b).as("band"), shiftright(col("simhash"), b * 8)
-              .bitwiseAND(255L).as("bucket"))
-          }
-          val banded = reps.select(col("id"),
-              explode(array(bandCols: _*)).as("bb"))
-            .select(col("id"), col("bb.band"), col("bb.bucket"))
-          banded.as("a").join(banded.as("b"),
-              col("a.band") === col("b.band") &&
-                col("a.bucket") === col("b.bucket") &&
-                col("a.id") < col("b.id"))
-            .select(col("a.id"), col("b.id")).distinct().count()
-        }
-      }
-      val (nPairs, tCore, eCore) = stage("q23_core") {
-        if (reps == null) -1L
-        else Dedup.simhashPairsOverSigs(reps, 7).count()
-      }
-      def arr(xs: Seq[Double]) = xs.map(fmt).mkString("[", ",", "]")
-      s"""{"metric":"q23_variance","full_sec":${arr(full.map(
-          _.getOrElse(-1.0)))}""" +
-        s""","full_err":${errArr(full)}""" +
-        s""","full_rows":$fullRows""" +
-        s""","census_sec":${arr(census)}""" +
-        s""","signing_sec":${arr(signing)}""" +
-        s""","sigs":$nSigs,"sig_materialize_sec":${fmt(tMat)}""" +
-        s""","sig_materialize_err":$eMat""" +
-        s""","reps":$nReps,"contract_sec":${fmt(tContract)}""" +
-        s""","contract_err":$eContract""" +
-        s""","candidates":$nCand,"candidate_sec":${fmt(tCand)}""" +
-        s""","candidate_err":$eCand""" +
-        s""","rep_pairs":$nPairs,"core_sec":${fmt(tCore)}""" +
-        s""","core_err":$eCore}"""
-    } finally {
-      if (reps != null) reps.unpersist()
-      if (sh != null) sh.unpersist()
-    }
-  }
-
-  /** q44 embedding-near-dup warm-band decomposition (round-16 verdict
-    * item 2): q44 is the 100× suite's slowest WARM query (23.5 s
-    * min-of-3 in the r16 probe), the one expensive query whose warm
-    * interior had not been stage-named. Per the q23/q125 precedent:
-    * three full-query reps, then the operator's stages timed
-    * separately with q44's exact parameters (portable signer,
-    * threshold 0.8) — the adaptiveSelfPairs census (one xxhash64
-    * scan + the fused two-subtree gate), the portable integer-feature
-    * signing pass, the identical-vector contraction groupBy, the
-    * 8-bit-LSH bucket candidate emission (pre-verify distinct
-    * volume), and the bucket join + exact-integer-cosine verify over
-    * the contracted reps (the operator's portableEmbPairsOverSigs).
-    * The full query's residual above census + signing + contract +
-    * core is the lift/re-expansion term — `full_rows` records the
-    * query's ACTUAL output cardinality (captured from the timed
-    * reps' own count, zero extra work) so "output-volume-bound" is a
-    * ratio a reader computes from the artifact, not an argument. */
-  def q44Decomposition(spark: SparkSession, dir: String,
-      timeoutSec: Int): String = {
-    import org.apache.spark.storage.StorageLevel
-    import graft.operators.Dedup
-    val fn = SparkEntry.queries("q44_embedding_neardup")
-    val fullR = (1 to 3).map(_ => timedBody(spark, "q44_var",
-      timeoutSec)(fn(spark, dir).count()))
-    val full = fullR.map(_.map(_._2))
-    val fullRows = fullR.collectFirst { case Right((n, _)) => n }
-      .getOrElse(-1L)
-    val docs = SparkEntry.table(spark, dir, "documents")
-    // every stage rides timedBody (watchdog + -1.0 sentinel + err
-    // reason) and the persisted frames release on ANY exit — the
-    // q125Decomposition discipline (a hung candidate join must not
-    // stall the diagnostics run or steal cache from the later rows)
-    def stage(name: String)(body: => Long): (Long, Double, String) = {
-      val r = timedBody(spark, name, timeoutSec)(body)
-      r.fold(e => (-1L, -1.0, "\"" + e + "\""),
-        { case (n, s) => (n, s, "null") })
-    }
-    def stage3(name: String)(body: => Unit)
-        : Seq[Either[String, Double]] =
-      (1 to 3).map(_ => timedBody(spark, name, timeoutSec) {
-        body; 0L
-      }.map(_._2))
-    val census = stage3("q44_census") {
-      val cen = docs.select(col("doc_id").as("id"),
-        xxhash64(col("text")).as("dg"))
-      val stats = cen.groupBy("dg").agg(count(lit(1)).as("c"))
-        .agg(sum(col("c")), sum(when(col("c") > lit(1L), col("c"))))
-      val gate = cen.agg(count(lit(1)), count_distinct(col("id")))
-      stats.crossJoin(gate).head(); ()
-    }
-    val signing = stage3("q44_signing") {
-      docs.select(Dedup.portableEmbUdf(col("text")).as("e"))
-        .agg(count(col("e.sig"))).head(); ()
-    }
-    // stage decomposition over a persisted signature frame (what the
-    // operator's group-all tier re-reads from cache)
-    var sigd: DataFrame = null
-    var reps: DataFrame = null
-    try {
-      sigd = docs.select(col("doc_id").as("id"),
-          Dedup.portableEmbUdf(col("text")).as("e"))
-        .select(col("id"), col("e.sig").as("sig"),
-          col("e.vec").as("vec"), col("e.norm2").as("norm2"))
-        .where(col("norm2") > 0L)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val (nSigs, tMat, eMat) = stage("q44_sigframe")(sigd.count())
-      val (nReps, tContract, eContract) = stage("q44_contract") {
-        reps = sigd.groupBy("vec")
-          .agg(min(col("id")).as("id"), first(col("sig")).as("sig"),
-            first(col("norm2")).as("norm2"))
-          .select(col("id"), col("sig"), col("vec"), col("norm2"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        reps.count()
-      }
-      // same guard as q23: a timed-out contract leaves reps assigned,
-      // and re-attempting the hung plan in the candidate/core stages
-      // costs two more timeout windows (ADVICE r17)
-      if (eContract != "null" && reps != null) {
-        reps.unpersist(); reps = null
-      }
-      // candidate volume: the 8-bit signature bucket blocking's
-      // pre-verify pair count over the contracted reps, inlined
-      // because the fused core never materializes it
-      val (nCand, tCand, eCand) = stage("q44_candidates") {
-        if (reps == null) -1L
-        else reps.select(col("sig"), col("id").as("ida"))
-          .join(reps.select(col("sig"), col("id").as("idb")), "sig")
-          .where(col("ida") < col("idb")).count()
-      }
-      val (nPairs, tCore, eCore) = stage("q44_core") {
-        if (reps == null) -1L
-        else Dedup.portableEmbPairsOverSigs(reps, 0.8).count()
-      }
-      def arr(xs: Seq[Either[String, Double]]) =
-        xs.map(_.fold(_ => "-1.0", fmt)).mkString("[", ",", "]")
-      s"""{"metric":"q44_decomposition","full_sec":${arr(full)}""" +
-        s""","full_err":${errArr(full)}""" +
-        s""","full_rows":$fullRows""" +
-        s""","census_sec":${arr(census)}""" +
-        s""","census_err":${errArr(census)}""" +
-        s""","signing_sec":${arr(signing)}""" +
-        s""","signing_err":${errArr(signing)}""" +
-        s""","sigs":$nSigs,"sig_materialize_sec":${fmt(tMat)}""" +
-        s""","sig_materialize_err":$eMat""" +
-        s""","reps":$nReps,"contract_sec":${fmt(tContract)}""" +
-        s""","contract_err":$eContract""" +
-        s""","candidates":$nCand,"candidate_sec":${fmt(tCand)}""" +
-        s""","candidate_err":$eCand""" +
-        s""","rep_pairs":$nPairs,"core_sec":${fmt(tCore)}""" +
-        s""","core_err":$eCore}"""
-    } finally {
-      if (reps != null) reps.unpersist()
-      if (sigd != null) sigd.unpersist()
-    }
-  }
-
-  /** q125/q119 steady-state probe (round 15): after the IVF-family fix
-    * these two composites became the 100× suite's slowest rows (57.4 /
-    * 42.5 s in the adopted window) — but the same binary's other window
-    * read q125 at 25.0 s, the q23-class cross-window swing, and unlike
-    * q22/q95/q91 no standalone repetitions bounded their warm band.
-    * Three full-query reps each, plus the shared composition decomposed
-    * into its three plan stages — spanning-edge emission (census +
-    * contraction + rep pairs), connected components over the PERSISTED
-    * edge set, survivor merge — timed once each over the same scaled
-    * corpus with q125's exact parameters (n=3, t=0.2, dfCap=4096,
-    * maxRounds=18). If the full-query spread sits above flat stage
-    * sums, the tail is scheduling/GC, not a plan term; if a stage
-    * carries it, that stage is the lever. */
-  def q125Decomposition(spark: SparkSession, dir: String,
-      timeoutSec: Int): String = {
-    import org.apache.spark.storage.StorageLevel
-    import graft.operators.Dedup
-    val full125 = (1 to 3).map(_ => timed(spark, "q125_var",
-      SparkEntry.queries("q125_neardup_survivors"), dir, timeoutSec))
-    val full119 = (1 to 3).map(_ => timed(spark, "q119_var",
-      SparkEntry.queries("q119_leakage_split"), dir, timeoutSec))
-    val docs = SparkEntry.table(spark, dir, "documents")
-    // stage timings carry the watchdog too (ADVICE r15): a hung or
-    // failing stage must record -1.0 and let the later diagnostics
-    // rows still write, and the persisted frames must release on ANY
-    // exit — hence stage() + try/finally. -1.0 is the same sentinel
-    // q23_variance uses, so the arrays stay homogeneous doubles; the
-    // failure REASON ("timeout" vs the exception class) rides in a
-    // parallel *_err field (ADVICE r16 — a timeout and an OOM must
-    // stay attributable in the artifact).
-    def stage(name: String)(body: => Long): (Long, Double, String) = {
-      val r = timedBody(spark, name, timeoutSec)(body)
-      r.fold(e => (-1L, -1.0, "\"" + e + "\""),
-        { case (n, s) => (n, s, "null") })
-    }
-    var edges: DataFrame = null
-    var clusters: DataFrame = null
-    try {
-      edges = Dedup.jaccardSpanningEdges(docs, "doc_id", "text",
-          n = 3, threshold = 0.2, maxDocFreq = 4096)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val (nEdges, tSpan, eSpan) = stage("q125_spanning")(edges.count())
-      val (nRows, tCc, eCc) = stage("q125_components") {
-        clusters = Dedup.connectedComponents(docs.select(col("doc_id")),
-            edges, idCol = "doc_id", maxRounds = 18,
-            idsCoverEndpoints = true, pairsCanonical = true)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        clusters.count()
-      }
-      val (nSurv, tSurv, eSurv) = stage("q125_survivors") {
-        if (clusters == null) -1L
-        else Dedup.keepClusterSurvivors(docs, clusters, "doc_id",
-          repsPresent = true).count()
-      }
-      def arr(xs: Seq[Either[String, Double]]) =
-        xs.map(_.fold(_ => "-1.0", fmt)).mkString("[", ",", "]")
-      s"""{"metric":"q125_q119_decomposition"""" +
-        s""","q125_full_sec":${arr(full125)}""" +
-        s""","q125_full_err":${errArr(full125)}""" +
-        s""","q119_full_sec":${arr(full119)}""" +
-        s""","q119_full_err":${errArr(full119)}""" +
-        s""","edges":$nEdges,"spanning_sec":${fmt(tSpan)}""" +
-        s""","spanning_err":$eSpan""" +
-        s""","cc_rows":$nRows,"components_sec":${fmt(tCc)}""" +
-        s""","components_err":$eCc""" +
-        s""","survivors":$nSurv,"survivor_sec":${fmt(tSurv)}""" +
-        s""","survivor_err":$eSurv}"""
-    } finally {
-      if (edges != null) edges.unpersist()
-      if (clusters != null) clusters.unpersist()
-    }
-  }
-
   /** IVF recall on a CLUSTERED fixture (round-14 verdict item 3): the
     * i.i.d.-random testdata embeddings have no cluster structure to
     * prune by, so r13's recall@5 = 0.26 was the honest floor but said
@@ -1035,25 +630,8 @@ object ScaleProof {
       .sortBy(-_._2).take(topN).map(_._1)
   }
 
-  private def runDiagnostics(spark: SparkSession, outDir: String,
-      timeoutSec: Int): Unit = {
-    System.err.println(s"[scaleproof] diagnostics over $outDir")
-    // one probe failing must not abort the others (ADVICE r15): each
-    // row catches to an error record and the artifact always writes
-    def row(name: String)(body: => String): String = {
-      val r = try body catch { case e: Throwable =>
-        s"""{"metric":"$name","error":"${e.getClass.getSimpleName}"}""" }
-      System.err.println(s"[scaleproof] $r"); r
-    }
-    val rows = Seq(
-      row("q91_decomposition")(q91Decomposition(spark, outDir)),
-      row("q23_variance")(q23VarianceProbe(spark, outDir, timeoutSec)),
-      row("q44_decomposition")(
-        q44Decomposition(spark, outDir, timeoutSec)),
-      row("q125_q119_decomposition")(
-        q125Decomposition(spark, outDir, timeoutSec)),
-      row("ann_recall_clustered")(annRecallClustered(spark)))
-    val body = rows.mkString("[", ",\n", "]")
+  private def runDiagnostics(spark: SparkSession): Unit = {
+    val body = "[" + annRecallClustered(spark) + "]"
     println(body)
     val out = sys.env.getOrElse("SPARK_GRAFT_SCALE_OUT",
       "scale_proof_diag.json")
@@ -1074,9 +652,7 @@ object ScaleProof {
   /** Watchdog-guarded action: run `body` under a cancellable job
     * group; Right((result, sec)) or Left("timeout" | exception name).
     * The single watchdog implementation behind the full-query sweep
-    * ([[timed]]), the diagnostics stage timings (ADVICE r15: stages
-    * used to run unguarded, so a hang aborted the whole diagnostics
-    * artifact), and — since round 18 — graft.Bench's reps. */
+    * ([[timed]]) and graft.Bench's reps. */
   private[graft] def timedBody(spark: SparkSession, name: String,
       timeoutSec: Int)(body: => Long): Either[String, (Long, Double)] = {
     val group = s"scaleproof-$name-${groupSeq.incrementAndGet()}"
@@ -1160,15 +736,8 @@ object ScaleProof {
     val factor = if (args.length > 2) args(2).toInt else 10
     val timeoutSec = sys.env.get("SPARK_GRAFT_SCALE_TIMEOUT")
       .flatMap(_.toIntOption).getOrElse(180)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     if (sys.env.get("SPARK_GRAFT_SCALE_MUTATED").contains("1")) {
@@ -1239,11 +808,10 @@ object ScaleProof {
       return
     }
 
-    // SPARK_GRAFT_SCALE_DIAG=1: run the round-14 diagnostics over an
-    // already-materialized scaled dir (outDir) instead of the timing
-    // sweep — q91 decomposition, q23 variance, clustered ANN recall
+    // SPARK_GRAFT_SCALE_DIAG=1: the clustered-fixture ANN recall row
+    // instead of the timing sweep
     if (sys.env.get("SPARK_GRAFT_SCALE_DIAG").contains("1")) {
-      runDiagnostics(spark, outDir, timeoutSec)
+      runDiagnostics(spark)
       spark.stop()
       return
     }
@@ -1255,7 +823,6 @@ object ScaleProof {
       spark.stop()
       return
     }
-
 
     System.err.println(s"[scaleproof] materializing ${factor}x of " +
       s"$baseDir under $outDir")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkEntry
+import graft.{GraftSession, SparkEntry}
 
 /** Streaming-curation bounded-state proof (round-11 stretch): drives
   * `Curation.curateStream` over a replicated documents corpus split
@@ -32,7 +32,7 @@ object StreamProof {
     val workDir = if (args.length > 1) args(1)
       else "/tmp/graft_streamproof"
     val batches = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // SPARK_GRAFT_STREAM_STORE=rocksdb (round 18): run every tier
     // under the production-grade RocksDB state store instead of the
     // default HDFS-backed in-memory maps. The measured 10^9-doc
@@ -50,11 +50,7 @@ object StreamProof {
     require(stateStore == "hdfs" || stateStore == "rocksdb",
       s"SPARK_GRAFT_STREAM_STORE must be 'hdfs' or 'rocksdb', " +
         s"got '$stateStore'")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = GraftSession.builder(s"local[$cpus]", cpus)
     if (stateStore == "rocksdb")
       builder.config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +

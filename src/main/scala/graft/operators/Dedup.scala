@@ -19,37 +19,6 @@ import graft.functions.TextMetrics
   */
 object Dedup {
 
-  /** Plan-time scan parallelism of a frame: the FileScan leaves'
-    * planned split counts (no job runs; non-file leaves — local
-    * relations, cached frames — conservatively count 1). The same
-    * probe as SparkEntry.fan(): used to decide whether a defensive
-    * re-spread repartition is a fan-out (one-row-group bench corpus)
-    * or a pure accidental full-stream shuffle (multi-split corpus at
-    * scale, guide §2.2/§2.4). */
-  private def scanParallelism(df: DataFrame): Int =
-    df.queryExecution.sparkPlan.collectLeaves().map {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.inputRDD.getNumPartitions
-      case _ => 1
-    }.sum
-
-  /** Re-spread a post-aggregation frame ahead of a fan-out explode —
-    * but ONLY when the corpus is small enough that AQE's coalescing
-    * would otherwise serialize the exploded stream through a handful
-    * of tasks (round 19, the fan() gate applied to the q21/q70
-    * emitters): on a multi-split corpus the aggregate's own shuffle
-    * already lands on the session's partition count, and the
-    * unconditional repartition was a full re-shuffle of the
-    * shingle-level aggregate for nothing. Probe is on the SOURCE
-    * frame (plan-time only) — probing the aggregate itself would
-    * materialize its query stages under AQE. */
-  private def respreadIfSmall(source: DataFrame, df: DataFrame)
-      : DataFrame = {
-    val parts = source.sparkSession.sessionState.conf.numShufflePartitions
-    if (scanParallelism(source) >= parts) df
-    else df.repartition(parts)
-  }
-
   /** Exact dedup via content fingerprint: one row per distinct normalized
     * text, keeping the smallest id as representative. Single shuffle. */
   def exact(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -260,15 +229,16 @@ object Dedup {
     adaptiveSelfPairs(
       df.select(col(idCol).as("id"), xxhash64(col(textCol)).as("dg")),
       slim, "id", Seq("shs"),
-      sets => jaccardPairsOverSets(sets, idType, threshold),
+      sets => jaccardPairsOverSets(df, sets, idType, threshold),
       lit(1.0), "jaccard", pairsSlot)
   }
 
   /** The exact co-occurrence pipeline over a prepared (id, shs, sz)
     * sets frame — jaccardPairs' original plan, factored so the
     * duplication-adaptive wrapper can run it over class
-    * representatives. */
-  private def jaccardPairsOverSets(sets: DataFrame,
+    * representatives. `source` is the operator's uncached input, the
+    * frame the re-spread gate probes. */
+  private def jaccardPairsOverSets(source: DataFrame, sets: DataFrame,
       idType: org.apache.spark.sql.types.DataType,
       threshold: Double): DataFrame = {
     // carrying sz through the pipeline eliminates the separate per-doc
@@ -286,10 +256,13 @@ object Dedup {
     // re-spread before the pair explosion: AQE coalesces the (small)
     // per-shingle aggregate into few partitions, which would serialize
     // the (large) exploded pair stream through one task. SCALE-GATED
-    // since round 19 (the fan() probe): on a multi-split corpus the
+    // since round 19 (the Fan probe): on a multi-split corpus the
     // groupBy's own shuffle already spreads, and the repartition was a
-    // full re-shuffle of the shingle aggregate.
-    val pairs = respreadIfSmall(sets, byShingle)
+    // full re-shuffle of the shingle aggregate. Gated on the uncached
+    // input: `sets` is a cache of it (or of its class representatives),
+    // already spread, which says nothing of how AQE coalesces the
+    // aggregate.
+    val pairs = Fan.ifNarrow(source, byShingle)
       .select(explode(pairEmitUdf(idType, threshold)(col("ms"))).as("p"))
       .select(col("p.*"))
     val inter = pairs.groupBy("id_a", "id_b", "sz_a", "sz_b")
@@ -346,8 +319,10 @@ object Dedup {
   /** The PPJoin prefix -> candidate -> verify pipeline over a prepared
     * (id, shs, sz) sets frame (persisted by the caller — three plan
     * branches read it). Factored out so the duplication-adaptive
-    * wrapper can run the same pipeline over class representatives. */
-  private def prefixPairsOverSets(sets: DataFrame,
+    * wrapper can run the same pipeline over class representatives.
+    * `source` is the operator's uncached input, the frame the re-spread
+    * gate probes. */
+  private def prefixPairsOverSets(source: DataFrame, sets: DataFrame,
       idType: org.apache.spark.sql.types.DataType,
       threshold: Double): DataFrame = {
     // prefix computed against the round-slack threshold (see
@@ -364,8 +339,8 @@ object Dedup {
         .as("ms"))
       .where(size(col("ms")) > 1)
     // scale-gated re-spread — same rationale as jaccardPairsOverSets
-    // (round 19)
-    val cand = respreadIfSmall(sets, byShingle)
+    // (round 19), also gated on the uncached input
+    val cand = Fan.ifNarrow(source, byShingle)
       .select(explode(pairEmitUdf(idType, threshold)(col("ms"))).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
       .distinct()
@@ -497,7 +472,7 @@ object Dedup {
       // no duplicated shingle set anywhere: contraction cannot change
       // the candidate volume — run the plain pipeline, zero overhead
       // beyond the census aggregation itself
-      val out = prefixPairsOverSets(sets, idType, threshold)
+      val out = prefixPairsOverSets(df, sets, idType, threshold)
       val rel = () => { sets.unpersist(); () }
       prefixSlot.set(df.sparkSession, rel)
       return (out, rel)
@@ -513,7 +488,7 @@ object Dedup {
     // execution.
     val idsUnique = tot.getLong(2) == nDocs
     if (!idsUnique) {
-      val out = prefixPairsOverSets(sets, idType, threshold)
+      val out = prefixPairsOverSets(df, sets, idType, threshold)
       val rel = () => { sets.unpersist(); () }
       prefixSlot.set(df.sparkSession, rel)
       return (out, rel)
@@ -573,7 +548,7 @@ object Dedup {
     val reps = classes.select(col("rep").as("id"), col("shs"),
         size(col("shs")).as("sz"))
       .union(cold.select(col("id"), col("shs"), col("sz")))
-    val repPairs = prefixPairsOverSets(reps, idType, threshold)
+    val repPairs = prefixPairsOverSets(df, reps, idType, threshold)
     // re-expansion. Intra-class pairs are J=1 by construction (same
     // round(1 + 1e-9, 4) = 1.0 the verify stage computes for identical
     // sets). Cross pairs lift each rep pair to all member combinations
@@ -1019,7 +994,6 @@ object Dedup {
     // analyzed plan, so releasing after this call's persists would
     // uncache the very entries this call relies on
     spanningSlot.releasePrevious(df.sparkSession)
-    val t0 = System.nanoTime()
     val idDg = df.select(col(idCol).as("id"),
         xxhash64(col(textCol)).as("tdg"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1048,8 +1022,6 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     spanningSlot.set(df.sparkSession,
       () => { suspects.unpersist(); idDg.unpersist(); () })
-    if (sys.env.contains("SPARK_GRAFT_SPAN_DEBUG"))
-      println(f"[span-debug] t=${System.currentTimeMillis()} suspects=$nSuspects census=${(System.nanoTime() - t0) / 1e9}%.2f s")
     if (nSuspects == 0L) {
       suspects.unpersist(); idDg.unpersist()
       // No byte-identical docs anywhere: contraction cannot remove any
@@ -2188,9 +2160,6 @@ object Dedup {
         edges.count() <= 2L * localEdgeCap)
       .map(lt => localComponentLabels(ids.sparkSession, idType, lt,
         edges.where(col("src") < col("dst")).collect()))
-    if (sys.env.contains("SPARK_GRAFT_SPAN_DEBUG"))
-      println(s"[cc-debug] mode=" +
-        (if (labelsOpt.isDefined) "local-uf" else "dist-loop"))
     // finally: distributedMinLabel throws on non-convergence, and the
     // corpus-scale edge cache must not outlive this call on that path
     val endpointLabels =

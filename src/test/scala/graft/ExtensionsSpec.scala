@@ -1,14 +1,34 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.BareSession
+
+import graft.expr.EliminateVectorCodecRoundTrip
+
 /** The SQL-function surface: custom expressions callable from SQL text.
-  * Uses the late-registration path (GraftFunctions.register) because the
-  * test harness shares one session across suites — builder-time
-  * extensions (GraftExtensions) install the identical expressions. */
+  * The late-registration tests run on a session without the builder-time
+  * extensions (a notebook or shell attached to a running context), on
+  * the suite's SparkContext, so only GraftFunctions.register can supply
+  * the functions and the codec rule there. */
 class ExtensionsSpec extends SparkSuite {
 
-  test("graft functions registered and usable from SQL") {
-    val s = initSpark()
+  private lazy val bare: SparkSession =
+    BareSession.on(initSpark().sparkContext)
+
+  /** The bare session after late registration, checked to carry what
+    * only register() installs. */
+  private def registered(): SparkSession = {
+    val s = bare
     GraftFunctions.register(s)
+    assert(!s.sessionState.optimizer.extendedOperatorOptimizationRules
+      .contains(EliminateVectorCodecRoundTrip))
+    assert(s.experimental.extraOptimizations
+      .count(_ == EliminateVectorCodecRoundTrip) === 1)
+    s
+  }
+
+  test("graft functions registered and usable from SQL") {
+    val s = registered()
     import s.implicits._
     Seq((Array(3.0f, 4.0f), Array(4.0f, 3.0f))).toDF("a", "b")
       .createOrReplaceTempView("ext_vecs")
@@ -26,8 +46,7 @@ class ExtensionsSpec extends SparkSuite {
   }
 
   test("top_k_by usable from SQL with direction literal") {
-    val s = initSpark()
-    GraftFunctions.register(s)
+    val s = registered()
     import s.implicits._
     Seq((1, 3L, "b"), (1, 3L, "a"), (1, 9L, "c"), (2, 1L, "z"))
       .toDF("g", "cnt", "name").createOrReplaceTempView("ext_topk")
@@ -43,8 +62,7 @@ class ExtensionsSpec extends SparkSuite {
 
   test("codec round-trip rule: bytes_to_vec(vec_to_bytes(x)) vanishes " +
       "from the plan for non-null arrays, stays for nullable elements") {
-    val s = initSpark()
-    GraftFunctions.register(s)
+    val s = registered()
     import s.implicits._
     // repartition(1) breaks ConvertToLocalRelation — over a bare
     // LocalRelation the optimizer EVALUATES the projection eagerly and
@@ -71,9 +89,17 @@ class ExtensionsSpec extends SparkSuite {
   }
 
   test("builder-time extensions produce a session with the functions") {
-    // verify the GraftExtensions wiring compiles against a builder even
-    // though the shared harness session precludes creating it here
-    val b = GraftSession.builder("local[2]", 2)
-    assert(b != null)
+    // a child session gets the builder's extensions afresh, but neither
+    // the temp functions nor the extra optimizations that
+    // GraftFunctions.register may have added to the suite session
+    val s = initSpark().newSession()
+    assert(s.sessionState.optimizer.extendedOperatorOptimizationRules
+      .contains(graft.expr.EliminateVectorCodecRoundTrip))
+    assert(!s.experimental.extraOptimizations
+      .contains(graft.expr.EliminateVectorCodecRoundTrip))
+    val cos = s.sql(
+      "SELECT cosine_f32(array(3.0F, 4.0F), array(4.0F, 3.0F)) AS c")
+      .head().getDouble(0)
+    assert(math.abs(cos - 0.96) < 1e-9)
   }
 }

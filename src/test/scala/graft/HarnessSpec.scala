@@ -1,0 +1,75 @@
+package graft
+
+import java.util.Properties
+
+import org.apache.spark.graft.SyntheticEvents
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+
+/** The harness pieces that must not lie: the job profile counts each
+  * stage once however often it was attempted, and concurrent driver
+  * actions fail their caller on any throwable, an Error included. */
+class HarnessSpec extends SparkSuite {
+
+  private def props(kv: (String, String)*): Properties = {
+    val p = new Properties
+    kv.foreach { case (k, v) => p.setProperty(k, v) }
+    p
+  }
+
+  test("profile counts a retried stage's shuffle bytes once, from its " +
+      "last attempt, and labels jobs by call site") {
+    val p = new JobProfiler
+    p.onOtherEvent(SparkListenerSQLExecutionStart(5L, None,
+      "count at Dedup.scala:42", "", "", null, 900L))
+    p.onJobStart(SparkListenerJobStart(7, 1000L,
+      Seq(SyntheticEvents.stage(3, 0, 4, 0L, 0L),
+        SyntheticEvents.stage(4, 0, 2, 0L, 0L)),
+      props("spark.sql.execution.id" -> "5")))
+    // attempt 0 wrote part of its output before failing; attempt 1 redid it
+    p.onStageCompleted(SparkListenerStageCompleted(
+      SyntheticEvents.stage(3, 0, 4, 60L, 5L)))
+    p.onStageCompleted(SparkListenerStageCompleted(
+      SyntheticEvents.stage(3, 1, 4, 100L, 10L)))
+    p.onStageCompleted(SparkListenerStageCompleted(
+      SyntheticEvents.stage(4, 0, 2, 0L, 100L)))
+    p.onJobEnd(SparkListenerJobEnd(7, 1500L, JobSucceeded))
+    p.onJobStart(SparkListenerJobStart(8, 1700L, Nil,
+      props("spark.sql.execution.id" -> "5",
+        "spark.job.description" -> "census")))
+    p.onJobEnd(SparkListenerJobEnd(8, 1800L, JobSucceeded))
+    // job 9 overlaps job 8 (AQE runs independent stages concurrently)
+    p.onJobStart(SparkListenerJobStart(9, 1750L,
+      Seq(SyntheticEvents.stage(6, 0, 1, 0L, 0L)), props()))
+    p.onJobEnd(SparkListenerJobEnd(9, 2000L, JobSucceeded))
+    val Seq(j7, j8, j9) = p.jobs
+    assert(j7.label === "count at Dedup.scala:42")
+    assert((j7.stages, j7.tasks) === ((2, 6)))
+    assert(j7.shuffleWrite === 100L)
+    assert(j7.shuffleRead === 110L)
+    assert(j7.sec === 0.5)
+    assert(j8.label === "census")
+    assert(math.abs(j8.gapSec - 0.2) < 1e-9)
+    assert(j9.label === "stage 6")
+    assert(j9.gapSec === 0.0)
+    assert(math.abs(j9.busySec - 0.2) < 1e-9)
+    assert(math.abs(p.jobs.map(_.busySec).sum - 0.8) < 1e-9)
+  }
+
+  test("concurrent driver actions: an Error in one fails the call, " +
+      "with every failure kept") {
+    var ran = 0
+    val ok = () => synchronized { ran += 1 }
+    val e = intercept[RuntimeException](SparkEntry.runAll("writes",
+      Seq(ok, () => throw new OutOfMemoryError("boom"))))
+    assert(e.getCause.isInstanceOf[OutOfMemoryError])
+    assert(ran === 1)
+    val both = intercept[RuntimeException](SparkEntry.runAll("writes",
+      Seq(() => throw new IllegalStateException("a"),
+        () => throw new StackOverflowError("b"))))
+    assert((both.getCause +: both.getSuppressed.toSeq).map(_.getMessage)
+      .toSet === Set("a", "b"))
+    SparkEntry.runAll("writes", Seq(ok, ok))
+    assert(ran === 3)
+  }
+}

@@ -193,7 +193,7 @@ class PlanSpec extends SparkSuite {
     val s = initSpark()
     val df = SparkEntry.queries("q88_dup_substrings")(s, dir)
     val plan = planOf(df)
-    // the round-18 scale-adaptive scan fan-out (SparkEntry.fan) adds
+    // the round-18 scale-adaptive scan fan-out (operators.Fan) adds
     // RoundRobinPartitioning exchange(s) on one-row-group inputs; the
     // operator's OWN shuffle structure stays pinned at 3
     val n = "Exchange".r.findAllIn(plan).length -
