@@ -1,79 +1,257 @@
 package graft
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.collection.mutable
 
-/** The query harness, on the engine's GraftSession (local[SPARK_GRAFT_CPUS],
-  * default 32):
+import graft.jobs.{ScaleProof, StreamProof}
+
+/** The one harness main, on the engine's GraftSession
+  * (local[SPARK_GRAFT_CPUS], default 32):
   *
-  *   Bench                                      timed suite, JSON lines
-  *   Bench plan <sfDir> <outDir> <suffix> [only] formatted plans
-  *   Bench profile <query> [sfDir] [warmReps]   per-job breakdown
+  *   Bench                                        timed suite, JSON lines
+  *   Bench plan <sfDir> <outDir> <suffix> [names] formatted plans
+  *   Bench profile <query> [sfDir] [warmReps]     per-job breakdown
+  *   Bench scale sweep <baseDir> <scaledDir> <factor> [--only names]
+  *   Bench scale mutated|docs <baseDir> <scaledDir> <factor>
+  *   Bench scale ivf <baseDir> <workRoot>
+  *   Bench scale diag
+  *   Bench scale probe <scaledDir> <names|auto>
+  *   Bench stream <baseDir> <workDir> <batches> [hdfs|rocksdb]
   *
-  * `only` is a comma-separated list of name prefixes, and
-  * SPARK_GRAFT_BENCH_ONLY the same filter for the suite; `query` is one
-  * exact query name.
+  * The scale and stream modes write a JSON-array artifact, `--out
+  * <file>` (default per mode); the timed scale modes take `--timeout
+  * <sec>` (default 180) for the watchdog. `names`, and
+  * SPARK_GRAFT_BENCH_ONLY for the suite, is a comma-separated list of
+  * exact query names; an unknown name fails before the session starts.
   */
 object Bench {
   private type Query = (SparkSession, String) => DataFrame
   private val defaultSf = "/root/testdata/sf0.1"
+  private val usage = "usage: Bench | Bench plan <sfDir> <outDir> " +
+    "<suffix> [names] | Bench profile <query> [sfDir] [warmReps] | " +
+    "Bench scale sweep|mutated|docs <baseDir> <scaledDir> <factor> | " +
+    "Bench scale ivf <baseDir> <workRoot> | Bench scale diag | " +
+    "Bench scale probe <scaledDir> <names|auto> | Bench stream " +
+    "<baseDir> <workDir> <batches> [hdfs|rocksdb]; scale and stream " +
+    "modes take [--out file], timed scale modes [--timeout sec], " +
+    "sweep [--only names]"
 
   def main(args: Array[String]): Unit = {
-    val mode: SparkSession => Unit = args.toList match {
-      case Nil => suite
-      case "plan" :: sfDir :: outDir :: suffix :: only =>
-        plan(_, sfDir, outDir, suffix, only.headOption)
-      case "profile" :: query :: rest =>
-        val fn = SparkEntry.queries.getOrElse(query,
-          throw new IllegalArgumentException(s"unknown query: $query"))
-        profile(_, query, fn, rest.headOption.getOrElse(defaultSf),
-          rest.lift(1).fold(2)(_.toInt))
-      case _ => throw new IllegalArgumentException(
-        "usage: Bench | Bench plan <sfDir> <outDir> <suffix> [only] | " +
-          "Bench profile <query> [sfDir] [warmReps]")
-    }
+    val mode = parse(args.toList)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try mode(spark) finally spark.stop()
   }
 
-  /** Declared queries in name order (a deterministic execution sequence
-    * run-to-run), restricted to the comma-separated name prefixes in
-    * `only` when given; a filter that selects nothing is an error. */
-  private def selected(only: Option[String]): Seq[(String, Query)] = {
-    val prefixes = only.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val picked = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => prefixes.forall(_.exists(n.startsWith)) }
-    require(picked.nonEmpty, s"no query matches ${only.getOrElse("")}")
-    picked
+  /** The mode the arguments name, with every argument checked (query
+    * names included) before any session exists. */
+  private def parse(args: List[String]): SparkSession => Unit = {
+    val (pos, opt) = options(args)
+    require(opt.keySet.subsetOf(Set("out", "timeout", "only")), usage)
+    def out(default: String) = opt.getOrElse("out", default)
+    val timeoutSec = opt.get("timeout").fold(180)(_.toInt)
+    pos match {
+      case Nil =>
+        val queries = selected(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
+        suite(_, queries)
+      case "plan" :: sfDir :: outDir :: suffix :: names =>
+        val queries = selected(names.headOption)
+        plan(_, queries, sfDir, outDir, suffix)
+      case "profile" :: query :: rest =>
+        val picked = selected(Some(query))
+        require(picked.size == 1, s"profile takes one query name: $query")
+        val (name, fn) = picked.head
+        profile(_, name, fn, rest.headOption.getOrElse(defaultSf),
+          rest.lift(1).fold(2)(_.toInt))
+      case "scale" :: "sweep" :: baseDir :: scaledDir :: factor :: Nil =>
+        val queries = selected(opt.get("only"))
+        spark => write(out("scale_proof.json"), ScaleProof.sweep(spark,
+          queries, baseDir, scaledDir, factor.toInt, timeoutSec))
+      case "scale" :: "mutated" :: baseDir :: scaledDir :: factor :: Nil =>
+        spark => write(out("scale_proof_neardup.json"), ScaleProof
+          .mutated(spark, baseDir, scaledDir, factor.toInt, timeoutSec))
+      case "scale" :: "docs" :: baseDir :: scaledDir :: factor :: Nil =>
+        ScaleProof.docsOnly(_, baseDir, scaledDir, factor.toInt)
+      case "scale" :: "ivf" :: baseDir :: workRoot :: Nil =>
+        spark => write(out("scale_proof_ivf.json"),
+          ScaleProof.ivfCurve(spark, baseDir, workRoot))
+      case "scale" :: "diag" :: Nil =>
+        spark => write(out("scale_proof_diag.json"),
+          Seq(ScaleProof.annRecallClustered(spark)))
+      case "scale" :: "probe" :: scaledDir :: names :: Nil =>
+        val (probed, source) = ScaleProof.probeSet(names)
+        val queries = selected(Some(probed))
+        spark => write(out("scale_proof_probe.json"), ScaleProof.probe(
+          spark, queries, scaledDir, timeoutSec, source))
+      case "stream" :: baseDir :: workDir :: batches :: store
+          if store.forall(Set("hdfs", "rocksdb")) && store.size <= 1 =>
+        val n = batches.toInt
+        val rocksdb = store == List("rocksdb")
+        spark => {
+          // a runtime SQL conf, read when each stateful query starts
+          if (rocksdb) spark.conf.set(
+            "spark.sql.streaming.stateStore.providerClass",
+            "org.apache.spark.sql.execution.streaming.state." +
+              "RocksDBStateStoreProvider")
+          val (rows, contracts) = StreamProof.run(spark, baseDir, workDir,
+            n, if (rocksdb) "rocksdb" else "hdfs")
+          write(out("stream_proof.json"), rows)
+          StreamProof.enforce(contracts)
+        }
+      case _ => throw new IllegalArgumentException(usage)
+    }
   }
 
-  // Watchdog-guarded rep — the SHARED ScaleProof.timedBody behind
-  // every rep of every mode (round-18 review, twice over: a hung query
-  // used to block an unguarded count() forever and lose the WHOLE
-  // artifact, and the first fix re-implemented the watchdog instead of
-  // sharing it). The job group is cancelled after
-  // SPARK_GRAFT_BENCH_TIMEOUT seconds (default 120, an order of
-  // magnitude above any sf0.1 query) and the rep records as failed (-1
-  // sentinel downstream) WITH its reason ("timeout" vs the exception
-  // class) — a 120 s hang and an instant analysis error are different
-  // regressions.
-  private lazy val timeoutSec = sys.env.get("SPARK_GRAFT_BENCH_TIMEOUT")
-    .flatMap(_.trim.toIntOption).getOrElse(120).max(1)
+  /** Positional arguments apart from `--key value` options. */
+  private def options(args: List[String])
+      : (List[String], Map[String, String]) = args match {
+    case k :: v :: rest if k.startsWith("--") =>
+      val (pos, opt) = options(rest)
+      (pos, opt + (k.drop(2) -> v))
+    case a :: rest =>
+      val (pos, opt) = options(rest)
+      (a :: pos, opt)
+    case Nil => (Nil, Map.empty)
+  }
 
-  private def timedRep(spark: SparkSession, label: String)(body: => Unit)
-      : (Double, Boolean, String) = {
-    val t0 = System.nanoTime()
-    graft.jobs.ScaleProof.timedBody(spark, label, timeoutSec) {
-      body; 0L
-    } match {
-      case Right((_, sec)) => (sec, true, null)
-      case Left(reason) =>
-        ((System.nanoTime() - t0) / 1e9, false, reason)
+  /** Declared queries in name order (a deterministic execution sequence
+    * run-to-run): all of them, or only the comma-separated exact names
+    * in `names`. An unknown name is an error, as is a list that names
+    * nothing. */
+  private[graft] def selected(names: Option[String]): Seq[(String, Query)] = {
+    val wanted = names.map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    wanted.foreach { w =>
+      require(w.nonEmpty, s"no query named in '${names.get}'")
+      val unknown = w.filterNot(SparkEntry.queries.contains)
+      require(unknown.isEmpty,
+        s"unknown query: ${unknown.toSeq.sorted.mkString(",")}")
     }
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => wanted.forall(_.contains(n)) }
+  }
+
+  /** One watchdog-guarded rep: its wall seconds, and why it failed if
+    * it did ("timeout", else the exception class). */
+  private[graft] final case class Rep(sec: Double, failure: Option[String]) {
+    def result: Either[String, Double] = failure.toLeft(sec)
+  }
+
+  /** Unique per rep: a stale watchdog (its rep ended right at the
+    * deadline) then cancels only its own group, never the next rep's
+    * jobs. */
+  private val groupSeq = new AtomicLong(0L)
+
+  /** Runs `body` under a fresh cancellable job group that a watchdog
+    * cancels after `timeoutSec`: a hung query records as a failed rep
+    * instead of blocking the run and losing its artifact. A 120 s hang
+    * and an instant analysis error are different regressions, so the
+    * failure keeps its reason. */
+  private[graft] def timedBody(spark: SparkSession, name: String,
+      timeoutSec: Int)(body: => Unit): Rep = {
+    val group = s"bench-$name-${groupSeq.incrementAndGet()}"
+    spark.sparkContext.setJobGroup(group, name, interruptOnCancel = true)
+    @volatile var done = false
+    val watchdog = new Thread(() => {
+      val deadline = System.nanoTime() + timeoutSec * 1000000000L
+      while (!done && System.nanoTime() < deadline) Thread.sleep(200)
+      if (!done) spark.sparkContext.cancelJobGroup(group)
+    })
+    watchdog.setDaemon(true)
+    watchdog.start()
+    val t0 = System.nanoTime()
+    def sec = (System.nanoTime() - t0) / 1e9
+    try { body; Rep(sec, None) }
+    catch { case e: Throwable =>
+      val s = sec
+      Rep(s, Some(if (s >= timeoutSec) "timeout" else e.getClass.getSimpleName))
+    } finally {
+      done = true
+      spark.sparkContext.clearJobGroup()
+    }
+  }
+
+  /** One rep of a query over `dir`: its row count, watchdog-guarded. */
+  private[graft] def timed(spark: SparkSession, name: String, fn: Query,
+      dir: String, timeoutSec: Int): Rep =
+    timedBody(spark, name, timeoutSec) { fn(spark, dir).count(); () }
+
+  /** Min over successful reps only: a rep that throws returns almost
+    * instantly, and its near-zero time would report a failing query as
+    * fast. All failed => -1, never mistaken for speed. */
+  private[graft] def minOk(reps: Seq[Rep]): Double = {
+    val good = reps.collect { case Rep(s, None) => s }
+    if (good.isEmpty) -1.0 else good.min
+  }
+
+  private[graft] final case class MinOf(name: String, reps: Seq[Rep],
+      min: Double)
+
+  /** Window calibration: five constant-cost scans whose plans never
+    * change, so the median of their min times moves only with the
+    * machine window (CPU contention, page cache, thermal state), and two
+    * runs compare as ratio to it instead of in raw seconds. */
+  private[graft] val calibQueries = Seq("q12_octet_len", "q13_normalize_ws",
+    "q14_word_count", "q16_reading_duration", "q19_fingerprint")
+
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.filter(_ >= 0).sorted
+    if (s.isEmpty) -1.0 else s(s.size / 2)
+  }
+
+  /** Fenced min-of-`n` over each of `names` on `dir`, then the fenced
+    * min-of-3 of the `calib` queries there and their median. Before
+    * each query's reps, cached data is dropped and one GC runs: in a JVM
+    * that ran a whole sweep, lingering persists and garbage otherwise
+    * land inside the reps (q119 read 25.8 s unfenced vs 18.0 s fenced
+    * on one dir and binary). Reps after the first re-read whatever the
+    * query itself caches; that re-warming is the warm band measured. */
+  private[graft] def fencedMins(spark: SparkSession, names: Seq[String],
+      dir: String, n: Int, timeoutSec: Int,
+      calib: Seq[String] = calibQueries): (Seq[MinOf], Seq[MinOf], Double) = {
+    def minOf(name: String, reps: Int): MinOf = {
+      spark.catalog.clearCache()
+      System.gc()
+      val rs = (1 to reps).map(_ =>
+        timed(spark, s"$name-warm", SparkEntry.queries(name), dir, timeoutSec))
+      System.err.println(s"[bench] fenced $name reps=${repsJson(rs)}")
+      MinOf(name, rs, minOk(rs))
+    }
+    val mins = names.map(minOf(_, n))
+    val cal = calib.map(minOf(_, 3))
+    (mins, cal, median(cal.map(_.min)))
+  }
+
+  /** 3-decimal seconds: millisecond precision is below the run-to-run
+    * noise floor, and full-precision doubles made the suite's headline
+    * overflow a bounded stdout tail. */
+  private[graft] def fmt(v: Double): String = f"$v%.3f"
+
+  /** Per-rep seconds, a failed rep negative with its magnitude kept. */
+  private[graft] def repsJson(reps: Seq[Rep]): String =
+    reps.map(r => fmt(if (r.failure.isEmpty) r.sec else -r.sec))
+      .mkString("[", ",", "]")
+
+  /** The reasons parallel to [[repsJson]]: null per successful rep. */
+  private[graft] def errsJson(reps: Seq[Rep]): String =
+    reps.map(_.failure.fold("null")("\"" + _ + "\"")).mkString("[", ",", "]")
+
+  /** The one artifact writer: `body` to the file `out`. A failed write
+    * is reported, not fatal: the rows are on stdout too. */
+  private[graft] def writeArtifact(out: String, body: String): Unit =
+    try Files.write(Paths.get(out), (body + "\n").getBytes("UTF-8"))
+    catch { case e: java.io.IOException =>
+      System.err.println(s"[bench] write to $out failed: $e") }
+
+  /** A scale or stream mode's rows, as a JSON array on stdout and in
+    * `out`. */
+  private def write(out: String, rows: Seq[String]): Unit = {
+    val body = rows.mkString("[", ",\n", "]")
+    println(body)
+    writeArtifact(out, body)
   }
 
   /** `.explain("formatted")` of every selected query into
@@ -81,10 +259,10 @@ object Bench {
     * plans/. Plans are captured WITHOUT executing the query (initial AQE
     * plan); queries that execute eagerly inside their body (q76/q81
     * plan-asserts) still run, as declared. */
-  private def plan(spark: SparkSession, sfDir: String, outDir: String,
-      suffix: String, only: Option[String]): Unit = {
+  private def plan(spark: SparkSession, queries: Seq[(String, Query)],
+      sfDir: String, outDir: String, suffix: String): Unit = {
     Files.createDirectories(Paths.get(outDir))
-    selected(only).foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try {
         val txt = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
@@ -97,22 +275,25 @@ object Bench {
     }
   }
 
+  /** The suite's watchdog: an order of magnitude above any sf0.1 query. */
+  private lazy val suiteTimeoutSec = sys.env.get("SPARK_GRAFT_BENCH_TIMEOUT")
+    .flatMap(_.trim.toIntOption).getOrElse(120).max(1)
+
   /** Per-job breakdown of one warm rep of a query: at sf0.1 the heavy
     * queries are many-job pipelines (census actions, persist
     * materializations, AQE stages), and the bench number is the sum of
     * those jobs plus the driver gaps between them. */
   private def profile(spark: SparkSession, name: String, fn: Query,
       sfDir: String, warmReps: Int): Unit = {
+    def failed(r: Rep) = r.failure.fold("")(" FAILED:" + _)
     (1 to warmReps).foreach { i =>
-      val (sec, ok, reason) =
-        timedRep(spark, s"$name-warm$i") { fn(spark, sfDir).count(); () }
-      println(f"[profile] $name warm rep$i: $sec%.3f s" +
-        (if (ok) "" else s" FAILED:$reason"))
+      val r = timed(spark, s"$name-warm$i", fn, sfDir, suiteTimeoutSec)
+      println(f"[profile] $name warm rep$i: ${r.sec}%.3f s" + failed(r))
     }
     val profiler = new JobProfiler
     spark.sparkContext.addSparkListener(profiler)
     var rows = -1L
-    val (wall, ok, reason) = timedRep(spark, name) {
+    val r = timedBody(spark, name, suiteTimeoutSec) {
       // the jobs keep the watchdog's group but not its description,
       // so each is labelled by the call that launched it
       spark.sparkContext.setJobDescription(null)
@@ -120,8 +301,9 @@ object Bench {
     }
     org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
     spark.sparkContext.removeSparkListener(profiler)
+    val wall = r.sec
     println(f"[profile] $name measured: $rows rows, $wall%.3f s, " +
-      s"${profiler.jobs.size} jobs" + (if (ok) "" else s" FAILED:$reason"))
+      s"${profiler.jobs.size} jobs" + failed(r))
     profiler.jobs.foreach { j =>
       println(f"[profile] job ${j.id}%3d ${j.sec}%7.3f s " +
         f"gap=${j.gapSec}%6.3f s stages=${j.stages}%2d " +
@@ -136,28 +318,17 @@ object Bench {
 
   /** The timed suite: the driver contract (stdout JSON lines plus
     * SPARK_GRAFT_BENCH_OUT, default bench_summary.json). */
-  private def suite(spark: SparkSession): Unit = {
+  private def suite(spark: SparkSession, ordered: Seq[(String, Query)])
+      : Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", defaultSf)
     // Warm-up pass at the smallest scale factor: identical plans compile
     // identical generated code, so Janino's cache + the JIT are hot when
     // the measured run starts. Measures engine throughput, not compiler
     // cold-start (plan-compile cost is amortized over a real deployment's
     // job lifetime).
-    // SPARK_GRAFT_BENCH_ONLY=q83,q86 runs just the named prefixes —
-    // iteration aid; the driver never sets it, so round artifacts
-    // always cover the full suite
-    val ordered = selected(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
-    def timedReps(name: String, fn: Query, n: Int)
-        : Seq[(Double, Boolean, String)] =
-      (0 until n).map(_ =>
-        timedRep(spark, name) { fn(spark, sfDir).count(); () })
-    def repsStr(timed: Seq[(Double, Boolean, String)]): String =
-      timed.map { case (t, ok, reason) =>
-        f"$t%.3f" + (if (ok) "" else s"(FAILED:$reason)") }
-        .mkString(",")
     val warmDir = "/root/testdata/sf0.001"
     ordered.foreach { case (name, fn) =>
-      timedRep(spark, s"$name-warmup") { fn(spark, warmDir).count(); () }
+      timed(spark, s"$name-warmup", fn, warmDir, suiteTimeoutSec)
     }
     // Repeated-min measurement: each query runs `reps` times back-to-back
     // and reports the minimum. A single-shot pass conflates engine
@@ -172,6 +343,9 @@ object Bench {
     // the warm-up pass already burned its time
     val reps = sys.env.get("SPARK_GRAFT_REPS")
       .flatMap(_.trim.toIntOption).getOrElse(3).max(1)
+    def repsStr(timed: Seq[Rep]): String =
+      timed.map(r => fmt(r.sec) + r.failure.fold("")(e => s"(FAILED:$e)"))
+        .mkString(",")
     val detailed = ordered.map { case (name, fn) =>
       // One untimed rep at the MEASURED scale before the timed loop: the
       // sf0.001 warm-up above compiles the codegen classes, but AQE
@@ -180,97 +354,47 @@ object Bench {
       // first-execution JIT for the replanned stages — round 9 saw
       // spreads of 2.3-2.8 on q108/q84 from exactly that. Warming at
       // sfDir makes every timed rep a steady-state measurement.
-      timedRep(spark, s"$name-rewarm") { fn(spark, sfDir).count(); () }
+      timed(spark, s"$name-rewarm", fn, sfDir, suiteTimeoutSec)
       // GC fence: garbage from the previous query's executions (and
       // the warm rep above) otherwise lands as a collection pause
       // inside a RANDOM later query's timed rep — q123 measured spread
       // 2.8 in a full-suite run vs 1.1 in isolation from exactly that.
       // One explicit collection here pins the cost to the untimed gap.
       System.gc()
-      // min over SUCCESSFUL reps only: a rep that throws returns almost
-      // instantly, and letting its near-zero elapsed time into the min
-      // would report a transiently failing query as fast. All-failed =>
-      // sentinel -1 (visible in the artifact, never mistaken for speed).
-      val timed = timedReps(name, fn, reps)
-      System.err.println(s"bench $name reps=[" + repsStr(timed) + "]")
-      (name, timed)
+      val timedReps = (0 until reps).map(_ =>
+        timed(spark, name, fn, sfDir, suiteTimeoutSec))
+      System.err.println(s"bench $name reps=[" + repsStr(timedReps) + "]")
+      (name, timedReps)
     }
-    val results = detailed.map { case (name, timed) =>
-      val good = timed.collect { case (t, true, _) => t }
-      name -> (if (good.nonEmpty) good.min else -1.0)
-    }.toMap
-    // 3-decimal values: the driver captures this line from a bounded
-    // stdout tail, and full-precision doubles pushed the line past the
-    // tail window in round 6 (artifact arrived truncated → unparseable).
-    // Millisecond precision is below the run-to-run noise floor anyway.
-    def fmt(v: Double): String = f"$v%.3f"
+    val results = detailed.map { case (name, rs) => name -> minOk(rs) }.toMap
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     // failed queries (sentinel -1) must not deflate the headline sum
     val total = results.values.filter(_ >= 0).sum
-    // Window calibration (round-16 bench protocol): the median min-time
-    // of five constant-cost scan queries whose plans never change
-    // round-to-round — their median moves ONLY with the machine window
-    // (CPU contention, page cache, thermal state), so two runs compare
-    // as ratio-to-calibration instead of raw seconds. Round 15's 74.9 s
-    // driver window vs the builder's 56.8 s needed manual per-query
-    // forensics to attribute; this field makes the window factor a
-    // first-class artifact value (calibration_now / calibration_then).
-    val calibQueries = Seq("q12_octet_len", "q13_normalize_ws",
-      "q14_word_count", "q16_reading_duration", "q19_fingerprint")
-    val calibration = {
-      val xs = calibQueries.flatMap(results.get).filter(_ >= 0).sorted
-      if (xs.isEmpty) -1.0 else xs(xs.size / 2)
-    }
-    // Fenced warm pass over the heaviest queries (round 18 — the
-    // ScaleProof warm discipline folded into the bench): the sweep's
+    val calibration = median(calibQueries.flatMap(results.get))
+    // Fenced warm pass over the heaviest queries: the sweep's
     // min-of-reps still rides whatever JVM/page-cache state the
     // preceding 125 queries left behind, which is exactly why the
     // same binary read 53.3/62.8/72.6 s across three round-17
     // windows — a ±30% band that hides real ~10% regressions. The
     // heavy queries dominate that band (top 10 ≈ half the total), so
-    // each gets a cache-clear + GC fence and three MORE reps after
-    // the full sweep, when the JVM is as warm as it will ever be;
-    // the min over those is the window-robust per-query number.
-    // `robust_total_sec` (sweep mins with the top-N replaced by their
-    // fenced warm mins) is the headline to compare across rounds; the
-    // fenced calibration row scales out whatever window residue
-    // remains. SPARK_GRAFT_BENCH_WARM sets N (default 10; 0
+    // each gets three MORE fenced reps after the full sweep, when the
+    // JVM is as warm as it will ever be; the min over those is the
+    // window-robust per-query number. `robust_total_sec` (sweep mins
+    // with the top-N replaced by their fenced warm mins) is the
+    // headline to compare across runs; the fenced calibration row
+    // scales out whatever window residue remains. The calibration reps
+    // are rows of their own, so a contaminated rep can be told from a
+    // real window shift. SPARK_GRAFT_BENCH_WARM sets N (default 10; 0
     // disables).
     val warmN = sys.env.get("SPARK_GRAFT_BENCH_WARM")
       .flatMap(_.trim.toIntOption).getOrElse(10)
-    val fnByName = ordered.toMap
-    def fencedMinOf3(name: String)
-        : (Seq[(Double, Boolean, String)], Double) = {
-      spark.catalog.clearCache()
-      System.gc()
-      val timed = timedReps(s"$name-warm", fnByName(name), 3)
-      val good = timed.collect { case (t, true, _) => t }
-      (timed, if (good.nonEmpty) good.min else -1.0)
-    }
     val warmNames = results.toSeq.filter(_._2 >= 0)
       .sortBy(-_._2).take(warmN).map(_._1)
-    val warmDetailed = warmNames.map { name =>
-      val (timed, best) = fencedMinOf3(name)
-      System.err.println(s"bench warm $name reps=[" + repsStr(timed) +
-        s"] min=${fmt(best)}")
-      (name, timed, best)
-    }
-    val warmMins = warmDetailed.map { case (n, _, b) => n -> b }.toMap
-    // the fenced calibration reps are first-class rows too (round-18
-    // review: they used to vanish into the median, leaving no per-rep
-    // data to separate a contaminated rep from a real window shift)
-    val calibDetailed = if (warmN <= 0) Nil
-      else calibQueries.filter(fnByName.contains).map { name =>
-        val (timed, best) = fencedMinOf3(name)
-        System.err.println(s"bench warm-calib $name reps=[" +
-          repsStr(timed) + s"] min=${fmt(best)}")
-        (name, timed, best)
-      }
-    val warmCalibration = {
-      val xs = calibDetailed.map(_._3).filter(_ >= 0).sorted
-      if (xs.isEmpty) -1.0 else xs(xs.size / 2)
-    }
+    val (warmDetailed, calibDetailed, warmCalibration) = fencedMins(spark,
+      warmNames, sfDir, 3, suiteTimeoutSec,
+      if (warmN <= 0) Nil else calibQueries.filter(results.contains))
+    val warmMins = warmDetailed.map(m => m.name -> m.min).toMap
     // sweep mins with the warm set's fenced mins substituted (a warm
     // pass that FAILED all reps keeps the sweep number — a transient
     // must not deflate the robust headline)
@@ -278,68 +402,45 @@ object Bench {
       case (n, sweepMin) =>
         warmMins.get(n).filter(_ >= 0).getOrElse(sweepMin)
     }.sum
-    val warmTopTotal = warmDetailed.map(_._3).filter(_ >= 0).sum
-    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"calibration_sec":${fmt(calibration)},"warm_top_n":${warmDetailed.length},"warm_total_top_sec":${fmt(warmTopTotal)},"robust_total_sec":${fmt(robustTotal)},"warm_calibration_sec":${fmt(warmCalibration)}}"""
+    val warmTopTotal = warmDetailed.map(_.min).filter(_ >= 0).sum
+    val headline = s""""sf":"$sfDir","reps":$reps,"calibration_sec":${fmt(calibration)},"warm_top_n":${warmDetailed.length},"warm_total_top_sec":${fmt(warmTopTotal)},"robust_total_sec":${fmt(robustTotal)},"warm_calibration_sec":${fmt(warmCalibration)}"""
+    val line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,$headline}"""
     println(line)
-    // COMPACT summary as the LAST stdout line (round-18 verdict item 1):
-    // the full line above carries the 126-entry per-query map (~3.5 KB),
-    // but the driver captures only a bounded stdout tail, so in every
-    // round so far the tail began MID-LINE and the artifact recorded
-    // parsed:null — no per-query PERF table was ever computed from it.
-    // This line stays under ~300 chars (headline fields only, no
-    // per-query map) so the tail always holds one complete parseable
-    // JSON object; the full map remains on the line above and in the
-    // summary artifact file. Same measurement, same fields — a second
-    // print of already-computed values, not a methodology change.
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","sf":"$sfDir","reps":$reps,"calibration_sec":${fmt(calibration)},"warm_top_n":${warmDetailed.length},"warm_total_top_sec":${fmt(warmTopTotal)},"robust_total_sec":${fmt(robustTotal)},"warm_calibration_sec":${fmt(warmCalibration)}}""")
-    // also persist the summary: the driver's stdout tail-capture
-    // truncated 13 of 75 per-query times in round 4 — the artifact
-    // should never depend on tail length. The FILE form additionally
-    // carries per-rep times and the max/min spread per query: round 8's
-    // bench box was contended and min-of-3 silently absorbed 4-9× rep
-    // swings, making the artifact useless for regression detection. With
-    // the spread in the artifact, contamination is visible without
-    // stderr: spread >~2 on a trivial query = noisy box, not a plan
+    // COMPACT summary as the LAST stdout line: the line above carries
+    // the 126-entry per-query map (~3.5 KB), and a reader that keeps
+    // only a bounded stdout tail began MID-LINE on it. This one stays
+    // under ~300 chars, so such a tail always holds one complete
+    // parseable JSON object.
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$headline}""")
+    // The summary FILE never depends on tail length, and additionally
+    // carries per-rep times, failure reasons (a -1 sentinel alone
+    // cannot tell a hang from an analysis error) and the max/min spread
+    // per query: spread >~2 on a trivial query = noisy box, not a plan
     // regression.
-    val repsJson = detailed.map { case (name, timed) =>
-      "\"" + name + "\":[" + timed.map { case (t, ok, _) =>
-        if (ok) fmt(t) else fmt(-t) // negative = failed rep, magnitude kept
-      }.mkString(",") + "]"
+    val repErrsJson = detailed.filter(_._2.exists(_.failure.nonEmpty))
+      .map { case (name, rs) => "\"" + name + "\":" + errsJson(rs) }
+      .mkString("{", ",", "}")
+    val spreads = detailed.map { case (name, rs) =>
+      val good = rs.collect { case Rep(t, None) => t }
+      name -> (if (good.size >= 2 && good.min > 0) good.max / good.min
+        else -1.0)
+    }
+    val spreadJson = spreads.map { case (n, sp) => "\"" + n + "\":" + fmt(sp) }
+      .mkString("{", ",", "}")
+    val maxSpread = spreads.map(_._2).foldLeft(0.0)(_ max _)
+    val warmJson = (warmDetailed ++ calibDetailed).map { m =>
+      "\"" + m.name + "\":{\"reps_sec\":" + repsJson(m.reps) +
+        s""","min_sec":${fmt(m.min)}}"""
     }.mkString("{", ",", "}")
-    // failure REASONS, only for queries that had any (usually empty):
-    // a -1 sentinel alone cannot distinguish a 120 s hang from an
-    // instant analysis error (round-18 review)
-    val repErrsJson = detailed
-      .filter { case (_, timed) => timed.exists(!_._2) }
-      .map { case (name, timed) =>
-        "\"" + name + "\":[" + timed.map { case (_, ok, reason) =>
-          if (ok) "null" else "\"" + reason + "\""
-        }.mkString(",") + "]"
-      }.mkString("{", ",", "}")
-    val spreadJson = detailed.map { case (name, timed) =>
-      val good = timed.collect { case (t, true, _) => t }
-      val sp = if (good.size >= 2 && good.min > 0) good.max / good.min else -1.0
-      "\"" + name + "\":" + fmt(sp)
-    }.mkString("{", ",", "}")
-    val maxSpread = detailed.flatMap { case (_, timed) =>
-      val good = timed.collect { case (t, true, _) => t }
-      if (good.size >= 2 && good.min > 0) Some(good.max / good.min) else None
-    }.foldLeft(0.0)(_ max _)
-    val warmJson = (warmDetailed ++ calibDetailed)
-      .map { case (name, timed, best) =>
-        "\"" + name + "\":{\"reps_sec\":[" + timed.map { case (t, ok, _) =>
-          if (ok) fmt(t) else fmt(-t)
-        }.mkString(",") + s"],\"min_sec\":${fmt(best)}}"
-      }.mkString("{", ",", "}")
+    val repsSecJson = detailed
+      .map { case (name, rs) => "\"" + name + "\":" + repsJson(rs) }
+      .mkString("{", ",", "}")
     val fileLine = line.dropRight(1) +
       s""","calibration_queries":${calibQueries.map("\"" + _ + "\"")
         .mkString("[", ",", "]")}""" +
-      s""","max_spread":${fmt(maxSpread)},"spread":$spreadJson,"warm":$warmJson,"rep_errs":$repErrsJson,"reps_sec":$repsJson}"""
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "bench_summary.json")
-    try Files.write(Paths.get(out), (fileLine + "\n").getBytes("UTF-8"))
-    catch { case e: java.io.IOException =>
-      System.err.println(s"bench summary write failed: $e") }
+      s""","max_spread":${fmt(maxSpread)},"spread":$spreadJson,"warm":$warmJson,"rep_errs":$repErrsJson,"reps_sec":$repsSecJson}"""
+    writeArtifact(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      "bench_summary.json"), fileLine)
   }
 }
 

@@ -4,11 +4,14 @@ import java.util.Properties
 
 import org.apache.spark.graft.SyntheticEvents
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** The harness pieces that must not lie: the job profile counts each
-  * stage once however often it was attempted, and concurrent driver
-  * actions fail their caller on any throwable, an Error included. */
+  * stage once however often it was attempted, concurrent actions fail
+  * their caller on any throwable, an Error included, a query filter
+  * selects exactly the names it is given, and the watchdog tells a hang
+  * from an error without touching the next rep. */
 class HarnessSpec extends SparkSuite {
 
   private def props(kv: (String, String)*): Properties = {
@@ -71,5 +74,58 @@ class HarnessSpec extends SparkSuite {
       .toSet === Set("a", "b"))
     SparkEntry.runAll("writes", Seq(ok, ok))
     assert(ran === 3)
+  }
+
+  test("query selection takes exact names: a prefix or a misspelt " +
+      "name fails") {
+    assert(Bench.selected(Some("q12_octet_len")).map(_._1) ===
+      Seq("q12_octet_len"))
+    assert(Bench.selected(Some("q13_normalize_ws, q12_octet_len"))
+      .map(_._1) === Seq("q12_octet_len", "q13_normalize_ws"))
+    assert(Bench.selected(None).size === SparkEntry.queries.size)
+    for (bad <- Seq("q12", "q12_octet_lne", "q12_octet_len,q1", ","))
+      intercept[IllegalArgumentException](Bench.selected(Some(bad)))
+  }
+
+  private def sleepyJob(s: SparkSession, ms: Long): Unit = {
+    s.sparkContext.parallelize(1 to 2, 2).map { i => Thread.sleep(ms); i }
+      .count()
+    ()
+  }
+
+  test("watchdog: a job past the timeout records \"timeout\"; an " +
+      "analysis error records its class at once") {
+    val s = initSpark()
+    val hung = Bench.timedBody(s, "hung", 1)(sleepyJob(s, 60000L))
+    assert(hung.result === Left("timeout"))
+    assert(hung.sec < 30.0, "the cancel must interrupt the sleeping tasks")
+    val bad = "SELECT no_such_column FROM range(1)"
+    val expected = intercept[Exception](s.sql(bad).count())
+      .getClass.getSimpleName
+    val err = Bench.timedBody(s, "bad", 60)(s.sql(bad).count())
+    assert(err.result === Left(expected))
+    assert(err.sec < 10.0)
+  }
+
+  test("watchdog: the rep right after a timed-out rep completes, a " +
+      "stale cancel hitting only its own job group") {
+    val s = initSpark()
+    var first: String = null
+    val hung = Bench.timedBody(s, "same", 1) {
+      first = s.sparkContext.getLocalProperty("spark.jobGroup.id")
+      sleepyJob(s, 60000L)
+    }
+    assert(hung.result === Left("timeout"))
+    val next = Bench.timedBody(s, "same", 60) {
+      // the stale watchdog's cancel, landing while this rep's job runs
+      val stale = new Thread(() => {
+        Thread.sleep(300L)
+        s.sparkContext.cancelJobGroup(first)
+      })
+      stale.start()
+      sleepyJob(s, 1500L)
+      stale.join()
+    }
+    assert(next.result.isRight, next.failure)
   }
 }

@@ -147,6 +147,18 @@ class ScaleProofSpec extends SparkSuite {
       Seq("q04_d", "q01_a"))
   }
 
+  test("scale probe's auto set is the committed 100x sweep's top 6, " +
+      "all declared queries, with its provenance; names pass through") {
+    val (names, source) = ScaleProof.probeSet("auto")
+    assert(names.split(",").toSeq ===
+      ScaleProof.autoProbeTargets("scale_proof_x100_all.json", 6))
+    assert(Bench.selected(Some(names)).size === 6)
+    assert(source === ""","probe_source":"auto",""" +
+      """"sweep_file":"scale_proof_x100_all.json","top_n":6""")
+    assert(ScaleProof.probeSet("q70_jaccard_capped") ===
+      (("q70_jaccard_capped", ""","probe_source":"named"""")))
+  }
+
   test("recallJson pins the shared recall accounting: 0.2 bucket " +
       "edges, top-bucket cap at J>=0.8, zero-miss and full-miss " +
       "buckets, keyPrefix rendering") {
