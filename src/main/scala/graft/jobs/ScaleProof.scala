@@ -588,12 +588,15 @@ object ScaleProof {
 
   /** One query timed over the base and the scaled dir, as the row
     * `{"query":label <extra>,"base_sec","scaled_sec","ratio"}`, and its
-    * scaled time. Base first: its run doubles as the codegen/JIT
-    * warm-up for the scaled one, so the ratio compares warm against
-    * warm-ish. */
+    * scaled time. The base gets one untimed rep first, so the timed
+    * base run is warm; the timed base run in turn warms the codegen
+    * and JIT for the scaled one. Without that rep the ratio divides a
+    * warm scaled run by the query's first, cold execution in the JVM
+    * and reads below 1 on queries that do scale. */
   private def scaledRow(spark: SparkSession, label: String, fn: Query,
       baseDir: String, scaledDir: String, timeoutSec: Int,
       extra: String = ""): (String, Either[String, Double]) = {
+    Bench.timed(spark, s"${label}_base-warmup", fn, baseDir, timeoutSec)
     val base =
       Bench.timed(spark, s"${label}_base", fn, baseDir, timeoutSec).result
     val scaled = Bench.timed(spark, label, fn, scaledDir, timeoutSec).result

@@ -99,19 +99,20 @@ object StreamProof {
       s""","only_stream":$onlyStream,"only_batch":$onlyBatch,"parity":$ok"""
   }
 
-  /** The pairs in memory sink `view` against `batch`. Overflow markers
-    * (`mark` < 0) are a disjoint channel: counted, kept out of parity.
-    * The rest is canonicalized by `canon`, deduplicated, and compared
-    * with `batch` by count and `exceptAll` both ways; `measure` runs on
-    * the persisted stream pairs before they are released. The view is
-    * dropped at the end: a memory sink holds every emitted pair in the
-    * session's own JVM heap, and seven tiers' sinks alive at once (the
-    * replica tiers emit millions of rows) put an 8g heap within OOM
-    * range of the late tiers. */
-  private def parity(spark: SparkSession, view: String, mark: String,
+  /** The pairs in parquet sink directory `sink` against `batch`.
+    * Overflow markers (`mark` < 0) are a disjoint channel: counted,
+    * kept out of parity. The rest is canonicalized by `canon`,
+    * deduplicated, and compared with `batch` by count and `exceptAll`
+    * both ways; `measure` runs on the persisted stream pairs before
+    * they are released. The sink is deleted at the end. A file sink,
+    * not a memory sink: a memory sink holds every emitted pair in the
+    * driver heap and ships them inside the comparison's tasks (100 MB
+    * tasks at sf0.1 with 10 batches, then an OutOfMemoryError in a
+    * 4 GB heap). */
+  private def parity(spark: SparkSession, sink: String, mark: String,
       batch: DataFrame, canon: DataFrame => DataFrame,
       measure: DataFrame => String = _ => ""): (Parity, String) = {
-    val raw = spark.table(view)
+    val raw = spark.read.parquet(sink)
     val markers = raw.where(col(mark) < 0).count()
     val s = canon(raw.where(col(mark) >= 0)).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -120,7 +121,9 @@ object StreamProof {
       b.exceptAll(s).count())
     val measured = measure(s)
     s.unpersist(); b.unpersist()
-    spark.catalog.dropTempView(view)
+    val path = new org.apache.hadoop.fs.Path(sink)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(path, true)
     (p, measured)
   }
 
@@ -238,8 +241,10 @@ object StreamProof {
         .mode(if (b == 0) "overwrite" else "append").parquet(dir))
       dir
     }
+    // the parquet sink directory of the pair stream named `name`
+    def sinkDir(name: String) = s"$workDir/sink_$name"
     // streams dir one file per micro-batch through `query` into `sink`
-    // ("noop", else a memory table of that name) and drains it
+    // ("noop", else the parquet directory sinkDir(sink)) and drains it
     def drain(dir: String, ckpt: String, sink: String)(
         query: DataFrame => Dataset[_]): StreamingQuery = {
       val src = spark.readStream.schema(spark.read.parquet(dir).schema)
@@ -248,7 +253,7 @@ object StreamProof {
         .option("checkpointLocation", s"$workDir/$ckpt")
         .trigger(Trigger.AvailableNow())
       val q = (if (sink == "noop") w.format("noop")
-        else w.format("memory").queryName(sink)).start()
+        else w.format("parquet").option("path", sinkDir(sink))).start()
       q.awaitTermination()
       q
     }
@@ -338,7 +343,7 @@ object StreamProof {
     // recall vs the exact pair graph: the SAME accounting as the batch
     // and incremental tiers (ScaleProof.recallJson), so the S-curves
     // are comparable by construction
-    val (nd, recallFields) = parity(spark, "ndpairs", "est_jaccard",
+    val (nd, recallFields) = parity(spark, sinkDir("ndpairs"), "est_jaccard",
       Dedup.minhashLshPairsPortable(mutAll, "doc_id", "text", n = 3,
         bands = 4),
       _.select(col("id_old").as("id_a"), col("id_new").as("id_b"),
@@ -401,7 +406,7 @@ object StreamProof {
     val edState = stateStats(drain(edDir, "ckpt_ed", "edpairs")(editPairs))
     val edAll = spark.read.parquet(edDir)
     val (edEntries, _, _, edClasses) = blockOccupancy(spark, edAll, edTau)
-    val (ed, _) = parity(spark, "edpairs", "dist",
+    val (ed, _) = parity(spark, sinkDir("edpairs"), "dist",
       EditDistanceJoin.selfJoin(edAll, "id", "s", edTau), identity)
     val v3 = tierRow("editdist_stream_proof", edBatches,
       "1 char per replica inside the join window", s""","tau":$edTau""",
@@ -436,7 +441,7 @@ object StreamProof {
         SimHashStream.hammingPairsFor(docs(s).as[SimHashStream.StreamDoc],
           docCount, shMaxHamming)(spark)))
       val occupancy = bucketOccupancy(spark, all, shKeys)
-      val (p, _) = parity(spark, s"${tag}pairs", "hamming",
+      val (p, _) = parity(spark, sinkDir(s"${tag}pairs"), "hamming",
         Dedup.simhashPairs(all, "doc_id", "text", shMaxHamming),
         canonical("hamming"))
       (p, state, docCount,
@@ -483,7 +488,7 @@ object StreamProof {
       NearDupStream.nearDupPairsFor(docs(s).as[NearDupStream.StreamDoc],
         repDocs)(spark)))
     val rnOcc = bucketOccupancy(spark, repAll, lshKeys)
-    val (rn, _) = parity(spark, "rnpairs", "est_jaccard",
+    val (rn, _) = parity(spark, sinkDir("rnpairs"), "est_jaccard",
       Dedup.minhashLshPairsPortable(repAll, "doc_id", "text", n = 3,
         bands = 4).select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"), col("est_jaccard")),
@@ -508,7 +513,7 @@ object StreamProof {
     val erState = stateStats(drain(erDir, "ckpt_er", "erpairs")(editPairs))
     val (_, erBlocks, erMembers, erClasses) =
       blockOccupancy(spark, erAll, edTau)
-    val (er, _) = parity(spark, "erpairs", "dist",
+    val (er, _) = parity(spark, sinkDir("erpairs"), "dist",
       EditDistanceJoin.selfJoin(erAll, "id", "s", edTau), identity)
     val v7 = tierRow("editdist_replica_stream_proof", edBatches,
       "none (exact replicas)", s""","tau":$edTau""", er, erState, edDocs,

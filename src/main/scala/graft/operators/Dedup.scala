@@ -194,29 +194,20 @@ object Dedup {
     * cap df (drop stop-shingles, documented semantics change) or use
     * minhashLshPairs, which is the designed 100-TB path.
     *
-    * DUPLICATION-ADAPTIVE since round 13 (the q68/q115 census pattern,
-    * closing the last 100x-tier boundary): docs with byte-identical
-    * shingle sets contract to one representative before co-occurrence
-    * pair generation — under mass duplication every shingle's df
-    * multiplies by the clique size and the per-shingle d^2/2 emission
-    * goes quadratic PER CLIQUE, which is what used to exhaust spill
-    * disk at the 100x tier. The contracted output re-expands from
-    * class membership, bit-identical to the all-pairs result
-    * (intra-class pairs are J = round(1 + 1e-9, 4) = 1.0 by
+    * Duplication-adaptive through [[adaptiveSelfPairs]]: under mass
+    * duplication every shingle's df multiplies by the clique size and
+    * the per-shingle d^2/2 emission goes quadratic PER CLIQUE, so docs
+    * with byte-identical shingle sets contract to one representative
+    * before co-occurrence pair generation. The contracted output
+    * re-expands from class membership, bit-identical to the all-pairs
+    * result (intra-class pairs are J = round(1 + 1e-9, 4) = 1.0 by
     * construction; cross-class scores equal the rep pair's because
-    * members share their rep's exact shingle set). Dup-free corpora
-    * pay ONE single-distinct census agg and keep the original
-    * unpersisted plan. Same input contract as
-    * [[EditDistanceJoin.selfJoin]]: `df` must be deterministic under
-    * re-execution, and repeated ids keep the uncontracted plan
-    * verbatim (the ids-unique gate). */
+    * members share their rep's exact shingle set). Same input contract
+    * as [[EditDistanceJoin.selfJoin]]: `df` must be deterministic under
+    * re-execution, and repeated ids keep the uncontracted plan. */
   def jaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double): DataFrame = {
-    // Jaccard's codomain is (0, 1]: outside it the score filter is
-    // vacuous/empty AND the contraction's intra-class J=1.0 emission
-    // would disagree with an uncontracted threshold > 1 filter.
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"jaccard threshold must be in (0, 1]; got $threshold")
+    requireJaccardThreshold(threshold)
     val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
     // Row-local shingle set (distinct 64-bit hashes — smaller shuffle
     // payload than strings, collision odds ~1e-8 at corpus scale),
@@ -233,58 +224,68 @@ object Dedup {
       lit(1.0), "jaccard", pairsSlot)
   }
 
+  /** Jaccard's codomain is (0, 1]: outside it the score filter is
+    * vacuous or empty, and the contraction's unconditional intra-class
+    * J = 1.0 emission would disagree with an uncontracted threshold > 1
+    * filter. Reject, don't guess. */
+  private def requireJaccardThreshold(threshold: Double): Unit =
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"jaccard threshold must be in (0, 1]; got $threshold")
+
   /** The exact co-occurrence pipeline over a prepared (id, shs, sz)
-    * sets frame — jaccardPairs' original plan, factored so the
-    * duplication-adaptive wrapper can run it over class
-    * representatives. `source` is the operator's uncached input, the
-    * frame the re-spread gate probes. */
+    * sets frame. `source` is the operator's uncached input, the frame
+    * the re-spread gate probes. */
   private def jaccardPairsOverSets(source: DataFrame, sets: DataFrame,
       idType: org.apache.spark.sql.types.DataType,
       threshold: Double): DataFrame = {
     // carrying sz through the pipeline eliminates the separate per-doc
     // size aggregation and the two size joins of the naive formulation
     // (6 exchanges -> 2)
-    val sh = sets.select(col("id"), col("sz"), explode(col("shs")).as("h"))
-    // pair generation via per-shingle member lists + map-side
-    // combination explode — one shuffle on shingle hash, pairs never
-    // re-shuffle the shingle rows (an equivalent self-join doubles the
-    // shuffle and was 3-5x slower cold at sf0.1)
-    val byShingle = sh.groupBy("h")
+    val byShingle = memberLists(
+      sets.select(col("id"), col("sz"), explode(col("shs")).as("h")))
+    // re-spread before the pair explosion: AQE coalesces the (small)
+    // per-shingle aggregate into few partitions, which would serialize
+    // the (large) exploded pair stream through one task. Scale-gated:
+    // on a multi-split corpus the groupBy's own shuffle already
+    // spreads. Gated on the uncached input: `sets` is a cache of it (or
+    // of its class representatives), already spread, which says
+    // nothing of how AQE coalesces the aggregate.
+    cooccurrencePairs(Fan.ifNarrow(source, byShingle), idType, threshold)
+  }
+
+  /** Per-shingle member lists over (id, sz, h) rows: one
+    * sort_array(collect_list(struct(id, sz))) per shingle shared by at
+    * least two docs. Pair generation via member lists + map-side
+    * explode is one shuffle on the shingle hash; an equivalent
+    * self-join doubles the shuffle and was 3-5x slower cold at sf0.1. */
+  private def memberLists(rows: DataFrame): DataFrame =
+    rows.groupBy("h")
       .agg(sort_array(collect_list(struct(col("id"), col("sz"))))
         .as("ms"))
       .where(size(col("ms")) > 1)
-    // re-spread before the pair explosion: AQE coalesces the (small)
-    // per-shingle aggregate into few partitions, which would serialize
-    // the (large) exploded pair stream through one task. SCALE-GATED
-    // since round 19 (the Fan probe): on a multi-split corpus the
-    // groupBy's own shuffle already spreads, and the repartition was a
-    // full re-shuffle of the shingle aggregate. Gated on the uncached
-    // input: `sets` is a cache of it (or of its class representatives),
-    // already spread, which says nothing of how AQE coalesces the
-    // aggregate.
-    val pairs = Fan.ifNarrow(source, byShingle)
+
+  /** The co-occurrence tail shared by every exact Jaccard emitter:
+    * member lists (already spread by the caller) → size-pruned pair
+    * emission → intersection count per pair → thresholded score. */
+  private def cooccurrencePairs(byShingle: DataFrame,
+      idType: org.apache.spark.sql.types.DataType,
+      threshold: Double): DataFrame =
+    jaccardAbove(byShingle
       .select(explode(pairEmitUdf(idType, threshold)(col("ms"))).as("p"))
       .select(col("p.*"))
-    val inter = pairs.groupBy("id_a", "id_b", "sz_a", "sz_b")
-      .agg(count(lit(1)).as("inter"))
-    inter
+      .groupBy("id_a", "id_b", "sz_a", "sz_b")
+      .agg(count(lit(1)).as("inter")), threshold)
+
+  /** (id_a, id_b, jaccard) of the pairs whose rounded Jaccard clears
+    * `threshold`, scored from (inter, sz_a, sz_b). The 4-dp rounding
+    * with the 1e-9 nudge is the one the oracle SQL replays. */
+  private def jaccardAbove(pairs: DataFrame, threshold: Double)
+      : DataFrame =
+    pairs
       .withColumn("jaccard", round(col("inter").cast("double") /
         (col("sz_a") + col("sz_b") - col("inter")).cast("double") + 1e-9, 4))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-  }
-
-  /** Sorted distinct shingle hashes per doc (ascending — the global
-    * order prefix filtering requires; same primitive sort+dedup as
-    * shingleHashesUdf). */
-  private def sortedShingleUdf(n: Int) =
-    org.apache.spark.sql.functions.udf { (text: String) =>
-      sortedDistinctHashes(text, n)
-    }
-
-  // codegen'd merge-scan (graft.expr.SortedLongIntersect): the ScalaUDF
-  // form paid a per-call boxed-Seq conversion that dominated the verify
-  // stage at sf0.1
 
   /** Exact jaccard pairs via PREFIX FILTERING (SSJoin/PPJoin): under a
     * common global order of shingles, any pair with J >= t shares an
@@ -300,28 +301,42 @@ object Dedup {
     * formulation for high thresholds. At low thresholds the prefix is
     * nearly the whole set — use jaccardPairs there.
     *
-    * Scale boundary CLOSED in round 12: mass duplication used to turn
-    * every prefix shingle into a stop-shingle (df = clique size x
-    * classes) and candidate emission went quadratic per shingle —
-    * billions of pre-distinct rows that exhausted spill disk at the
-    * 30x dup-stress tier. The operator is now DUPLICATION-ADAPTIVE:
-    * docs with byte-identical shingle sets contract to one
-    * representative before prefix generation (candidate volume
-    * quadratic per representative set, not per clique), and the
+    * Duplication-adaptive through [[adaptiveSelfPairs]]: mass
+    * duplication turns every prefix shingle into a stop-shingle
+    * (df = clique size x classes) and candidate emission goes
+    * quadratic per shingle, so docs with identical shingle sets
+    * contract to one representative before prefix generation and the
     * output re-expands from class membership — bit-identical to the
-    * all-pairs result (intra-class pairs are J=1 by construction;
-    * J(x, y) of cross-class members equals J(rep_x, rep_y) because
-    * members share their rep's exact shingle set). */
+    * all-pairs result. The census digests xxhash64 over the persisted
+    * SHINGLE-SET arrays, not the text: the operator persists its sets
+    * anyway, so the census rides that cache (no second text scan), and
+    * it contracts strictly more (byte-different docs with identical
+    * shingle sets share a digest class too). */
   def jaccardPairsPrefix(df: DataFrame, idCol: String, textCol: String,
-      n: Int, threshold: Double): DataFrame =
-    jaccardPairsPrefixScoped(df, idCol, textCol, n, threshold)._1
+      n: Int, threshold: Double): DataFrame = {
+    requireJaccardThreshold(threshold)
+    val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
+    val sets = df.select(col(idCol).as("id"),
+        shingleHashesUdf(n)(col(textCol)).as("shs"))
+      .where(size(col("shs")) > 0)
+      .withColumn("sz", size(col("shs")))
+    // persisted: three plan branches read it (prefix explode + both
+    // verify-join sides) — without the persist the shingling UDF runs
+    // over the full corpus three times. Swapped before the persist
+    // (the ReleaseSlot ordering contract).
+    prefixSetsSlot.swap(df.sparkSession, () => { sets.unpersist(); () })
+    sets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    adaptiveSelfPairs(
+      sets.select(col("id"), xxhash64(col("shs")).as("dg")),
+      sets, "id", Seq("shs"),
+      s => prefixPairsOverSets(df, s, idType, threshold),
+      lit(1.0), "jaccard", prefixSlot)
+  }
 
   /** The PPJoin prefix -> candidate -> verify pipeline over a prepared
     * (id, shs, sz) sets frame (persisted by the caller — three plan
-    * branches read it). Factored out so the duplication-adaptive
-    * wrapper can run the same pipeline over class representatives.
-    * `source` is the operator's uncached input, the frame the re-spread
-    * gate probes. */
+    * branches read it). `source` is the operator's uncached input, the
+    * frame the re-spread gate probes. */
   private def prefixPairsOverSets(source: DataFrame, sets: DataFrame,
       idType: org.apache.spark.sql.types.DataType,
       threshold: Double): DataFrame = {
@@ -331,15 +346,10 @@ object Dedup {
     val prefixLen =
       (col("sz") - ceil(col("sz") * roundSlackThreshold(threshold)) + 1)
         .cast("int")
-    val pref = sets.select(col("id"), col("sz"),
+    val byShingle = memberLists(sets.select(col("id"), col("sz"),
       explode(slice(col("shs"), lit(1), greatest(prefixLen, lit(1))))
-        .as("h"))
-    val byShingle = pref.groupBy("h")
-      .agg(sort_array(collect_list(struct(col("id"), col("sz"))))
-        .as("ms"))
-      .where(size(col("ms")) > 1)
+        .as("h")))
     // scale-gated re-spread — same rationale as jaccardPairsOverSets
-    // (round 19), also gated on the uncached input
     val cand = Fan.ifNarrow(source, byShingle)
       .select(explode(pairEmitUdf(idType, threshold)(col("ms"))).as("p"))
       .select(col("p.id_a"), col("p.id_b"))
@@ -351,19 +361,13 @@ object Dedup {
     // tier, killed by maxResultSize; AQE cannot demote a cached-side
     // broadcast because there is no shuffle stage to re-plan). Sort-
     // merge keeps both sides spillable at any corpus size.
-    val verified = cand
+    jaccardAbove(cand
       .join(sets.select(col("id").as("id_a"), col("shs").as("shs_a"),
         col("sz").as("sz_a")).hint("merge"), "id_a")
       .join(sets.select(col("id").as("id_b"), col("shs").as("shs_b"),
         col("sz").as("sz_b")).hint("merge"), "id_b")
       .withColumn("inter", graft.expr.VectorOps.intersectSortedLongs(
-        col("shs_a"), col("shs_b")))
-    verified
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double")
-        + 1e-9, 4))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+        col("shs_a"), col("shs_b"))), threshold)
   }
 
   /** All i<j member pairs of one contracted class. Members arrive
@@ -395,262 +399,178 @@ object Dedup {
       }, out)
   }
 
-  /** jaccardPairsPrefix plus an explicit release hook for the internal
-    * caches (the shingle-set frame, and the contracted-class +
-    * suspect frames when the corpus has duplicates). Call the
-    * returned thunk AFTER the last action on the returned DataFrame —
-    * calling it earlier just makes the remaining branches recompute
-    * (correctness unaffected). A module ReleaseSlot ALSO frees the
-    * previous invocation's caches on each call (double-unpersist is
-    * idempotent), so callers of the bare jaccardPairsPrefix — which
-    * discards the thunk — pin at most one invocation's frames, never
-    * an unbounded history.
-    *
-    * Duplication-adaptive contraction (round 12): the census digests
-    * xxhash64 over the SHINGLE-SET array, not over the text the way
-    * [[jaccardSpanningEdges]] does — the prefix operator persists its
-    * shingle sets anyway, so digesting the cached arrays rides a cache
-    * the pipeline already pays for (no second text scan), and it
-    * contracts strictly more (byte-different docs with identical
-    * shingle sets share a digest class too). The census is ROUTING
-    * ONLY: classes group by the FULL shingle array, so a digest
-    * collision just adds a doc to the exact grouping, and a missed
-    * class stays uncontracted (quadratic for that class only) — output
-    * is unaffected in both directions. Both census totals come from
-    * ONE aggregation job, the same job that materializes the sets
-    * cache. */
+  /** jaccardPairsPrefix plus an explicit release hook for its caches
+    * (the shingle-set frame, and the census-routed frames when the
+    * corpus has duplicates). Call the returned thunk AFTER the last
+    * action on the returned DataFrame — calling it earlier just makes
+    * the remaining branches recompute (correctness unaffected). The
+    * thunk frees what this session's latest invocation pinned; callers
+    * of the bare jaccardPairsPrefix discard it, and the module slots
+    * free each previous invocation's caches on the next call. */
   def jaccardPairsPrefixScoped(df: DataFrame, idCol: String,
       textCol: String, n: Int, threshold: Double)
       : (DataFrame, () => Unit) = {
-    // Jaccard's codomain is (0, 1]: a threshold outside it makes the
-    // prefix length formula meaningless below and — worse — silently
-    // breaks the contraction's bit-identity above (intra-class pairs
-    // are emitted at 1.0 unconditionally, which a verify stage with
-    // threshold > 1 would have filtered). Reject, don't guess.
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"jaccard threshold must be in (0, 1]; got $threshold")
-    import org.apache.spark.storage.StorageLevel
-    val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
-    // release the PREVIOUS invocation's caches before persisting this
-    // one's (the ReleaseSlot ordering contract): callers of the bare
-    // jaccardPairsPrefix discard the returned thunk, and the adaptive
-    // path can pin up to three frames per call — without the slot a
-    // long-lived session accumulates them across invocations.
-    prefixSlot.releasePrevious(df.sparkSession)
-    // persisted: three plan branches read it (prefix explode + both
-    // verify-join sides) — without the persist the shingling UDF runs
-    // over the full corpus three times. LRU-evictable; disk-spill for
-    // corpora beyond executor memory.
-    val sets = df.select(col(idCol).as("id"),
-        sortedShingleUdf(n)(col(textCol)).as("shs"))
-      .where(size(col("shs")) > 0)
-      .withColumn("sz", size(col("shs")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // hook registered IMMEDIATELY after the persist, before any
-    // action that can throw (census, ids gate): an exception between
-    // persist and set() would otherwise orphan the cache for the
-    // session lifetime — every later releasePrevious() a no-op on it.
-    // Branches below overwrite with fuller hooks as more frames pin.
-    prefixSlot.set(df.sparkSession, () => { sets.unpersist(); () })
-    val dg = sets.select(col("id"), xxhash64(col("shs")).as("dg"))
-    val classCounts = dg.groupBy("dg").agg(count(lit(1)).as("c"))
-    // FUSED census + ids gate (round 18 — the adaptiveSelfPairs
-    // pattern backported): ONE action over the just-persisted sets
-    // cache answers the duplication census AND the ids-unique gate,
-    // where the r12 form paid a second driver round-trip (head()) for
-    // the gate on every duplicated corpus. The gate must stay GLOBAL
-    // (count_distinct over ALL ids): with only per-class uniqueness an
-    // id repeated across two census classes could lift into a (x, x)
-    // self-pair the legacy plan never emits.
-    val stats = classCounts.agg(sum(col("c")).as("docs"),
-      sum(when(col("c") > lit(1L), col("c"))).as("sus"))
-    val gate = sets.agg(count_distinct(col("id")).as("nids"))
-    val tot = stats.crossJoin(gate).head()
-    val nDocs = if (tot.isNullAt(0)) 0L else tot.getLong(0)
-    val nSuspects = if (tot.isNullAt(1)) 0L else tot.getLong(1)
-    if (nSuspects == 0L) {
-      // no duplicated shingle set anywhere: contraction cannot change
-      // the candidate volume — run the plain pipeline, zero overhead
-      // beyond the census aggregation itself
-      val out = prefixPairsOverSets(df, sets, idType, threshold)
-      val rel = () => { sets.unpersist(); () }
-      prefixSlot.set(df.sparkSession, rel)
-      return (out, rel)
-    }
-    // ids-unique gate (same contract as EditDistanceJoin.selfJoin):
-    // the re-expansion's bit-identity proof assumes ids identify rows
-    // — a repeated id makes the membership lift emit per-OCCURRENCE
-    // multiplicities and classPairUdf emit self-pairs the uncontracted
-    // plan never produces. Such degenerate inputs keep the original
-    // plan verbatim (documented quadratic-per-clique boundary). The
-    // agg reads the persisted sets snapshot the census just
-    // materialized, so both sides of the comparison describe the same
-    // execution.
-    val idsUnique = tot.getLong(2) == nDocs
-    if (!idsUnique) {
-      val out = prefixPairsOverSets(df, sets, idType, threshold)
-      val rel = () => { sets.unpersist(); () }
-      prefixSlot.set(df.sparkSession, rel)
-      return (out, rel)
-    }
-    // suspect/cold routing, same tiers as jaccardSpanningEdges:
-    //  - every doc a suspect, or too many to broadcast: group ALL docs
-    //    (the grouping is exact, routing merely skips it for cold docs);
-    //  - small set: a literal IN-set filter (driver-collected, bounded
-    //    well below where task-binary serialization dominates);
-    //  - otherwise: broadcast semi/anti joins on the slim suspect ids
-    //    (persisted lazily so the second broadcast build reads the
-    //    cached ids instead of re-scanning the array-heavy sets cache)
-    var suspectsCache: Option[DataFrame] = None
-    val (hot, cold) =
-      if (nSuspects == nDocs || nSuspects > SpanningMaxLocalSuspects)
-        (sets, sets.where(lit(false)))
-      else if (nSuspects <= SpanningInSetSuspects) {
-        val suspectIds = dg.join(classCounts.where(col("c") > lit(1L))
-            .select("dg"), "dg").select("id")
-          .collect().map(_.get(0)).filter(_ != null).toSeq
-        // null-safety: coalesce the IN to false so the cold side (!in)
-        // never drops rows — null ids match nothing and stay cold
-        val in =
-          if (suspectIds.isEmpty) lit(false)
-          else coalesce(col("id").isInCollection(suspectIds), lit(false))
-        (sets.where(in), sets.where(!in))
-      } else {
-        val suspects = dg.join(classCounts.where(col("c") > lit(1L))
-            .select("dg"), "dg").select("id")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        suspectsCache = Some(suspects)
-        prefixSlot.set(df.sparkSession,
-          () => { sets.unpersist(); suspects.unpersist(); () })
-        // materialize before the main query — the concurrent semi/anti
-        // broadcast builds would otherwise race past the lazy cache
-        // and each re-scan the array-heavy sets cache
-        suspects.count()
-        (sets.join(broadcast(suspects), Seq("id"), "left_semi"),
-         sets.join(broadcast(suspects), Seq("id"), "left_anti"))
-      }
-    // exact classes: FULL sorted shingle array as the key (never the
-    // digest); rep = min member under Catalyst's own type ordering
-    val classes = hot.groupBy("shs")
-      .agg(min(col("id")).as("rep"),
-        sort_array(collect_list(col("id"))).as("members"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val rel = () => { sets.unpersist(); classes.unpersist()
-      suspectsCache.foreach(_.unpersist()); () }
-    prefixSlot.set(df.sparkSession, rel)
-    // materialize before the main query (round 18 — the
-    // adaptiveSelfPairs discipline backported): the two lift builds,
-    // both intra branches, and the reps union all read `classes`
-    // concurrently, and a lazy persist loses that race — each branch
-    // would recompute the hot scan + class groupBy lineage instead of
-    // reading the cache. One tiny job (suspect-bounded rows).
-    classes.count()
-    val reps = classes.select(col("rep").as("id"), col("shs"),
-        size(col("shs")).as("sz"))
-      .union(cold.select(col("id"), col("shs"), col("sz")))
-    val repPairs = prefixPairsOverSets(df, reps, idType, threshold)
-    // re-expansion. Intra-class pairs are J=1 by construction (same
-    // round(1 + 1e-9, 4) = 1.0 the verify stage computes for identical
-    // sets). Cross pairs lift each rep pair to all member combinations
-    // via two membership joins; members of distinct classes are
-    // distinct ids, so no pair is emitted twice and least/greatest
-    // (Catalyst ordering, matching sort_array upstream of pairEmitUdf)
-    // restores the id_a < id_b canonical form.
-    val members = classes.select(col("rep"),
-      explode(col("members")).as("m"))
-    // lift join strategy TIERED like the routing (round 18 — the
-    // adaptiveSelfPairs tiering backported; its A/B note: a merge hint
-    // here forced two full sorts of the operator's ENTIRE pair output,
-    // dominating the lift on lightly-duplicated corpora): on the
-    // suspect tiers `members` is bounded by the suspect count (two
-    // scalar columns — megabytes at the 1M cap), so an explicit
-    // broadcast keeps the pair stream un-sorted and un-shuffled; on
-    // the group-all tier members spans the corpus, so sort-merge keeps
-    // both sides spillable (the hint matters: a static broadcast pick
-    // off optimistic cached stats cannot be demoted by AQE).
-    val liftBroadcastable =
-      nSuspects < nDocs && nSuspects <= SpanningMaxLocalSuspects
-    def liftSide(as: String, out: String) = {
-      val m = members.select(col("rep").as(as), col("m").as(out))
-      if (liftBroadcastable) broadcast(m) else m.hint("merge")
-    }
-    // size-gated: the shuffle-free explode materializes one
-    // m(m-1)/2-element array PER ROW, which is the fast path for
-    // ordinary clique sizes but an allocation cliff for mega-classes
-    // (m=1e5 would build 5e9 Rows in a single task). Classes past the
-    // cap stream their pairs through a self-join on rep instead —
-    // same emitted set (members are distinct and `<` is the Catalyst
-    // ordering sort_array used), spillable at any class size.
-    val smallIntra = classes.where(size(col("members")) > 1 &&
-        size(col("members")) <= IntraExplodeCap)
-      .select(explode(classPairUdf(idType)(col("members"))).as("p"))
-      .select(col("p.id_a"), col("p.id_b"), lit(1.0).as("jaccard"))
-    val bigMembers = classes.where(size(col("members")) > IntraExplodeCap)
-      .select(col("rep"), explode(col("members")).as("m"))
-    val bigIntra = bigMembers.select(col("rep"), col("m").as("id_a"))
-      .join(bigMembers.select(col("rep"), col("m").as("id_b"))
-        .hint("merge"), Seq("rep"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    val intra = smallIntra.union(bigIntra)
-    val cross = repPairs
-      .join(liftSide("id_a", "xa"), Seq("id_a"), "left")
-      .join(liftSide("id_b", "xb"), Seq("id_b"), "left")
-      .withColumn("a2", coalesce(col("xa"), col("id_a")))
-      .withColumn("b2", coalesce(col("xb"), col("id_b")))
-      .select(least(col("a2"), col("b2")).as("id_a"),
-        greatest(col("a2"), col("b2")).as("id_b"), col("jaccard"))
-    val out = cross.union(intra)
-    (out, rel)
+    val out = jaccardPairsPrefix(df, idCol, textCol, n, threshold)
+    val sess = df.sparkSession
+    (out, () => {
+      prefixSlot.releasePrevious(sess); prefixSetsSlot.releasePrevious(sess)
+    })
   }
 
   private val prefixSlot = ReleaseSlot()
+  private val prefixSetsSlot = ReleaseSlot()
 
-  /** Duplication-adaptive self-pair harness — the q68/q115 census →
-    * contract → verify-among-reps → re-expand pattern, generalized
-    * for every exact pair emitter whose score is INVARIANT under
-    * byte-identical contraction (J of identical shingle sets, hamming
-    * of identical signatures, cosine of identical vectors).
+  /** The frames one adaptive invocation pins, released together
+    * through `slot`. Construction runs the previous invocation's hook
+    * (the ReleaseSlot ordering contract: before this invocation
+    * persists anything), and every pin re-registers the hook right
+    * after its persist, so an action that throws later cannot orphan
+    * a cache for the session lifetime. */
+  private[graft] final class Pins(sess: org.apache.spark.sql.SparkSession,
+      slot: ReleaseSlot) {
+    slot.releasePrevious(sess)
+    private var frames = List.empty[DataFrame]
+    private def register(): Unit = {
+      val fs = frames
+      slot.set(sess, () => { fs.foreach(_.unpersist(false)); () })
+    }
+    def pin(df: DataFrame): DataFrame = {
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      frames ::= df; register(); df
+    }
+    def unpin(df: DataFrame): Unit = {
+      df.unpersist(false); frames = frames.filterNot(_ eq df); register()
+    }
+  }
+
+  /** How [[censusRoute]] routes a corpus. */
+  private[graft] sealed trait Route
+  /** No digest class holds two rows: contraction cannot change
+    * anything, so the caller keeps its original plan. */
+  private[graft] case object DupFree extends Route
+  /** An id repeats (gated callers only): the membership lift's
+    * bit-identity proof needs ids that identify rows — a repeated id
+    * lifts per OCCURRENCE and can forge (x, x) self-pairs — so the
+    * caller keeps its original plan. */
+  private[graft] case object RepeatedIds extends Route
+  /** The split frame's suspects (`hot`) and the rest (`cold`). */
+  private[graft] final case class Contract(hot: DataFrame,
+      cold: DataFrame, tier: Tier) extends Route
+
+  /** Which suspect routing [[censusRoute]] picked. */
+  private[graft] sealed trait Tier
+  /** Suspect ids ride a literal IN filter, collected to the driver. */
+  private[graft] case object InSet extends Tier
+  /** Suspect ids pin and feed broadcast semi/anti joins. */
+  private[graft] case object BroadcastIds extends Tier
+  /** Every row is hot: all rows a suspect, or too many to broadcast. */
+  private[graft] case object GroupAll extends Tier
+
+  /** The one duplication census and router of the adaptive operators
+    * ([[adaptiveSelfPairs]] and [[jaccardSpanningEdges]]).
+    *
+    * `census` is an (`idCol`, dg) frame whose `dg` fingerprints each
+    * row. It is pinned, so the fingerprint scan runs once however many
+    * census passes read it, and released once the route is known. ONE
+    * aggregation job answers both census totals and, when `gated`, the
+    * ids-unique gate (a crossJoin of the two single-row aggregates over
+    * the pinned census). The gate must stay GLOBAL (count_distinct over
+    * ALL ids): with only per-class uniqueness, an id repeated across
+    * two census classes — same id, different bytes — lets a lifted rep
+    * pair expand into a (x, x) self-pair the uncontracted plan never
+    * emits. Uniqueness over the raw rows implies uniqueness over any
+    * filtered frame derived from them.
+    *
+    * The census is ROUTING ONLY in both directions: a digest collision
+    * routes extra rows to the caller's exact grouping, and a class the
+    * census misses stays uncontracted (quadratic for that class only).
+    *
+    * Suspects are the members of digest classes with more than one
+    * row. The tiers, cheapest that fits the suspect count:
+    *  - every row a suspect, or more than [[SpanningMaxLocalSuspects]]:
+    *    group all rows (grouping is exact; routing only decides WHO);
+    *  - at most [[SpanningInSetSuspects]]: a literal IN filter, kept
+    *    well below the literal count where plan analysis and task
+    *    serialization dominate (multi-MiB task binaries at 100k);
+    *  - otherwise: the suspect ids pin and feed broadcast semi/anti
+    *    joins, materialized first — the two concurrent broadcast builds
+    *    would otherwise race past the lazy cache and each recompute the
+    *    census join.
+    * `split(tier)` builds the frame the route splits into hot and cold;
+    * it runs only when the route contracts. */
+  private[graft] def censusRoute(census: DataFrame, idCol: String,
+      gated: Boolean, pins: Pins)(split: Tier => DataFrame): Route = {
+    val cen = pins.pin(census)
+    val stats = cen.groupBy("dg").agg(count(lit(1)).as("c"))
+      .agg(sum(col("c")).as("n"),
+        sum(when(col("c") > lit(1L), col("c"))).as("sus"))
+    val tot = (if (!gated) stats else stats.crossJoin(cen.agg(
+      count(lit(1)).as("nb"), count_distinct(col(idCol)).as("nids"))))
+      .head()
+    val n = if (tot.isNullAt(0)) 0L else tot.getLong(0)
+    val nSuspects = if (tot.isNullAt(1)) 0L else tot.getLong(1)
+    val dupIds = cen
+      .join(cen.groupBy("dg").agg(count(lit(1)).as("c"))
+        .where(col("c") > lit(1L)).select("dg"), "dg")
+      .select(col(idCol))
+    val route =
+      if (nSuspects == 0L) DupFree
+      else if (gated && tot.getLong(3) != tot.getLong(2)) RepeatedIds
+      else if (nSuspects == n || nSuspects > SpanningMaxLocalSuspects) {
+        val base = split(GroupAll)
+        Contract(base, base.where(lit(false)), GroupAll)
+      } else if (nSuspects <= SpanningInSetSuspects) {
+        val ids = dupIds.collect().map(_.get(0)).filter(_ != null).toSeq
+        // null-safety: coalesce the IN to false so the cold side (!in)
+        // never drops rows — null ids match nothing and stay cold, as
+        // under the broadcast tier's left_anti
+        val in =
+          if (ids.isEmpty) lit(false)
+          else coalesce(col(idCol).isInCollection(ids), lit(false))
+        val base = split(InSet)
+        Contract(base.where(in), base.where(!in), InSet)
+      } else {
+        val suspects = pins.pin(dupIds)
+        suspects.count()
+        val base = split(BroadcastIds)
+        Contract(base.join(broadcast(suspects), Seq(idCol), "left_semi"),
+          base.join(broadcast(suspects), Seq(idCol), "left_anti"),
+          BroadcastIds)
+      }
+    pins.unpin(cen)
+    route
+  }
+
+  /** Duplication-adaptive self-pair harness: census → contract →
+    * verify among representatives → re-expand, for every exact pair
+    * emitter whose score is INVARIANT under byte-identical contraction
+    * (J of identical shingle sets, hamming of identical signatures,
+    * cosine of identical vectors, edit distance 0 of identical strings).
     *
     * `slim` is the operator's prepared per-doc frame: an `idCol`
     * column plus the exact contraction key columns (`keyCols`) plus
     * any derived payload columns (functions of the key — carried via
     * first() through the class agg). `census` is a SEPARATE cheap
-    * (`idCol`, dg) frame over the operator's raw input whose `dg`
-    * column fingerprints each row BEFORE the operator's (expensive)
-    * signing UDF runs — in practice xxhash64 of the raw text, a native
-    * codegen'd scan. The census is ROUTING-ONLY in both directions:
-    * a digest collision (or byte-different rows that happen to share
-    * an exact key) routes a corpus into the contraction path, where
-    * classes group by the FULL key and singleton classes reproduce
-    * the uncontracted output; a census that finds no dups keeps the
-    * original plan, which is exact regardless. What the census MUST
-    * catch for the scale protection to engage is byte-identical
-    * replication — mass duplication, the regime that kills the
-    * quadratic emitters — and any row-level fingerprint does.
-    * Censusing raw bytes instead of derived keys is deliberate: the
-    * derived-key census (first cut of round 13) re-ran the signing
-    * UDF just to answer "any dups?", doubling every dup-free
-    * corpus's dominant cost; the raw scan answers it for the price
-    * of a hash pass (same-window A/B in COVERAGE.md's perf log).
+    * (`idCol`, dg) frame, routed by [[censusRoute]] with the ids gate.
+    * In practice dg is xxhash64 of the raw text, a native codegen'd
+    * scan that runs BEFORE the operator's (expensive) signing UDF: a
+    * derived-key census re-ran the signing UDF just to answer "any
+    * dups?", doubling every dup-free corpus's dominant cost. What the
+    * census MUST catch for the scale protection to engage is
+    * byte-identical replication — mass duplication, the regime that
+    * kills the quadratic emitters — and any row-level fingerprint does.
     *
     * `core` runs the operator's original pipeline over a slim-shaped
     * frame and must return (id_a, id_b, `scoreName`) with id_a < id_b
     * canonical order. `intraScore` is the constant the uncontracted
     * plan provably computes for two rows with identical keys.
     *
-    * Staging mirrors EditDistanceJoin.selfJoin: a dup-free corpus
-    * pays ONE hash-scan census agg and keeps the original plan with
-    * nothing pinned. The contraction path pins the (id, dg) census —
-    * 16 bytes a row — and answers the ids gate and suspect
-    * identification from that snapshot (repeated ids break the
-    * membership lift's bit-identity proof — such degenerate inputs
-    * keep the uncontracted plan verbatim); the HEAVY slim frame is
-    * persisted only on the tiers that re-read it wholesale
-    * (broadcast-suspects, group-all), never on the IN-set tier where
-    * the id predicate pushes below the signing UDF and the plan
-    * keeps the original cost shape. Re-expansion flows through
-    * size-gated membership joins.
+    * A dup-free or repeated-id corpus pays ONE census aggregation and
+    * keeps the original plan with nothing pinned. The heavy slim frame
+    * is persisted only on the tiers that re-read it wholesale
+    * (broadcast, group-all), and only when the caller has not already;
+    * on the IN-set tier the id predicate pushes below the signing UDF
+    * and the plan keeps the original cost shape.
     *
     * Input contract (same as selfJoin): the input's lineage must be
     * deterministic under re-execution — the census and the dup-free
@@ -662,100 +582,16 @@ object Dedup {
       core: DataFrame => DataFrame, intraScore: Column,
       scoreName: String, slot: ReleaseSlot): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val sess = slim.sparkSession
     val idType = slim.schema(slim.schema.fieldIndex(idCol)).dataType
-    slot.releasePrevious(sess)
-    // FUSED census + ids gate (round-14 verdict item 5, A/B-adopted):
-    // persist first, then ONE action answers the duplication census
-    // AND the ids-unique gate via a crossJoin of the two single-row
-    // aggregates over the cached (id, dg) frame — the cache's
-    // block-level locking means one raw-text scan builds the blocks
-    // and the second subtree reads them, where the unfused form's
-    // contraction path scanned the raw input TWICE (census agg, then
-    // gate materializing the cache) with a driver round-trip between.
-    // Same-window A/B (COVERAGE.md round-14 perf log): trio total
-    // 8.11-8.36 → 7.29-7.95 s at sf0.1; at corpus scale the saving is
-    // a whole raw scan per contraction-engaged query. The dup-free
-    // path now writes the (16-byte-a-row) census cache it immediately
-    // releases — bounded by a <2%-of-scan overhead, priced in the
-    // same log.
-    //
-    // The gate must stay GLOBAL (count_distinct over ALL ids, a
-    // second grouping — why this is a two-subtree action, not one
-    // single-grouping aggregation): with only per-class uniqueness,
-    // an id repeated across two census classes — same id, different
-    // bytes — lets a lifted rep pair expand through the repeated id
-    // into a (x, x) self-pair the legacy plan can never emit. A
-    // raw-level repeat conservatively keeps the uncontracted plan,
-    // exactly the documented degenerate boundary; uniqueness over the
-    // RAW rows implies uniqueness over the (possibly filtered) slim
-    // frame.
-    val cen = census.persist(StorageLevel.MEMORY_AND_DISK)
-    // hook registered IMMEDIATELY after the persist (release-slot
-    // exception-window contract): the fused action below can throw
-    slot.set(sess, () => { cen.unpersist(false); () })
-    val stats = cen.groupBy("dg").agg(count(lit(1)).as("c"))
-      .agg(sum(col("c")).as("n"),
-        sum(when(col("c") > lit(1L), col("c"))).as("sus"))
-    val gate = cen.agg(count(lit(1)).as("nb"),
-      count_distinct(col(idCol)).as("nids"))
-    val tot = stats.crossJoin(gate).head()
-    val n = if (tot.isNullAt(0)) 0L else tot.getLong(0)
-    val nSuspects = if (tot.isNullAt(1)) 0L else tot.getLong(1)
-    // dup-free / repeated-id early exits release the census pin at
-    // once — nothing downstream reads it
-    if (nSuspects == 0L) {
-      slot.releasePrevious(sess); return core(slim)
+    val pins = new Pins(slim.sparkSession, slot)
+    val route = censusRoute(census, idCol, gated = true, pins) { tier =>
+      if (tier == InSet || slim.storageLevel != StorageLevel.NONE) slim
+      else pins.pin(slim)
     }
-    if (tot.getLong(3) != tot.getLong(2)) {
-      slot.releasePrevious(sess); return core(slim)
+    val (hot, cold, tier) = route match {
+      case Contract(h, c, t) => (h, c, t)
+      case _ => return core(slim)
     }
-    // suspect/cold routing, the q68 tiers: contraction only has to
-    // touch members of DUPLICATED census classes — on a lightly
-    // duplicated corpus (the realistic steady state after upstream
-    // hygiene) everything else must flow through the original plan
-    // untouched, not pay a groupBy on a multi-KB key. Small suspect
-    // sets ride a literal IN filter over the UNPERSISTED slim frame
-    // (the id predicate pushes below the signing UDF, so hot/cold
-    // scans sign only what they keep — the original plan's cost
-    // shape); large ones persist slim and broadcast semi/anti joins;
-    // mass duplication groups everything (grouping is exact either
-    // way — routing only decides WHO).
-    val dupIds = cen
-      .join(cen.groupBy("dg").agg(count(lit(1)).as("c"))
-        .where(col("c") > lit(1L)).select("dg"), "dg")
-      .select(col(idCol))
-    var heavyCaches: List[DataFrame] = Nil
-    val (hot, cold) =
-      if (nSuspects == n || nSuspects > SpanningMaxLocalSuspects) {
-        val base = slim.persist(StorageLevel.MEMORY_AND_DISK)
-        heavyCaches = List(base)
-        slot.set(sess, () => { cen.unpersist(false)
-          base.unpersist(false); () })
-        (base, base.where(lit(false)))
-      } else if (nSuspects <= SpanningInSetSuspects) {
-        val suspectIds = dupIds.collect().map(_.get(0))
-          .filter(_ != null).toSeq
-        // null-safety: coalesce the IN to false so the cold side
-        // (!in) never drops rows — null ids match nothing, stay cold
-        val in =
-          if (suspectIds.isEmpty) lit(false)
-          else coalesce(col(idCol).isInCollection(suspectIds),
-            lit(false))
-        (slim.where(in), slim.where(!in))
-      } else {
-        val suspects = dupIds.persist(StorageLevel.MEMORY_AND_DISK)
-        val base = slim.persist(StorageLevel.MEMORY_AND_DISK)
-        heavyCaches = List(base, suspects)
-        slot.set(sess, () => { cen.unpersist(false)
-          base.unpersist(false); suspects.unpersist(); () })
-        // materialize before the main query — two concurrent
-        // broadcast builds would race past the lazy cache and each
-        // recompute the census lineage
-        suspects.count()
-        (base.join(broadcast(suspects), Seq(idCol), "left_semi"),
-         base.join(broadcast(suspects), Seq(idCol), "left_anti"))
-      }
     val payload = slim.columns
       .filterNot(c0 => c0 == idCol || keyCols.contains(c0))
     val aggs =
@@ -765,16 +601,12 @@ object Dedup {
     // exact classes: the FULL key, never the digest; rep = min member
     // under Catalyst's own type ordering (matches sort_array, least/
     // greatest, and classPairUdf's i<j emission)
-    val classes = hot.groupBy(keyCols.map(col): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val pinned = cen :: classes :: heavyCaches
-    slot.set(sess, () => { pinned.foreach(_.unpersist(false)); () })
-    // materialize before the main query for the same reason as the
-    // suspects cache above: the two broadcast lift builds and the
-    // intra branches all read `classes` concurrently, and lazy
-    // persists lose that race — each build would recompute the hot
-    // scan + signing + groupBy lineage instead of reading the cache
+    val classes = pins.pin(hot.groupBy(keyCols.map(col): _*)
+      .agg(aggs.head, aggs.tail: _*))
+    // materialized before the main query: the two broadcast lift
+    // builds and the intra branches all read `classes` concurrently,
+    // and a lazy persist loses that race — each build would recompute
+    // the hot scan + signing + groupBy lineage instead of reading it
     classes.count()
     val reps = classes.select(slim.columns.toIndexedSeq.map {
       case c0 if c0 == idCol => col("rep").as(idCol)
@@ -789,21 +621,17 @@ object Dedup {
     val members = classes.select(col("rep"),
       explode(col("members")).as("m"))
     // lifts are LEFT joins with identity coalesce: a cold endpoint is
-    // its own lift (it was never grouped). Join strategy is TIERED
-    // like the routing: on the suspect tiers the members frame is
-    // bounded by the suspect count (two scalar columns — megabytes at
-    // the 1M cap), so an EXPLICIT broadcast keeps the pair stream
-    // un-sorted and un-shuffled (a merge hint here forced two full
-    // sorts of the operator's entire output — dominated the lift on
-    // lightly-duplicated corpora); on the group-all tier members
-    // spans the corpus, so sort-merge keeps both sides spillable
-    // (and the hint matters: a static broadcast pick off optimistic
-    // cached stats cannot be demoted by AQE).
-    val liftBroadcastable =
-      nSuspects < n && nSuspects <= SpanningMaxLocalSuspects
+    // its own lift (it was never grouped). On the suspect tiers the
+    // members frame is bounded by the suspect count (two scalar
+    // columns — megabytes at the 1M cap), so an EXPLICIT broadcast
+    // keeps the pair stream un-sorted and un-shuffled (a merge hint
+    // here forced two full sorts of the operator's entire output); on
+    // the group-all tier members spans the corpus, so sort-merge keeps
+    // both sides spillable (and the hint matters: a static broadcast
+    // pick off optimistic cached stats cannot be demoted by AQE).
     def liftSide(as: String, out: String) = {
       val m = members.select(col("rep").as(as), col("m").as(out))
-      if (liftBroadcastable) broadcast(m) else m.hint("merge")
+      if (tier != GroupAll) broadcast(m) else m.hint("merge")
     }
     val cross = repPairs
       .join(liftSide("id_a", "xa"), Seq("id_a"), "left")
@@ -812,10 +640,13 @@ object Dedup {
       .withColumn("b2", coalesce(col("xb"), col("id_b")))
       .select(least(col("a2"), col("b2")).as("id_a"),
         greatest(col("a2"), col("b2")).as("id_b"), col(scoreName))
-    // intra-class pairs at the invariant constant, size-gated exactly
-    // like the q68 re-expansion: row-local explode for ordinary
-    // classes, a rep-keyed self-join past the cap so no mega-clique
-    // materializes m(m-1)/2 rows in one task
+    // intra-class pairs at the invariant constant, size-gated: the
+    // shuffle-free explode builds one m(m-1)/2-element array PER ROW —
+    // the fast path for ordinary cliques, an allocation cliff for
+    // mega-classes (m=1e5 would build 5e9 Rows in one task) — so
+    // classes past the cap stream their pairs through a rep-keyed
+    // self-join instead (same set: members are distinct and `<` is the
+    // Catalyst ordering sort_array used), spillable at any class size
     val smallIntra = classes.where(size(col("members")) > 1 &&
         size(col("members")) <= IntraExplodeCap)
       .select(explode(classPairUdf(idType)(col("members"))).as("p"))
@@ -830,16 +661,12 @@ object Dedup {
     cross.unionByName(smallIntra).unionByName(bigIntra)
   }
 
-  /** Release slots for the round-13 adaptive pair emitters (one
-    * in-flight invocation per operator per JVM — the ReleaseSlot
-    * concurrency contract). */
+  /** Release slots of the adaptive pair emitters (one in-flight
+    * invocation per operator per session — the ReleaseSlot concurrency
+    * contract). */
   private val pairsSlot = ReleaseSlot()
   private val simhashPairsSlot = ReleaseSlot()
   private val portableEmbSlot = ReleaseSlot()
-
-  /** Release slots for the round-14 adaptive banded-LSH emitters
-    * (q22 fast signer, q93 portable signer) — same one-in-flight
-    * contract as the round-13 trio. */
   private val lshPairsSlot = ReleaseSlot()
   private val portableLshPairsSlot = ReleaseSlot()
 
@@ -857,59 +684,49 @@ object Dedup {
     * approximate one. */
   def jaccardPairsCapped(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double, maxDocFreq: Int): DataFrame = {
-    val sh = df.select(col(idCol).as("id"),
+    val kept = cappedPostings(df, idCol, textCol, n, maxDocFreq)
+    // df cap and per-doc sizes from AGGREGATIONS, not windows: a
+    // window formulation (count OVER partitionBy(h), then count OVER
+    // partitionBy(id)) pays two full exchange+sort passes over every
+    // (doc, shingle) row before the pairing groupBy (+35% wall on
+    // q83/q86/q119). The groupBy(h) in cappedPostings applies the cap
+    // (sizes computed AFTER it so the Jaccard denominator matches the
+    // capped universe), a groupBy(id) over the survivors counts sizes,
+    // and the id-keyed equi-join ships only (id, sz).
+    val sized = kept.groupBy("id")
+      .agg(count(lit(1)).cast("int").as("sz"))
+    val byShingle = memberLists(kept.join(sized, "id"))
+    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
+    val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
+    cooccurrencePairs(byShingle.repartition(parts), idType, threshold)
+  }
+
+  /** (h, id) postings of every shingle held by at most `maxDocFreq`
+    * documents. cappedCollect, NOT collect_list + size filter:
+    * collect_list materializes the FULL posting list of every shingle
+    * before the filter — a corpus-wide hot shingle would build a
+    * multi-million-id array in one aggregation buffer (2 GB row limit /
+    * OOM), exactly the skew the cap neutralizes. cappedCollect trips at
+    * maxDocFreq+1, empties the buffer, and evaluates to NULL, so
+    * per-shingle buffer memory is O(maxDocFreq) regardless of df. */
+  private def cappedPostings(df: DataFrame, idCol: String,
+      textCol: String, n: Int, maxDocFreq: Int): DataFrame =
+    df.select(col(idCol).as("id"),
         shingleHashesUdf(n)(col(textCol)).as("shs"))
       .where(size(col("shs")) > 0)
       .select(col("id"), explode(col("shs")).as("h"))
-    // df cap and per-doc sizes from AGGREGATIONS, not windows: the
-    // previous window formulation (count OVER partitionBy(h), then
-    // count OVER partitionBy(id)) paid two full exchange+sort passes
-    // over every (doc, shingle) row before the pairing groupBy — a
-    // +35% wall regression on q83/q86/q119 when the cap landed. One
-    // groupBy(h) applies the cap (sizes computed AFTER it so the
-    // Jaccard denominator matches the capped universe), a groupBy(id)
-    // over the survivors counts sizes, and the id-keyed equi-join ships
-    // only (id, sz) — partial aggregation does the heavy lifting
-    // map-side instead of sorting the exploded rows twice.
-    //
-    // cappedCollect, NOT collect_list + size filter: collect_list
-    // materializes the FULL posting list of every shingle before the
-    // filter — a corpus-wide hot shingle would build a multi-million-id
-    // array in one aggregation buffer (2 GB row limit / OOM), exactly
-    // the skew the cap neutralizes. cappedCollect trips at
-    // maxDocFreq+1, empties the buffer, and evaluates to NULL, so
-    // per-shingle buffer memory is O(maxDocFreq) regardless of df.
-    val grouped = sh.groupBy("h")
+      .groupBy("h")
       .agg(graft.expr.CappedCollect.cappedCollect(col("id"), maxDocFreq)
         .as("ids"))
       .where(col("ids").isNotNull)
-    val kept = grouped.select(col("h"), explode(col("ids")).as("id"))
-    val sized = kept.groupBy("id")
-      .agg(count(lit(1)).cast("int").as("sz"))
-    val byShingle = kept.join(sized, "id")
-      .groupBy("h")
-      .agg(sort_array(collect_list(struct(col("id"), col("sz"))))
-        .as("ms"))
-      .where(size(col("ms")) > 1)
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
-    val pairs = byShingle.repartition(parts)
-      .select(explode(pairEmitUdf(idType, threshold)(col("ms"))).as("p"))
-      .select(col("p.*"))
-    pairs.groupBy("id_a", "id_b", "sz_a", "sz_b")
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double") + 1e-9, 4))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
+      .select(col("h"), explode(col("ids")).as("id"))
 
   private val spanningSlot = ReleaseSlot()
 
-  /** Bound on the suspect-id set the adaptive spanning-edge path
-    * BROADCASTS for its semi/anti routing joins (1M ids ≈ 8-40 MB);
-    * beyond it the all-docs class machinery runs instead — a corpus
-    * that duplication-heavy genuinely needs it. */
+  /** Bound on the suspect-id set the census router BROADCASTS for its
+    * semi/anti routing joins (1M ids ≈ 8-40 MB); beyond it every row is
+    * grouped instead — a corpus that duplication-heavy genuinely needs
+    * it. */
   val SpanningMaxLocalSuspects: Int = 1000000
 
   /** Suspect sets at or under this size route via a literal IN-set
@@ -947,186 +764,54 @@ object Dedup {
     * X—rep(X)—rep(Y)—Y since J(rep(X),rep(Y)) = J(X,Y). Hence the
     * transitive closures — and any component labelling derived from
     * them — are identical, and the composites stay bit-identical to
-    * their recursive-CTE oracles while the 30× worst-case duplication
+    * their recursive-CTE oracles while the worst-case duplication
     * proof drops from quadratic to linear pair emission.
     *
-    * Exactness note: the class key is the full sorted shingle-hash
-    * array (array equality), not a digest of it — a digest collision
-    * would silently merge distinct classes. The key shuffles once
-    * (window min); its volume is the corpus shingle volume, the same
-    * order as the explode the pair pipeline already pays. */
+    * Routing: [[censusRoute]] over an (id, xxhash64(text)) census,
+    * without the ids gate (the per-doc frame is keyed by id, so a
+    * repeated id cannot lift into a self-pair). A corpus with no
+    * byte-identical docs cannot lose an edge to contraction, so it
+    * emits the full capped pair graph through [[jaccardPairsCapped]]'s
+    * plan — no per-doc cache, no array-key shuffles. Otherwise the
+    * per-doc capped shingle set (`key`, the exact class key — array
+    * equality, never a digest, which could merge distinct classes)
+    * persists and the suspects contract. A doc the census misses stays
+    * its own representative, and any >= t edge it has is emitted
+    * directly by the pair stage, so mis-routing costs pair volume,
+    * never edges. */
   def jaccardSpanningEdges(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double, maxDocFreq: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // Duplication-adaptive contraction (round 11). The exact-class
-    // machinery costs a perDoc cache plus two full shuffles of per-doc
-    // ARRAY keys (groupBy(key) + join-back) — pure overhead when the
-    // corpus has no exact dups, the common case outside dedup-stress
-    // tiers (+1.2 s per composite at sf0.1, measured). A scan-level
-    // census over xxhash64(text) finds byte-identical SUSPECTS first:
-    // it ships only (id, 8-byte digest) through one tiny shuffle and
-    // never touches the shingle pipeline.
-    //
-    // The census is ROUTING ONLY — correctness does not depend on it
-    // in either direction. Docs routed to the class machinery are
-    // grouped by their FULL capped shingle array (exact); docs NOT
-    // routed simply stay their own representatives and participate in
-    // the exact thresholded pair stage, where any >= t edge between
-    // them (including J=1 edges of a shingle-identical class the text
-    // census cannot see) is emitted directly. Mis-routing therefore
-    // costs pair-emission volume, never edges: a digest collision adds
-    // one doc to the exact grouping (harmless); a shingle-identical
-    // but byte-different class stays uncontracted (quadratic for that
-    // class only — such classes are near-dups the mutated tier covers,
-    // not the mass-duplication stress case, which IS byte-identical).
-    //
-    // Census mechanics: the slim (id, digest) frame is persisted so
-    // the text column is hashed in ONE scan however many census passes
-    // read it, and both totals come from one aggregation job before
-    // anything is collected — a limit(cap+1).collect() here re-ran the
-    // census lineage several times (take()'s incremental partition
-    // scale-up re-executes the join, each attempt rebuilding the
-    // digest groupBy), which at the 30x dup-stress tier cost ~8x the
-    // whole r10 query.
-    // release the PREVIOUS invocation's caches before persisting any
-    // of this one's (the ReleaseSlot ordering contract): on repeated
-    // identical invocations Spark's CacheManager dedupes persist() by
-    // analyzed plan, so releasing after this call's persists would
-    // uncache the very entries this call relies on
-    spanningSlot.releasePrevious(df.sparkSession)
-    val idDg = df.select(col(idCol).as("id"),
-        xxhash64(col(textCol)).as("tdg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // hook registered before the census action can throw (watchdog
-    // job-group cancel, OOM): an exception between persist and the
-    // full set() at perDoc would otherwise orphan this cache forever
-    spanningSlot.set(df.sparkSession, () => { idDg.unpersist(); () })
-    val classCounts = idDg.groupBy("tdg").agg(count(lit(1)).as("c"))
-    // ONE aggregation job yields both census totals (rounds 10-11 paid
-    // two separate count() jobs here) and fills the idDg cache the
-    // suspect join reads; `suspects` stays LAZY — the small tier
-    // collects it, the broadcast tier materializes it inside the main
-    // query (exchange reuse dedupes the two routing joins' builds),
-    // and the other tiers never compute it at all.
-    val tot = classCounts.agg(sum(col("c")).as("docs"),
-      sum(when(col("c") > lit(1L), col("c"))).as("sus")).first()
-    val nDocs = if (tot.isNullAt(0)) 0L else tot.getLong(0)
-    val nSuspects = if (tot.isNullAt(1)) 0L else tot.getLong(1)
-    // persisted LAZILY: no extra job — the tier that evaluates it
-    // first (small-tier collect, or the broadcast build) populates the
-    // cache, and the second broadcast build reads 6k rows instead of
-    // re-running the census join (measured +15% on q83's mutated tier
-    // when this was rebuilt per build)
-    val suspects = idDg.join(classCounts.where(col("c") > lit(1L))
-      .select("tdg"), "tdg").select("id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    spanningSlot.set(df.sparkSession,
-      () => { suspects.unpersist(); idDg.unpersist(); () })
-    if (nSuspects == 0L) {
-      suspects.unpersist(); idDg.unpersist()
-      // No byte-identical docs anywhere: contraction cannot remove any
-      // edge, so the spanning set IS the full capped pair graph — emit
-      // it through the proven jaccardPairsCapped plan (no perDoc
-      // cache, no array-key shuffles).
-      val edges = jaccardPairsCapped(df, idCol, textCol, n, threshold,
-        maxDocFreq).select("id_a", "id_b")
-      return df.sparkSession.createDataFrame(edges.rdd, edges.schema)
+    val sess = df.sparkSession
+    val pins = new Pins(sess, spanningSlot)
+    val route = censusRoute(df.select(col(idCol).as("id"),
+        xxhash64(col(textCol)).as("dg")), "id", gated = false, pins) { _ =>
+      // per-doc capped shingle set (input hashes are sorted-distinct per
+      // doc, so sort_array reconstructs canonical set identity) + size;
+      // persisted because three branches read it (class grouping, the
+      // rep frame, the rep-array explode for member lists)
+      pins.pin(cappedPostings(df, idCol, textCol, n, maxDocFreq)
+        .groupBy("id")
+        .agg(sort_array(collect_list(col("h"))).as("key"),
+          count(lit(1)).cast("int").as("sz")))
     }
-    val sh = df.select(col(idCol).as("id"),
-        shingleHashesUdf(n)(col(textCol)).as("shs"))
-      .where(size(col("shs")) > 0)
-      .select(col("id"), explode(col("shs")).as("h"))
-    val grouped = sh.groupBy("h")
-      .agg(graft.expr.CappedCollect.cappedCollect(col("id"), maxDocFreq)
-        .as("ids"))
-      .where(col("ids").isNotNull)
-    val kept = grouped.select(col("h"), explode(col("ids")).as("id"))
-    // per-doc capped shingle set (input hashes are sorted-distinct per
-    // doc, so sort_array reconstructs canonical set identity) + size.
-    // perDoc feeds THREE branches (class grouping, the rep join, the
-    // rep-array explode for per-shingle member lists) — persist so the
-    // shingle UDF + capped aggregation run once, not once per branch;
-    // released on the next invocation (ReleaseSlot discipline —
-    // releasePrevious() already ran at the top of this call, before
-    // any of this invocation's persists)
-    val perDoc = kept.groupBy("id")
-      .agg(sort_array(collect_list(col("h"))).as("key"),
-        count(lit(1)).cast("int").as("sz"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    spanningSlot.set(df.sparkSession, () => { perDoc.unpersist()
-      suspects.unpersist(); idDg.unpersist(); () })
-    val (star, reps) =
-      if (nSuspects <= SpanningMaxLocalSuspects) {
-        // suspect/cold split, cheapest routing that fits the set size:
-        //  - every doc a suspect (mass-duplication stress shape):
-        //    the joins would route nothing — skip them outright;
-        //  - small set: a literal IN-set filter (driver-collected;
-        //    kept WELL below the size where a locked-in 100k-literal
-        //    plan made analysis + task serialization dwarf the routed
-        //    work — multi-MiB task binaries at the 30x tier);
-        //  - otherwise: broadcast semi/anti joins against the
-        //    persisted frame (bounded by the cap, ≤ tens of MB).
-        // Exact class machinery then runs over suspects only.
-        val allDup = nSuspects == nDocs
-        val small =
-          if (!allDup && nSuspects <= SpanningInSetSuspects) {
-            // null-safety: drop null suspect ids and coalesce the IN
-            // to false, so the cold side (!in) NEVER drops rows — the
-            // same rows-kept semantics as the broadcast left_anti tier
-            // (null keys match nothing and stay cold)
-            val ids = suspects.collect().map(_.get(0))
-              .filter(_ != null).toSeq
-            suspects.unpersist(); idDg.unpersist()
-            Some(if (ids.isEmpty) lit(false)
-              else coalesce(col("id").isInCollection(ids), lit(false)))
-          } else None
-        val (hot, cold) =
-          if (allDup) {
-            suspects.unpersist(); idDg.unpersist()
-            (perDoc, perDoc.where(lit(false)))
-          } else small match {
-            case Some(in) => (perDoc.where(in), perDoc.where(!in))
-            case None =>
-              // materialize the cache BEFORE the main query: the semi
-              // and anti broadcast builds plan concurrently, and two
-              // racing evaluations would each re-run the census join
-              // (measured ~+10% on the mutated tier). One tiny job.
-              suspects.count()
-              (perDoc.join(broadcast(suspects), Seq("id"), "left_semi"),
-               perDoc.join(broadcast(suspects), Seq("id"), "left_anti"))
-          }
-        val (st, rp) = classStarReps(hot)
-        (st, rp.union(cold.select(col("id"), col("key"), col("sz"))))
-      } else {
-        suspects.unpersist(); idDg.unpersist() // routing unused here
-        // duplication-heavy corpus (suspects exceed the broadcast
-        // bound): rep per class over ALL docs (see classStarReps).
-        classStarReps(perDoc)
-      }
-    // thresholded pairs among representatives, full-corpus capped
-    // universe — the jaccardPairsCapped tail, except the per-shingle
-    // member lists come from EXPLODING the reps' own cached class-key
-    // arrays (perDoc.key IS the rep's capped shingle set), not from
-    // re-joining the exploded `kept` frame against the rep ids — one
-    // fewer shuffle join on the hot path
-    val byShingle = reps
-      .select(col("id"), col("sz"), explode(col("key")).as("h"))
-      .groupBy("h")
-      .agg(sort_array(collect_list(struct(col("id"), col("sz"))))
-        .as("ms"))
-      .where(size(col("ms")) > 1)
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
-    val pairs = byShingle.repartition(parts)
-      .select(explode(pairEmitUdf(idType, threshold)(col("ms"))).as("p"))
-      .select(col("p.*"))
-    val repPairs = pairs.groupBy("id_a", "id_b", "sz_a", "sz_b")
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", round(col("inter").cast("double") /
-        (col("sz_a") + col("sz_b") - col("inter")).cast("double") + 1e-9, 4))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b")
-    val edges = star.union(repPairs)
+    val edges = route match {
+      case Contract(hot, cold, _) =>
+        val (star, reps) = classStarReps(hot)
+        // thresholded pairs among representatives, full-corpus capped
+        // universe; member lists come from EXPLODING the reps' own
+        // class-key arrays (key IS the rep's capped shingle set) — one
+        // fewer shuffle join than re-joining the capped postings
+        val byShingle = memberLists(reps
+          .union(cold.select(col("id"), col("key"), col("sz")))
+          .select(col("id"), col("sz"), explode(col("key")).as("h")))
+        val parts = sess.sessionState.conf.numShufflePartitions
+        val idType = df.schema(df.schema.fieldIndex(idCol)).dataType
+        star.union(cooccurrencePairs(byShingle.repartition(parts), idType,
+          threshold).select("id_a", "id_b"))
+      case _ =>
+        jaccardPairsCapped(df, idCol, textCol, n, threshold, maxDocFreq)
+          .select("id_a", "id_b")
+    }
     // Lineage barrier (lazy — .rdd defers computation): Spark 4.1's
     // Union constraint rewrite (UnionBase.rewriteConstraints) throws
     // "key not found: <attr>" when the star-contraction loop's
@@ -1135,7 +820,7 @@ object Dedup {
     // by construction) and every consumer (connected components, the
     // leakage split) persists or checkpoints it immediately, so the
     // one-pass Row conversion is noise next to pair generation.
-    df.sparkSession.createDataFrame(edges.rdd, edges.schema)
+    sess.createDataFrame(edges.rdd, edges.schema)
   }
 
   /** Exact-class star edges + representative frame over a prepared
@@ -1143,20 +828,14 @@ object Dedup {
     * over the key partition); star edges rep→member for every non-rep
     * member; reps keep (id, key, sz).
     *
-    * ONE exchange of the array key, adopted in the round-16 A/B over
-    * the r11 two-hash-exchange form (groupBy(key){min} + equi-join
-    * back): at the 100× mass-dup tier the window form reads
-    * q83 13.2→8.1 s, q86 9.5→7.6, q119 10.9→8.1, q125 13.4→10.5 warm
-    * (25-35% off the quartet), and at sf0.1 it is a wash — the r11
-    * measurement that picked the join form predates the suspect-tier
-    * routing, under which toy-scale corpora never ship a large frame
-    * through here at all. The collect_list single-exchange alternative
+    * ONE exchange of the array key, not a groupBy(key){min} + equi-join
+    * back: at the 100× mass-dup tier the window form reads q83
+    * 13.2→8.1 s, q86 9.5→7.6, q119 10.9→8.1, q125 13.4→10.5 warm, and at
+    * sf0.1 it is a wash. The collect_list single-exchange alternative
     * timed the same but buffers O(clique) ids in one aggregation row
     * (the 2 GB-row boundary the engine avoids elsewhere); WindowExec's
     * per-group buffer spills (ExternalAppendOnlyUnsafeRowBuffer), so
-    * a mega-clique degrades to disk instead of dying. A serialized
-    * perDoc cache was also measured: better than legacy, dominated by
-    * this plan fix — declined with data (COVERAGE.md round-16 log). */
+    * a mega-clique degrades to disk instead of dying. */
   private def classStarReps(hot: DataFrame): (DataFrame, DataFrame) = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy("key")
     val withRep = hot.withColumn("rep", min(col("id")).over(w))

@@ -169,10 +169,6 @@ object EditDistanceJoin {
 
   /** The PassJoin pipeline proper, over a (id, s) frame assumed
     * duplicate-free (or whose duplicates the caller accepts paying
-    * for): segment index ⋈ probe substrings, candidate dedup, banded
-    * Levenshtein verify. */
-  /** The PassJoin pipeline proper, over a (id, s) frame assumed
-    * duplicate-free (or whose duplicates the caller accepts paying
     * for): segment index ⋈ probe substrings on the shared block-key
     * enumeration ([[blockEntries]] — ONE implementation for this
     * batch plan AND the streaming matcher, so the two can never

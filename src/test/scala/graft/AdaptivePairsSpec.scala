@@ -560,15 +560,22 @@ class AdaptivePairsSpec extends SparkSuite {
     Dedup.embeddingNearDupPairsPortable(real, "doc_id", "text").count()
     Dedup.minhashLshPairs(real, "doc_id", "text", 3, 16, 4).count()
     Dedup.minhashLshPairsPortable(real, "doc_id", "text", 3, 4).count()
+    Dedup.jaccardPairsPrefix(real, "doc_id", "text", 3, 0.6).count()
+    Dedup.jaccardSpanningEdges(real, "doc_id", "text", 3, 0.6, 4096)
+      .count()
     val before = s.sparkContext.getPersistentRDDs.size
     // sf0.001 documents are all-distinct: the dup-free path must not
     // persist anything new (the q22/q93 cores each own ONE signature
-    // cache by design, swapped per invocation — flat, not zero)
+    // cache by design, and q68 its shingle-set cache, swapped per
+    // invocation — flat, not zero)
     Dedup.jaccardPairs(real, "doc_id", "text", 3, 0.6).count()
     Dedup.simhashPairs(real, "doc_id", "text", 7).count()
     Dedup.embeddingNearDupPairsPortable(real, "doc_id", "text").count()
     Dedup.minhashLshPairs(real, "doc_id", "text", 3, 16, 4).count()
     Dedup.minhashLshPairsPortable(real, "doc_id", "text", 3, 4).count()
+    Dedup.jaccardPairsPrefix(real, "doc_id", "text", 3, 0.6).count()
+    Dedup.jaccardSpanningEdges(real, "doc_id", "text", 3, 0.6, 4096)
+      .count()
     assert(s.sparkContext.getPersistentRDDs.size === before,
       "dup-free invocations must pin no caches")
     // duplicated corpus: caches pin, and the module slot releases the
@@ -580,5 +587,62 @@ class AdaptivePairsSpec extends SparkSuite {
     Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.6).count()
     assert(s.sparkContext.getPersistentRDDs.size === afterFirst,
       "slot must release the previous invocation's caches")
+    // the census-routed Jaccard operators on the same duplicated
+    // corpus: each call pins, the next call releases it
+    def others(): Unit = {
+      Dedup.jaccardPairsPrefix(docs, "doc_id", "text", 3, 0.6).count()
+      Dedup.jaccardSpanningEdges(docs, "doc_id", "text", 3, 0.6, 4096)
+        .count()
+    }
+    others()
+    val afterOthers = s.sparkContext.getPersistentRDDs.size
+    assert(afterOthers > afterFirst, "contraction paths should persist")
+    others()
+    assert(s.sparkContext.getPersistentRDDs.size === afterOthers,
+      "slots must release the previous invocations' caches")
+  }
+
+  // ---- the census router ----
+
+  test("censusRoute picks each route from the census alone: dup-free " +
+      "and repeated-id exits, IN-set, broadcast and group-all tiers") {
+    val s = initSpark()
+    import s.implicits._
+    val slot = graft.operators.ReleaseSlot()
+    // routes the census frame itself, so hot/cold are its own rows
+    def route(rows: Seq[(Long, Long)], gated: Boolean = true) = {
+      val cen = rows.toDF("id", "dg").repartition(3)
+      Dedup.censusRoute(cen, "id", gated, new Dedup.Pins(s, slot))(_ => cen)
+    }
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getLong(0)).toSet
+    def contract(r: Dedup.Route) = r match {
+      case Dedup.Contract(hot, cold, tier) => (ids(hot), ids(cold), tier)
+      case other => fail(s"expected a contraction route, got $other")
+    }
+    assert(route((0L until 50L).map(i => (i, i))) === Dedup.DupFree)
+    // ids 1 and 1 share a digest class: repeated ids exit when gated,
+    // and contract when not (a caller keyed by id, like spanning edges)
+    val repeated = Seq((1L, 7L), (1L, 7L), (2L, 8L))
+    assert(route(repeated) === Dedup.RepeatedIds)
+    assert(contract(route(repeated, gated = false)) ===
+      ((Set(1L), Set(2L), Dedup.InSet)))
+    // a few exact-dup pairs among distinct docs: the IN-set tier
+    val few = (0L until 6L).map(i => (i, i / 2)) ++
+      (100L until 140L).map(i => (i, i))
+    assert(contract(route(few)) ===
+      (((0L until 6L).toSet, (100L until 140L).toSet, Dedup.InSet)))
+    // more suspects than the IN-set bound, not every doc: broadcast
+    assert(Dedup.SpanningInSetSuspects < 1200)
+    val many = (0L until 1200L).map(i => (i, i / 2)) ++
+      (5000L until 5040L).map(i => (i, i))
+    assert(contract(route(many)) ===
+      (((0L until 1200L).toSet, (5000L until 5040L).toSet,
+        Dedup.BroadcastIds)))
+    // every doc a suspect: group all, nothing cold
+    val all = (0L until 40L).map(i => (i, i / 4))
+    assert(contract(route(all)) ===
+      (((0L until 40L).toSet, Set.empty[Long], Dedup.GroupAll)))
+    slot.releasePrevious(s)
   }
 }

@@ -727,6 +727,13 @@ class DedupSimilaritySpec extends SparkSuite {
       s"zeta$i eta$i theta$i iota$i kappa$i"
     // zero suspects: all docs distinct -> the capped-pair delegate
     check((0L until 40L).map(i => (i, doc(i))))
+    // IN-set tier: three exact-dup pairs among distinct cold docs, and
+    // a cold near-dup of each class, so the components need both the
+    // contracted reps and the cold side
+    def variant(i: Long) = doc(i).replace(s"kappa$i", s"lambda$i")
+    check((0L until 6L).map(i => (i, doc(i / 2))) ++
+      (6L until 9L).map(i => (i, variant(i - 6))) ++
+      (9L until 40L).map(i => (i, doc(i))))
     // all-dup: EVERY doc a clique member -> routing joins skipped
     check((0L until 40L).map(i => (i, doc(i / 4))))
     // broadcast tier: > SpanningInSetSuspects suspect docs (1200

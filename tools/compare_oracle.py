@@ -2,7 +2,8 @@
 """Local simulation of the driver's DuckDB-oracle compare: for each query
 result parquet under OUTDIR, run the oracle SQL from oracle_sql.json in
 DuckDB over the same sf tables, sort columns by name + rows, and compare
-values. Usage: compare_oracle.py <sfdir> <outdir>"""
+values. A table is a parquet file or a directory of parquet part files
+(what `Bench scale` writes). Usage: compare_oracle.py <sfdir> <outdir>"""
 import json, sys, glob, os
 import duckdb
 import pandas as pd
@@ -11,7 +12,8 @@ sfdir, outdir = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
 for p in glob.glob(f"{sfdir}/*.parquet"):
     name = os.path.basename(p)[:-len(".parquet")]
-    con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
+    src = f"{p}/*.parquet" if os.path.isdir(p) else p
+    con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{src}'")
 
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 ok = fail = 0
