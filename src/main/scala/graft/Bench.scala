@@ -256,22 +256,43 @@ object Bench {
 
   /** `.explain("formatted")` of every selected query into
     * `<outDir>/<query><suffix>.txt` — the plan evidence committed under
-    * plans/. Plans are captured WITHOUT executing the query (initial AQE
-    * plan); queries that execute eagerly inside their body (q76/q81
-    * plan-asserts) still run, as declared. */
+    * plans/. The returned frame's plan is captured WITHOUT executing it
+    * (initial AQE plan). Work the query body runs eagerly before it
+    * returns — census aggregations, persisted or checkpointed edge
+    * frames, counts, collects, the q76/q81 plan asserts — follows it,
+    * one executed (final AQE) plan per SQL action, in run order, as a
+    * QueryExecutionListener registered for the call saw them. */
   private def plan(spark: SparkSession, queries: Seq[(String, Query)],
       sfDir: String, outDir: String, suffix: String): Unit = {
+    import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
     Files.createDirectories(Paths.get(outDir))
     queries.foreach { case (name, fn) =>
+      val eager = mutable.ArrayBuffer.empty[(String, QueryExecution)]
+      def ran(action: String, qe: QueryExecution): Unit =
+        eager.synchronized { eager += action -> qe; () }
+      val listener = new QueryExecutionListener {
+        def onSuccess(action: String, qe: QueryExecution,
+            durationNs: Long): Unit = ran(action, qe)
+        def onFailure(action: String, qe: QueryExecution,
+            exception: Exception): Unit = ran(action, qe)
+      }
+      spark.listenerManager.register(listener)
       try {
-        val txt = fn(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val returned = fn(spark, sfDir).queryExecution
+          .explainString(FormattedMode)
+        org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
+        val executed = eager.synchronized(eager.toList).zipWithIndex.map {
+          case ((action, qe), i) =>
+            s"\n== Eager execution ${i + 1}: $action ==\n" +
+              qe.explainString(FormattedMode)
+        }
         Files.write(Paths.get(outDir, s"$name$suffix.txt"),
-          txt.getBytes("UTF-8"))
-        println(s"[plan] $name ok")
+          (returned + executed.mkString).getBytes("UTF-8"))
+        println(s"[plan] $name ok (${executed.size} eager executions)")
       } catch { case e: Exception =>
         System.err.println(s"[plan] $name FAILED: $e")
-      }
+      } finally spark.listenerManager.unregister(listener)
     }
   }
 

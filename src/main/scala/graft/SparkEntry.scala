@@ -78,9 +78,9 @@ object SparkEntry {
 
   /** The q83/q86 oracle: exact jaccard pair graph (q21 form) closed
     * transitively by a recursive CTE, min id as representative. ONE
-    * definition for both queries — q86's star contraction must produce
-    * exactly q83's min-label clustering, so they share the oracle by
-    * construction. */
+    * definition for both queries — q86's forced star-contraction loop
+    * must produce exactly q83's local union-find clustering, so they
+    * share the oracle by construction. */
   /** Shared portable-MinHash oracle CTEs (q92/q93/q112): tokenize ->
     * distinct 3-shingles -> md5-prefix 60-bit values -> 16 affine
     * minhashes over the Mersenne prime -> 4-row band keys. ONE
@@ -133,7 +133,7 @@ object SparkEntry {
     * transitive closure, shared as a CTE prefix so q119's
     * cluster-keyed split replays EXACTLY the clustering it claims to
     * be leakage-safe against (same shingles, same threshold
-    * rounding, same min-label closure). */
+    * rounding, same min-id closure). */
   private val DupClustersCtes: String =
     """WITH RECURSIVE w AS (
          SELECT doc_id,
@@ -607,10 +607,11 @@ object SparkEntry {
 
     // ---- Near-dup clusters: pairwise evidence -> connected components
     // -> one canonical survivor per cluster (min id) — the consuming
-    // step after q21/q22 that a pipeline actually acts on. Iterative
-    // min-label propagation (one shuffle/round, converges at component
-    // diameter); oracled against a recursive-CTE transitive closure
-    // over the same pair graph. ----
+    // step after q21/q22 that a pipeline actually acts on. The adaptive
+    // default: exact driver union-find at this graph size, the star-
+    // contraction loop above LocalComponentsEdgeCap edges; oracled
+    // against a recursive-CTE transitive closure over the same pair
+    // graph. ----
     "q83_dup_clusters" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       // spanning edges, not all pairs: components are edge-set
@@ -631,18 +632,19 @@ object SparkEntry {
         .withColumn("keep", col("doc_id") === col("cluster_rep"))
     }),
 
-    // ---- Same clustering through the O(log n)-round large-star/
-    // small-star contraction (Kiveris et al. 2014) — the adversarial-
-    // diameter algorithm; must produce EXACTLY q83's clusters (same
-    // recursive-CTE oracle), proving the two formulations agree on a
-    // real corpus, cross-engine. ----
+    // ---- Same clustering through the distributed route: localEdgeCap
+    // = 0 forces the O(log n)-round large-star/small-star contraction
+    // (Kiveris et al. 2014) that graphs above LocalComponentsEdgeCap
+    // take; it must produce EXACTLY q83's clusters (same recursive-CTE
+    // oracle), so every oracle run checks the loop as well as the
+    // local union-find, cross-engine. ----
     "q86_dup_clusters_star" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
       val pairs = Dedup.jaccardSpanningEdges(docs, "doc_id", "text",
         n = 3, threshold = 0.2, maxDocFreq = ClusterPairDfCap)
-      Dedup.connectedComponentsStar(docs.select(col("doc_id")), pairs,
+      Dedup.connectedComponents(docs.select(col("doc_id")), pairs,
           idCol = "doc_id", idsCoverEndpoints = true,
-          pairsCanonical = true)
+          localEdgeCap = 0, pairsCanonical = true)
         .withColumn("keep", col("doc_id") === col("cluster_rep"))
     }),
 
@@ -1860,9 +1862,6 @@ object SparkEntry {
     // Pins the whole adaptive stack — census routing, spanning edges,
     // endpoint-restricted/local-UF components, semi-join
     // materialization — to the declarative form, cross-engine. ----
-    // maxRounds matches q83's connectedComponents default (18), so a
-    // forced-loop proof run (SPARK_GRAFT_CC_LOCAL_CAP=0) can never
-    // throw here on a diameter q83 itself converges at
     "q125_neardup_survivors" -> ((s, dir) =>
       Dedup.dedupNearDup(t(s, dir, "documents"), "doc_id", "text",
           n = 3, threshold = 0.2, maxDocFreq = ClusterPairDfCap,
@@ -2649,8 +2648,8 @@ object SparkEntry {
        SELECT id AS doc_id FROM r GROUP BY id
        HAVING id = min(rep)"""),
 
-    // identical oracle by design: the star-contraction algorithm must
-    // produce exactly the min-label clustering
+    // identical oracle by design: the forced star-contraction loop
+    // must produce exactly q83's clustering
     "q86_dup_clusters_star" -> DupClustersOracle,
 
     "q84_dsir_weights" ->

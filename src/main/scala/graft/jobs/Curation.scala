@@ -95,8 +95,7 @@ object Curation {
       textCol: String, stratumCol: String, rates: Map[String, Double],
       nearDupThreshold: Double = 0.8, shingleN: Int = 3,
       maxDocFreq: Int = 1000, maxRounds: Int = 15,
-      useStarContraction: Boolean = false, trainPct: Double = 0.8,
-      valPct: Double = 0.1): DataFrame = {
+      trainPct: Double = 0.8, valPct: Double = 0.1): DataFrame = {
     val base = qualityGated(documents, textCol)
       .transform(df => Dedup.dedupKeepFirst(df, idCol, textCol))
     // release-BEFORE-persist (the pageRankFixed ordering): on identical
@@ -107,8 +106,7 @@ object Curation {
     base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     Dedup.dedupNearDup(base, idCol, textCol,
         n = shingleN, threshold = nearDupThreshold,
-        maxDocFreq = maxDocFreq, maxRounds = maxRounds,
-        useStarContraction = useStarContraction)
+        maxDocFreq = maxDocFreq, maxRounds = maxRounds)
       .transform(df => mixAndSplit(df, idCol, stratumCol, rates,
         trainPct, valPct))
   }

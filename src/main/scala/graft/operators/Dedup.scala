@@ -794,7 +794,7 @@ object Dedup {
         .agg(sort_array(collect_list(col("h"))).as("key"),
           count(lit(1)).cast("int").as("sz")))
     }
-    val edges = route match {
+    route match {
       case Contract(hot, cold, _) =>
         val (star, reps) = classStarReps(hot)
         // thresholded pairs among representatives, full-corpus capped
@@ -812,15 +812,6 @@ object Dedup {
         jaccardPairsCapped(df, idCol, textCol, n, threshold, maxDocFreq)
           .select("id_a", "id_b")
     }
-    // Lineage barrier (lazy — .rdd defers computation): Spark 4.1's
-    // Union constraint rewrite (UnionBase.rewriteConstraints) throws
-    // "key not found: <attr>" when the star-contraction loop's
-    // filter/aggregate constraints are derived over this plan's
-    // UDF+join lineage. The edge list is output-scale (linear in docs
-    // by construction) and every consumer (connected components, the
-    // leakage split) persists or checkpoints it immediately, so the
-    // one-pass Row conversion is noise next to pair generation.
-    sess.createDataFrame(edges.rdd, edges.schema)
   }
 
   /** Exact-class star edges + representative frame over a prepared
@@ -1639,18 +1630,14 @@ object Dedup {
       case _ => ()
     }
 
-  /** Driver-side bound (in CANONICAL edges; the symmetric frame is 2x)
-    * under which connected components are solved exactly by local
-    * union-find instead of the iterative loop. 1M edges ≈ 32-80 MB of
+  /** Driver-side bound (in canonical one-direction edges) under which
+    * connected components are solved exactly by local union-find
+    * instead of the star-contraction loop. 1M edges ≈ 32-80 MB of
     * collected rows — bounded, and in exchange the common case (a
     * thresholded pair graph is SPARSE next to its corpus) pays one
-    * collect instead of diameter-many shuffle rounds. Above the cap
-    * the distributed loop runs. SPARK_GRAFT_CC_LOCAL_CAP overrides (0
-    * forces the loop — scale proofs use it to publish loop-mode data
-    * points even on graphs the local path would absorb). */
-  val LocalComponentsEdgeCap: Int =
-    sys.env.get("SPARK_GRAFT_CC_LOCAL_CAP").flatMap(_.toIntOption)
-      .getOrElse(1000000)
+    * collect instead of O(log n) shuffle rounds. Above the cap the
+    * distributed loop runs; `localEdgeCap = 0` forces it. */
+  val LocalComponentsEdgeCap: Int = 1000000
 
   /** Local "a < b" for id values, consistent with Spark's own
     * ordering so local union-find picks the SAME component minimum as
@@ -1755,21 +1742,20 @@ object Dedup {
     * pair are their own singleton cluster, so the output has exactly
     * one row per DISTINCT input id (duplicate input rows collapse).
     *
-    * Algorithm: iterative min-label propagation to a fixed point. Each
-    * round is one labels⋈edges shuffle join + a min-aggregation; the
-    * only driver-side state per round is ONE long (the changed-label
-    * count). Rounds needed = component diameter — near-dup clusters
-    * are dense (LSH/threshold graphs are clique-ish), so single-digit
-    * diameters dominate real corpora; `maxRounds` bounds adversarial
-    * chains and the alternating large-star/small-star scheme (Kiveris
-    * et al. 2014) is the O(log n)-round upgrade path if a corpus ever
-    * produces deep chains. Converged-early detection stops the loop as
-    * soon as a round changes nothing; exhausting `maxRounds` WITHOUT
-    * converging throws — truncated propagation would silently report
-    * a 15-hop neighborhood min as the cluster representative, and a
-    * loud failure (raise maxRounds) beats a wrong survivor set.
+    * `pairs` is read exactly once, into a persisted canonical edge
+    * frame (u > v, one row per undirected edge). Graphs at or under
+    * `localEdgeCap` edges are solved exactly by driver union-find — one
+    * collect. Larger graphs (or any graph at `localEdgeCap = 0`) run
+    * [[starContraction]], whose rounds grow O(log n) whatever the
+    * components' shape; exhausting `maxRounds` WITHOUT converging
+    * throws — truncated contraction would silently report a wrong
+    * cluster representative, and a loud failure (raise maxRounds)
+    * beats a wrong survivor set. The local path is exact by
+    * construction, so small deep chains resolve rather than refuse.
+    * Both paths label only edge ENDPOINTS; singletons merge back
+    * through one left join.
     *
-    * Pair endpoints missing from `ids` are handled: propagation runs
+    * Pair endpoints missing from `ids` are handled: components run
     * over the edge endpoints (a bridge doc filtered out of `ids` still
     * connects its neighbors), and the output is then restricted back
     * to `ids` by the final merge join — note cluster_rep can therefore
@@ -1778,145 +1764,68 @@ object Dedup {
     * case: pairs derived from the same corpus frame), pass
     * `idsCoverEndpoints = true` to skip the defensive distinct.
     *
-    * Adaptive execution (round 11): iteration is restricted to edge
-    * ENDPOINTS (a vertex with no edge never changes labels; singletons
-    * merge back through one left join), and graphs at or under
-    * `localEdgeCap` canonical edges skip the loop entirely — exact
-    * driver union-find, same labels bit for bit, one collect instead
-    * of diameter-many shuffle rounds. `maxRounds` governs the
-    * distributed loop; the local path is exact by construction, so
-    * small deep chains resolve rather than refuse. */
+    * `pairsCanonical`: when the caller GUARANTEES the pair frame is
+    * duplicate-free with id_a < id_b on every row (the spanning-edge
+    * emitters' contract: star edges are rep < member, rep pairs are
+    * sort_array-ordered and groupBy-deduped), the canonicalizing
+    * distinct is a corpus-scale exchange spent proving a no-op, and
+    * only the orientation stays. Labels are unaffected either way — union-
+    * find and star contraction are idempotent under duplicate edges —
+    * so a caller mis-declaring canonicity costs only the fan-out the
+    * distinct would have removed, never a wrong cluster. */
   def connectedComponents(ids: DataFrame, pairs: DataFrame,
       idCol: String = "id", idACol: String = "id_a",
-      idBCol: String = "id_b", maxRounds: Int = 18,
+      idBCol: String = "id_b", maxRounds: Int = 25,
       idsCoverEndpoints: Boolean = false,
       localEdgeCap: Int = LocalComponentsEdgeCap,
       pairsCanonical: Boolean = false): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    // pairsCanonical (round 18, guide §2.4 "a distinct on data that is
-    // already unique"): when the caller GUARANTEES the pair frame is
-    // duplicate-free with id_a < id_b on every row (the spanning-edge
-    // emitters' contract: star edges are rep < member, rep pairs are
-    // sort_array-ordered and groupBy-deduped), the symmetric union
-    // cannot collide either (src < dst rows never equal src > dst
-    // rows), so the distinct is a full corpus-scale exchange + agg
-    // spent proving a no-op. Labels are unaffected either way —
-    // union-find and min-label are idempotent under duplicate edges —
-    // so a caller mis-declaring canonicity costs only the fan-out the
-    // distinct would have removed, never a wrong cluster.
-    val symmetric = pairs
-      .select(col(idACol).as("src"), col(idBCol).as("dst"))
-      .union(pairs.select(col(idBCol).as("src"), col(idACol).as("dst")))
-    val edges = (if (pairsCanonical) symmetric else symmetric.distinct())
+    val edges = canonEdges(pairs.select(col(idACol).as("u"),
+        col(idBCol).as("v")), dedup = !pairsCanonical)
       .persist(StorageLevel.MEMORY_AND_DISK)
     // distinct: a duplicated input id must not fan out the final
     // restriction join (contract: one output row per distinct id)
     val idsOnly =
       if (idsCoverEndpoints) ids.select(col(idCol).as("id"))
       else ids.select(col(idCol).as("id")).distinct()
-    // id type from the EDGES frame, not `ids`: the union coerced the
-    // pair columns (e.g. Int pairs against Long ids widen to Long
-    // pre-union), and the collected values/labels schema must match
-    // what edges actually holds — deriving from `ids` would
-    // ClassCastException in the comparator on coercible-type callers
-    val idType = edges.schema(edges.schema.fieldIndex("src")).dataType
-    // Iteration runs over edge ENDPOINTS only — a vertex with no edge
-    // never changes its label, so carrying the whole corpus through
-    // every round is pure shuffle overhead (the pair graph is sparse
-    // next to its corpus at production thresholds). Singletons merge
-    // back through one left join at the end; endpoint-only nodes
-    // (bridges filtered out of `ids`) propagate as before and drop in
-    // the same join. The LOCAL fast path is priced only when the id
-    // type has a Spark-order-consistent local ordering: at or under
-    // `localEdgeCap` canonical edges (cap 0 = loop ALWAYS, the
-    // documented override contract) the graph is solved exactly by
-    // driver union-find — one collect instead of diameter-many
-    // shuffle+checkpoint rounds. Only one direction per edge is
-    // collected (src < dst); union-find is undirected, and self-loops
-    // connect nothing (their nodes label themselves in the merge).
-    val labelsOpt: Option[DataFrame] = localIdOrdering(idType)
-      .filter(_ => localEdgeCap > 0 &&
-        edges.count() <= 2L * localEdgeCap)
-      .map(lt => localComponentLabels(ids.sparkSession, idType, lt,
-        edges.where(col("src") < col("dst")).collect()))
-    // finally: distributedMinLabel throws on non-convergence, and the
-    // corpus-scale edge cache must not outlive this call on that path
-    val endpointLabels =
-      try labelsOpt.getOrElse(distributedMinLabel(edges, maxRounds))
+    // id type from the EDGES frame, not `ids`: greatest/least coerced
+    // the pair columns (e.g. Int pairs against Long ids widen to Long),
+    // and the collected values/labels schema must match what edges
+    // actually holds — deriving from `ids` would ClassCastException in
+    // the comparator on coercible-type callers
+    val idType = edges.schema("u").dataType
+    // finally: the loop throws on non-convergence, and the corpus-scale
+    // edge cache must not outlive this call on that path
+    val labels =
+      try localIdOrdering(idType)
+        .filter(_ => localEdgeCap > 0 && edges.count() <= localEdgeCap)
+        .map(lt => localComponentLabels(ids.sparkSession, idType, lt,
+          edges.collect()))
+        .getOrElse(starContraction(edges, maxRounds))
       finally edges.unpersist()
-    mergeSingletons(idsOnly, endpointLabels, idCol)
-  }
-
-  /** Merge endpoint labels back over the full id set: ids with no
-    * edge are their own singleton cluster. Shared tail of both
-    * components variants and both execution modes. */
-  private def mergeSingletons(idsOnly: DataFrame, labels: DataFrame,
-      idCol: String): DataFrame =
+    // ids with no edge are their own singleton cluster
     idsOnly.join(labels, Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("rep"), col("id")).as("cluster_rep"))
-
-  /** The distributed min-label loop behind [[connectedComponents]]:
-    * labels every edge ENDPOINT with its component minimum. `edges`
-    * must be the symmetric (both-directions) distinct frame. */
-  private def distributedMinLabel(edges: DataFrame,
-      maxRounds: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("rep", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .select(col("src").as("id"), col("rep"))
-      // localCheckpoint, not persist: the loop-carried frame must have
-      // its LINEAGE truncated each round — each iteration's plan embeds
-      // the previous one's twice (union + change-count join), so
-      // without truncation the logical plan doubles per round and
-      // analysis/optimization time (and plan-toString memory) explodes
-      // exponentially. Single-JVM form; a cluster deployment with
-      // executor-loss tolerance would use reliable checkpoint(dir).
-      val next = labels.select("id", "rep").union(viaNeighbors)
-        .groupBy("id").agg(min("rep").as("rep"))
-        .localCheckpoint(true)
-      val changed = next
-        .join(labels.withColumnRenamed("rep", "__prev"), "id")
-        .where(col("rep") =!= col("__prev")).count()
-      // round 1's labels are persist-backed (unpersist), later rounds
-      // checkpoint-backed (releaseCheckpoint); both calls are no-ops on
-      // the other backing, so apply both
-      labels.unpersist()
-      releaseCheckpoint(labels)
-      labels = next
-      converged = changed == 0L
-      round += 1
-    }
-    if (!converged) {
-      // after round 1 labels is checkpoint-backed, where unpersist()
-      // alone is a no-op (same dual-release as the loop body above)
-      labels.unpersist()
-      releaseCheckpoint(labels)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds — " +
-          "a component's diameter exceeds the cap; raise maxRounds " +
-          "(labels would otherwise be silently truncated to a " +
-          s"$maxRounds-hop neighborhood min)")
-    }
-    // the final labels frame is localCheckpoint-backed; its cached RDD
-    // is reclaimed by the ContextCleaner once the returned DataFrame is
-    // dropped — no explicit release hook needed
-    labels
   }
 
-  /** Connected components in O(log n) ROUNDS via alternating
-    * large-star / small-star (Kiveris et al. 2014, "Connected
-    * Components in MapReduce and Beyond") — the adversarial-diameter
-    * complement to `connectedComponents`: min-label propagation needs
-    * diameter rounds (fine for clique-ish near-dup graphs, ruinous on
-    * deep chains); star contraction halves component height every
-    * other round regardless of shape.
+  /** (u, v) oriented u >= v in one common type; with `dedup`, one row
+    * per undirected edge and no self-loops. */
+  private def canonEdges(e: DataFrame, dedup: Boolean = true)
+      : DataFrame = {
+    val oriented = e.select(greatest(col("u"), col("v")).as("u"),
+      least(col("u"), col("v")).as("v"))
+    if (dedup) oriented.where(col("u") =!= col("v")).distinct()
+    else oriented
+  }
+
+  /** The distributed loop behind [[connectedComponents]]: labels every
+    * endpoint of the canonical (u > v) `edges` with its component
+    * minimum in O(log n) ROUNDS via alternating large-star / small-star
+    * (Kiveris et al. 2014, "Connected Components in MapReduce and
+    * Beyond") — star contraction halves component height every other
+    * round regardless of shape, where min-label propagation needs
+    * diameter rounds.
     *
     *   large-star: every node points its LARGER neighbors at the
     *     minimum of its neighborhood (plus itself);
@@ -1928,64 +1837,12 @@ object Dedup {
     * is O(degree) and the list form reintroduces the skew the
     * algorithm exists to avoid. Per-round cost: ~six exchanges (each
     * half-round is a groupBy-min, a join, and a canon distinct) plus
-    * two checkpoint materializations and the checksum job — a CONSTANT
-    * factor heavier than a min-label round, bought for O(log n) rounds
-    * instead of O(diameter). The edge set is compared by (count, xor
-    * of edge hashes) and confirmed exactly to detect the fixed point,
-    * at which every component is a star rooted at its minimum id.
-    * Output contract and determinism identical to
-    * `connectedComponents` (one row per distinct input id,
-    * cluster_rep = component min; DedupSimilaritySpec pins equality
-    * on random graphs; `idsCoverEndpoints` skips the ids distinct as
-    * in connectedComponents — the singleton left join remains).
-    * Shares connectedComponents' local fast path: graphs at or under
-    * `localEdgeCap` canonical edges are solved by exact driver
-    * union-find instead of the contraction rounds. */
-  def connectedComponentsStar(ids: DataFrame, pairs: DataFrame,
-      idCol: String = "id", idACol: String = "id_a",
-      idBCol: String = "id_b", maxRounds: Int = 25,
-      idsCoverEndpoints: Boolean = false,
-      localEdgeCap: Int = LocalComponentsEdgeCap,
-      pairsCanonical: Boolean = false): DataFrame = {
-    def canon(e: DataFrame): DataFrame = e
-      .select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-    // localCheckpoint (not persist) on every loop-carried frame: each
-    // round's plan references the previous round's SEVERAL times (sym
-    // union, two groupBy-min joins), so un-truncated lineage grows
-    // ~4x per round and plan analysis explodes exponentially
-    //
-    // pairsCanonical (round 18): a duplicate-free id_a < id_b pair
-    // frame (the spanning-edge contract — see connectedComponents) is
-    // ALREADY canon's output up to the u/v orientation (canon keeps
-    // u > v), so the initial full-corpus distinct exchange is a no-op
-    // — a straight column swap replaces it. The loop's own canon
-    // distincts stay: contraction rounds genuinely create duplicates.
-    var edges = (if (pairsCanonical)
-        pairs.select(col(idBCol).as("u"), col(idACol).as("v"))
-      else canon(pairs.select(col(idACol).as("u"),
-        col(idBCol).as("v"))))
-      .localCheckpoint(true)
-    // id type from the canonical edge frame (coercible-type callers —
-    // see the connectedComponents note); cap 0 = loop ALWAYS
-    val idType = edges.schema(edges.schema.fieldIndex("u")).dataType
-    val idsOnly =
-      if (idsCoverEndpoints) ids.select(col(idCol).as("id"))
-      else ids.select(col(idCol).as("id")).distinct()
-    // same local fast path as connectedComponents (see
-    // LocalComponentsEdgeCap): union-find labels are exactly the star
-    // fixed point's (node -> component min), so both modes flow into
-    // the one mergeSingletons tail
-    val localLabels: Option[DataFrame] = localIdOrdering(idType)
-      .filter(_ => localEdgeCap > 0 && edges.count() <= localEdgeCap)
-      .map(lt => localComponentLabels(ids.sparkSession, idType, lt,
-        edges.collect()))
-    if (localLabels.isDefined) {
-      releaseCheckpoint(edges)
-      return mergeSingletons(idsOnly, localLabels.get, idCol)
-    }
+    * two checkpoint materializations and the checksum job. The edge
+    * set is compared by (count, xor of edge hashes) and confirmed
+    * exactly to detect the fixed point, at which every component is a
+    * star rooted at its minimum id. */
+  private def starContraction(initial: DataFrame,
+      maxRounds: Int): DataFrame = {
     // (count, xor-of-edge-hashes) as the cheap fixed-point precheck:
     // bit_xor never overflows (ANSI mode rejects sum() of hashes) and
     // is order-independent; a signature MATCH is then confirmed with
@@ -1996,6 +1853,13 @@ object Dedup {
         coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
       (r.getLong(0), r.getLong(1))
     }
+    // localCheckpoint (not persist) on every loop-carried frame: each
+    // round's plan references the previous round's SEVERAL times (sym
+    // union, two groupBy-min joins), so un-truncated lineage grows
+    // ~4x per round and plan analysis explodes exponentially. The
+    // caller owns `initial` (a persisted frame, which releaseCheckpoint
+    // leaves alone).
+    var edges = initial
     var sig = checksum(edges)
     var round = 0
     var converged = false
@@ -2009,7 +1873,7 @@ object Dedup {
       // nondeterministic flag)
       val mins = sym.groupBy("u")
         .agg(least(min(col("v")), col("u")).as("m"))
-      val afterLarge = canon(sym.join(mins, "u")
+      val afterLarge = canonEdges(sym.join(mins, "u")
         .where(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v")))
         .localCheckpoint(true)
@@ -2017,7 +1881,7 @@ object Dedup {
       // neighbors (and the node itself) point at the minimum
       val minsS = afterLarge.groupBy("u").agg(min(col("v")).as("m"))
       val joined = afterLarge.join(minsS, "u")
-      val afterSmall = canon(
+      val afterSmall = canonEdges(
         joined.select(col("v").as("u"), col("m").as("v"))
           .union(joined.select(col("u"), col("m").as("v"))))
         .localCheckpoint(true)
@@ -2035,21 +1899,19 @@ object Dedup {
     if (!converged) {
       releaseCheckpoint(edges)
       throw new IllegalStateException(
-        s"connectedComponentsStar did not converge in $maxRounds " +
-          "rounds — raise maxRounds (expected O(log n))")
+        s"connectedComponents did not converge in $maxRounds rounds — " +
+          "raise maxRounds (star contraction needs O(log n) rounds; " +
+          "labels would otherwise be silently truncated)")
     }
-    // fixed point: edges are star edges (node -> component min). The
-    // left join is needed in EVERY mode (star edges only cover
-    // non-singleton nodes); idsCoverEndpoints skips only the distinct.
-    val starred = edges.select(col("u").as("id"), col("v").as("rep"))
-    mergeSingletons(idsOnly, starred, idCol)
+    // fixed point: edges are star edges (node -> component min)
+    edges.select(col("u").as("id"), col("v").as("rep"))
   }
 
   /** The CONSUMING form of near-dup clustering: keep one survivor per
     * cluster (the min-id representative), drop every other member —
     * what the pipeline materializes after pair evidence is clustered.
     * One semi-join against the survivor set; `clusters` is the output
-    * of connectedComponents / connectedComponentsStar. */
+    * of connectedComponents. */
   def keepClusterSurvivors(df: DataFrame, clusters: DataFrame,
       idCol: String, repsPresent: Boolean = false): DataFrame = {
     // General case: survivor = min PRESENT id per cluster, NOT
@@ -2077,8 +1939,7 @@ object Dedup {
     * The composition of q70 + q83 + keepClusterSurvivors as one call. */
   def dedupNearDup(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.8,
-      maxDocFreq: Int = 1000, maxRounds: Int = 15,
-      useStarContraction: Boolean = false): DataFrame = {
+      maxDocFreq: Int = 1000, maxRounds: Int = 15): DataFrame = {
     // spanning edges, not all pairs (round 11): components only need
     // connectivity, and the exact-class contraction keeps them
     // IDENTICAL while exact-dup cliques emit c-1 edges instead of
@@ -2088,19 +1949,11 @@ object Dedup {
       maxDocFreq)
     // maxRounds passes through (the non-convergence error says "raise
     // maxRounds" — that advice must be followable from this entry
-    // point), and useStarContraction switches to the O(log n)
-    // algorithm for corpora with deep transitive dup chains
-    // pairsCanonical: spanning edges are duplicate-free with
+    // point). pairsCanonical: spanning edges are duplicate-free with
     // id_a < id_b by construction (see connectedComponents' note)
-    val clusters =
-      if (useStarContraction)
-        connectedComponentsStar(df.select(col(idCol)), pairs,
-          idCol = idCol, maxRounds = maxRounds,
-          idsCoverEndpoints = true, pairsCanonical = true)
-      else
-        connectedComponents(df.select(col(idCol)), pairs,
-          idCol = idCol, maxRounds = maxRounds,
-          idsCoverEndpoints = true, pairsCanonical = true)
+    val clusters = connectedComponents(df.select(col(idCol)), pairs,
+      idCol = idCol, maxRounds = maxRounds, idsCoverEndpoints = true,
+      pairsCanonical = true)
     // repsPresent: clusters were built with idsCoverEndpoints over the
     // same frame, so every representative is a present row
     keepClusterSurvivors(df, clusters, idCol, repsPresent = true)

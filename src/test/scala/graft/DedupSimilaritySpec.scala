@@ -7,6 +7,20 @@ import graft.operators.{Dedup, Similarity}
 
 class DedupSimilaritySpec extends SparkSuite {
 
+  /** Brute-force components model: node i -> its component's min node,
+    * by union-find with the smaller root winning. */
+  private def componentMins(n: Int, edges: Seq[(Int, Int)]): Array[Int] = {
+    val parent = Array.tabulate(n)(identity)
+    def findRoot(x: Int): Int =
+      if (parent(x) == x) x else { parent(x) = findRoot(parent(x))
+        parent(x) }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (findRoot(a), findRoot(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    Array.tabulate(n)(findRoot)
+  }
+
   private def docs = {
     val s = initSpark()
     import s.implicits._
@@ -108,9 +122,6 @@ class DedupSimilaritySpec extends SparkSuite {
     import s.implicits._
     import org.scalacheck.{Gen, Test => SCTest}
     import org.scalacheck.Prop.forAll
-    def findRoot(parent: Array[Int], x: Int): Int =
-      if (parent(x) == x) x else { parent(x) = findRoot(parent, parent(x))
-        parent(x) }
     val gen = for {
       n <- Gen.choose(1, 24)
       m <- Gen.choose(0, 30)
@@ -118,32 +129,20 @@ class DedupSimilaritySpec extends SparkSuite {
         Gen.choose(0, n - 1)))
     } yield (n, edges.filter { case (a, b) => a != b })
     val prop = forAll(gen) { case (n, edges) =>
-      val parent = Array.tabulate(n)(identity)
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (findRoot(parent, a), findRoot(parent, b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expect = (0 until n)
-        .map(i => i.toLong -> findRoot(parent, i).toLong).toMap
+      val expect = componentMins(n, edges).zipWithIndex
+        .map { case (rep, i) => i.toLong -> rep.toLong }.toMap
       val ids = (0 until n).map(_.toLong).toDF("id")
       val pairs =
         if (edges.isEmpty) Seq.empty[(Long, Long)].toDF("id_a", "id_b")
         else edges.map { case (a, b) => (a.toLong, b.toLong) }
           .toDF("id_a", "id_b")
-      val got = Dedup.connectedComponents(ids, pairs, maxRounds = 30)
+      val local = Dedup.connectedComponents(ids, pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val star = Dedup.connectedComponentsStar(ids, pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // localEdgeCap = 0 exercises the distributed loops the default
+      // localEdgeCap = 0 exercises the distributed loop the default
       // local fast path would otherwise shadow at this size
-      val gotLoop = Dedup.connectedComponents(ids, pairs,
-          maxRounds = 90, localEdgeCap = 0)
+      val loop = Dedup.connectedComponents(ids, pairs, localEdgeCap = 0)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val starLoop = Dedup.connectedComponentsStar(ids, pairs,
-          localEdgeCap = 0)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      got == expect && star == expect &&
-        gotLoop == expect && starLoop == expect
+      local == expect && loop == expect
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
@@ -173,14 +172,12 @@ class DedupSimilaritySpec extends SparkSuite {
         else edges.toDF("id_a", "id_b")
       def m(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val base = m(Dedup.connectedComponents(ids, pairs, maxRounds = 90))
-      m(Dedup.connectedComponents(ids, pairs, maxRounds = 90,
+      val base = m(Dedup.connectedComponents(ids, pairs))
+      m(Dedup.connectedComponents(ids, pairs,
         pairsCanonical = true)) == base &&
-      m(Dedup.connectedComponents(ids, pairs, maxRounds = 90,
-        localEdgeCap = 0, pairsCanonical = true)) == base &&
-      m(Dedup.connectedComponentsStar(ids, pairs,
-        pairsCanonical = true)) == base &&
-      m(Dedup.connectedComponentsStar(ids, pairs, localEdgeCap = 0,
+      m(Dedup.connectedComponents(ids, pairs,
+        localEdgeCap = 0)) == base &&
+      m(Dedup.connectedComponents(ids, pairs, localEdgeCap = 0,
         pairsCanonical = true)) == base
     }
     val res = SCTest.check(
@@ -192,26 +189,24 @@ class DedupSimilaritySpec extends SparkSuite {
       "where min-label propagation would need diameter rounds") {
     val s = initSpark()
     import s.implicits._
-    // path graph 0-1-2-...-79: diameter 79. The DISTRIBUTED min-label
-    // loop at maxRounds=15 must refuse loudly (localEdgeCap = 0 forces
-    // it); star contraction converges; and the default local fast
-    // path solves the same chain exactly without a loop at all.
+    // path graph 0-1-2-...-79: diameter 79, far past maxRounds = 15.
+    // The distributed loop (localEdgeCap = 0 forces it) converges
+    // anyway; the local fast path solves the same chain exactly without
+    // a loop at all; and a maxRounds too small even for O(log n)
+    // contraction must refuse loudly rather than truncate.
     val pairs = (0L until 79L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val ids = (0L until 80L).toDF("doc_id")
-    val star = Dedup.connectedComponentsStar(ids, pairs, idCol = "doc_id",
-        localEdgeCap = 0)
+    val loop = Dedup.connectedComponents(ids, pairs, idCol = "doc_id",
+        maxRounds = 15, idsCoverEndpoints = true, localEdgeCap = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(star.size === 80 && star.values.forall(_ == 0L))
-    // literal cap (not the env-overridable default) so a lingering
-    // SPARK_GRAFT_CC_LOCAL_CAP=0 cannot turn this into the loop and
-    // trip the maxRounds guard
+    assert(loop.size === 80 && loop.values.forall(_ == 0L))
     val local = Dedup.connectedComponents(ids, pairs, idCol = "doc_id",
         maxRounds = 15, idsCoverEndpoints = true, localEdgeCap = 100)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(local === star)
+    assert(local === loop)
     intercept[IllegalStateException] {
       Dedup.connectedComponents(ids, pairs, idCol = "doc_id",
-        maxRounds = 15, idsCoverEndpoints = true,
+        maxRounds = 2, idsCoverEndpoints = true,
         localEdgeCap = 0).count()
     }
   }
@@ -598,12 +593,12 @@ class DedupSimilaritySpec extends SparkSuite {
       n = 3, threshold = 0.2, maxDocFreq = 4096)
     assert(components(span) === components(full),
       "spanning edges must induce bit-identical components")
-    // the q86 path: star contraction over the same spanning edges
-    val starComp = Dedup.connectedComponentsStar(
+    // the q86 path: the forced loop over the same spanning edges
+    val loopComp = Dedup.connectedComponents(
         docs.select(col("doc_id")), span,
-        idCol = "doc_id", idsCoverEndpoints = true)
+        idCol = "doc_id", idsCoverEndpoints = true, localEdgeCap = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(starComp === components(full))
+    assert(loopComp === components(full))
     // the 6-clique contributes 5 star edges, not 15 pairs
     val spanClique = span.where(col("id_a") >= 10 && col("id_b") <= 15)
       .count()
@@ -658,17 +653,21 @@ class DedupSimilaritySpec extends SparkSuite {
       edges <- Gen.listOfN(m, Gen.zip(Gen.choose(0, n - 1),
         Gen.choose(0, n - 1)))
     } yield (n, edges.filter { case (a, b) => a != b })
+    // zero-padded ASCII: byte order is numeric order, so the
+    // brute-force model's integer min is the expected string rep
     def sid(i: Int) = f"doc-$i%03d"
     val prop = forAll(gen) { case (n, edges) =>
+      val expect = componentMins(n, edges).zipWithIndex
+        .map { case (rep, i) => sid(i) -> sid(rep) }.toMap
       val ids = (0 until n).map(sid).toDF("id")
       val pairs =
         if (edges.isEmpty) Seq.empty[(String, String)].toDF("id_a", "id_b")
         else edges.map { case (a, b) => (sid(a), sid(b)) }
           .toDF("id_a", "id_b")
       def run(cap: Int) = Dedup.connectedComponents(ids, pairs,
-          maxRounds = 60, localEdgeCap = cap)
+          localEdgeCap = cap)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-      run(1000) == run(0)
+      run(1000) == expect && run(0) == expect
     }
     val res = SCTest.check(
       SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
@@ -691,16 +690,9 @@ class DedupSimilaritySpec extends SparkSuite {
       Dedup.connectedComponents(ids, pairs, idCol = "doc_id",
           localEdgeCap = cap)
         .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    // literal cap, not Dedup.LocalComponentsEdgeCap: that val is
-    // env-overridable (SPARK_GRAFT_CC_LOCAL_CAP=0 from a scale-proof
-    // shell would silently turn this into loop-vs-loop)
     val local = reps(10)
     val loop = reps(0)
-    val star = Dedup.connectedComponentsStar(ids, pairs,
-        idCol = "doc_id", localEdgeCap = 0)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(local === loop)
-    assert(local === star)
     assert(local(astral) === bmp && local(bmp) === bmp,
       "component min must follow Spark's UTF-8 binary order")
   }
@@ -715,13 +707,23 @@ class DedupSimilaritySpec extends SparkSuite {
       Dedup.connectedComponents(docs.select(col("doc_id")), pairs,
           idCol = "doc_id", idsCoverEndpoints = true)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    def check(corpus: Seq[(Long, String)]): Unit = {
+    // loop: the forced star-contraction loop also reads the spanning
+    // edges straight from their census-routed lineage (q86's call)
+    def loopComps(docs: org.apache.spark.sql.DataFrame,
+        pairs: org.apache.spark.sql.DataFrame) =
+      Dedup.connectedComponents(docs.select(col("doc_id")), pairs,
+          idCol = "doc_id", idsCoverEndpoints = true, localEdgeCap = 0,
+          pairsCanonical = true)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def check(corpus: Seq[(Long, String)], loop: Boolean = false): Unit = {
       val docs = corpus.toDF("doc_id", "text").repartition(5)
       val span = Dedup.jaccardSpanningEdges(docs, "doc_id", "text",
         n = 3, threshold = 0.3, maxDocFreq = 4096)
       val full = Dedup.jaccardPairsCapped(docs, "doc_id", "text",
         n = 3, threshold = 0.3, maxDocFreq = 4096)
-      assert(comps(docs, span) === comps(docs, full))
+      val expect = comps(docs, full)
+      assert(comps(docs, span) === expect)
+      if (loop) assert(loopComps(docs, span) === expect)
     }
     def doc(i: Long) = s"alpha$i beta$i gamma$i delta$i epsilon$i " +
       s"zeta$i eta$i theta$i iota$i kappa$i"
@@ -733,9 +735,9 @@ class DedupSimilaritySpec extends SparkSuite {
     def variant(i: Long) = doc(i).replace(s"kappa$i", s"lambda$i")
     check((0L until 6L).map(i => (i, doc(i / 2))) ++
       (6L until 9L).map(i => (i, variant(i - 6))) ++
-      (9L until 40L).map(i => (i, doc(i))))
+      (9L until 40L).map(i => (i, doc(i))), loop = true)
     // all-dup: EVERY doc a clique member -> routing joins skipped
-    check((0L until 40L).map(i => (i, doc(i / 4))))
+    check((0L until 40L).map(i => (i, doc(i / 4))), loop = true)
     // broadcast tier: > SpanningInSetSuspects suspect docs (1200
     // docs in 600 exact-dup pairs) plus distinct cold docs
     assert(Dedup.SpanningInSetSuspects < 1200)

@@ -128,4 +128,21 @@ class HarnessSpec extends SparkSuite {
     }
     assert(next.result.isRight, next.failure)
   }
+
+  test("operators read no environment variables: a route or a bound is " +
+      "chosen by its caller's arguments, never by the shell") {
+    val dir = new java.io.File("src/main/scala/graft/operators")
+    val sources = Option(dir.listFiles).getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.endsWith(".scala"))
+    assert(sources.nonEmpty, s"no operator sources under $dir")
+    val read = "sys\\.env|System\\.getenv".r
+    val hits = sources.toSeq.sortBy(_.getName).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try src.getLines().zipWithIndex.collect {
+        case (line, i) if read.findFirstIn(line).isDefined =>
+          s"${f.getName}:${i + 1}: ${line.trim}"
+      }.toList finally src.close()
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
 }
