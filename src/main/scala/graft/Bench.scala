@@ -284,15 +284,90 @@ object Bench {
         org.apache.spark.graft.ListenerBus.drain(spark.sparkContext)
         val executed = eager.synchronized(eager.toList).zipWithIndex.map {
           case ((action, qe), i) =>
-            s"\n== Eager execution ${i + 1}: $action ==\n" +
+            s"Eager execution ${i + 1}: $action" ->
               qe.explainString(FormattedMode)
         }
+        val sections = onceCached(("the returned plan" -> returned) +:
+          executed)
+        val text = sections.head + executed.zip(sections.tail)
+          .map { case ((label, _), body) => s"\n== $label ==\n$body" }
+          .mkString
         Files.write(Paths.get(outDir, s"$name$suffix.txt"),
-          (returned + executed.mkString).getBytes("UTF-8"))
+          text.getBytes("UTF-8"))
         println(s"[plan] $name ok (${executed.size} eager executions)")
       } catch { case e: Exception =>
         System.err.println(s"[plan] $name FAILED: $e")
       } finally spark.listenerManager.unregister(listener)
+    }
+  }
+
+  /** Formatted explain sections (label, text) of one query with each
+    * cached plan printed in full once: every later occurrence of an
+    * `InMemoryRelation` subtree (same operators, ids aside) becomes one
+    * line naming the section that printed it, and the node details that
+    * only that subtree used are dropped. */
+  private[graft] def onceCached(sections: Seq[(String, String)])
+      : Seq[String] = {
+    val printed = mutable.HashMap.empty[String, String]
+    val header = """^\((\d+)\) .*""".r
+    val nodeId = """\((\d+)\)""".r
+    def col(line: String): Int = {
+      val m = math.max(line.lastIndexOf("+- "), line.lastIndexOf(":- "))
+      if (m >= 0) m + 3 else line.indexWhere(_ != ' ')
+    }
+    def idOf(line: String): Option[String] =
+      nodeId.findFirstMatchIn(line.drop(col(line))).map(_.group(1))
+    sections.map { case (label, text) =>
+      val lines = text.split("\n", -1)
+      // node details: "(n) Name" through the blank line after it
+      val block = mutable.HashMap.empty[String, Range]
+      var i = 0
+      while (i < lines.length) lines(i) match {
+        case header(id) =>
+          val end = lines.indexWhere(_.trim.isEmpty, i) match {
+            case -1 => lines.length
+            case e => e + 1
+          }
+          block(id) = i until end
+          i = end
+        case _ => i += 1
+      }
+      val inBlock = block.values.flatten.toSet
+      def isTree(j: Int) = !inBlock(j) && lines(j).trim.nonEmpty
+      val norm = (l: String) => nodeId.replaceAllIn(l, "(#)")
+      val drop = mutable.HashSet.empty[Int]
+      val keptIds = mutable.HashSet.empty[String]
+      val droppedIds = mutable.HashSet.empty[String]
+      i = 0
+      while (i < lines.length) {
+        val line = lines(i)
+        if (isTree(i)) idOf(line).foreach(keptIds += _)
+        val cached =
+          isTree(i) && line.drop(col(line)).startsWith("InMemoryRelation (")
+        if (cached) {
+          val end = (i + 1 until lines.length)
+            .find(j => !isTree(j) || col(lines(j)) <= col(line))
+            .getOrElse(lines.length)
+          val sub = (i + 1 until end).map(lines(_))
+          val ids = sub.flatMap(idOf)
+          val key = (sub.map(l => norm(l.drop(col(l)))) ++ ids.flatMap(id =>
+            block.get(id).toSeq.flatMap(_.drop(1).map(lines(_))).map(norm)))
+            .mkString("\n")
+          printed.get(key) match {
+            case Some(where) if sub.nonEmpty =>
+              lines(i + 1) = sub.head.take(col(sub.head)) +
+                s"[cached plan, printed in full in $where]"
+              drop ++= i + 2 until end
+              droppedIds ++= ids
+              i = end
+            case _ =>
+              printed.getOrElseUpdate(key, label)
+              i += 1
+          }
+        } else i += 1
+      }
+      (droppedIds -- keptIds).foreach(id => block.get(id).foreach(drop ++= _))
+      lines.indices.filterNot(drop).map(lines(_)).mkString("\n")
     }
   }
 

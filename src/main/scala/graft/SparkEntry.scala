@@ -975,8 +975,7 @@ object SparkEntry {
       // the path: a regenerated corpus at the same path must rebuild,
       // or the index would silently serve stale neighbors
       val sig = {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-        val fs = p.getFileSystem(s.sessionState.newHadoopConf())
+        val (fs, p) = HadoopFs(s, s"$dir/embeddings.parquet")
         val st = fs.getFileStatus(p)
         val parts =
           if (st.isDirectory)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
-import graft.SparkEntry
+import graft.{HadoopFs, SparkEntry}
 import graft.operators.{Dedup, EditDistanceJoin}
 import graft.streaming.{EditDistanceStream, NearDupStream, SimHashStream}
 
@@ -57,12 +57,12 @@ object StreamProof {
     * wave the guard through). */
   private[graft] def prepareWorkDir(spark: SparkSession, baseDir: String,
       workDir: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val workP = new Path(workDir)
-    val fs = workP.getFileSystem(conf)
+    val (fs, workP) = HadoopFs(spark, workDir)
     val root = fs.makeQualified(workP)
-    val baseP = new Path(baseDir)
-    val baseQ = baseP.getFileSystem(conf).makeQualified(baseP)
+    val baseQ = {
+      val (bfs, baseP) = HadoopFs(spark, baseDir)
+      bfs.makeQualified(baseP)
+    }
     def within(child: Path, parent: Path): Boolean = {
       val cu = child.toUri; val pu = parent.toUri
       java.util.Objects.equals(cu.getScheme, pu.getScheme) &&
@@ -121,9 +121,8 @@ object StreamProof {
       b.exceptAll(s).count())
     val measured = measure(s)
     s.unpersist(); b.unpersist()
-    val path = new org.apache.hadoop.fs.Path(sink)
-    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .delete(path, true)
+    val (fs, path) = HadoopFs(spark, sink)
+    fs.delete(path, true)
     (p, measured)
   }
 
@@ -444,8 +443,8 @@ object StreamProof {
       val (p, _) = parity(spark, sinkDir(s"${tag}pairs"), "hamming",
         Dedup.simhashPairs(all, "doc_id", "text", shMaxHamming),
         canonical("hamming"))
-      (p, state, docCount,
-        SimHashStream.maxBucketFor(docCount, shMaxHamming), occupancy)
+      (p, state, docCount, SimHashStream.maxBucketFor(docCount),
+        occupancy)
     }
     def bucketFields(o: (Long, Long, Long)) =
       s""","state_bucket_bound":${o._1},"max_bucket_occupancy":${o._2}""" +

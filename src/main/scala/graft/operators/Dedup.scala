@@ -794,7 +794,7 @@ object Dedup {
         .agg(sort_array(collect_list(col("h"))).as("key"),
           count(lit(1)).cast("int").as("sz")))
     }
-    route match {
+    val edges = route match {
       case Contract(hot, cold, _) =>
         val (star, reps) = classStarReps(hot)
         // thresholded pairs among representatives, full-corpus capped
@@ -812,6 +812,13 @@ object Dedup {
         jaccardPairsCapped(df, idCol, textCol, n, threshold, maxDocFreq)
           .select("id_a", "id_b")
     }
+    // Planned outside its consumer's cache: every consumer persists
+    // the edges, and a cached plan's final shuffle read is never
+    // coalesced (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning
+    // is off), so the class-window stage and each cache scan after it
+    // ran spark.sql.shuffle.partitions tasks. Over `.rdd` the edges'
+    // own adaptive plan coalesces; the Row round trip is output-scale.
+    sess.createDataFrame(edges.rdd, edges.schema)
   }
 
   /** Exact-class star edges + representative frame over a prepared

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.HadoopFs
+
 /** PERSISTED IVF index — the Spark-native form of "build the ANN index
   * once, probe it many times". FAISS keeps an inverted-list file per
   * centroid; the lakehouse translation is a parquet table PARTITIONED BY
@@ -120,7 +122,7 @@ object IvfIndex {
     val v = asOf.orElse(currentVersion(dir)).getOrElse(
       throw new IllegalStateException(
         s"no committed index version under $dir"))
-    val (fs, _) = hfs(dir)
+    val (fs, _) = HadoopFs(SparkSession.active, dir)
     require(fs.exists(markerPath(dir, v)),
       s"index version $v under $dir is not committed")
     append(newVectors, s"$dir/v_$v", idCol, vecCol)
@@ -133,14 +135,6 @@ object IvfIndex {
   // java.io.File bookkeeping would silently track a bogus LOCAL path
   // while Spark wrote the data to the real store. ----
 
-  private def hfs(dir: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sessionState.newHadoopConf()
-    (p.getFileSystem(conf), p)
-  }
-
   private def markerPath(dir: String, v: Long) =
     new org.apache.hadoop.fs.Path(s"$dir/v_$v/_COMMITTED")
 
@@ -148,7 +142,7 @@ object IvfIndex {
     * only once its `_COMMITTED` marker does — a crashed or in-flight
     * build is invisible to readers. */
   def committedVersions(dir: String): Seq[Long] = {
-    val (fs, p) = hfs(dir)
+    val (fs, p) = HadoopFs(SparkSession.active, dir)
     if (!fs.exists(p)) return Seq.empty
     fs.listStatus(p).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("v_"))
@@ -172,7 +166,7 @@ object IvfIndex {
       iters: Int = 3, idCol: String = "vec_id",
       vecCol: String = "embedding",
       maxCentroids: Int = Similarity.MaxCentroids): Long = {
-    val (fs, root) = hfs(dir)
+    val (fs, root) = HadoopFs(SparkSession.active, dir)
     fs.mkdirs(root)
     var v = {
       // start above every claimed OR committed version
@@ -208,7 +202,7 @@ object IvfIndex {
     val v = asOf.orElse(currentVersion(dir)).getOrElse(
       throw new IllegalStateException(
         s"no committed index version under $dir"))
-    val (fs, _) = hfs(dir)
+    val (fs, _) = HadoopFs(SparkSession.active, dir)
     require(fs.exists(markerPath(dir, v)),
       s"index version $v under $dir is not committed")
     topK(spark, s"$dir/v_$v", queries, k, nProbe, idCol, vecCol)

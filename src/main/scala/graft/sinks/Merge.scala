@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
+import graft.HadoopFs
+
 /** Warehouse writers with the reference's idempotency semantics
   * (SURVEY R9/S16-S18), re-expressed as set operations + partitioned
   * parquet instead of per-row IntegrityError handling:
@@ -32,15 +34,6 @@ import org.apache.spark.storage.StorageLevel
   * duplicates without the anti-join — a silent correctness failure.
   */
 object Merge {
-
-  /** FileSystem + Path for `dir`, resolved by the dir's own scheme
-    * against the active session's Hadoop conf (same pattern as
-    * IvfIndex.hfs). */
-  private def hfs(spark: SparkSession, dir: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
-  }
 
   /** S16 semantics, pure form: rows from `incoming` whose `key` is not
     * already in `existing`, de-duplicated within the batch (first by
@@ -79,7 +72,7 @@ object Merge {
     * as AQE would have. */
   def insertIfAbsent(spark: SparkSession, tableDir: String,
       incoming: DataFrame, key: String, orderCol: String): Long = {
-    val (fs, tablePath) = hfs(spark, tableDir)
+    val (fs, tablePath) = HadoopFs(spark, tableDir)
     val toWrite = if (fs.exists(tablePath)) {
       insertIfAbsentDf(spark.read.parquet(tableDir), incoming, key, orderCol)
     } else incoming
@@ -120,7 +113,7 @@ object Merge {
     * object-store answer when that window matters. */
   def replaceByKey(spark: SparkSession, tableDir: String,
       replacement: DataFrame, key: String, numBuckets: Int = 64): Unit = {
-    val (fs, tablePath) = hfs(spark, tableDir)
+    val (fs, tablePath) = HadoopFs(spark, tableDir)
     val withBucket = replacement
       .withColumn("__bucket", pmod(xxhash64(col(key)), lit(numBuckets)))
     if (!fs.exists(tablePath)) {

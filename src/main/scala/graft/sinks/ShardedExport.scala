@@ -3,6 +3,8 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.HadoopFs
+
 /** Deterministic sharded JSONL export — the tail of a curation
   * pipeline: training frameworks consume size-bounded JSONL shards
   * plus a manifest, and REPRODUCIBILITY of the export is part of the
@@ -78,8 +80,7 @@ object ShardedExport {
     // an EMPTY export writes no shard directories at all; binaryFile
     // on a glob matching nothing throws path-not-found instead of
     // returning an empty frame, so probe the glob first
-    val glob = new org.apache.hadoop.fs.Path(s"$dataDir/shard=*/part-*")
-    val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (fs, glob) = HadoopFs(spark, s"$dataDir/shard=*/part-*")
     val matched = Option(fs.globStatus(glob)).exists(_.nonEmpty)
     if (!matched) {
       import spark.implicits._

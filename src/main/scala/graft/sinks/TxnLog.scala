@@ -9,6 +9,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.HadoopFs
+
 /** Minimal transaction-log table format ("graft log") giving the
   * reference's delete-then-insert sinks (SURVEY S18/R9) snapshot
   * isolation and atomic commits — the semantics Delta Lake's _delta_log
@@ -69,14 +71,14 @@ object TxnLog {
       maxKey: String)
   case class Commit(version: Long, add: Seq[AddFile], remove: Seq[String])
 
-  private def hconf() =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-
-  /** FileSystem for `tableDir`, resolved by the dir's own scheme. */
+  /** FileSystem for `tableDir`, resolved by the dir's own scheme
+    * against the active (else default) session's Hadoop conf, or a
+    * bare Hadoop conf when no session exists. */
   private def fsFor(tableDir: String): FileSystem =
-    new Path(tableDir).getFileSystem(hconf())
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(HadoopFs(_, tableDir)._1)
+      .getOrElse(new Path(tableDir)
+        .getFileSystem(new org.apache.hadoop.conf.Configuration()))
 
   private def logDir(tableDir: String) = new Path(tableDir, "_graft_log")
   private def dataDir(tableDir: String) = new Path(tableDir, "data")

@@ -8,17 +8,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
 import graft.operators.EditDistanceJoin
 
 /** Streaming fuzzy (edit-distance) self-match — the continuous form
-  * of [[graft.operators.EditDistanceJoin.selfJoin]], completing the
-  * streaming parity story for the similarity family (exact dedup and
-  * LSH near-dup stream since rounds 10-11; this adds the PassJoin
-  * tier). Documents arrive in micro-batches and each new string must
-  * match against EVERYTHING seen so far within edit distance `tau`,
-  * which a per-batch join cannot do — so the PassJoin BLOCK KEY
-  * (slot, source length, segment bytes) becomes the state key,
-  * exactly the NearDupStream band-bucket move: the partition lemma
-  * says two strings within tau share at least one block key in the
-  * index/probe discipline, so keying state by block makes the state
-  * lookup the candidate search, with NO quadratic pass anywhere.
+  * of [[graft.operators.EditDistanceJoin.selfJoin]], the similarity
+  * family's PassJoin tier. Documents arrive in micro-batches and each
+  * new string must match against EVERYTHING seen so far within edit
+  * distance `tau`, which a per-batch join cannot do — so the PassJoin
+  * BLOCK KEY (slot, source length, segment bytes) becomes the state
+  * key: the partition lemma says two strings within tau share at
+  * least one block key in the index/probe discipline, so keying state
+  * by block makes the state lookup the candidate search, with NO
+  * quadratic pass anywhere.
   *
   * Per arriving string the flatMap emits the same rows the batch
   * operator's two sides generate — tau+1 INDEX segments of its own
@@ -29,31 +27,19 @@ import graft.operators.EditDistanceJoin
   * ride a dedicated degenerate key as both roles, the streaming twin
   * of the batch short-bucket cross join.
   *
-  * State per block key holds its index and probe members GROUPED BY
-  * DISTINCT STRING (round 17 — the banded family's contraction
-  * discipline): one [[StrClass]] per distinct string per role, so a
-  * mass-duplication clique occupies one class, an arriving duplicate
-  * joins its class past any cap, and the per-arrival verify is one
-  * boundedLevenshtein per opposite-role CLASS — the distance is a
-  * pure function of the two strings, so contraction is EXACT for
-  * this operator's semantics outright. THE CAP — `maxBlock` distinct
-  * string classes per role, first-seen kept — IS A RECALL BOUNDARY,
-  * stated plainly: an overflow arrival is verified against the
-  * stored classes but not stored, and since round 17 it emits an
-  * [[OverflowId]] MARKER row (dist -1) so truncation is an
-  * observable stream fact; the batch parity contract below holds
-  * unconditionally only while no (block, role)'s distinct-string
-  * diversity exceeds the cap. Since round 18 the production entry
-  * point [[editPairsFor]] DERIVES the cap from stated corpus scale
-  * via [[maxBlockFor]] (classes ≤ distinct strings ≤ docs — the
-  * SimHashStream theorem verbatim, so the derived cap never
-  * truncates within stated scale; the pre-round-18 default
-  * `MaxBlock = 256` was a headroom constant of exactly the species
-  * the round-17 skew measurements discredited, and survives only as
-  * the floor); a deployment that must bound per-block state below
-  * the corpus's real diversity states that through
-  * [[editPairsCapped]], and the proofs record the bound each run
-  * actually needed.
+  * Each block folds through [[ClassBuckets.Fold]] over two tables,
+  * its index and probe roles, each grouped by DISTINCT STRING
+  * ([[StrClass]]): an entry is verified once per OPPOSITE-role class
+  * and joins its own role's class. THE CAP — `maxBlock` distinct
+  * string classes per role, first-seen kept — IS A RECALL BOUNDARY:
+  * an overflow arrival is verified against the stored classes but not
+  * stored, and emits an [[OverflowId]] MARKER row (dist -1). The batch
+  * parity contract below holds unconditionally only while no (block,
+  * role)'s distinct-string diversity exceeds the cap. The production
+  * entry point [[editPairsFor]] derives the cap from stated corpus
+  * scale via [[maxBlockFor]]; a deployment that must bound per-block
+  * state below the corpus's real diversity states that through
+  * [[editPairsCapped]].
   *
   * Candidates verify INSIDE the fold with
   * [[EditDistanceJoin.boundedLevenshtein]] (the local twin of the
@@ -83,55 +69,25 @@ object EditDistanceStream {
     * holding `maxBlock` string classes and was verified against the
     * opposite role's retained classes but NOT retained — recall
     * against later opposite-role arrivals is lost for that id in
-    * that block. Round 17: truncation used to be silent here. Real
-    * pairs always carry `dist >= 0` — filter on it to consume pairs
-    * only. */
+    * that block. Real pairs always carry `dist >= 0` — filter on it
+    * to consume pairs only. */
   val OverflowId: Long = -1L
 
   /** One distinct string's members within a (block, role): `ids`
     * holds every retained entry bearing `s`, in arrival order. */
   final case class StrClass(s: String, ids: Seq[Long])
 
-  /** Block membership, both roles, grouped by DISTINCT STRING
-    * (round 17 — the banded family's contraction discipline):
-    * byte-identical strings produce identical block entries and
-    * identical edit distances, so a mass-duplication clique occupies
-    * ONE class per role; an arriving duplicate joins its class past
-    * any cap, the per-arrival verify runs ONE boundedLevenshtein per
-    * opposite-role CLASS (the distance is a pure function of the two
-    * strings — re-expanding the verdict over a class's ids is output
-    * volume, not verify cost), and the cap bounds distinct-string
-    * classes per role.
-    * `ver` is the [[StateVersion]] stamp (round 18): checked on
-    * restore, named error on mismatch. CHECKPOINT BREAK: adding the
-    * stamp changed the state schema (as the round-17 contraction did
-    * before it) — restart pre-round-18 queries from a fresh
-    * checkpoint (replay reproduces the output exactly; pairs are
-    * idempotent-upsert). */
+  /** Block membership, both roles, grouped by distinct string;
+    * `ver` is the [[StateVersion]] stamp. */
   final case class BlockState(ver: Int, idx: Seq[StrClass],
     prb: Seq[StrClass])
 
-  /** FLOOR of the derived per-role string-class cap (round 18: a
-    * headroom constant survives only as a floor, never a default). */
+  /** FLOOR of the derived per-role string-class cap. */
   val MaxBlock = 256
 
-  /** Cap sized from an expected corpus: `expectedDocs` itself
-    * (floored at [[MaxBlock]], clamped to Int) — the classes-≤-docs
-    * theorem at the PassJoin tier: a (block, role)'s class count is
-    * its distinct-string count, and distinct strings cannot exceed
-    * the documents that produced them, so the derived cap never
-    * truncates within stated scale regardless of how hot a shared
-    * segment class runs (the proofs' worst case — a common 8-char
-    * prefix × replicas — is exactly the shape that outgrew any
-    * constant). Cost stays bounded by the contraction, not the cap:
-    * per-arrival verify is one boundedLevenshtein per opposite-role
-    * CLASS, and state carries one string per class plus the
-    * output-necessitated member ids. */
-  def maxBlockFor(expectedDocs: Long): Int = {
-    require(expectedDocs >= 0, s"expectedDocs: $expectedDocs")
-    math.max(MaxBlock.toLong, expectedDocs)
-      .min(Int.MaxValue.toLong).toInt
-  }
+  /** [[ClassBuckets.classCap]] at the [[MaxBlock]] floor. */
+  def maxBlockFor(expectedDocs: Long): Int =
+    ClassBuckets.classCap(expectedDocs, MaxBlock)
 
   /** The batch operator's block-key enumeration, verbatim:
     * [[EditDistanceJoin.blockEntries]] IS the single implementation
@@ -143,104 +99,42 @@ object EditDistanceStream {
       case (bkey, isIdx, id, s) => BlockEntry(bkey, isIdx, id, s)
     }
 
-  /** Fold one block's micro-batch arrivals: each new entry runs ONE
-    * boundedLevenshtein per OPPOSITE-role string class already
-    * present (state ∪ earlier-in-batch) and emits the verdict against
-    * every member of in-distance classes (skipping its own id — a
-    * doc's index and probe entries meet in its own blocks), then
-    * joins its role's matching class (duplication never spends cap)
-    * or claims a new class slot; a new string at a full role emits an
-    * overflow marker and is dropped from state. Arrivals fold in
-    * (id, role) order so pairing is deterministic under Spark's
-    * unordered group iterator; replayed (id, role) entries are
-    * skipped — exactly-once pairing over at-least-once delivery. */
+  /** Fold one block's micro-batch arrivals through the shared
+    * [[ClassBuckets.Fold]] over the index and probe roles: an entry
+    * is scored by boundedLevenshtein against the OPPOSITE role's
+    * classes, pairs ordered (min id, max id) and never with its own
+    * id (a doc's index and probe entries meet in its own blocks).
+    * Arrivals fold in (id, index-before-probe) order; replays are
+    * skipped per role. */
   def pairBlock(tau: Int, maxBlock: Int)(bkey: String,
       entries: Iterator[BlockEntry],
-      state: GroupState[BlockState]): Iterator[EditPair] = {
-    // per-role parallel arrays of (string, member ids); index into
-    // ArrayBuffers, never a restored Seq (the round-14 lesson)
-    final class Role {
-      val strs = new scala.collection.mutable.ArrayBuffer[String]()
-      val members = new scala.collection.mutable.ArrayBuffer[
-        scala.collection.mutable.ArrayBuffer[Long]]()
-      val seen = scala.collection.mutable.HashSet[Long]()
-      // O(1) own-class lookup for the duplicate-join decision — a
-      // linear string-equality scan per arrival would be O(classes ×
-      // strlen) of pure added work on top of the opposite-role verify
-      val index = scala.collection.mutable.HashMap[String, Int]()
-      def add(s: String, id: Long): Unit = {
-        index(s) = strs.length
-        strs += s
-        members += scala.collection.mutable.ArrayBuffer(id)
+      state: GroupState[BlockState]): Iterator[EditPair] =
+    new ClassBuckets.Fold[BlockState, BlockEntry, String, EditPair](
+        "EditDistanceStream", maxBlock,
+        Ordering.by(e => (e.id, !e.isIndex))) {
+      private val idx = new ClassBuckets.Table[String]
+      private val prb = new ClassBuckets.Table[String]
+      def stamp(s: BlockState) = s.ver
+      def restore(s: BlockState) = {
+        s.idx.foreach(c => idx.load(c.s, c.ids))
+        s.prb.foreach(c => prb.load(c.s, c.ids))
       }
-      def load(cs: Seq[StrClass]): Unit = cs.foreach { c =>
-        index(c.s) = strs.length
-        strs += c.s
-        val m = new scala.collection.mutable.ArrayBuffer[Long](c.ids.size)
-        c.ids.foreach { id => m += id; seen += id }
-        members += m
-      }
-      def classes: Seq[StrClass] =
-        strs.indices.map(i => StrClass(strs(i), members(i).toSeq))
-    }
-    val idx = new Role; val prb = new Role
-    state.getOption.foreach { s =>
-      StateVersion.check("EditDistanceStream", s.ver)
-      idx.load(s.idx); prb.load(s.prb)
-    }
-    val out = Seq.newBuilder[EditPair]
-    var grew = false
-    entries.toSeq.sortBy(e => (e.id, !e.isIndex)).foreach { e =>
-      val (mine, other) = if (e.isIndex) (idx, prb) else (prb, idx)
-      if (!mine.seen(e.id)) {
-        var matched = -1
-        var i = 0
-        while (i < other.strs.length) {
-          val d = EditDistanceJoin.boundedLevenshtein(e.s,
-            other.strs(i), tau)
-          if (d >= 0) {
-            val ms = other.members(i)
-            var j = 0
-            while (j < ms.length) {
-              if (ms(j) != e.id)
-                out += EditPair(math.min(e.id, ms(j)),
-                  math.max(e.id, ms(j)), d)
-              j += 1
-            }
-          }
-          i += 1
-        }
-        // class membership in OUR role needs exact string equality —
-        // O(1) via the role's hash index
-        matched = mine.index.getOrElse(e.s, -1)
-        if (matched >= 0) {
-          // duplicate string: joins its class — never spends cap
-          mine.members(matched) += e.id
-          grew = true
-        } else if (mine.strs.length < maxBlock) {
-          mine.add(e.s, e.id)
-          grew = true
-        } else {
-          // cap truncation must be visible at runtime (round 17 —
-          // it used to be silent here)
-          out += EditPair(e.id, OverflowId, -1)
-        }
-        mine.seen += e.id
-      }
-    }
-    if (grew) state.update(BlockState(StateVersion.Current,
-      idx.classes, prb.classes))
-    out.result().iterator
-  }
+      def render(ver: Int) =
+        BlockState(ver, idx.render(StrClass), prb.render(StrClass))
+      def id(e: BlockEntry) = e.id
+      def key(e: BlockEntry) = e.s
+      def own(e: BlockEntry) = if (e.isIndex) idx else prb
+      override def against(e: BlockEntry) = if (e.isIndex) prb else idx
+      def score(e: BlockEntry, s: String) =
+        EditDistanceJoin.boundedLevenshtein(e.s, s, tau)
+      def row(e: BlockEntry, other: Long, d: Int) =
+        EditPair(math.min(e.id, other), math.max(e.id, other), d)
+      def marker(e: BlockEntry) = EditPair(e.id, OverflowId, -1)
+    }.apply(entries, state)
 
   /** Wire a string stream into the block-keyed stateful matcher —
-    * the PRODUCTION entry point (round 18): callers state the corpus
-    * scale they expect and the per-role class cap derives via
-    * [[maxBlockFor]] (never truncates within stated scale — the
-    * classes-≤-docs theorem), replacing the pre-round-18 defaulted
-    * constant. Named `editPairsFor` (not `editPairs`) so the
-    * migration is compile-breaking for every external caller — the
-    * hammingPairsFor convention.
+    * the production entry point: callers state the corpus scale they
+    * expect and the per-role class cap derives via [[maxBlockFor]].
     *
     * CONSUMER CONTRACT: the output is pairs PLUS in-band
     * [[OverflowId]] marker rows (dist -1) — filter `dist >= 0` to

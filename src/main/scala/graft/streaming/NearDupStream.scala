@@ -17,45 +17,15 @@ import graft.operators.Dedup
   * stateful operator by band key makes the state lookup the candidate
   * search.
   *
-  * DUPLICATION-CONTRACTED STATE (round 17 — the SimHashStream
-  * discipline applied across the banded family): bucket state groups
-  * members by DISTINCT SIGNATURE, one [[SigClass]] (signature + the
-  * ids bearing it) per class. Byte-identical texts produce
-  * byte-identical minhash signatures, so a mass-duplication clique
-  * occupies ONE class: an arriving duplicate joins its class
-  * unconditionally (duplication never spends cap) and pairs with
-  * every earlier clique member at est_jaccard 1.0 — the exact
-  * re-expansion batch parity requires — while per-arrival scoring is
-  * one signature comparison per CLASS (the same distinct-bound work
-  * the batch LSH join pays for that bucket; the id-loop inside a
-  * matching class is the output the query asks for). The pair output
-  * is a pure function of the two signatures, so contraction by
-  * signature is EXACT for this operator's semantics, not just for
-  * byte-identical texts.
-  *
-  * Cap semantics under contraction: the cap bounds distinct
-  * signature CLASSES per bucket, and since round 18 the production
-  * entry point [[nearDupPairsFor]] DERIVES it from stated corpus
-  * scale via [[maxBucketFor]] — the SimHashStream theorem verbatim:
-  * a bucket's class count is its distinct-signature count, which can
-  * never exceed the distinct documents that produced them, so the
-  * derived cap never truncates within stated scale, regardless of
-  * skew. (The pre-round-18 default was the headroom constant
-  * `MaxBucket = 64` — exactly the species of guess the round-17
-  * proofs discredited for SimHash with 8-81× measured skew: minhash
-  * band keys do live in a huge keyspace where only near-dups
-  * collide, but "a degenerate boilerplate band never carries more
-  * than 64 genuinely distinct near-dup families" was still a model,
-  * and models eventually lose recall silently — the failure mode
-  * this family refuses. [[MaxBucket]] survives only as the derived
-  * cap's floor.) An arrival with a NEW signature at a full bucket is
-  * scored against the retained classes, then dropped from state with
-  * an [[OverflowId]] MARKER row (est_jaccard -1.0) — round 17:
-  * truncation used to be silent here; the family's rule is that
-  * recall loss must be observable in the output stream itself.
-  * Memory per bucket is one signature per class plus one 8-byte id
-  * per retained member — the id payload is output-necessitated
-  * (exact re-expansion), the q23 output-volume judgment.
+  * Each bucket folds through [[ClassBuckets.Fold]]: members grouped
+  * by distinct signature ([[SigClass]]), one signature comparison per
+  * class per arrival, the cap bounding classes. An arriving duplicate
+  * joins its class and pairs with every earlier clique member at
+  * est_jaccard 1.0. The production entry point [[nearDupPairsFor]]
+  * derives the cap from stated corpus scale via [[maxBucketFor]];
+  * an arrival with a NEW signature at a full bucket is scored against
+  * the retained classes, then dropped from state with an
+  * [[OverflowId]] MARKER row (est_jaccard -1.0).
   *
   * Emission: a pair is scored ONCE per shared band (same micro-batch
   * or later); cross-band repeats of the same pair are emitted per
@@ -83,7 +53,7 @@ object NearDupStream {
 
   /** `id_old` of an overflow MARKER row: `(id, OverflowId, -1.0)`
     * means doc `id` arrived with a NEW signature at a bucket already
-    * holding [[MaxBucket]] signature classes and was scored against
+    * holding `maxBucket` signature classes and was scored against
     * the retained classes but NOT retained — recall against later
     * arrivals is lost for that doc in that band. Real pairs always
     * carry `est_jaccard >= 0` and `id_old >= 0` — filter
@@ -94,14 +64,8 @@ object NearDupStream {
     * every retained doc bearing `sig`, in arrival order. */
   final case class SigClass(sig: Seq[Long], ids: Seq[Long])
 
-  /** Bucket membership, grouped by distinct signature (round 17):
-    * the cap counts `classes`, never members — see the object doc.
-    * `ver` is the [[StateVersion]] stamp (round 18): checked on
-    * restore, named error on mismatch. CHECKPOINT BREAK: adding the
-    * stamp changed the state schema (as the round-17 contraction did
-    * before it) — restart pre-round-18 queries from a fresh
-    * checkpoint (replay reproduces the output exactly; pairs are
-    * idempotent-upsert). */
+  /** Bucket membership, grouped by distinct signature; `ver` is the
+    * [[StateVersion]] stamp. */
   final case class BucketState(ver: Int, classes: Seq[SigClass])
 
   /** Matching positions between two equal-length signatures. */
@@ -116,116 +80,39 @@ object NearDupStream {
     BigDecimal(m.toDouble / len + 1e-9)
       .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Fold one bucket's micro-batch arrivals: each new doc scores one
-    * signature comparison per distinct CLASS already in the bucket
-    * (state ∪ earlier-in-batch) and emits a pair with every member of
-    * each class (est is a pure function of the two signatures, so all
-    * members of a class share it). A doc whose signature matches a
-    * retained class bit-for-bit joins it unconditionally; a new
-    * signature claims a class slot if the bucket holds fewer than
-    * [[MaxBucket]] classes, else emits an overflow marker and is
-    * dropped from state. A doc id already present is an at-least-once
-    * replay and is skipped — exactly-once pairing on top of
-    * at-least-once delivery. */
+  /** Fold one bucket's micro-batch arrivals through the shared
+    * [[ClassBuckets.Fold]]: the score is the matching-position count,
+    * emitted against every class (est is a pure function of the two
+    * signatures); a bit-identical signature joins its class. */
   def pairBucket(maxBucket: Int)(bkey: String,
       docs: Iterator[BandedDoc],
-      state: GroupState[BucketState]): Iterator[NearDupPair] = {
-    // index into ARRAYS, never the state's Seq (a restored Seq is a
-    // List with O(i) apply — the SimHashStream round-14 lesson);
-    // members copy into per-class ArrayBuffers so the duplicate-join
-    // append is O(1)
-    val st = state.getOption
-    st.foreach(s => StateVersion.check("NearDupStream", s.ver))
-    val sigs = new scala.collection.mutable.ArrayBuffer[Seq[Long]]()
-    val members =
-      new scala.collection.mutable.ArrayBuffer[
-        scala.collection.mutable.ArrayBuffer[Long]]()
-    val seen = scala.collection.mutable.HashSet[Long]()
-    st.foreach(_.classes.foreach { c =>
-      sigs += c.sig
-      val m = new scala.collection.mutable.ArrayBuffer[Long](c.ids.size)
-      c.ids.foreach { id => m += id; seen += id }
-      members += m
-    })
-    val out = Seq.newBuilder[NearDupPair]
-    var grew = false
-    docs.toSeq.sortBy(_.id).foreach { d =>
-      if (!seen(d.id)) {
-        var matched = -1
-        var i = 0
-        while (i < sigs.length) {
-          val mc = matchCount(d.sig, sigs(i))
-          val est = estFor(mc, d.sig.length)
-          val ms = members(i)
-          var j = 0
-          while (j < ms.length) {
-            out += NearDupPair(d.id, ms(j), est)
-            j += 1
-          }
-          // class membership needs BIT equality of the signatures,
-          // not est == 1.0 (the rounded estimate is for consumers)
-          if (mc == d.sig.length && sigs(i).length == d.sig.length)
-            matched = i
-          i += 1
-        }
-        if (matched >= 0) {
-          // duplicate signature: joins its class — never spends cap
-          members(matched) += d.id
-          grew = true
-        } else if (sigs.length < maxBucket) {
-          sigs += d.sig
-          members += scala.collection.mutable.ArrayBuffer(d.id)
-          grew = true
-        } else {
-          // cap truncation must be visible at runtime (round 17 —
-          // it used to be silent here): one marker per overflowing
-          // band
-          out += NearDupPair(d.id, OverflowId, -1.0)
-        }
-        seen += d.id
-      }
-    }
-    if (grew) state.update(BucketState(StateVersion.Current,
-      sigs.indices.map(i => SigClass(sigs(i), members(i).toSeq))))
-    out.result().iterator
-  }
+      state: GroupState[BucketState]): Iterator[NearDupPair] =
+    new ClassBuckets.Fold[BucketState, BandedDoc, Seq[Long], NearDupPair](
+        "NearDupStream", maxBucket, Ordering.by(_.id)) {
+      private val t = new ClassBuckets.Table[Seq[Long]]
+      def stamp(s: BucketState) = s.ver
+      def restore(s: BucketState) =
+        s.classes.foreach(c => t.load(c.sig, c.ids))
+      def render(ver: Int) = BucketState(ver, t.render(SigClass))
+      def id(d: BandedDoc) = d.id
+      def key(d: BandedDoc) = d.sig
+      def own(d: BandedDoc) = t
+      def score(d: BandedDoc, sig: Seq[Long]) = matchCount(d.sig, sig)
+      def row(d: BandedDoc, old: Long, mc: Int) =
+        NearDupPair(d.id, old, estFor(mc, d.sig.length))
+      def marker(d: BandedDoc) = NearDupPair(d.id, OverflowId, -1.0)
+    }.apply(docs, state)
 
-  /** FLOOR of the derived signature-class cap (see the object doc:
-    * a headroom constant survives only as a floor, never a default —
-    * round 18, the SimHashStream convention). */
+  /** FLOOR of the derived signature-class cap. */
   val MaxBucket = 64
 
-  /** Cap sized from an expected corpus: `expectedDocs` itself
-    * (floored at [[MaxBucket]], clamped to Int) — the round-17
-    * SimHashStream theorem applied verbatim to the LSH tier: a
-    * bucket's class count is its distinct-minhash-signature count,
-    * distinct signatures cannot exceed the distinct texts that
-    * produced them, and distinct texts cannot exceed the documents —
-    * so for any corpus within its stated scale this cap NEVER
-    * truncates, regardless of how degenerate (boilerplate-similar)
-    * a band gets. What bounds cost is not this cap but the
-    * contraction: state is ≤ bands × (distinct signatures + retained
-    * member ids) whatever the cap says, and per-arrival scoring is
-    * one signature comparison per distinct class — the same
-    * distinct-bound work the batch LSH join pays for that bucket. A
-    * deployment that must bound per-bucket state BELOW the corpus's
-    * real signature diversity states that decision through
-    * [[nearDupPairsCapped]]. */
-  def maxBucketFor(expectedDocs: Long): Int = {
-    require(expectedDocs >= 0, s"expectedDocs: $expectedDocs")
-    math.max(MaxBucket.toLong, expectedDocs)
-      .min(Int.MaxValue.toLong).toInt
-  }
+  /** [[ClassBuckets.classCap]] at the [[MaxBucket]] floor. */
+  def maxBucketFor(expectedDocs: Long): Int =
+    ClassBuckets.classCap(expectedDocs, MaxBucket)
 
   /** Wire a document stream into the banded stateful pairer — the
-    * PRODUCTION entry point (round 18): callers state the corpus
-    * scale they expect and the class cap derives via [[maxBucketFor]]
-    * (never truncates within stated scale — the classes-≤-docs
-    * theorem), replacing the pre-round-18 defaulted constant whose
-    * species the round-17 skew measurements discredited. Named
-    * `nearDupPairsFor` (not `nearDupPairs`) so the migration is
-    * compile-breaking for every external caller — the
-    * hammingPairsFor convention.
+    * production entry point: callers state the corpus scale they
+    * expect and the class cap derives via [[maxBucketFor]].
     *
     * CONSUMER CONTRACT: the output is pairs PLUS in-band
     * [[OverflowId]] marker rows (est_jaccard -1.0) — filter
@@ -240,11 +127,9 @@ object NearDupStream {
     nearDupPairsCapped(docs, n, bands, maxBucketFor(expectedDocs))
 
   /** The band keys of one signature — ONE enumeration shared by the
-    * stream wiring and the StreamProof state bound (the
-    * SimHashStream.bandKeys precedent: a proof bound that
-    * re-implements the banding inline silently desyncs when the
-    * geometry changes). Empty signatures (word-free docs) land in no
-    * bucket, exactly as the wiring's flatMap. */
+    * stream wiring and the StreamProof state bound. Empty signatures
+    * (word-free docs) land in no bucket, exactly as the wiring's
+    * flatMap. */
   def bandKeysFor(sig: Seq[Long], bands: Int): Seq[String] = {
     val rows = 16 / bands
     if (sig.isEmpty) Seq.empty
@@ -253,14 +138,13 @@ object NearDupStream {
     }
   }
 
-  /** [[nearDupPairs]] with an EXPLICIT class cap — memory-bounded
-    * deployments and proof harnesses state the cap instead of
-    * inheriting the default (the hammingPairsCapped convention). */
+  /** [[nearDupPairsFor]] with an EXPLICIT class cap — for
+    * memory-bounded deployments and proof harnesses; the cap is a
+    * stated decision, never a default. */
   def nearDupPairsCapped(docs: Dataset[StreamDoc], n: Int,
       bands: Int, maxBucket: Int)(implicit spark: SparkSession)
       : Dataset[NearDupPair] = {
-    // a cap < 1 retains nothing and emits only markers — a stated
-    // decision must still be a sane one (the editPairs guard)
+    // a cap < 1 retains nothing and emits only markers
     require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
     import spark.implicits._
     val banded = docs.flatMap { d =>

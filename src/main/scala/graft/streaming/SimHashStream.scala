@@ -8,11 +8,10 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
 import graft.operators.Dedup
 
 /** Streaming SimHash near-dup matcher — the continuous form of
-  * [[graft.operators.Dedup.simhashPairs]], completing the streaming
-  * surface's banded family (exact = Curation, MinHash-LSH =
-  * NearDupStream, edit distance = EditDistanceStream). The batch
-  * operator's band buckets ARE the state, exactly the NearDupStream
-  * pattern: a 64-bit signature splits into equal-width bands
+  * [[graft.operators.Dedup.simhashPairs]], the banded family's
+  * popcount tier (exact = Curation, MinHash-LSH = NearDupStream, edit
+  * distance = EditDistanceStream). The batch operator's band buckets
+  * ARE the state: a 64-bit signature splits into equal-width bands
   * (4×16-bit at maxHamming ≤ 3, 8×8-bit at 4..7 — the same pigeonhole
   * radii as batch), a doc lands in one bucket per band, and two docs
   * are candidates iff they share a bucket; verify is the exact
@@ -22,43 +21,13 @@ import graft.operators.Dedup
   * UDF's body — null/word-free docs sign 0L and DO pair with each
   * other at hamming 0, matching the batch plan's semantics.
   *
-  * DUPLICATION-CONTRACTED STATE (round 17 — the batch emitters'
-  * census discipline crossing the batch/stream boundary): bucket
-  * state groups members by DISTINCT SIGNATURE —
-  * [[BucketState.classes]] holds one [[SigClass]] (signature + the
-  * ids bearing it) per distinct signature. Byte-identical texts
-  * produce byte-identical signatures, so a mass-duplication clique
-  * occupies ONE class: the per-arrival verify popcounts against
-  * distinct signatures only (one XOR per class, then an id-loop only
-  * on classes within the radius — that loop is the output the query
-  * asks for, the batch re-expansion shape), and [[maxBucketFor]]'s
-  * derived cap bounds distinct-signature CLASSES — a count that can
-  * never exceed the stated corpus size, so the production entry
-  * point is exact for any corpus within its stated scale, proven at
-  * the derived cap on BOTH proof shapes (stream_proof.json: the v5
-  * byte-identical-replica tier, where contraction absorbs all
-  * duplication — 1,586 classes in the hot bucket that held 15,980
-  * members — and the v4 mutated tier, whose hot bucket is 12,618
-  * genuinely distinct near-dup signatures that no contraction can
-  * absorb and that the pre-round-17 uniform×8 cap model truncated).
-  * Memory per bucket is one (signature,
-  * Seq header) per class — the cap's unit — plus one 8-byte id per
-  * retained member: the id payload is NOT distinct-bound, but it is
-  * exactly the information exact pair re-expansion requires (an
-  * arriving duplicate must pair with EVERY earlier clique member to
-  * keep batch parity), so it is output-necessitated, the same
-  * output-volume-bound judgment as batch q23's re-expansion. A
-  * deployment that can tolerate lossy re-expansion would sample ids
-  * per class — that variant is deliberately NOT offered: silent
-  * truncation of pairs is the failure mode this family refuses.
-  *
-  * Cap semantics under contraction: an arrival whose signature
-  * matches an existing class ALWAYS joins it (duplication never
-  * consumes cap); an arrival with a NEW signature at a full bucket is
-  * verified against the retained classes, then dropped from state
-  * with an [[OverflowId]] marker row (hamming -1) — recall against
-  * later arrivals is lost only for genuinely distinct signatures past
-  * the cap, observable in the output stream itself.
+  * Each bucket folds through [[ClassBuckets.Fold]]: members grouped
+  * by distinct signature ([[SigClass]]), one XOR per class per
+  * arrival, the cap bounding classes. Memory per bucket is one
+  * signature per class plus one 8-byte id per retained member: the id
+  * payload is what exact pair re-expansion needs (an arriving
+  * duplicate pairs with EVERY earlier clique member), so lossy
+  * per-class id sampling is deliberately not offered.
   *
   * Emission: a pair is scored once per SHARED band; cross-band
   * repeats carry identical hammings — consumers dedup on
@@ -81,12 +50,11 @@ object SimHashStream {
     * doc `id` arrived with a NEW signature at a bucket already holding
     * `maxBucket` signature classes and was verified against the
     * retained classes but NOT retained — recall against later
-    * arrivals is lost for that doc in that band. Emitted (once per
-    * overflowing band) so cap truncation is an observable stream
-    * fact, not a scaladoc footnote (round-14 advice): a consumer
-    * alerts on ANY marker, or counts them to size `maxBucket`. Real
-    * pairs always carry `hamming >= 0` and `id_old >= 0` — filter
-    * `hamming >= 0` to consume pairs only. */
+    * arrivals is lost for that doc in that band. Emitted once per
+    * overflowing band, so a consumer alerts on ANY marker, or counts
+    * them to size `maxBucket`. Real pairs always carry
+    * `hamming >= 0` and `id_old >= 0` — filter `hamming >= 0` to
+    * consume pairs only. */
   val OverflowId: Long = -1L
 
   /** One distinct signature's members within a bucket: `ids` holds
@@ -94,164 +62,61 @@ object SimHashStream {
     * within a micro-batch — the fold sorts arrivals by id). */
   final case class SigClass(sig: Long, ids: Seq[Long])
 
-  /** Bucket membership, grouped by distinct signature (round 17):
-    * the cap counts `classes`, never members — see the object doc.
-    * `ver` is the [[StateVersion]] stamp (round 18): the fold checks
-    * it on restore and fails fast with a named error on mismatch, so
-    * the NEXT encoding change is detected instead of becoming a
-    * checkpoint-deserialization surprise. CHECKPOINT BREAK: adding
-    * the stamp itself changed the state schema (as the round-17
-    * contraction did before it) — restart pre-round-18 queries from
-    * a fresh checkpoint (replay reproduces the output exactly; pairs
-    * are idempotent-upsert). */
+  /** Bucket membership, grouped by distinct signature; `ver` is the
+    * [[StateVersion]] stamp. */
   final case class BucketState(ver: Int, classes: Seq[SigClass])
 
-  /** FLOOR of the derived bucket cap. UNLIKE NearDupStream's minhash
-    * band keys (a huge keyspace where only near-dups collide), SimHash
-    * bands have only 2^width buckets (256 at the 8×8-bit geometry), so
-    * bucket occupancy scales with the corpus: [[hammingPairsFor]]
-    * REQUIRES `expectedDocs` and derives the cap via [[maxBucketFor]]
-    * (= the stated scale itself, which distinct-signature classes
-    * cannot exceed — see its doc for why every occupancy MODEL was
-    * measured wrong); an explicit cap (memory/CPU-bounded
-    * deployments) goes through [[hammingPairsCapped]], stated rather
-    * than defaulted, trading recall against later arrivals for
-    * bounded per-bucket state — a truncated bucket breaks batch
-    * parity by design (the StreamProof run records the cap it ran at
-    * AND the max per-bucket class occupancy it observed, the
-    * EditDistanceStream cap convention). Truncation stays observable
-    * at runtime via [[OverflowId]] marker rows. */
+  /** FLOOR of the derived bucket cap. SimHash bands have only
+    * 2^width buckets (256 at the 8×8-bit geometry), so bucket
+    * occupancy scales with the corpus: [[hammingPairsFor]] REQUIRES
+    * `expectedDocs` and derives the cap via [[maxBucketFor]]; an
+    * explicit cap goes through [[hammingPairsCapped]]. */
   val MaxBucket = 64
 
-  /** Cap sized from an expected corpus: `expectedDocs` itself
-    * (floored at [[MaxBucket]], clamped to Int). A bucket's class
-    * count is its distinct-signature count, which can never exceed
-    * the distinct documents that produced them — so for any corpus
-    * within its stated scale this cap NEVER truncates, regardless of
-    * skew. That replaces the pre-round-17 uniform-occupancy ×8 model
-    * (expectedDocs / 2^bandWidth × 8), which the proofs measured as
-    * un-salvageable: real band skew ran 8-81× past uniform on BOTH
-    * proof corpus shapes (replica corpus: 1,586 distinct signatures
-    * in the hot bucket vs the model's 1,568; mutated corpus: 12,618
-    * vs 1,568 — the bucket carried ~30% of all docs), and any
-    * headroom constant is a guess that eventually loses recall
-    * silently — the failure mode this family refuses. Exactness
-    * within stated scale is thereby a THEOREM, not a model; arrivals
-    * BEYOND the stated scale can still overflow, marker-observably.
-    *
-    * What bounds cost, then? Not this cap — the round-17 contraction:
-    * global state is ≤ nBands × (distinct signatures + retained
-    * member ids) whatever the cap says (each signature lives in one
-    * class per band), and per-arrival verify is one XOR per distinct
-    * signature in the bucket — the same distinct-bound work the batch
-    * banded join pays for that bucket. OPERATIONAL COROLLARY: a hot
-    * bucket's per-arrival verify latency scales with the corpus's
-    * signature DIVERSITY landing there (the v4 proof's hot bucket ran
-    * ~12.6k popcounts per arrival inside a single-threaded group
-    * fold) — monitor micro-batch durations; a creeping batch time
-    * with flat input volume means a bucket's class count is growing,
-    * and the remedy is a stated cap, not a bigger cluster. A
-    * deployment that must bound per-bucket verify/state BELOW the
-    * corpus's real signature diversity states that decision through
-    * [[hammingPairsCapped]].
-    * `maxHamming` is retained in the signature deliberately: the cap
-    * is geometry-independent now, but callers sizing caps per radius
-    * keep a stable call shape. */
-  def maxBucketFor(expectedDocs: Long, maxHamming: Int): Int = {
-    require(expectedDocs >= 0, s"expectedDocs: $expectedDocs")
+  /** [[ClassBuckets.classCap]] at the [[MaxBucket]] floor. It never
+    * truncates within stated scale; a hot bucket's per-arrival verify
+    * latency still scales with the signature DIVERSITY landing there
+    * (one XOR per class inside a single-threaded group fold), so a
+    * creeping micro-batch time at flat input volume means a bucket's
+    * class count is growing, and the remedy is a stated cap. */
+  def maxBucketFor(expectedDocs: Long): Int =
+    ClassBuckets.classCap(expectedDocs, MaxBucket)
+
+  private def requireRadius(maxHamming: Int): Unit =
     require(maxHamming >= 0 && maxHamming <= 7,
       s"simhash banding guarantees recall only to hamming 0..7; " +
         s"got maxHamming=$maxHamming")
-    math.max(MaxBucket.toLong, expectedDocs)
-      .min(Int.MaxValue.toLong).toInt
-  }
 
-  /** Fold one bucket's micro-batch arrivals: each new doc XORs
-    * against every distinct SIGNATURE already in the bucket (state ∪
-    * earlier-in-batch) — one popcount per class — and emits a pair
-    * with every member of each class within the radius (the exact
-    * re-expansion batch parity requires; that id-loop is output
-    * volume, not verify cost). A doc whose signature matches a
-    * retained class joins it unconditionally; a new signature claims
-    * a class slot if the bucket holds fewer than `maxBucket` classes,
-    * else emits an overflow marker and is dropped from state. A doc
-    * id already present is an at-least-once replay and is skipped —
-    * exactly-once pairing on top of at-least-once delivery. Arrivals
-    * sort by id so pairing is deterministic under Spark's unordered
-    * group iterator. */
+  /** Fold one bucket's micro-batch arrivals through the shared
+    * [[ClassBuckets.Fold]]: the score is the XOR popcount, kept iff
+    * ≤ `maxHamming`; a hamming-0 arrival joins its signature's class. */
   def pairBucket(maxHamming: Int, maxBucket: Int)(bkey: String,
       docs: Iterator[BandedSig], state: GroupState[BucketState])
-      : Iterator[HammingPair] = {
-    // index into ARRAYS, never the state's Seq: a restored Seq is a
-    // List, whose apply is O(i) — with SimHash's 256-buckets-a-band
-    // occupancy the linear-seq indexing turned the per-bucket fold
-    // cubic and stalled the round-14 proof chain for an hour before
-    // it was caught in a thread dump. Members copy into per-class
-    // ArrayBuffers so the duplicate-join append is O(1).
-    val st = state.getOption
-    st.foreach(s => StateVersion.check("SimHashStream", s.ver))
-    val sigs = new scala.collection.mutable.ArrayBuffer[Long]()
-    val members =
-      new scala.collection.mutable.ArrayBuffer[
-        scala.collection.mutable.ArrayBuffer[Long]]()
-    val seen = scala.collection.mutable.HashSet[Long]()
-    st.foreach(_.classes.foreach { c =>
-      sigs += c.sig
-      val m = new scala.collection.mutable.ArrayBuffer[Long](c.ids.size)
-      c.ids.foreach { id => m += id; seen += id }
-      members += m
-    })
-    val out = Seq.newBuilder[HammingPair]
-    var grew = false
-    docs.toSeq.sortBy(_.id).foreach { d =>
-      if (!seen(d.id)) {
-        var matched = -1
-        var i = 0
-        while (i < sigs.length) {
-          val h = java.lang.Long.bitCount(d.simhash ^ sigs(i))
-          if (h <= maxHamming) {
-            val ms = members(i)
-            var j = 0
-            while (j < ms.length) {
-              out += HammingPair(d.id, ms(j), h)
-              j += 1
-            }
-          }
-          if (h == 0) matched = i
-          i += 1
-        }
-        if (matched >= 0) {
-          // duplicate signature: joins its class — never spends cap
-          members(matched) += d.id
-          grew = true
-        } else if (sigs.length < maxBucket) {
-          sigs += d.simhash
-          members += scala.collection.mutable.ArrayBuffer(d.id)
-          grew = true
-        } else {
-          // cap truncation must be visible at runtime, not only in
-          // the scaladoc: one marker row per overflowing band
-          out += HammingPair(d.id, OverflowId, -1)
-        }
-        seen += d.id
+      : Iterator[HammingPair] =
+    new ClassBuckets.Fold[BucketState, BandedSig, Long, HammingPair](
+        "SimHashStream", maxBucket, Ordering.by(_.id)) {
+      private val t = new ClassBuckets.Table[Long]
+      def stamp(s: BucketState) = s.ver
+      def restore(s: BucketState) =
+        s.classes.foreach(c => t.load(c.sig, c.ids))
+      def render(ver: Int) = BucketState(ver, t.render(SigClass))
+      def id(d: BandedSig) = d.id
+      def key(d: BandedSig) = d.simhash
+      def own(d: BandedSig) = t
+      def score(d: BandedSig, sig: Long) = {
+        val h = java.lang.Long.bitCount(d.simhash ^ sig)
+        if (h <= maxHamming) h else -1
       }
-    }
-    if (grew) state.update(BucketState(StateVersion.Current,
-      sigs.indices.map(i => SigClass(sigs(i), members(i).toSeq))))
-    out.result().iterator
-  }
+      def row(d: BandedSig, old: Long, h: Int) = HammingPair(d.id, old, h)
+      def marker(d: BandedSig) = HammingPair(d.id, OverflowId, -1)
+    }.apply(docs, state)
 
   /** The radius-dependent band keys of one signature — ONE
     * enumeration shared by the stream wiring, the StreamProof state
-    * bound, and the spec (the EditDistanceStream.entriesFor
-    * precedent: a proof bound that re-implements the geometry inline
-    * silently desyncs when the radius changes the band width).
-    * Geometry matches batch [[Dedup.simhashPairs]] exactly: 4×16-bit
-    * bands at maxHamming ≤ 3, 8×8-bit at 4..7. */
+    * bound, and the spec. Geometry matches batch [[Dedup.simhashPairs]]
+    * exactly: 4×16-bit bands at maxHamming ≤ 3, 8×8-bit at 4..7. */
   def bandKeys(sig: Long, maxHamming: Int): Seq[String] = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"simhash banding guarantees recall only to hamming 0..7; " +
-        s"got maxHamming=$maxHamming")
+    requireRadius(maxHamming)
     val nBands = if (maxHamming <= 3) 4 else 8
     val width = 64 / nBands
     val mask = (1L << width) - 1
@@ -262,13 +127,8 @@ object SimHashStream {
     * geometry matches batch [[Dedup.simhashPairs]] exactly, so the
     * pigeonhole recall guarantee (complete up to hamming bands-1, and
     * in practice to the verify radius via multi-band agreement) is
-    * the batch one.
-    *
-    * The bucket cap is DERIVED from `expectedDocs` (see
-    * [[maxBucketFor]]): callers state the corpus scale they expect
-    * instead of inheriting a constant that silently truncates on real
-    * corpora; [[OverflowId]] markers still report when even the
-    * derived bound is exceeded. An explicit cap goes through
+    * the batch one. The bucket cap derives from `expectedDocs` via
+    * [[maxBucketFor]]; an explicit cap goes through
     * [[hammingPairsCapped]].
     *
     * CONSUMER CONTRACT: the output is pairs PLUS in-band
@@ -280,18 +140,14 @@ object SimHashStream {
     * arrivals are deliberately not persisted), so count distinct ids
     * where exact truncated-doc counts matter.
     *
-    * Named `hammingPairsFor` (not `hammingPairs`) deliberately
-    * (round-16 advice): the pre-round-16 `hammingPairs(docs,
-    * maxHamming)` took the radius as its second positional parameter,
-    * and re-typing that slot to `expectedDocs: Long` let stale
-    * positional calls compile via Int-to-Long widening into a
-    * silently different band geometry. The new name makes the
-    * migration compile-breaking for every external caller. */
+    * `expectedDocs` sits in the second positional slot, and the name
+    * is `hammingPairsFor` rather than `hammingPairs`, so that a call
+    * passing the radius positionally (Int widening to Long) fails to
+    * compile instead of silently running a different band geometry. */
   def hammingPairsFor(docs: Dataset[StreamDoc], expectedDocs: Long,
       maxHamming: Int = 7)(
       implicit spark: SparkSession): Dataset[HammingPair] =
-    hammingPairsCapped(docs, maxHamming,
-      maxBucketFor(expectedDocs, maxHamming))
+    hammingPairsCapped(docs, maxHamming, maxBucketFor(expectedDocs))
 
   /** [[hammingPairsFor]] with an EXPLICIT class cap — for
     * memory-bounded deployments and proof harnesses; the cap is a
@@ -299,11 +155,8 @@ object SimHashStream {
   def hammingPairsCapped(docs: Dataset[StreamDoc], maxHamming: Int,
       maxBucket: Int)(
       implicit spark: SparkSession): Dataset[HammingPair] = {
-    require(maxHamming >= 0 && maxHamming <= 7,
-      s"simhash banding guarantees recall only to hamming 0..7; " +
-        s"got maxHamming=$maxHamming")
-    // a cap < 1 retains nothing and emits only markers — a stated
-    // decision must still be a sane one (the editPairs guard)
+    requireRadius(maxHamming)
+    // a cap < 1 retains nothing and emits only markers
     require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
     import spark.implicits._
     val banded = docs.flatMap { d =>

@@ -25,7 +25,9 @@ package graft.streaming
   * 1 = parallel id/signature Seqs (rounds 10-16, unstamped);
   * 2 = distinct-class contraction (round 17, unstamped);
   * 3 = stamped state (round 18 — the first encoding that can
-  * DETECT its successors). */
+  * DETECT its successors). The three pair matchers now share one
+  * fold, [[ClassBuckets.Fold]], which does their check; a change to
+  * its state encoding is one change, pinned by StreamStateSchemaSpec. */
 object StateVersion {
 
   /** The version this binary writes and requires. */

@@ -223,11 +223,16 @@ class EditDistanceStreamSpec extends SparkSuite {
   test("maxBlockFor derives the per-role class cap as the stated " +
       "corpus size itself (classes <= distinct strings <= docs), " +
       "floored at the old default and clamped to Int") {
+    import graft.streaming.ClassBuckets
+    assert(EditDistanceStream.MaxBlock === 256)
     assert(EditDistanceStream.maxBlockFor(1000000L) === 1000000)
     assert(EditDistanceStream.maxBlockFor(10L) ===
       EditDistanceStream.MaxBlock)
     assert(EditDistanceStream.maxBlockFor(Long.MaxValue) ===
       Int.MaxValue)
+    for (n <- Seq(0L, 10L, 256L, 257L, 1000000L, Long.MaxValue))
+      assert(EditDistanceStream.maxBlockFor(n) ===
+        ClassBuckets.classCap(n, EditDistanceStream.MaxBlock))
     intercept[IllegalArgumentException] {
       EditDistanceStream.maxBlockFor(-1L)
     }

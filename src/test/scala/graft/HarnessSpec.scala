@@ -87,6 +87,87 @@ class HarnessSpec extends SparkSuite {
       intercept[IllegalArgumentException](Bench.selected(Some(bad)))
   }
 
+  test("plan dumps print each cached plan in full once per query; " +
+      "later sections get a one-line reference") {
+    val first = """== Physical Plan ==
+      |* Project (4)
+      |+- InMemoryTableScan (1)
+      |      +- InMemoryRelation (2)
+      |            +- * Filter (3)
+      |               +- Scan parquet (5)
+      |
+      |
+      |(1) InMemoryTableScan
+      |Output [1]: [id#1L]
+      |
+      |(2) InMemoryRelation
+      |Arguments: [id#1L], StorageLevel(disk, memory)
+      |
+      |(3) Filter [codegen id : 1]
+      |Condition : (id#1L > 0)
+      |
+      |(5) Scan parquet
+      |Output [1]: [id#1L]
+      |
+      |(4) Project [codegen id : 2]
+      |Output [1]: [id#1L]
+      |""".stripMargin
+    val later = """== Physical Plan ==
+      |* HashAggregate (1)
+      |:- InMemoryTableScan (2)
+      |:     +- InMemoryRelation (3)
+      |:           +- * Filter (4)
+      |:              +- Scan parquet (6)
+      |+- * Range (5)
+      |
+      |
+      |(1) HashAggregate [codegen id : 1]
+      |Keys: []
+      |
+      |(2) InMemoryTableScan
+      |Output [1]: [id#9L]
+      |
+      |(3) InMemoryRelation
+      |Arguments: [id#9L], StorageLevel(disk, memory)
+      |
+      |(4) Filter [codegen id : 1]
+      |Condition : (id#1L > 0)
+      |
+      |(6) Scan parquet
+      |Output [1]: [id#1L]
+      |
+      |(5) Range
+      |Output [1]: [id#2L]
+      |""".stripMargin
+    val Seq(a, b) = Bench.onceCached(Seq("the returned plan" -> first,
+      "Eager execution 1: count" -> later))
+    assert(a === first)
+    assert(b === """== Physical Plan ==
+      |* HashAggregate (1)
+      |:- InMemoryTableScan (2)
+      |:     +- InMemoryRelation (3)
+      |:           +- [cached plan, printed in full in the returned plan]
+      |+- * Range (5)
+      |
+      |
+      |(1) HashAggregate [codegen id : 1]
+      |Keys: []
+      |
+      |(2) InMemoryTableScan
+      |Output [1]: [id#9L]
+      |
+      |(3) InMemoryRelation
+      |Arguments: [id#9L], StorageLevel(disk, memory)
+      |
+      |(5) Range
+      |Output [1]: [id#2L]
+      |""".stripMargin)
+    // a different cached plan is printed in full wherever it first shows
+    val other = later.replace("(id#1L > 0)", "(id#1L > 5)")
+    assert(Bench.onceCached(Seq("the returned plan" -> first,
+      "Eager execution 1: count" -> other))(1) === other)
+  }
+
   private def sleepyJob(s: SparkSession, ms: Long): Unit = {
     s.sparkContext.parallelize(1 to 2, 2).map { i => Thread.sleep(ms); i }
       .count()

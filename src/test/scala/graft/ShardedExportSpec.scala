@@ -63,4 +63,35 @@ class ShardedExportSpec extends SparkSuite {
       Seq("shard", "files", "rows", "bytes", "md5"))
     assert(manifest.count() === 0L)
   }
+
+  test("manifestOf resolves its FileSystem through the session's " +
+      "Hadoop conf, so a session-only setting reaches it") {
+    val s = initSpark()
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_export_conf").toString
+    // a session of its own: the setting lives only in its SQL conf,
+    // never in the shared context's hadoopConfiguration
+    val session = s.newSession()
+    session.conf.set("fs.file.impl", classOf[CountingLocalFs].getName)
+    session.conf.set("fs.file.impl.disable.cache", "true")
+    CountingLocalFs.globs.set(0)
+    val manifest = ShardedExport.manifestOf(session, dir)
+    assert(manifest.count() === 0L)
+    assert(CountingLocalFs.globs.get > 0,
+      "the glob probe did not run on the session-configured FileSystem")
+  }
+}
+
+/** A local FileSystem that counts glob probes: installed through a
+  * session-only conf, it shows whose Hadoop conf a caller resolved. */
+class CountingLocalFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def globStatus(p: org.apache.hadoop.fs.Path)
+      : Array[org.apache.hadoop.fs.FileStatus] = {
+    CountingLocalFs.globs.incrementAndGet()
+    super.globStatus(p)
+  }
+}
+
+object CountingLocalFs {
+  val globs = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -122,8 +122,8 @@ class SimHashStreamSpec extends SparkSuite {
     implicit val spark: org.apache.spark.sql.SparkSession = s
     val base = "alpha beta gamma delta epsilon"
     val input = MemoryStream[StreamDoc](s)
-    // cap 1: a member-counted cap would truncate at the second doc —
-    // the round-16 weak finding; the class-counted cap must not
+    // cap 1: a member-counted cap would truncate at the second doc;
+    // the class-counted cap must not
     val query = SimHashStream.hammingPairsCapped(input.toDS(),
         maxHamming = 7, maxBucket = 1)
       .writeStream.format("memory").queryName("simhash_pairs_cap")
@@ -223,22 +223,20 @@ class SimHashStreamSpec extends SparkSuite {
   test("maxBucketFor derives the class cap as the stated corpus " +
       "size itself: classes <= docs is a theorem, occupancy models " +
       "were measured wrong") {
-    // distinct signature classes in a bucket can never exceed the
-    // documents that produced them, so the cap = expectedDocs never
-    // truncates within stated scale (StreamProof measured real band
-    // skew at 8-81x past the old uniform model on BOTH proof shapes)
-    assert(SimHashStream.maxBucketFor(1000000L, 7) === 1000000)
-    // geometry-independent: the radius no longer changes the bound
-    assert(SimHashStream.maxBucketFor(1000000L, 3) === 1000000)
+    import graft.streaming.ClassBuckets
+    assert(SimHashStream.MaxBucket === 64)
+    assert(SimHashStream.maxBucketFor(1000000L) === 1000000)
     // tiny corpus: floor at the production default
-    assert(SimHashStream.maxBucketFor(10L, 7) ===
-      SimHashStream.MaxBucket)
+    assert(SimHashStream.maxBucketFor(10L) === SimHashStream.MaxBucket)
     // clamped to Int range for huge stated scales
-    assert(SimHashStream.maxBucketFor(Long.MaxValue, 7) ===
-      Int.MaxValue)
-    // the radius guard still applies at derivation time
+    assert(SimHashStream.maxBucketFor(Long.MaxValue) === Int.MaxValue)
+    for (n <- Seq(0L, 10L, 64L, 65L, 1000000L, Long.MaxValue))
+      assert(SimHashStream.maxBucketFor(n) ===
+        ClassBuckets.classCap(n, SimHashStream.MaxBucket))
+    // the radius guard applies to the band geometry, which the cap no
+    // longer depends on
     intercept[IllegalArgumentException] {
-      SimHashStream.maxBucketFor(1000L, 8)
+      SimHashStream.bandKeys(0L, 8)
     }
   }
 

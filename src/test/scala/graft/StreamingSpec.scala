@@ -539,14 +539,14 @@ class StreamingSpec extends SparkSuite {
     import org.apache.spark.sql.streaming.TestGroupState
     import graft.streaming.NearDupStream
     import graft.streaming.NearDupStream.{BandedDoc, BucketState}
-    def fold(st: Option[BucketState], docs: Seq[BandedDoc])
-        : (Seq[(Long, Long, Double)], Option[BucketState]) = {
+    def fold(st: Option[BucketState], docs: Seq[BandedDoc],
+        cap: Int = 1): (Seq[(Long, Long, Double)], Option[BucketState]) = {
       val gs = TestGroupState.create[BucketState](
         org.apache.spark.api.java.Optional.fromNullable(st.orNull),
         GroupStateTimeout.NoTimeout, 0L,
         org.apache.spark.api.java.Optional.empty[Long](),
         false)
-      val out = NearDupStream.pairBucket(maxBucket = 1)(
+      val out = NearDupStream.pairBucket(maxBucket = cap)(
         "0:k", docs.iterator, gs).toSeq
         .map(p => (p.id_new, p.id_old, p.est_jaccard))
       (out, if (gs.exists) Some(gs.get) else st)
@@ -573,15 +573,28 @@ class StreamingSpec extends SparkSuite {
       out2.toString)
     assert(st2.get.classes.map(c => (c.sig, c.ids)) ===
       Seq((sigA, Seq(1L, 2L, 4L))), st2.toString)
+    // two classes restored in first-seen order: a later duplicate of
+    // the SECOND class scores each class once and joins its own
+    val (_, st3) = fold(None, Seq(BandedDoc("0:k", 5L, sigA),
+      BandedDoc("0:k", 6L, sigB)), cap = 2)
+    val (out4, st4) = fold(st3, Seq(BandedDoc("0:k", 7L, sigB)), cap = 2)
+    assert(out4.toSet === Set((7L, 5L, 0.9375), (7L, 6L, 1.0)),
+      out4.toString)
+    assert(st4.get.classes.map(c => (c.sig, c.ids)) ===
+      Seq((sigA, Seq(5L)), (sigB, Seq(6L, 7L))), st4.toString)
   }
 
   test("near-dup maxBucketFor derives the class cap as the stated " +
       "corpus size itself (classes <= distinct signatures <= docs), " +
       "floored at the old default and clamped to Int") {
-    import graft.streaming.NearDupStream
+    import graft.streaming.{ClassBuckets, NearDupStream}
+    assert(NearDupStream.MaxBucket === 64)
     assert(NearDupStream.maxBucketFor(1000000L) === 1000000)
     assert(NearDupStream.maxBucketFor(10L) === NearDupStream.MaxBucket)
     assert(NearDupStream.maxBucketFor(Long.MaxValue) === Int.MaxValue)
+    for (n <- Seq(0L, 10L, 64L, 65L, 1000000L, Long.MaxValue))
+      assert(NearDupStream.maxBucketFor(n) ===
+        ClassBuckets.classCap(n, NearDupStream.MaxBucket))
     intercept[IllegalArgumentException] {
       NearDupStream.maxBucketFor(-1L)
     }
