@@ -5,6 +5,7 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.collection.mutable
+import scala.util.matching.Regex
 
 import graft.jobs.{ScaleProof, StreamProof}
 
@@ -288,7 +289,7 @@ object Bench {
               qe.explainString(FormattedMode)
         }
         val sections = onceCached(("the returned plan" -> returned) +:
-          executed)
+          executed).map(stableIds)
         val text = sections.head + executed.zip(sections.tail)
           .map { case ((label, _), body) => s"\n== $label ==\n$body" }
           .mkString
@@ -301,6 +302,100 @@ object Bench {
     }
   }
 
+  /** Run-dependent numbers in a formatted plan: (pattern whose second
+    * group is the number, what the renumbered value is prefixed with). */
+  private val runDependent = Seq(
+    """(#)(\d+)""".r -> "", // expression ids
+    """(plan_id=)(\d+)""".r -> "", // exchange ids
+    // query stage ids, the Arguments line of a stage's node details
+    """(?m)(^\(\d+\) \w+QueryStage\n(?:[^\n]+\n)*?Arguments: )(\d+)$"""
+      .r -> "",
+    // observation names (a random UUID unless the caller named it)
+    """()([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})"""
+      .r -> "uuid-")
+
+  /** One formatted plan section with the numbers that differ between
+    * two runs of one build renumbered in order of first appearance
+    * (JVM-wide counters: expression, exchange and query stage ids,
+    * codegen ids by [[codegenGroups]]; random observation UUIDs) and
+    * JVM lambda classes printed without their address, so dumps of two
+    * builds diff to their plan differences. Two runs of one build still
+    * differ where AQE picks the other join build side and where
+    * concurrent eager actions finish in the other order. */
+  private[graft] def stableIds(section: String): String =
+    codegenGroups(runDependent.foldLeft(section.replaceAll(
+        """\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+""", "\\$Lambda")) {
+      case (text, (id, prefix)) =>
+        val seen = mutable.HashMap.empty[String, Int]
+        id.replaceAllIn(text, m => Regex.quoteReplacement(m.group(1) +
+          prefix + seen.getOrElseUpdate(m.group(2), seen.size + 1)))
+    })
+
+  private val nodeHeader = """^\((\d+)\) .*""".r
+  private val nodeId = """\((\d+)\)""".r
+
+  /** Where a plan-tree line's node name starts. */
+  private def treeCol(line: String): Int = {
+    val m = math.max(line.lastIndexOf("+- "), line.lastIndexOf(":- "))
+    if (m >= 0) m + 3 else line.indexWhere(_ != ' ')
+  }
+
+  /** The node id of a plan-tree line. */
+  private def treeId(line: String): Option[String] =
+    nodeId.findFirstMatchIn(line.drop(treeCol(line))).map(_.group(1))
+
+  /** Node details: each "(n) Name" line through the blank line after
+    * it, by node id. */
+  private def detailBlocks(lines: Array[String]): Map[String, Range] = {
+    val block = mutable.HashMap.empty[String, Range]
+    var i = 0
+    while (i < lines.length) lines(i) match {
+      case nodeHeader(id) =>
+        val end = lines.indexWhere(_.trim.isEmpty, i) match {
+          case -1 => lines.length
+          case e => e + 1
+        }
+        block(id) = i until end
+        i = end
+      case _ => i += 1
+    }
+    block.toMap
+  }
+
+  /** Whole-stage codegen ids renumbered by fused group, in the order the
+    * groups' node details first appear. Every AQE context numbers its
+    * own stages from 1, in the order they compile, so one raw id can
+    * name groups of different contexts; a group is a parent-child chain
+    * of plan-tree nodes with one raw id. */
+  private def codegenGroups(section: String): String = {
+    val lines = section.split("\n", -1)
+    val codegen = """^\((\d+)\) .* \[codegen id : (\d+)\]$""".r
+    val raw = lines.collect { case codegen(node, id) => node -> id }.toMap
+    val up = mutable.HashMap.empty[String, String]
+    def root(n: String): String = up.get(n).fold(n)(root)
+    val inBlock = detailBlocks(lines).values.flatten.toSet
+    val path = mutable.ArrayBuffer.empty[(Int, String)] // (column, node)
+    lines.indices.filterNot(inBlock).map(lines(_)).foreach { line =>
+      treeId(line).foreach { node =>
+        val c = treeCol(line)
+        while (path.nonEmpty && path.last._1 >= c) path.dropRightInPlace(1)
+        path.lastOption.foreach { case (_, parent) =>
+          val (a, b) = (root(node), root(parent))
+          if (a != b && raw.contains(node) && raw.get(node) == raw.get(parent))
+            up(a) = b
+        }
+        path += c -> node
+      }
+    }
+    val number = mutable.HashMap.empty[String, Int]
+    lines.map {
+      case line @ codegen(node, _) =>
+        val n = number.getOrElseUpdate(root(node), number.size + 1)
+        line.replaceFirst("""\[codegen id : \d+\]$""", s"[codegen id : $n]")
+      case line => line
+    }.mkString("\n")
+  }
+
   /** Formatted explain sections (label, text) of one query with each
     * cached plan printed in full once: every later occurrence of an
     * `InMemoryRelation` subtree (same operators, ids aside) becomes one
@@ -309,53 +404,33 @@ object Bench {
   private[graft] def onceCached(sections: Seq[(String, String)])
       : Seq[String] = {
     val printed = mutable.HashMap.empty[String, String]
-    val header = """^\((\d+)\) .*""".r
-    val nodeId = """\((\d+)\)""".r
-    def col(line: String): Int = {
-      val m = math.max(line.lastIndexOf("+- "), line.lastIndexOf(":- "))
-      if (m >= 0) m + 3 else line.indexWhere(_ != ' ')
-    }
-    def idOf(line: String): Option[String] =
-      nodeId.findFirstMatchIn(line.drop(col(line))).map(_.group(1))
     sections.map { case (label, text) =>
       val lines = text.split("\n", -1)
-      // node details: "(n) Name" through the blank line after it
-      val block = mutable.HashMap.empty[String, Range]
-      var i = 0
-      while (i < lines.length) lines(i) match {
-        case header(id) =>
-          val end = lines.indexWhere(_.trim.isEmpty, i) match {
-            case -1 => lines.length
-            case e => e + 1
-          }
-          block(id) = i until end
-          i = end
-        case _ => i += 1
-      }
+      val block = detailBlocks(lines)
       val inBlock = block.values.flatten.toSet
       def isTree(j: Int) = !inBlock(j) && lines(j).trim.nonEmpty
       val norm = (l: String) => nodeId.replaceAllIn(l, "(#)")
       val drop = mutable.HashSet.empty[Int]
       val keptIds = mutable.HashSet.empty[String]
       val droppedIds = mutable.HashSet.empty[String]
-      i = 0
+      var i = 0
       while (i < lines.length) {
         val line = lines(i)
-        if (isTree(i)) idOf(line).foreach(keptIds += _)
+        if (isTree(i)) treeId(line).foreach(keptIds += _)
         val cached =
-          isTree(i) && line.drop(col(line)).startsWith("InMemoryRelation (")
+          isTree(i) && line.drop(treeCol(line)).startsWith("InMemoryRelation (")
         if (cached) {
           val end = (i + 1 until lines.length)
-            .find(j => !isTree(j) || col(lines(j)) <= col(line))
+            .find(j => !isTree(j) || treeCol(lines(j)) <= treeCol(line))
             .getOrElse(lines.length)
           val sub = (i + 1 until end).map(lines(_))
-          val ids = sub.flatMap(idOf)
-          val key = (sub.map(l => norm(l.drop(col(l)))) ++ ids.flatMap(id =>
+          val ids = sub.flatMap(treeId)
+          val key = (sub.map(l => norm(l.drop(treeCol(l)))) ++ ids.flatMap(id =>
             block.get(id).toSeq.flatMap(_.drop(1).map(lines(_))).map(norm)))
             .mkString("\n")
           printed.get(key) match {
             case Some(where) if sub.nonEmpty =>
-              lines(i + 1) = sub.head.take(col(sub.head)) +
+              lines(i + 1) = sub.head.take(treeCol(sub.head)) +
                 s"[cached plan, printed in full in $where]"
               drop ++= i + 2 until end
               droppedIds ++= ids

@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.types.{IntegerType, StringType}
+import org.apache.spark.unsafe.Platform
 
 import graft.expr.{BytesToFloatVector, CosineSimF32, DotF32,
   EliminateVectorCodecRoundTrip, FloatVectorToBytes, SortedLongIntersect,
@@ -124,13 +126,15 @@ object GraftFunctions {
 /** The engine's one session factory (local + cluster), used by every
   * main, the test suites and the benchmark: AQE with skew handling,
   * right-sized shuffle parallelism, partition-size caps that keep 100-TB
-  * scans within executor memory, and the graft SQL functions and
+  * scans within executor memory, Tungsten pages sized to the memory a
+  * task can hold ([[pageSetting]]), and the graft SQL functions and
   * optimizer rule installed. Callers add only what is theirs (a state
   * store provider) on the returned builder. */
 object GraftSession {
   def builder(master: String = "local[*]",
-      shufflePartitions: Int = 32): SparkSession.Builder =
-    SparkSession.builder()
+      shufflePartitions: Int = 32): SparkSession.Builder = {
+    val conf = new SparkConf() // what spark-submit passed, if anything
+    val b = SparkSession.builder()
       .master(master)
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
@@ -145,4 +149,55 @@ object GraftSession {
       // cache holds (a workflow cycle ~171, the query suite far more),
       // and evicted classes are recompiled on their next use
       .config("spark.sql.codegen.cache.maxEntries", 5000)
+    if (conf.contains(PageSizeKey)) b
+    else b.config(PageSizeKey,
+      pageSetting(master, conf, Runtime.getRuntime.maxMemory))
+  }
+
+  private val PageSizeKey = "spark.buffer.pageSize"
+
+  /** Entries in a task's page table (`TaskMemoryManager.PAGE_TABLE_SIZE`):
+    * a task holding more pages than this fails ("maximum of 8192
+    * pages"), so pages × 8192 must cover all the memory one task can be
+    * granted. */
+  private[graft] val PageTableSize = 8192L
+
+  /** The Tungsten page: a power of two from 1 MB up to Spark's 64 MB cap,
+    * less `header`, the smallest whose 8192-entry page table covers
+    * `tungsten` bytes, the memory one task can be granted. Every
+    * broadcast hash relation, sort buffer and aggregation map holds at
+    * least one page, on the driver and on every executor that
+    * deserializes it; Spark's default (execution pool / cores / 16,
+    * rounded up) gives a 10-row broadcast table a 16 MB page under a
+    * 3 GB heap on 4 cores and 64 MB on a typical executor. */
+  private def pageSizeBytes(tungsten: Long, header: Long): Long = {
+    var page = 1L << 20
+    while (page < (64L << 20) && (page - header) * PageTableSize < tungsten)
+      page <<= 1
+    page - header
+  }
+
+  /** The page the builder sets. A task can be granted the unified
+    * region, (heap − 300 MB) × `spark.memory.fraction`, which execution
+    * may take whole; the heap is `jvmHeap` (this JVM's) under
+    * `local[...]`, where driver and executor are one process, else
+    * `spark.executor.memory`. An on-heap page is a `long[]`, so the page
+    * leaves out the array's header, as Spark's own default does under
+    * G1: the array is then exactly 2^k bytes and packs evenly into G1's
+    * power-of-two heap regions, where 2^k bytes plus a header would pass
+    * the half-region mark and take whole regions of its own (a 1 MB
+    * page under a 3 GB heap: one 2 MB region each). Off heap, the
+    * off-heap size bounds a task and a page needs no header. */
+  private[graft] def pageSetting(master: String, conf: SparkConf,
+      jvmHeap: Long): Long =
+    if (conf.getBoolean("spark.memory.offHeap.enabled", false))
+      pageSizeBytes(conf.getSizeAsBytes("spark.memory.offHeap.size", "0"), 0L)
+    else {
+      val heap =
+        if (master == "local" || master.startsWith("local[")) jvmHeap
+        else conf.getSizeAsBytes("spark.executor.memory", "1g")
+      pageSizeBytes(((heap - (300L << 20)) *
+        conf.getDouble("spark.memory.fraction", 0.6)).toLong,
+        Platform.LONG_ARRAY_OFFSET)
+    }
 }

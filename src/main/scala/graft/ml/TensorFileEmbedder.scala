@@ -177,7 +177,7 @@ final class TensorFileEmbedder(
     *    an attention-less weights file before this release re-embeds
     *    byte-identically after it; re-mapping rows under the same file
     *    would silently move every stored vector's space. */
-  private def tokenRows(text: String): Array[Int] = {
+  private[graft] def tokenRows(text: String): Array[Int] = {
     if (text == null) return Array.emptyIntArray
     val cls = attention.isDefined || stack.isDefined
     subword match {
@@ -342,10 +342,14 @@ final class TensorFileEmbedder(
     * [CLS] ++ tokens; returns the FINAL hidden state of the CLS
     * position (the reference's `model_output[0][:, 0]`,
     * embedding_model_helpers.py:56-57). Every position attends to every
-    * position in every layer (the single-block legacy path only ever
-    * needed the CLS row; a stacked encoder needs all positions' outputs
-    * as the next layer's input). Cost O(L * (n^2 d + n d^2)), n capped
-    * at MaxSeq — row-local, no shuffle. */
+    * position in every layer but the last: a stacked encoder needs all
+    * positions' outputs as the next layer's input, while the last
+    * layer's only consumer is the CLS row, so there only CLS gets a
+    * query, an attention output and an FFN (every position still gets
+    * a key and a value). Each computed element sums in the same order
+    * as the all-positions forward, so the output is bit-identical to it.
+    * Cost O(L * (n^2 d + n d^2)), n capped at MaxSeq — row-local, no
+    * shuffle. */
   private def encodeCls(st: Stack, rows: Array[Int]): Array[Double] = {
     val n = rows.length + 1 // CLS + tokens
     var h: Array[Array[Double]] = new Array[Array[Double]](n)
@@ -374,20 +378,25 @@ final class TensorFileEmbedder(
     val heads = st.heads
     val dh = dModel / heads
     val invSqrtDh = 1.0 / math.sqrt(dh.toDouble)
-    st.layers.foreach { l =>
-      val q = new Array[Array[Double]](n)
+    val last = st.layers.length - 1
+    st.layers.zipWithIndex.foreach { case (l, layer) =>
+      // positions whose output this layer must produce: all of them as
+      // the next layer's input, only CLS in the last layer (its keys
+      // and values still span every position)
+      val outs = if (layer == last) 1 else n
+      val q = new Array[Array[Double]](outs)
       val k = new Array[Array[Double]](n)
       val v = new Array[Array[Double]](n)
       i = 0
       while (i < n) {
-        q(i) = affine(l.wq, l.bq, h(i), dModel, dModel)
+        if (i < outs) q(i) = affine(l.wq, l.bq, h(i), dModel, dModel)
         k(i) = affine(l.wk, l.bk, h(i), dModel, dModel)
         v(i) = affine(l.wv, l.bv, h(i), dModel, dModel)
         i += 1
       }
-      val next = new Array[Array[Double]](n)
+      val next = new Array[Array[Double]](outs)
       i = 0
-      while (i < n) {
+      while (i < outs) {
         val ctx = new Array[Double](dModel)
         var hd = 0
         while (hd < heads) {

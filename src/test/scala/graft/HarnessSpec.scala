@@ -168,6 +168,91 @@ class HarnessSpec extends SparkSuite {
       "Eager execution 1: count" -> other))(1) === other)
   }
 
+  test("plan dumps renumber run-dependent ids: two runs of one plan " +
+      "dump alike, codegen groups stay apart across AQE contexts") {
+    // a cached Filter (its own AQE context) under an aggregation: both
+    // contexts number their codegen stages from 1
+    val run1 = """== Physical Plan ==
+      |AdaptiveSparkPlan (10)
+      |+- == Final Plan ==
+      |   ResultQueryStage (9)
+      |   +- CollectMetrics (8)
+      |      +- * HashAggregate (7)
+      |         +- ShuffleQueryStage (6), Statistics(sizeInBytes=24.0 B)
+      |            +- Exchange (5)
+      |               +- * HashAggregate (4)
+      |                  +- InMemoryTableScan (1)
+      |                        +- InMemoryRelation (2)
+      |                              +- * Filter (3)
+      |
+      |
+      |(1) InMemoryTableScan
+      |Output [1]: [id#41L]
+      |
+      |(2) InMemoryRelation
+      |Arguments: [id#41L], StorageLevel(disk, memory)
+      |
+      |(3) Filter [codegen id : 1]
+      |Input [1]: [id#41L]
+      |Condition : UDF(F$$$Lambda$5440/0x00007ff7d14c43c8@5be86750, id#41L)
+      |
+      |(4) HashAggregate [codegen id : 2]
+      |Input [1]: [id#41L]
+      |
+      |(5) Exchange
+      |Arguments: SinglePartition, ENSURE_REQUIREMENTS, [plan_id=3591]
+      |
+      |(6) ShuffleQueryStage
+      |Output [1]: [count#44L]
+      |Arguments: 3
+      |
+      |(7) HashAggregate [codegen id : 1]
+      |Input [1]: [count#44L]
+      |
+      |(8) CollectMetrics
+      |Arguments: 75a993a2-2b81-4d13-b204-879d573802db, [count(1) AS n#45L]
+      |
+      |(9) ResultQueryStage
+      |Output [1]: [n#45L]
+      |Arguments: 4
+      |""".stripMargin
+    val run2 = run1.replace("#4", "#14")
+      .replace("5440/0x00007ff7d14c43c8@5be86750",
+        "5455/0x00007f14b54c68a8@4bc01cab")
+      .replace("plan_id=3591", "plan_id=3624")
+      .replace("Arguments: 3", "Arguments: 2")
+      .replace("Arguments: 4", "Arguments: 0")
+      .replace("75a993a2-2b81-4d13-b204-879d573802db",
+        "ca000430-5411-4a07-968b-9feeb8665980")
+      .replace("(4) HashAggregate [codegen id : 2]",
+        "(4) HashAggregate [codegen id : 1]")
+      .replace("(7) HashAggregate [codegen id : 1]",
+        "(7) HashAggregate [codegen id : 2]")
+    val stable = Bench.stableIds(run1)
+    assert(Bench.stableIds(run2) === stable)
+    for (line <- Seq("(3) Filter [codegen id : 1]",
+        "(4) HashAggregate [codegen id : 2]",
+        "(7) HashAggregate [codegen id : 3]",
+        "Condition : UDF(F$$$Lambda, id#1L)",
+        "Arguments: SinglePartition, ENSURE_REQUIREMENTS, [plan_id=1]",
+        "Arguments: uuid-1, [count(1) AS n#3L]"))
+      assert(stable.split("\n").contains(line), line)
+    assert(stable.contains("(6) ShuffleQueryStage\nOutput [1]: " +
+      "[count#2L]\nArguments: 1\n"))
+    assert(stable.contains("(9) ResultQueryStage\nOutput [1]: " +
+      "[n#3L]\nArguments: 2\n"))
+    // a parent and child of one raw id are one fused group
+    val fused = Bench.stableIds(run1
+      .replace("ShuffleQueryStage (6), Statistics(sizeInBytes=24.0 B)",
+        "* HashAggregate (6)")
+      .replace("(6) ShuffleQueryStage\nOutput [1]: [count#44L]\n" +
+        "Arguments: 3", "(6) HashAggregate [codegen id : 1]"))
+    assert(fused.contains("(6) HashAggregate [codegen id : 3]"))
+    assert(fused.contains("(7) HashAggregate [codegen id : 3]"))
+    // a plan change still shows
+    assert(Bench.stableIds(run2.replace("count(1)", "count(2)")) !== stable)
+  }
+
   private def sleepyJob(s: SparkSession, ms: Long): Unit = {
     s.sparkContext.parallelize(1 to 2, 2).map { i => Thread.sleep(ms); i }
       .count()
