@@ -129,7 +129,13 @@ object GraftFunctions {
   * scans within executor memory, Tungsten pages sized to the memory a
   * task can hold ([[pageSetting]]), and the graft SQL functions and
   * optimizer rule installed. Callers add only what is theirs (a state
-  * store provider) on the returned builder. */
+  * store provider) on the returned builder.
+  *
+  * The page is derived here, from the launch conf (what spark-submit or
+  * `-D` passed) and this JVM's heap, not from settings added to the
+  * returned builder: a caller that changes `spark.executor.memory`,
+  * `spark.memory.fraction` or `spark.memory.offHeap.*` on it must also
+  * set `spark.buffer.pageSize` there. */
 object GraftSession {
   def builder(master: String = "local[*]",
       shufflePartitions: Int = 32): SparkSession.Builder = {
@@ -166,8 +172,8 @@ object GraftSession {
     * less `header`, the smallest whose 8192-entry page table covers
     * `tungsten` bytes, the memory one task can be granted. Every
     * broadcast hash relation, sort buffer and aggregation map holds at
-    * least one page, on the driver and on every executor that
-    * deserializes it; Spark's default (execution pool / cores / 16,
+    * least one page while it lives, on the driver and on every executor
+    * that deserializes it; Spark's default (execution pool / cores / 16,
     * rounded up) gives a 10-row broadcast table a 16 MB page under a
     * 3 GB heap on 4 cores and 64 MB on a typical executor. */
   private def pageSizeBytes(tungsten: Long, header: Long): Long = {
@@ -187,7 +193,9 @@ object GraftSession {
     * power-of-two heap regions, where 2^k bytes plus a header would pass
     * the half-region mark and take whole regions of its own (a 1 MB
     * page under a 3 GB heap: one 2 MB region each). Off heap, the
-    * off-heap size bounds a task and a page needs no header. */
+    * off-heap size bounds a task and a page needs no header. At the
+    * default fraction that is a 1 MB page up to a ~13.9 GB heap and
+    * 8 MB on a 64 GB executor. */
   private[graft] def pageSetting(master: String, conf: SparkConf,
       jvmHeap: Long): Long =
     if (conf.getBoolean("spark.memory.offHeap.enabled", false))
@@ -195,7 +203,8 @@ object GraftSession {
     else {
       val heap =
         if (master == "local" || master.startsWith("local[")) jvmHeap
-        else conf.getSizeAsBytes("spark.executor.memory", "1g")
+        // a unitless spark.executor.memory is MiB, as Spark reads it
+        else conf.getSizeAsMb("spark.executor.memory", "1g") << 20
       pageSizeBytes(((heap - (300L << 20)) *
         conf.getDouble("spark.memory.fraction", 0.6)).toLong,
         Platform.LONG_ARRAY_OFFSET)

@@ -21,22 +21,6 @@ object TextMetrics {
     * +1e-9. */
   def roundE(c: Column, scale: Int): Column = round(c + lit(1e-9), scale)
 
-  private val UpperAscii = ('A' to 'Z').mkString
-  private val LowerAscii = ('a' to 'z').mkString
-
-  /** `lower(text)` that keeps all-ASCII values (as many UTF-8 bytes as
-    * characters) off ICU: those are lowercased with `translate(A-Z ->
-    * a-z)`, which is what `lower` does to ASCII, and only other values
-    * go through `lower`. The first `lower` call in a JVM initialises
-    * ICU's case mapping (over a second, inside whichever task meets it
-    * first), which an all-ASCII corpus then never pays. Do not turn
-    * `spark.sql.icu.caseMappings.enabled` off instead: that changes
-    * the result for non-ASCII text. */
-  def lowerCase(text: Column): Column =
-    when(octet_length(text) === length(text),
-        translate(text, UpperAscii, LowerAscii))
-      .otherwise(lower(text))
-
   /** Unicode script census classes — the multilingual curation signal
     * (dominant script, mixed-script spam flagging). Character classes
     * use `\x{...}` range syntax, which Java regex (Spark) and RE2
@@ -212,7 +196,7 @@ object TextMetrics {
     val stopArr = array(Seq("the", "be", "to", "of", "and", "that",
       "have", "with").map(lit): _*)
     val stopHits = size(array_intersect(
-      array_distinct(transform(ws, w => lowerCase(w))), stopArr)).cast("long")
+      array_distinct(transform(ws, w => lower(w))), stopArr)).cast("long")
     val wcOk = words >= 50 && words <= 100000
     val mwlOk = mwlNum >= words * 3 && mwlNum <= words * 10
     val hashOk = hashes * 10 <= words
@@ -293,6 +277,9 @@ object TextMetrics {
   def tokenCountEstimate(text: Column): Column =
     size(regexp_extract_all(text, lit("\\w{1,4}|[^\\w\\s]"), lit(0)))
 
+  /** Document fingerprint = md5 of whitespace-normalized lowercase text.
+    * Cross-engine stable (md5 is identical in Spark and DuckDB), used for
+    * exact dedup at any scale (hash-groupBy distributes evenly). */
   /** Fraction of lines that are exact duplicates of an earlier line
     * (Gopher-style repetition filter — boilerplate/nav-menu pages score
     * high). Single-pass UDF per row (line sets are tiny; see the HOF
@@ -331,11 +318,8 @@ object TextMetrics {
       }
     }
 
-  /** Document fingerprint = md5 of whitespace-normalized lowercase text.
-    * Cross-engine stable (md5 is identical in Spark and DuckDB), used for
-    * exact dedup at any scale (hash-groupBy distributes evenly). */
   def fingerprint(text: Column): Column =
-    md5(regexp_replace(lowerCase(trim(text)), "\\s+", " "))
+    md5(regexp_replace(lower(trim(text)), "\\s+", " "))
 
   /** Integer repetition statistics (Rae et al. 2021 §A1.1 repetition
     * filters, oracle-stable counterpart of duplicateLineFraction):

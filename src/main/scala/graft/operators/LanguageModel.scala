@@ -3,8 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextMetrics
-
 /** Perplexity-style quality scoring from a corpus-trained unigram
   * language model — the CCNet-family filter (score documents by how
   * surprising their tokens are under a background LM; very high
@@ -92,7 +90,7 @@ object LanguageModel {
       textCol: String, minCount: Long = 1L)
       : (DataFrame, () => Unit) = {
     val words = docs.select(col(idCol).as("id"),
-      explode(filter(split(TextMetrics.lowerCase(col(textCol)), "\\s+"),
+      explode(filter(split(lower(col(textCol)), "\\s+"),
         w => length(w) > 0)).as("w"))
     val counts = words.groupBy("w")
       .agg(count(lit(1)).as("cnt"))
@@ -180,7 +178,7 @@ object LanguageModel {
       : (DataFrame, () => Unit) = {
     require(backoff > 0.0 && backoff <= 1.0,
       s"backoff factor must be in (0, 1], got $backoff")
-    val ws = filter(split(TextMetrics.lowerCase(col(textCol)), "\\s+"),
+    val ws = filter(split(lower(col(textCol)), "\\s+"),
       w => length(w) > 0)
     val tokenized = docs.select(col(idCol).as("id"), ws.as("ws"))
     val pairs = tokenized
@@ -260,7 +258,7 @@ object LanguageModel {
       : (DataFrame, () => Unit) = {
     require(discount > 0.0 && discount < 1.0,
       s"absolute discount must be in (0, 1), got $discount")
-    val ws = filter(split(TextMetrics.lowerCase(col(textCol)), "\\s+"),
+    val ws = filter(split(lower(col(textCol)), "\\s+"),
       w => length(w) > 0)
     val tokenized = docs.select(col(idCol).as("id"), ws.as("ws"))
     val pairs = tokenized
@@ -339,7 +337,7 @@ object LanguageModel {
     * the identical expression. */
   def pmiCollocations(docs: DataFrame, idCol: String, textCol: String,
       minCount: Long = 5L): DataFrame = {
-    val ws = filter(split(TextMetrics.lowerCase(col(textCol)), "\\s+"),
+    val ws = filter(split(lower(col(textCol)), "\\s+"),
       w => length(w) > 0)
     val tokenized = docs.where(col(textCol).isNotNull)
       .select(col(idCol).as("id"), ws.as("ws"))
@@ -395,7 +393,7 @@ object LanguageModel {
       textCol: String, minCount: Long = 1L, maxModelRows: Int = 2000000)
       : DataFrame = {
     val words = docs.select(
-      explode(filter(split(TextMetrics.lowerCase(col(textCol)), "\\s+"),
+      explode(filter(split(lower(col(textCol)), "\\s+"),
         w => length(w) > 0)).as("w"))
     val counts = words.groupBy("w")
       .agg(count(lit(1)).as("cnt"))
@@ -448,7 +446,7 @@ object LanguageModel {
       maxModelRows: Int = 2000000): DataFrame = {
     require(backoff > 0.0 && backoff <= 1.0,
       s"backoff factor must be in (0, 1], got $backoff")
-    val ws = filter(split(TextMetrics.lowerCase(col(textCol)), "\\s+"),
+    val ws = filter(split(lower(col(textCol)), "\\s+"),
       w => length(w) > 0)
     val tokenized = docs.select(col(idCol).as("id"), ws.as("ws"))
     val bgCounts = tokenized
@@ -545,8 +543,7 @@ object LanguageModel {
   def zipfFit(docs: DataFrame, textCol: String,
       minCount: Long = 1L): DataFrame = {
     val census = docs
-      .select(explode(filter(
-        split(TextMetrics.lowerCase(trim(col(textCol))), "\\s+"),
+      .select(explode(filter(split(lower(trim(col(textCol))), "\\s+"),
         w => length(w) > 0)).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
       .where(col("cnt") >= minCount)

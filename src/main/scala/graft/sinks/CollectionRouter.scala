@@ -3,8 +3,6 @@ package graft.sinks
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.TextMetrics
-
 /** Vector-collection routing (reference S19:
   * modules/qdrant_handler.py:16-65): each (lang, model) pair maps to a
   * named collection — `collection_welearn_mul_<model>` when the model is
@@ -18,12 +16,22 @@ import graft.functions.TextMetrics
   */
 object CollectionRouter {
 
+  private val Upper = ('A' to 'Z').mkString
+  private val LowerAscii = ('a' to 'z').mkString
+
   /** Routing expression. `multilingualModels` mirrors the reference's
-    * model-name convention (models with "mul" in their lang tag). */
+    * model-name convention (models with "mul" in their lang tag).
+    *
+    * An all-ASCII name (as many UTF-8 bytes as characters) is lowercased
+    * with `translate(A-Z -> a-z)`, which is what `lower` does to ASCII;
+    * only other names go through `lower`, whose first call in a JVM
+    * initialises the ICU case mapping (over a second). */
   def collectionFor(lang: Column, modelName: Column,
       knownLangs: Seq[String] = Seq("en", "fr", "es", "de", "it", "pt"),
       multilingualMarker: String = "mul"): Column = {
-    val lowered = TextMetrics.lowerCase(modelName)
+    val lowered = when(octet_length(modelName) === length(modelName),
+        translate(modelName, Upper, LowerAscii))
+      .otherwise(lower(modelName))
     val sanitizedModel = regexp_replace(lowered, "[^a-z0-9]+", "_")
     when(modelName.contains(multilingualMarker),
         concat(lit("collection_welearn_mul_"), sanitizedModel))

@@ -40,20 +40,24 @@ class GraftSessionSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     // the executor's heap bounds a cluster task, this JVM's a local one
     assert(pageSetting("spark://h:7077", exec64, 3L << 30) === 8 * MB - Header)
     assert(pageSetting("local[4]", exec64, 3L << 30) === MB - Header)
+    // Spark reads a unitless spark.executor.memory as MiB
+    val unitless = new SparkConf(false).set("spark.executor.memory", "65536")
+    assert(pageSetting("spark://h:7077", unitless, 0L) === 8 * MB - Header)
     // off heap: the off-heap size bounds a task, a page has no header
     val offHeap = new SparkConf(false)
       .set("spark.memory.offHeap.enabled", "true")
       .set("spark.memory.offHeap.size", "100g")
     assert(pageSetting("local[4]", offHeap, 3L << 30) === 16 * MB)
     for (heapMb <- Seq(512L, 1024, 3072, 8192, 13000, 14000, 65536, 262144,
-        1L << 20, 4L << 20); fraction <- Seq(0.3, 0.6, 0.9)) {
+        1L << 20, 4L << 20); fraction <- Seq(0.3, 0.6, 0.9);
+        unit <- Seq("m", "")) {
       val conf = new SparkConf(false)
-        .set("spark.executor.memory", s"${heapMb}m")
+        .set("spark.executor.memory", s"$heapMb$unit")
         .set("spark.memory.fraction", fraction.toString)
       val unified = ((heapMb - 300) * MB * fraction).toLong
       val page = pageSetting("yarn", conf, 0L)
       val whole = page + Header
-      val at = s"heap $heapMb MB × $fraction: page $page"
+      val at = s"heap $heapMb$unit × $fraction: page $page"
       assert(java.lang.Long.bitCount(whole) === 1, s"$at + header: 2^k")
       assert(whole >= MB && whole <= 64 * MB, s"$at: within [1, 64] MB")
       assert(whole === 64 * MB || page * PageTableSize >= unified,

@@ -114,27 +114,6 @@ class TextFunctionsSpec extends SparkSuite {
     assert(bad.count() === 0)
   }
 
-  test("lowerCase equals lower on ASCII, non-ASCII and null text " +
-      "(property)") {
-    val s = initSpark()
-    import s.implicits._
-    // ASCII strings take translate, the rest lower: both must agree
-    // with lower everywhere, the Kelvin sign, dotted capital I and a
-    // German sharp s included
-    val chars = Gen.oneOf(Gen.asciiChar, Gen.oneOf("ÉèİßẞΣЖ\u212A日 \n"))
-    val samples = Gen.listOfN(200, Gen.listOf(chars).map(_.mkString))
-      .apply(Gen.Parameters.default, org.scalacheck.rng.Seed(7L)).get
-    val df = (samples :+ null).map(Tuple1(_)).toDF("text")
-    val lowered = df.select(col("text"),
-      TextMetrics.lowerCase(col("text")).as("fast"),
-      lower(col("text")).as("icu"))
-    assert(lowered.where(!col("fast").eqNullSafe(col("icu"))).count() === 0)
-    assert(lowered.where(col("text").isNull && col("fast").isNotNull)
-      .count() === 0)
-    assert(one(TextMetrics.lowerCase(col("text")), "The QUICK Fox") ===
-      "the quick fox")
-  }
-
   test("stripHtml removes tags and unescapes entities") {
     assert(one(TextClean.stripHtml(col("text")),
       "<p>Hello <b>bold</b> &amp; <script>x=1;</script>world</p>")
