@@ -81,16 +81,11 @@ object Curation {
     * rounds) and is therefore a deliberate opt-in over `curate`, not a
     * silent default.
     *
-    * `base` is PERSISTED (not checkpointed) across dedupNearDup's
-    * three reads (pair generation, component seed, survivor
-    * semi-join); each invocation releases the previous call's cache
-    * (the LanguageModel/SequencePack fire-and-forget discipline), so a
-    * long-lived session holds at most one corpus copy. persist is the
-    * only legal backing for a deferred release: the RETURNED frame
-    * still reads `base` lazily, and unpersisting a cache merely forces
-    * a recompute, where releasing a localCheckpoint (whose lineage is
-    * GONE) would crash a still-live previous result with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND. */
+    * `base` is pinned through a [[graft.operators.ReleaseSlot]] (a
+    * persist, never a checkpoint: the RETURNED frame still reads it
+    * lazily) across dedupNearDup's three reads (pair generation,
+    * component seed, survivor semi-join), so a long-lived session
+    * holds at most one corpus copy. */
   def curateWithNearDup(documents: DataFrame, idCol: String,
       textCol: String, stratumCol: String, rates: Map[String, Double],
       nearDupThreshold: Double = 0.8, shingleN: Int = 3,
@@ -98,12 +93,7 @@ object Curation {
       trainPct: Double = 0.8, valPct: Double = 0.1): DataFrame = {
     val base = qualityGated(documents, textCol)
       .transform(df => Dedup.dedupKeepFirst(df, idCol, textCol))
-    // release-BEFORE-persist (the pageRankFixed ordering): on identical
-    // lineage the cache manager dedupes persist() into the previous
-    // entry, and releasing it afterwards would drop THIS call's cache
-    lastNearDupRelease.swap(base.sparkSession,
-      () => { base.unpersist(); () })
-    base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    lastNearDupRelease.pins(base.sparkSession).pin(base)
     Dedup.dedupNearDup(base, idCol, textCol,
         n = shingleN, threshold = nearDupThreshold,
         maxDocFreq = maxDocFreq, maxRounds = maxRounds)

@@ -2,7 +2,6 @@ package graft.jobs
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.expr.VectorCodec
 import graft.ledger.Ledger
@@ -46,13 +45,10 @@ object Pipeline {
   private val keywordsSlot = ReleaseSlot()
   private val syncSlot = ReleaseSlot()
 
-  /** Persist `frame` for this call of a stage, releasing the frame the
-    * stage's previous call persisted (swap first: the ReleaseSlot
-    * ordering contract). */
-  private def shared(slot: ReleaseSlot, frame: DataFrame): DataFrame = {
-    slot.swap(frame.sparkSession, () => { frame.unpersist(); () })
-    frame.persist(StorageLevel.MEMORY_AND_DISK)
-  }
+  /** Pin `frame` for this call of a stage, releasing the frame the
+    * stage's previous call pinned. */
+  private def shared(slot: ReleaseSlot, frame: DataFrame): DataFrame =
+    slot.pins(frame.sparkSession).pin(frame)
 
   /** Latest state per document among `steps`, with its order as
     * [[PrevOrder]]. */

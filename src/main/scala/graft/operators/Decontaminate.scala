@@ -75,40 +75,31 @@ object Decontaminate {
     * scale linearly, ~1.2 MB per million items at fpp 0.01; an
     * UNDERestimate silently degrades fpp toward 1 and the prefilter
     * stops helping — still correct, just slow). The test-side shingle
-    * frame is persisted across its two reads (filter build + join);
-    * each invocation releases the previous call's cache (the
-    * fire-and-forget discipline of LanguageModel/SequencePack). */
+    * frame is pinned across its two reads (filter build + join), and
+    * it and the broadcast filter stay until the next invocation. */
   def contaminationPairsBloom(train: DataFrame, test: DataFrame,
       idCol: String, textCol: String, n: Int = 13, minShared: Long = 1L,
       expectedTestShingles: Long = 1L << 20,
       fpp: Double = 0.01): DataFrame = {
     val te = Dedup.shingles(test, idCol, textCol, n)
       .withColumnRenamed("id", "test_id")
-    // release-BEFORE-persist (the pageRankFixed ordering). The hook
-    // swap happens here, before this call's persist, NOT at the end:
-    // the previous bc broadcast is droppable the same early way (a
-    // late reader re-fetches or recomputes, never wrong).
-    val bloom = {
-      lastBloomRelease.releasePrevious(te.sparkSession)
-      te.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      te.stat.bloomFilter("shingle", expectedTestShingles, fpp)
-    }
+    val pins = lastBloomRelease.pins(te.sparkSession)
+    val bloom = pins.pin(te)
+      .stat.bloomFilter("shingle", expectedTestShingles, fpp)
     val sc = train.sparkSession.sparkContext
     val bc = sc.broadcast(bloom)
+    // unpersist (not destroy): a still-unevaluated previous result can
+    // re-fetch an unpersisted broadcast from the driver on demand,
+    // where destroy() would fail its tasks — recompute, never wrong
+    pins.hold(() => bc.unpersist())
     val mightContain = udf((s: String) => s != null && bc.value.mightContain(s))
     val tr = Dedup.shingles(train, idCol, textCol, n)
       .withColumnRenamed("id", "train_id")
       .where(mightContain(col("shingle")))
-    val out = te.join(tr, "shingle")
+    te.join(tr, "shingle")
       .groupBy("test_id", "train_id")
       .agg(count(lit(1)).as("n_shared"))
       .where(col("n_shared") >= minShared)
-    // unpersist (not destroy): a still-unevaluated previous result can
-    // re-fetch an unpersisted broadcast from the driver on demand,
-    // where destroy() would fail its tasks — recompute, never wrong
-    lastBloomRelease.set(te.sparkSession,
-      () => { te.unpersist(); bc.unpersist(); () })
-    out
   }
 
   private val lastBloomRelease = ReleaseSlot()

@@ -221,7 +221,7 @@ object Dedup {
       df.select(col(idCol).as("id"), xxhash64(col(textCol)).as("dg")),
       slim, "id", Seq("shs"),
       sets => jaccardPairsOverSets(df, sets, idType, threshold),
-      lit(1.0), "jaccard", pairsSlot)
+      lit(1.0), "jaccard", pairsSlot.pins(df.sparkSession))
   }
 
   /** Jaccard's codomain is (0, 1]: outside it the score filter is
@@ -320,17 +320,16 @@ object Dedup {
         shingleHashesUdf(n)(col(textCol)).as("shs"))
       .where(size(col("shs")) > 0)
       .withColumn("sz", size(col("shs")))
-    // persisted: three plan branches read it (prefix explode + both
+    // pinned: three plan branches read it (prefix explode + both
     // verify-join sides) — without the persist the shingling UDF runs
-    // over the full corpus three times. Swapped before the persist
-    // (the ReleaseSlot ordering contract).
-    prefixSetsSlot.swap(df.sparkSession, () => { sets.unpersist(); () })
-    sets.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // over the full corpus three times
+    val pins = prefixSlot.pins(df.sparkSession)
+    pins.pin(sets)
     adaptiveSelfPairs(
       sets.select(col("id"), xxhash64(col("shs")).as("dg")),
       sets, "id", Seq("shs"),
       s => prefixPairsOverSets(df, s, idType, threshold),
-      lit(1.0), "jaccard", prefixSlot)
+      lit(1.0), "jaccard", pins)
   }
 
   /** The PPJoin prefix -> candidate -> verify pipeline over a prepared
@@ -399,49 +398,7 @@ object Dedup {
       }, out)
   }
 
-  /** jaccardPairsPrefix plus an explicit release hook for its caches
-    * (the shingle-set frame, and the census-routed frames when the
-    * corpus has duplicates). Call the returned thunk AFTER the last
-    * action on the returned DataFrame — calling it earlier just makes
-    * the remaining branches recompute (correctness unaffected). The
-    * thunk frees what this session's latest invocation pinned; callers
-    * of the bare jaccardPairsPrefix discard it, and the module slots
-    * free each previous invocation's caches on the next call. */
-  def jaccardPairsPrefixScoped(df: DataFrame, idCol: String,
-      textCol: String, n: Int, threshold: Double)
-      : (DataFrame, () => Unit) = {
-    val out = jaccardPairsPrefix(df, idCol, textCol, n, threshold)
-    val sess = df.sparkSession
-    (out, () => {
-      prefixSlot.releasePrevious(sess); prefixSetsSlot.releasePrevious(sess)
-    })
-  }
-
   private val prefixSlot = ReleaseSlot()
-  private val prefixSetsSlot = ReleaseSlot()
-
-  /** The frames one adaptive invocation pins, released together
-    * through `slot`. Construction runs the previous invocation's hook
-    * (the ReleaseSlot ordering contract: before this invocation
-    * persists anything), and every pin re-registers the hook right
-    * after its persist, so an action that throws later cannot orphan
-    * a cache for the session lifetime. */
-  private[graft] final class Pins(sess: org.apache.spark.sql.SparkSession,
-      slot: ReleaseSlot) {
-    slot.releasePrevious(sess)
-    private var frames = List.empty[DataFrame]
-    private def register(): Unit = {
-      val fs = frames
-      slot.set(sess, () => { fs.foreach(_.unpersist(false)); () })
-    }
-    def pin(df: DataFrame): DataFrame = {
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      frames ::= df; register(); df
-    }
-    def unpin(df: DataFrame): Unit = {
-      df.unpersist(false); frames = frames.filterNot(_ eq df); register()
-    }
-  }
 
   /** How [[censusRoute]] routes a corpus. */
   private[graft] sealed trait Route
@@ -499,7 +456,8 @@ object Dedup {
     * `split(tier)` builds the frame the route splits into hot and cold;
     * it runs only when the route contracts. */
   private[graft] def censusRoute(census: DataFrame, idCol: String,
-      gated: Boolean, pins: Pins)(split: Tier => DataFrame): Route = {
+      gated: Boolean, pins: ReleaseSlot.Pins)(
+      split: Tier => DataFrame): Route = {
     val cen = pins.pin(census)
     val stats = cen.groupBy("dg").agg(count(lit(1)).as("c"))
       .agg(sum(col("c")).as("n"),
@@ -580,10 +538,9 @@ object Dedup {
       slim: DataFrame, idCol: String,
       keyCols: Seq[String],
       core: DataFrame => DataFrame, intraScore: Column,
-      scoreName: String, slot: ReleaseSlot): DataFrame = {
+      scoreName: String, pins: ReleaseSlot.Pins): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val idType = slim.schema(slim.schema.fieldIndex(idCol)).dataType
-    val pins = new Pins(slim.sparkSession, slot)
     val route = censusRoute(census, idCol, gated = true, pins) { tier =>
       if (tier == InSet || slim.storageLevel != StorageLevel.NONE) slim
       else pins.pin(slim)
@@ -662,7 +619,7 @@ object Dedup {
   }
 
   /** Release slots of the adaptive pair emitters (one in-flight
-    * invocation per operator per session — the ReleaseSlot concurrency
+    * invocation per operator per session — the ReleaseSlot session
     * contract). */
   private val pairsSlot = ReleaseSlot()
   private val simhashPairsSlot = ReleaseSlot()
@@ -782,7 +739,7 @@ object Dedup {
   def jaccardSpanningEdges(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double, maxDocFreq: Int): DataFrame = {
     val sess = df.sparkSession
-    val pins = new Pins(sess, spanningSlot)
+    val pins = spanningSlot.pins(sess)
     val route = censusRoute(df.select(col(idCol).as("id"),
         xxhash64(col(textCol)).as("dg")), "id", gated = false, pins) { _ =>
       // per-doc capped shingle set (input hashes are sorted-distinct per
@@ -955,14 +912,13 @@ object Dedup {
     // The ids gate now checks uniqueness over exactly the slim rows
     // the re-expansion lifts (ids dropped with empty signatures never
     // band, so they cannot forge a self-pair).
-    lastFastLshSigRelease.swap(sig.sparkSession,
-      () => { sig.unpersist(); () })
-    sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pins = lshPairsSlot.pins(sig.sparkSession)
+    pins.pin(sig)
     adaptiveSelfPairs(
       sig.select(col("id"), xxhash64(col("sig")).as("dg")),
       sig, "id", Seq("sig"),
       s => minhashLshPairsOverSigs(s, numHashes, bands),
-      lit(1.0), "est_jaccard", lshPairsSlot)
+      lit(1.0), "est_jaccard", pins)
   }
 
   /** The band bucket-join + matching-fraction verify over a prepared
@@ -1117,14 +1073,13 @@ object Dedup {
     // xxhash64(sigarr) — see minhashLshPairs (the same round-15 A/B;
     // here the signing pass is the md5 portable signer, the most
     // expensive scan in the query, so sharing it matters more)
-    lastPortableLshSigRelease.swap(slim.sparkSession,
-      () => { slim.unpersist(); () })
-    slim.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pins = portableLshPairsSlot.pins(slim.sparkSession)
+    pins.pin(slim)
     adaptiveSelfPairs(
       slim.select(col("id"), xxhash64(col("sigarr")).as("dg")),
       slim, "id", Seq("sigarr"),
       s => portableLshPairsOverSigArrays(s, bands),
-      lit(1.0), "est_jaccard", portableLshPairsSlot)
+      lit(1.0), "est_jaccard", pins)
   }
 
   /** The portable banding + candidate + matching-fraction verify over
@@ -1169,14 +1124,6 @@ object Dedup {
       .distinct()
   }
 
-  // pre-routing signature caches (the census rides these; released
-  // when the next invocation of the owning emitter swaps them out).
-  // The former lastPortableLshRelease/lastFastLshRelease slots died
-  // with the internal signature persists the round-18 inline-verify
-  // rewrite removed (ADVICE r18).
-  private val lastPortableLshSigRelease = ReleaseSlot()
-  private val lastFastLshSigRelease = ReleaseSlot()
-
   /** INCREMENTAL near-dup — [[minhashLshPairsPortable]]'s production
     * shape at 100 TB, the MinHash analogue of [[dedupIncremental]]: a
     * NEW batch is LSH-checked against an already-indexed corpus
@@ -1212,12 +1159,9 @@ object Dedup {
         s => s.getField("minhash").cast("string")), ",").as("bkey"))
     val sigB = minhashSignaturesPortable(batch, idCol, textCol, n)
     val sigS = minhashSignaturesPortable(snapshot, idCol, textCol, n)
-    // release previous call's caches BEFORE persisting (cache-manager
-    // dedupe on identical lineage — the Graph.pageRankFixed ordering)
-    lastIncrementalLshRelease.swap(sigB.sparkSession,
-      () => { sigB.unpersist(); sigS.unpersist(); () })
-    sigB.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigS.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pins = lastIncrementalLshRelease.pins(sigB.sparkSession)
+    pins.pin(sigB)
+    pins.pin(sigS)
     val cand = broadcast(bandedOf(sigB)).as("nb")
       .join(bandedOf(sigS).as("os"), Seq("band", "bkey"))
       .select(col("nb.id").as("id_new"), col("os.id").as("id_old"))
@@ -1368,7 +1312,7 @@ object Dedup {
       df.select(col(idCol).as("id"), xxhash64(col(textCol)).as("dg")),
       sigd, "id", Seq("vec"),
       s => portableEmbPairsOverSigs(s, threshold),
-      lit(1.0), "cos", portableEmbSlot)
+      lit(1.0), "cos", portableEmbSlot.pins(df.sparkSession))
   }
 
   /** The LSH-bucketed candidate + exact-integer-cosine verify over a
@@ -1563,7 +1507,7 @@ object Dedup {
       df.select(col(idCol).as("id"), xxhash64(col(textCol)).as("dg")),
       sh, "id", Seq("simhash"),
       sigs => simhashPairsOverSigs(sigs, maxHamming),
-      lit(0), "hamming", simhashPairsSlot)
+      lit(0), "hamming", simhashPairsSlot.pins(df.sparkSession))
   }
 
   /** The band-blocked candidate + popcount-verify pipeline over a

@@ -164,7 +164,7 @@ object EditDistanceJoin {
         xxhash64(col(strCol)).as("dg")),
       slim, "id", Seq("s"),
       sets => pairsAmong(sets, tau),
-      lit(0), "dist", selfJoinSlot)
+      lit(0), "dist", selfJoinSlot.pins(df.sparkSession))
   }
 
   /** The PassJoin pipeline proper, over a (id, s) frame assumed

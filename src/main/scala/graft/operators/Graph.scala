@@ -101,14 +101,7 @@ object Graph {
     // exactly what every iteration's join wants.
     val edgesDeg = simple.withColumn("__outdeg", count(lit(1)).over(
       org.apache.spark.sql.expressions.Window.partitionBy(col("__src"))))
-    // Release the PREVIOUS call's cache BEFORE persisting this one:
-    // on identical lineage the cache manager dedupes persist() into
-    // the existing entry, so releasing prev AFTER registering would
-    // silently drop THIS call's cache too (ReleaseSlot contract:
-    // recomputable persist only, so worst case is a slow recompute).
-    lastRelease.swap(edgesDeg.sparkSession,
-      () => { edgesDeg.unpersist(); () })
-    edgesDeg.persist()
+    lastRelease.pins(edgesDeg.sparkSession).pin(edgesDeg)
 
     var ranks = edgesDeg.select(col("__src").as("node_id")).distinct()
       .withColumn("rank_fixed", lit(init))

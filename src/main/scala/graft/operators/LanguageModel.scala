@@ -21,46 +21,14 @@ import org.apache.spark.sql.functions._
   */
 object LanguageModel {
 
-  /** Per-document mean unigram surprisal in bits:
-    * avg(-log2(count(w) / totalTokens)) over the document's tokens,
-    * under the unigram distribution of `docs` itself. Deterministic;
-    * 4-dp rounded for the cross-engine oracle.
-    *
-    * `minCount` drops sub-threshold vocabulary from BOTH the model and
-    * the scored tokens (singleton-noise smoothing, and the cap that
-    * keeps a 100 TB corpus's vocab table join-able; the total is
-    * computed over the capped vocab so probabilities stay a
-    * distribution over it). No broadcast directive on the join: the
-    * vocab side is usually dimension-sized and AQE will broadcast it
-    * from runtime stats, but when it outgrows the threshold AQE can
-    * fall back to a shuffled join — a forced hint would OOM instead.
-    * Training materializes once (persisted vocab + one driver-side
-    * scalar for the total — bounded model state, centroid-collect
-    * precedent); call the returned release hook from the Scoped
-    * variant after the last action in long-lived sessions. */
-  /** Fire-and-forget wrappers release the PREVIOUS invocation's
-    * persisted count tables (the Scoped variants are caller-managed
-    * instead): without this, every call pinned MEMORY_AND_DISK tables
-    * for the JVM's lifetime — in a bench/verify suite that is dozens of
-    * leaked caches crowding out other queries' memory.
-    *
-    * ORDER MATTERS (the DSIR lesson, round 10): the previous tables
-    * must release BEFORE the new invocation persists. Spark's cache
-    * manager keys on the analyzed plan, so a repeated identical call
-    * would first piggyback on the previous call's cache entry and
-    * then — releasing AFTER — nuke the very blocks it just started
-    * using, alternating cache hits with full recomputes
-    * ("Asked to cache already cached data" in the logs, rep spread
-    * 1.5-2.8 on q75/q77/q103). Released first, the new persist
-    * registers fresh and every rep runs steady-state. Unpersisting a
-    * table another in-flight query still references only forces a
-    * recompute, never a wrong result. */
+  /** The scorers' count tables, pinned until the session's next scorer
+    * call. */
   private val lastRelease = ReleaseSlot()
 
-  /** Release the previous fire-and-forget invocation's tables; call
-    * BEFORE building (and persisting) the new ones. */
-  private def releasePrevious(docs: DataFrame): Unit =
-    lastRelease.releasePrevious(docs.sparkSession)
+  /** Lower-cased whitespace tokens of `textCol`, empty tokens dropped:
+    * the one tokenizer of the scorers, PMI and the fast tiers. */
+  private def wordsOf(textCol: String): Column =
+    filter(split(lower(col(textCol)), "\\s+"), w => length(w) > 0)
 
   /** Degenerate-corpus result: the scorers' shared empty frame (id
     * type follows the input; ONE definition so the three relational
@@ -77,25 +45,30 @@ object LanguageModel {
         org.apache.spark.sql.types.StructField(countCol,
           org.apache.spark.sql.types.LongType, nullable = false))))
 
+  /** Per-document mean unigram surprisal in bits:
+    * avg(-log2(count(w) / totalTokens)) over the document's tokens,
+    * under the unigram distribution of `docs` itself. Deterministic;
+    * 4-dp rounded for the cross-engine oracle.
+    *
+    * `minCount` drops sub-threshold vocabulary from BOTH the model and
+    * the scored tokens (singleton-noise smoothing, and the cap that
+    * keeps a 100 TB corpus's vocab table join-able; the total is
+    * computed over the capped vocab so probabilities stay a
+    * distribution over it). No broadcast directive on the join: the
+    * vocab side is usually dimension-sized and AQE will broadcast it
+    * from runtime stats, but when it outgrows the threshold AQE can
+    * fall back to a shuffled join — a forced hint would OOM instead.
+    * Training materializes once (pinned vocab + one driver-side
+    * scalar for the total — bounded model state, centroid-collect
+    * precedent). */
   def unigramSurprisal(docs: DataFrame, idCol: String,
       textCol: String, minCount: Long = 1L): DataFrame = {
-    releasePrevious(docs)
-    val (df, release) =
-      unigramSurprisalScoped(docs, idCol, textCol, minCount)
-    lastRelease.set(docs.sparkSession, release)
-    df
-  }
-
-  def unigramSurprisalScoped(docs: DataFrame, idCol: String,
-      textCol: String, minCount: Long = 1L)
-      : (DataFrame, () => Unit) = {
+    val pins = lastRelease.pins(docs.sparkSession)
     val words = docs.select(col(idCol).as("id"),
-      explode(filter(split(lower(col(textCol)), "\\s+"),
-        w => length(w) > 0)).as("w"))
-    val counts = words.groupBy("w")
+      explode(wordsOf(textCol)).as("w"))
+    val counts = pins.pin(words.groupBy("w")
       .agg(count(lit(1)).as("cnt"))
-      .where(col("cnt") >= minCount)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(col("cnt") >= minCount))
     // one action trains the LM: without it, total would re-tokenize
     // the whole corpus a second time (and the join a third).
     // sum() over zero rows is NULL (empty corpus, or minCount filtered
@@ -103,18 +76,34 @@ object LanguageModel {
     // below rather than NPE on getLong
     val totalRow = counts.agg(sum(col("cnt"))).head()
     val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
-    if (total == 0L)
-      return (emptyScores(docs, idCol, "n_tokens"),
-        () => { counts.unpersist(); () })
-    val scored = words
+    if (total == 0L) return emptyScores(docs, idCol, "n_tokens")
+    words
       .join(counts, "w")
       .withColumn("surprisal",
         -log2(col("cnt").cast("double") / lit(total.toDouble)))
       .groupBy("id")
       .agg(round(avg(col("surprisal")) + 1e-9, 4).as("avg_surprisal"),
         count(lit(1)).as("n_tokens"))
-    (scored, () => { counts.unpersist(); () })
   }
+
+  /** Tokens -> space-joined consecutive pairs ("w1 w2"); tokens are
+    * whitespace-split so the single space is an unambiguous separator.
+    * Spark hands an array argument over as a `List` (linear `length`
+    * and `apply`), so it is copied to an array once: O(n), not O(n²). */
+  private[graft] def bigrams(tokens: Seq[String]): Array[String] =
+    if (tokens == null) Array.empty[String]
+    else {
+      val ws = tokens.toArray
+      val out = new Array[String](math.max(ws.length - 1, 0))
+      var i = 0
+      while (i < out.length) {
+        out(i) = ws(i) + " " + ws(i + 1)
+        i += 1
+      }
+      out
+    }
+
+  private val bigramsUdf = udf(bigrams _)
 
   /** Per-document mean BIGRAM surprisal with stupid backoff (Brants et
     * al. 2007, "Large Language Models in Machine Translation" — the
@@ -147,60 +136,27 @@ object LanguageModel {
   def bigramSurprisalBackoff(docs: DataFrame, idCol: String,
       textCol: String, minCount: Long = 2L, backoff: Double = 0.4)
       : DataFrame = {
-    releasePrevious(docs)
-    val (df, release) = bigramSurprisalBackoffScoped(docs, idCol,
-      textCol, minCount, backoff)
-    lastRelease.set(docs.sparkSession, release)
-    df
-  }
-
-  /** Tokens -> space-joined consecutive pairs ("w1 w2"); tokens are
-    * whitespace-split so the single space is an unambiguous separator.
-    * Spark hands an array argument over as a `List` (linear `length`
-    * and `apply`), so it is copied to an array once: O(n), not O(n²). */
-  private[graft] def bigrams(tokens: Seq[String]): Array[String] =
-    if (tokens == null) Array.empty[String]
-    else {
-      val ws = tokens.toArray
-      val out = new Array[String](math.max(ws.length - 1, 0))
-      var i = 0
-      while (i < out.length) {
-        out(i) = ws(i) + " " + ws(i + 1)
-        i += 1
-      }
-      out
-    }
-
-  private val bigramsUdf = udf(bigrams _)
-
-  def bigramSurprisalBackoffScoped(docs: DataFrame, idCol: String,
-      textCol: String, minCount: Long = 2L, backoff: Double = 0.4)
-      : (DataFrame, () => Unit) = {
     require(backoff > 0.0 && backoff <= 1.0,
       s"backoff factor must be in (0, 1], got $backoff")
-    val ws = filter(split(lower(col(textCol)), "\\s+"),
-      w => length(w) > 0)
-    val tokenized = docs.select(col(idCol).as("id"), ws.as("ws"))
+    val pins = lastRelease.pins(docs.sparkSession)
+    val tokenized = docs.select(col(idCol).as("id"),
+      wordsOf(textCol).as("ws"))
     val pairs = tokenized
       .select(col("id"), explode(bigramsUdf(col("ws"))).as("bg"))
     val tokens = tokenized
       .select(col("id"), explode(col("ws")).as("w"))
-    val bgCounts = pairs.groupBy("bg")
+    val bgCounts = pins.pin(pairs.groupBy("bg")
       .agg(count(lit(1)).as("c2"))
-      .where(col("c2") >= minCount)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val uniCounts = tokens.groupBy("w")
-      .agg(count(lit(1)).as("c1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .where(col("c2") >= minCount))
+    val uniCounts = pins.pin(tokens.groupBy("w")
+      .agg(count(lit(1)).as("c1")))
     // one action trains both tables; null sum = empty/degenerate corpus
     val totalRow = uniCounts.agg(sum(col("c1"))).head()
     val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
-    val release = () => { bgCounts.unpersist(); uniCounts.unpersist(); () }
-    if (total == 0L)
-      return (emptyScores(docs, idCol, "n_transitions"), release)
+    if (total == 0L) return emptyScores(docs, idCol, "n_transitions")
     val w1 = split(col("bg"), " ").getItem(0)
     val w2 = split(col("bg"), " ").getItem(1)
-    val scored = pairs
+    pairs
       .withColumn("w1", w1).withColumn("w2", w2)
       .join(bgCounts, Seq("bg"), "left")
       .join(uniCounts.select(col("w").as("w1"), col("c1").as("c1_w1")),
@@ -215,7 +171,6 @@ object LanguageModel {
       .groupBy("id")
       .agg(round(avg(col("s")) + 1e-9, 4).as("avg_surprisal"),
         count(lit(1)).as("n_transitions"))
-    (scored, release)
   }
 
   /** Per-document mean bigram surprisal under INTERPOLATED KNESER-NEY
@@ -239,48 +194,35 @@ object LanguageModel {
     * no kept continuation) floors at D/total — the OOV floor,
     * replayed by the oracle.
     *
-    * Same plan shape as [[bigramSurprisalBackoffScoped]]: row-local
+    * Same plan shape as [[bigramSurprisalBackoff]]: row-local
     * bigram generation, three vocab-bounded count shuffles (bigram
     * table + its two marginals), AQE-chosen scoring joins, one
     * training action. */
   def kneserNeySurprisal(docs: DataFrame, idCol: String,
       textCol: String, minCount: Long = 2L, discount: Double = 0.75)
       : DataFrame = {
-    releasePrevious(docs)
-    val (df, release) = kneserNeySurprisalScoped(docs, idCol, textCol,
-      minCount, discount)
-    lastRelease.set(docs.sparkSession, release)
-    df
-  }
-
-  def kneserNeySurprisalScoped(docs: DataFrame, idCol: String,
-      textCol: String, minCount: Long = 2L, discount: Double = 0.75)
-      : (DataFrame, () => Unit) = {
     require(discount > 0.0 && discount < 1.0,
       s"absolute discount must be in (0, 1), got $discount")
-    val ws = filter(split(lower(col(textCol)), "\\s+"),
-      w => length(w) > 0)
-    val tokenized = docs.select(col(idCol).as("id"), ws.as("ws"))
+    val pins = lastRelease.pins(docs.sparkSession)
+    val tokenized = docs.select(col(idCol).as("id"),
+      wordsOf(textCol).as("ws"))
     val pairs = tokenized
       .select(col("id"), explode(bigramsUdf(col("ws"))).as("bg"))
-    val bgCounts = pairs.groupBy("bg")
+    val bgCounts = pins.pin(pairs.groupBy("bg")
       .agg(count(lit(1)).as("c2"))
       .where(col("c2") >= minCount)
       .withColumn("w1", split(col("bg"), " ").getItem(0))
-      .withColumn("w2", split(col("bg"), " ").getItem(1))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val uniCounts = tokenized
+      .withColumn("w2", split(col("bg"), " ").getItem(1)))
+    val uniCounts = pins.pin(tokenized
       .select(explode(col("ws")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c1"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val release = () => { bgCounts.unpersist(); uniCounts.unpersist(); () }
+      .groupBy("w").agg(count(lit(1)).as("c1")))
     // TWO training actions materialize both tables and yield the two
     // driver scalars (kept-bigram count B, token total)
     val b = bgCounts.count()
     val totalRow = uniCounts.agg(sum(col("c1"))).head()
     val total = if (totalRow.isNullAt(0)) 0L else totalRow.getLong(0)
     if (total == 0L || b == 0L)
-      return (emptyScores(docs, idCol, "n_transitions"), release)
+      return emptyScores(docs, idCol, "n_transitions")
     // marginals of the kept table: fan-out (distinct continuations of
     // w1) and continuation count (distinct predecessors of w2) — rows
     // of bgCounts are distinct bigrams, so count(*) IS the N1+ count
@@ -291,7 +233,7 @@ object LanguageModel {
     // float expression mirrored verbatim in the oracle:
     //   p = (greatest(coalesce(c2,0) - D, 0)
     //        + D * n1p_w1 * (n1pc_w2 / B)) / c1_w1
-    val scored = pairs
+    pairs
       .withColumn("w1", split(col("bg"), " ").getItem(0))
       .withColumn("w2", split(col("bg"), " ").getItem(1))
       .join(bgCounts.select(col("bg"), col("c2")), Seq("bg"), "left")
@@ -312,7 +254,6 @@ object LanguageModel {
       .groupBy("id")
       .agg(round(avg(col("s")) + 1e-9, 4).as("avg_surprisal"),
         count(lit(1)).as("n_transitions"))
-    (scored, release)
   }
 
   /** PMI collocations (Church & Hanks 1990): adjacent-token pairs
@@ -337,10 +278,8 @@ object LanguageModel {
     * the identical expression. */
   def pmiCollocations(docs: DataFrame, idCol: String, textCol: String,
       minCount: Long = 5L): DataFrame = {
-    val ws = filter(split(lower(col(textCol)), "\\s+"),
-      w => length(w) > 0)
     val tokenized = docs.where(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), ws.as("ws"))
+      .select(col(idCol).as("id"), wordsOf(textCol).as("ws"))
     // corpus scalars from the token ARRAYS (row-local, one scan):
     // U = sum(len), T = sum(max(len-1, 0))
     val stats = tokenized.agg(
@@ -392,9 +331,7 @@ object LanguageModel {
   def unigramSurprisalFast(docs: DataFrame, idCol: String,
       textCol: String, minCount: Long = 1L, maxModelRows: Int = 2000000)
       : DataFrame = {
-    val words = docs.select(
-      explode(filter(split(lower(col(textCol)), "\\s+"),
-        w => length(w) > 0)).as("w"))
+    val words = docs.select(explode(wordsOf(textCol)).as("w"))
     val counts = words.groupBy("w")
       .agg(count(lit(1)).as("cnt"))
       .where(col("cnt") >= minCount)
@@ -446,9 +383,8 @@ object LanguageModel {
       maxModelRows: Int = 2000000): DataFrame = {
     require(backoff > 0.0 && backoff <= 1.0,
       s"backoff factor must be in (0, 1], got $backoff")
-    val ws = filter(split(lower(col(textCol)), "\\s+"),
-      w => length(w) > 0)
-    val tokenized = docs.select(col(idCol).as("id"), ws.as("ws"))
+    val tokenized = docs.select(col(idCol).as("id"),
+      wordsOf(textCol).as("ws"))
     val bgCounts = tokenized
       .select(explode(bigramsUdf(col("ws"))).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("c2"))

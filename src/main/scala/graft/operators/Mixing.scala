@@ -130,17 +130,13 @@ object Mixing {
       return quotaSample(df, stratumCol, quotas, idCol, rankCol)
     val tDf = broadcast(thresholds.toDF(stratumCol, "__quota", "__t"))
     val joined = df.join(tDf, stratumCol)
-    // persisted across its two reads (verification count + the window);
-    // released when the NEXT invocation swaps it out (the LanguageModel
-    // fire-and-forget discipline) — an early unpersist would only force
+    // pinned across its two reads (verification count + the window)
+    // until the next invocation — an early unpersist would only force
     // a recompute, but the survivor set is ~slack×quota rows per
     // stratum, well worth keeping warm for the caller's action
     val survivors = joined
       .where(hashRankValue(col(idCol)) < col("__t"))
-    // release-BEFORE-persist (the pageRankFixed ordering)
-    lastQuotaRelease.swap(survivors.sparkSession,
-      () => { survivors.unpersist(); () })
-    survivors.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    lastQuotaRelease.pins(survivors.sparkSession).pin(survivors)
     val got = survivors.groupBy(stratumCol).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val failed = thresholds.collect {

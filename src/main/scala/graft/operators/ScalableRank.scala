@@ -146,12 +146,9 @@ object ScalableRank {
     val proj = df.select(col(keyCol), col(scoreCol), col(idCol))
     // The input pipeline (often an expensive scoring query) is read
     // THREE times: range-boundary sampling, shuffle write, and — only
-    // if a later stage retries — recompute. Persist it; released when
-    // the next invocation swaps the slot (recomputable, so a racing
-    // reader worst-cases into a recompute, never a wrong result).
-    lastRelease.swap(proj.sparkSession,
-      () => { proj.unpersist(); () }) // release first
-    proj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // if a later stage retries — recompute. Pinned until the next
+    // invocation.
+    lastRelease.pins(proj.sparkSession).pin(proj)
     val sorted = proj
       .repartitionByRange(p, col(keyCol).asc, scoreOrder,
         col(idCol).asc)

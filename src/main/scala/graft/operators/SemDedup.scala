@@ -96,7 +96,6 @@ object SemDedup {
       stride: Int, iters: Int, idCol: String, vecCol: String,
       maxCentroids: Int, gateFloor: Long): DataFrame = {
     require(eps > 0.0 && eps <= 1.0, s"eps must be in (0, 1], got $eps")
-    val sess = corpus.sparkSession
     // Census placement (round-16 verdict item 4 / advice, final
     // round-17 form): NO standalone census job anywhere in the call
     // chain. The k-means build self-censuses as a free-rider
@@ -114,18 +113,14 @@ object SemDedup {
     val (cents, census) = Similarity.kMeansCentroidsObserved(corpus,
       stride, iters, idCol, vecCol, maxCentroids, knownDupRows = None)
     // assigned is read several times below (both join sides, survivor
-    // base) — persist so the centroid-nearest expression (dim ×
+    // base) — pinned so the centroid-nearest expression (dim ×
     // centroids work per row) runs once per row
-    val assigned = Similarity.assignToCentroids(corpus, cents,
+    val pins = lastRelease.pins(corpus.sparkSession)
+    val assigned = pins.pin(Similarity.assignToCentroids(corpus, cents,
         idCol, vecCol)
       .where(col("centroid_id").isNotNull)
       .select(col(idCol).as("id"), col(vecCol).as("vec"),
-        col("centroid_id"))
-    // release-BEFORE-persist (the pageRankFixed ordering); the hook is
-    // registered immediately — any later action can throw
-    lastRelease.releasePrevious(sess)
-    assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastRelease.set(sess, () => { assigned.unpersist(); () })
+        col("centroid_id")))
     // Sub-floor corpora skip the gate job entirely (see [[GateFloor]]
     // — the worst case this admits is floor²-bounded); a missing
     // census (knownDupRows callers) conservatively runs the gate.
@@ -175,12 +170,8 @@ object SemDedup {
         .as("centroid_id"))
       .select(col("id"), col("vec"), col("centroid_id"))
     // base = class representatives + rows contraction must not touch.
-    // Read three times by pairKeep and once by the re-expansion —
-    // persist, and widen the release hook to cover it.
-    val base = reps.unionByName(assigned.where(!sd))
-    base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastRelease.set(sess,
-      () => { assigned.unpersist(); base.unpersist(); () })
+    // Read three times by pairKeep and once by the re-expansion.
+    val base = pins.pin(reps.unionByName(assigned.where(!sd)))
     // Why this is exact: all members of a vec class share every cosine
     // (to centroids and to any third vector), hence share centroid_id
     // — so (1) a non-rep member m is dropped by the original plan (its

@@ -38,9 +38,7 @@ import org.apache.spark.sql.functions._
   */
 object SequencePack {
 
-  /** Previous invocation's persisted base table, released on the next
-    * call (LanguageModel precedent: unpersisting a frame a running
-    * query still references only forces recompute, never wrongness). */
+  /** The base table, pinned until the next call. */
   private val lastRelease = ReleaseSlot()
 
   def packOrder(docs: DataFrame, idCol: String, tokensCol: String,
@@ -50,15 +48,11 @@ object SequencePack {
     // persisted: two plan branches read it (the bucket-sum aggregation
     // and the join's left side) — without the persist the upstream
     // token-count expression (a full-text regex scan in q85) runs over
-    // the corpus twice (jaccardPairsPrefixScoped precedent)
+    // the corpus twice
     val base = docs.select(col(idCol).cast("long").as("id"),
         col(tokensCol).cast("long").as("toks"))
       .withColumn("__bucket", expr(s"id DIV $groupWidth"))
-    // release-BEFORE-persist (the pageRankFixed ordering: releasing
-    // after would drop this call's cache-manager-deduped entry)
-    lastRelease.swap(base.sparkSession,
-      () => { base.unpersist(); () })
-    base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    lastRelease.pins(base.sparkSession).pin(base)
     val bucketSums = base.groupBy("__bucket")
       .agg(sum("toks").as("__bsum"))
     // exclusive prefix sum over the bucket SUMMARY — the one

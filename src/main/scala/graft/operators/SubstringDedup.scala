@@ -106,15 +106,10 @@ object SubstringDedup {
   def removeDuplicateWindows(df: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame = {
     // the window stream feeds BOTH the census and the join-back; un-
-    // persisted, the generate UDF re-tokenizes the corpus twice. Fire-
-    // and-forget release (ReleaseSlot contract: persist-backed, a late
-    // reader only recomputes)
+    // persisted, the generate UDF re-tokenizes the corpus twice
     val wins = windowed(df, idCol, textCol, n)
       .select(col("id"), col("pos"), md5(col("w")).as("f"))
-    // release-BEFORE-persist (the pageRankFixed ordering)
-    lastRemovalRelease.swap(wins.sparkSession,
-      () => { wins.unpersist(); () })
-    wins.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    lastRemovalRelease.pins(wins.sparkSession).pin(wins)
     // first occurrence per fingerprint: min (id, pos) lexicographic —
     // min(struct) partial-aggregates map-side (the argmax/q32 shape)
     val census = wins.groupBy("f")

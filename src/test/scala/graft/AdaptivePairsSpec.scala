@@ -612,7 +612,7 @@ class AdaptivePairsSpec extends SparkSuite {
     // routes the census frame itself, so hot/cold are its own rows
     def route(rows: Seq[(Long, Long)], gated: Boolean = true) = {
       val cen = rows.toDF("id", "dg").repartition(3)
-      Dedup.censusRoute(cen, "id", gated, new Dedup.Pins(s, slot))(_ => cen)
+      Dedup.censusRoute(cen, "id", gated, slot.pins(s))(_ => cen)
     }
     def ids(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.getLong(0)).toSet
@@ -643,6 +643,6 @@ class AdaptivePairsSpec extends SparkSuite {
     val all = (0L until 40L).map(i => (i, i / 4))
     assert(contract(route(all)) ===
       (((0L until 40L).toSet, Set.empty[Long], Dedup.GroupAll)))
-    slot.releasePrevious(s)
+    slot.pins(s)
   }
 }

@@ -450,25 +450,20 @@ class DedupSimilaritySpec extends SparkSuite {
     }
   }
 
-  test("jaccardPairsPrefixScoped releases its shingle-set cache via the " +
-      "returned hook, and the module slot keeps discarded-thunk " +
-      "invocations from accumulating pinned RDDs") {
-    val s = initSpark()
+  test("jaccardPairsPrefix pins its shingle sets; repeat calls stay " +
+      "flat") {
+    // a fresh session: no earlier invocation of this slot to release
+    val s = initSpark().newSession()
     val real = s.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val (pairs, release) =
-      Dedup.jaccardPairsPrefixScoped(real, "doc_id", "text", 3, 0.6)
-    pairs.count() // materialize: the persist is live now
-    val during = s.sparkContext.getPersistentRDDs.size
-    assert(during > 0,
+    val before = s.sparkContext.getPersistentRDDs.size
+    Dedup.jaccardPairsPrefix(real, "doc_id", "text", 3, 0.6)
+      .count() // materialize: the persist is live now
+    assert(s.sparkContext.getPersistentRDDs.size > before,
       "expected the operator's internal persist to be registered")
-    release()
-    assert(s.sparkContext.getPersistentRDDs.size < during,
-      "release hook must unpersist the internal shingle-set cache")
-    // bare-jaccardPairsPrefix callers DISCARD the thunk: the module
-    // ReleaseSlot must free each previous invocation's caches, so
-    // repeated calls hold the pinned count flat instead of growing it
-    // (UDF closures differ per call, so CacheManager never dedupes
-    // these persists on its own)
+    // the module ReleaseSlot must free each previous invocation's
+    // caches, so repeated calls hold the pinned count flat instead of
+    // growing it (UDF closures differ per call, so CacheManager never
+    // dedupes these persists on its own)
     Dedup.jaccardPairsPrefix(real, "doc_id", "text", 3, 0.6).count()
     val afterFirst = s.sparkContext.getPersistentRDDs.size
     Dedup.jaccardPairsPrefix(real, "doc_id", "text", 3, 0.6).count()
@@ -1431,8 +1426,7 @@ class DedupSimilaritySpec extends SparkSuite {
         Seq(2000L, 2001L, 2002L).map(i => (i, smallText)) ++
         Seq((3000L, "lone wolf text with no duplicate partner at all"))
     val df = corpus.toDF("doc_id", "text")
-    val (pairs, release) =
-      Dedup.jaccardPairsPrefixScoped(df, "doc_id", "text", 3, 0.6)
+    val pairs = Dedup.jaccardPairsPrefix(df, "doc_id", "text", 3, 0.6)
     val agg = pairs.agg(
       count(lit(1)).as("n"),
       countDistinct(struct(col("id_a"), col("id_b"))).as("nd"),
@@ -1440,7 +1434,6 @@ class DedupSimilaritySpec extends SparkSuite {
       min(col("jaccard")).as("jmin"), max(col("jaccard")).as("jmax"),
       sum(when(col("id_a") >= col("id_b"), 1).otherwise(0)).as("bad"))
       .collect().head
-    release()
     // expected: all i<j pairs inside each class, nothing across
     var en = 0L; var esa = 0L; var esb = 0L
     def clique(ids: Seq[Long]): Unit =
