@@ -312,19 +312,25 @@ object Bench {
       .r -> "",
     // observation names (a random UUID unless the caller named it)
     """()([0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12})"""
-      .r -> "uuid-")
+      .r -> "uuid-",
+    """(RDD\[)(\d+)""".r -> "", // RDD ids
+    """(Broadcast\()(\d+)""".r -> "", // broadcast ids
+    """(lambda x_)(\d+)""".r -> "") // lambda variable names
 
   /** One formatted plan section with the numbers that differ between
     * two runs of one build renumbered in order of first appearance
-    * (JVM-wide counters: expression, exchange and query stage ids,
-    * codegen ids by [[codegenGroups]]; random observation UUIDs) and
-    * JVM lambda classes printed without their address, so dumps of two
-    * builds diff to their plan differences. Two runs of one build still
-    * differ where AQE picks the other join build side and where
-    * concurrent eager actions finish in the other order. */
+    * (JVM-wide counters: expression, exchange, query stage, RDD and
+    * broadcast ids, lambda variable names, codegen ids by
+    * [[codegenGroups]]; random observation UUIDs), JVM lambda classes
+    * printed without their address and source line numbers in RDD call
+    * sites printed as `.scala:N`, so dumps of two builds, or of some
+    * queries against all of them, diff to their plan differences. Two
+    * runs of one build still differ where AQE picks the other join build
+    * side and where concurrent eager actions finish in the other order. */
   private[graft] def stableIds(section: String): String =
-    codegenGroups(runDependent.foldLeft(section.replaceAll(
-        """\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+""", "\\$Lambda")) {
+    codegenGroups(runDependent.foldLeft(section
+        .replaceAll("""\$Lambda\$\d+/0x[0-9a-f]+@[0-9a-f]+""", "\\$Lambda")
+        .replaceAll("""\.scala:\d+""", ".scala:N")) {
       case (text, (id, prefix)) =>
         val seen = mutable.HashMap.empty[String, Int]
         id.replaceAllIn(text, m => Regex.quoteReplacement(m.group(1) +

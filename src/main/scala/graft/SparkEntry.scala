@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expr.TopK
 import graft.functions.{TextClean, TextMetrics, VectorFunctions}
 import graft.ledger.Ledger
 import graft.operators.{Decontaminate, Dedup, Fan, ImportanceSampling,
@@ -319,10 +320,8 @@ object SparkEntry {
     "q05_top2_per_user" -> ((s, dir) => {
       val counts = t(s, dir, "events")
         .groupBy("user_id", "event_type").agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy(col("user_id"))
-        .orderBy(col("cnt").desc, col("event_type").asc)
-      counts.withColumn("rnk", row_number().over(w))
-        .where(col("rnk") <= 2)
+      TopK.perKey(counts, Seq(col("user_id")),
+          Seq(col("cnt").desc, col("event_type").asc), lit(2), Some("rnk"))
         .select("user_id", "event_type", "cnt", "rnk")
     }),
 

@@ -2,33 +2,61 @@ package graft.expr
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, row_number}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
-/** Bounded top-k-per-group aggregation (SURVEY §2.11's "optional
-  * TypedImperativeAggregate"): keep the k best rows of a struct per
-  * group in a size-k heap, with per-field sort directions.
+/** Greatest-n-per-group, the engine's one place for it, in two forms:
   *
-  * Scale rationale: the window formulation of top-k-per-group
-  * (`row_number().over(partitionBy(g).orderBy(...)) <= k`) shuffles and
-  * SORTS every row of every group; this aggregate does partial (map-side)
-  * top-k per partition — each partition contributes at most k rows per
-  * group to the shuffle — and merges heaps on the reduce side. At 100 TB
-  * with millions of rows per group and k in the tens, the shuffle volume
-  * drops by orders of magnitude. (Same plan shape Spark gives
-  * max_by/min_by, generalized to k > 1 with composite directional
-  * ordering.)
+  *  - [[perKey]], the window form: rank each key's rows by a total order
+  *    and keep the first `limit`. Rows stay rows (every column of the
+  *    input survives), the limit may differ per row (a per-stratum
+  *    quota), and a literal limit lets Spark cut each key's rows to the
+  *    limit before the shuffle. Every keep-first, latest-state, quota
+  *    sample and nearest-neighbor ranking goes through it.
+  *  - [[topKBy]], the aggregate form (SURVEY §2.11's "optional
+  *    TypedImperativeAggregate"): a bounded heap per group over a
+  *    struct of the ranked fields, returned as an array. Use it where
+  *    groups are huge, k is fixed, and an array per group is the wanted
+  *    output: partial (map-side) top-k per partition means each
+  *    partition ships at most k rows per group, and the reduce side
+  *    merges heaps instead of sorting every row (the plan shape Spark
+  *    gives max_by/min_by, generalized to k > 1 with composite
+  *    directional ordering).
   *
-  * Determinism: ties rank by the struct's remaining fields — callers
-  * include a unique tie-break field (reference discipline, FIXTURES.md).
+  * Determinism, both forms: ties rank by the remaining order fields —
+  * callers end the order with a unique tie-break (reference discipline,
+  * FIXTURES.md).
   */
 object TopK {
+
+  /** The first `limit` rows of each `keys` group in `order`:
+    * `row_number() over (partitionBy keys orderBy order) <= limit`,
+    * with the rank kept as `rankCol` (1-based, int) or dropped.
+    *
+    * `order` must be a total order within a key — end it with a unique
+    * tie-break — or which rows survive a tie depends on the shuffle.
+    * `limit` is an int literal (`lit(k)`) for a fixed k, or a column of
+    * the input for a per-row limit (a stratum's quota). Only a literal
+    * lets Spark plan `WindowGroupLimit` (Partial below the shuffle,
+    * Final above it), which cuts each partition's rows per key to the
+    * limit before they are shuffled; a column limit ranks every row. */
+  def perKey(df: DataFrame, keys: Seq[Column], order: Seq[Column],
+      limit: Column, rankCol: Option[String] = None): DataFrame = {
+    val rank = rankCol.getOrElse("__rank")
+    val kept = df
+      .withColumn(rank,
+        row_number().over(Window.partitionBy(keys: _*).orderBy(order: _*)))
+      .where(col(rank) <= limit)
+    if (rankCol.isEmpty) kept.drop(rank) else kept
+  }
 
   /** `topKBy(struct(a, b, ...), k, descending)` → array of the k
     * first-ranked structs, in rank order. `descending(i)` flips field i

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expr.TopK
+
 /** The query-engine heart: batch-selection operators over an append-only
   * process-state ledger (reference: modules/retrieve_data_from_database.py).
   *
@@ -27,13 +29,9 @@ object Ledger {
     * Ties broken by `tieBreak` descending to keep output deterministic.
     */
   def latestState(ledger: DataFrame, keyCols: Seq[String], orderCol: String,
-      tieBreak: String): DataFrame = {
-    val w = Window.partitionBy(keyCols.map(col): _*)
-      .orderBy(col(orderCol).desc, col(tieBreak).desc)
-    ledger.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
-  }
+      tieBreak: String): DataFrame =
+    TopK.perKey(ledger, keyCols.map(col),
+      Seq(col(orderCol).desc, col(tieBreak).desc), lit(1))
 
   /** Documents whose LATEST ledger state is in `steps` (reference:
     * retrieve_documents_ids_according_process_title,
@@ -89,14 +87,9 @@ object Ledger {
     * over (PARTITION BY doc, corpus ORDER BY used_since DESC) then rn=1).
     */
   def asOfLatest(df: DataFrame, partitionCols: Seq[String], timeCol: String,
-      cutoff: Column, tieBreak: String): DataFrame = {
-    val w = Window.partitionBy(partitionCols.map(col): _*)
-      .orderBy(col(timeCol).desc, col(tieBreak).desc)
-    df.where(col(timeCol) <= cutoff)
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
-  }
+      cutoff: Column, tieBreak: String): DataFrame =
+    TopK.perKey(df.where(col(timeCol) <= cutoff), partitionCols.map(col),
+      Seq(col(timeCol).desc, col(tieBreak).desc), lit(1))
 
   /** Deterministic pseudo-random sample (reference O4:
     * retrieve_data_from_database.py:286-291 ORDER BY random() LIMIT n; here

@@ -1,8 +1,9 @@
 package graft.ml
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.expr.TopK
 
 /** SDG classification re-expressed as coefficients-as-data (reference
   * M3/M4: modules/sdgs_classifiers.py — joblib sklearn linear models over
@@ -61,15 +62,13 @@ object SdgClassifier {
         array_contains(col("__forced"), col("sdg_number")))
     // argmax per slice with threshold semantics: forced set -> no
     // threshold (reference sdgs_classifiers.py:74-82 forced shortcut)
-    val w = Window.partitionBy(col(sliceId))
-      .orderBy(col("n_score").desc, col("sdg_number").asc)
-    candidate.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
+    TopK.perKey(candidate, Seq(col(sliceId)),
+        Seq(col("n_score").desc, col("sdg_number").asc), lit(1))
       .withColumn("sdg_number",
         when((col("__forced").isNotNull && size(col("__forced")) > 0) ||
           col("n_score") >= col("n_t"), col("sdg_number"))
           .otherwise(lit(null)))
-      .drop("__rn", "__forced", "n_w", "n_b", "n_t")
+      .drop("__forced", "n_w", "n_b", "n_t")
   }
 
   /** Reference M5 forced-classification set (document_classifier.py:
@@ -108,10 +107,8 @@ object SdgClassifier {
     val counts = sliceSdgs.where(col("sdg_number").isNotNull)
       .groupBy(col(docId), col("sdg_number"))
       .agg(count(lit(1)).as("cnt"))
-    val w = Window.partitionBy(col(docId))
-      .orderBy(col("cnt").desc, col("sdg_number").asc)
-    counts.withColumn("rnk", row_number().over(w))
-      .where(col("rnk") <= k)
+    TopK.perKey(counts, Seq(col(docId)),
+        Seq(col("cnt").desc, col("sdg_number").asc), lit(k), Some("rnk"))
       .groupBy(docId)
       .agg(sort_array(collect_list(struct(col("rnk"), col("sdg_number"))))
         .as("ranked"))

@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.expr.TopK
 import graft.functions.TextMetrics
 
 /** Deduplication operators for corpus-scale training-data pipelines
@@ -32,13 +32,10 @@ object Dedup {
     * representative rule as `exact`). What a training-data pipeline
     * actually materializes after q20's group census. */
   def dedupKeepFirst(df: DataFrame, idCol: String,
-      textCol: String): DataFrame = {
-    val w = Window.partitionBy(col("__fp")).orderBy(col(idCol).asc)
-    df.withColumn("__fp", TextMetrics.fingerprint(col(textCol)))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__fp", "__rn")
-  }
+      textCol: String): DataFrame =
+    TopK.perKey(df.withColumn("__fp", TextMetrics.fingerprint(col(textCol))),
+      Seq(col("__fp")), Seq(col(idCol).asc), lit(1))
+      .drop("__fp")
 
   /** INCREMENTAL exact dedup — the production shape at 100 TB: a new
     * batch dedups against an already-indexed snapshot WITHOUT touching
@@ -60,12 +57,11 @@ object Dedup {
     val seen = snapshot
       .select(TextMetrics.fingerprint(col(textCol)).as("__fp"))
       .distinct()
-    val w = Window.partitionBy(col("__fp")).orderBy(col(idCol).asc)
-    batch.withColumn("__fp", TextMetrics.fingerprint(col(textCol)))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
+    TopK.perKey(
+        batch.withColumn("__fp", TextMetrics.fingerprint(col(textCol))),
+        Seq(col("__fp")), Seq(col(idCol).asc), lit(1))
       .join(seen, Seq("__fp"), "left_anti")
-      .drop("__fp", "__rn")
+      .drop("__fp")
   }
 
   /** Distinct word n-gram shingles per document, exploded:

@@ -3,7 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import org.apache.hadoop.fs.Path
+
 import graft.HadoopFs
+import graft.sinks.TxnLog
 
 /** PERSISTED IVF index — the Spark-native form of "build the ANN index
   * once, probe it many times". FAISS keeps an inverted-list file per
@@ -50,36 +53,23 @@ object IvfIndex {
   /** Probe the persisted index: top-k by cosine among the `nProbe`
     * nearest buckets per query. The vectors scan is pruned by DPP from
     * the broadcast probe side — assert `isDppPruned` in tests/ops to
-    * prove the plan, not just the result. Same scoring/tie-break
-    * contract as Similarity.ivfTopK (rounded score desc, id asc). */
+    * prove the plan, not just the result. Ranked by
+    * [[Similarity.rankNeighbors]], the contract of Similarity.ivfTopK. */
   def topK(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int, nProbe: Int, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cents = spark.read.parquet(s"$dir/centroids")
     val vectors = spark.read.parquet(s"$dir/vectors")
     val probes = Similarity.probeCentroids(queries, cents, nProbe,
         idCol, vecCol)
       .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
         col("centroid_id"))
-    // rank on the ROUNDED score (4 dp) with id tie-break — the exact
-    // contract of Similarity.ivfTopK/bruteForceTopK (unified in round
-    // 14: raw-double ranking diverged from brute force at 4-dp-tied
-    // rank boundaries on clustered corpora), so index-vs-in-memory
-    // results are comparable row-for-row
-    val scored = vectors
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
-        col("centroid_id"))
-      .join(broadcast(probes), "centroid_id")
-      .where(col("c_id") =!= col("q_id"))
-      .withColumn("score", round(
-        graft.expr.VectorOps.cosineF32(col("q_vec"), col("c_vec"))
-          + 1e-9, 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("c_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("score"), col("rank"))
+    Similarity.rankNeighbors(
+      vectors
+        .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"),
+          col("centroid_id"))
+        .join(broadcast(probes), "centroid_id"),
+      graft.expr.VectorOps.cosineF32(col("q_vec"), col("c_vec")), k)
   }
 
   /** True when the executed plan pruned the vectors scan with a runtime
@@ -136,7 +126,7 @@ object IvfIndex {
   // while Spark wrote the data to the real store. ----
 
   private def markerPath(dir: String, v: Long) =
-    new org.apache.hadoop.fs.Path(s"$dir/v_$v/_COMMITTED")
+    new Path(s"$dir/v_$v/_COMMITTED")
 
   /** Committed index versions under `dir`, ascending. A version exists
     * only once its `_COMMITTED` marker does — a crashed or in-flight
@@ -155,39 +145,36 @@ object IvfIndex {
     committedVersions(dir).lastOption
 
   /** Rebuild the index WITHOUT disturbing concurrent probes: claim the
-    * next version via an atomic `_CLAIM` file create (overwrite=false
-    * — two racing builders get distinct versions), write
-    * centroids+vectors fully, then publish with the `_COMMITTED`
-    * marker. Readers resolve the highest committed version at plan
-    * time; versions already being probed are immutable, so a rebuild
-    * never invalidates a running query (the same reasoning as TxnLog
-    * snapshots). Returns the published version. */
+    * next version's `_CLAIM` file through `TxnLog.claim` (a hard link
+    * on local paths, a fail-if-exists rename on the HDFS family, refused
+    * elsewhere), so two racing builders get distinct versions —
+    * `create(overwrite = false)` is not atomic on `file:` (an exists
+    * check, then an open); write centroids+vectors fully, then publish
+    * with the `_COMMITTED` marker. Readers resolve the highest committed
+    * version at plan time; versions already being probed are
+    * immutable, so a rebuild never invalidates a running query (the
+    * same reasoning as TxnLog snapshots). Returns the published
+    * version. */
   def buildVersioned(corpus: DataFrame, dir: String, stride: Int,
       iters: Int = 3, idCol: String = "vec_id",
       vecCol: String = "embedding",
       maxCentroids: Int = Similarity.MaxCentroids): Long = {
     val (fs, root) = HadoopFs(SparkSession.active, dir)
     fs.mkdirs(root)
-    var v = {
-      // start above every claimed OR committed version
-      val names = fs.listStatus(root).toSeq
-        .map(_.getPath.getName).filter(_.startsWith("v_"))
-        .flatMap(_.stripPrefix("v_").toLongOption)
-      names.maxOption.getOrElse(-1L) + 1
-    }
-    var claimed = false
-    while (!claimed) {
-      try {
-        fs.create(
-          new org.apache.hadoop.fs.Path(s"$dir/v_$v/_CLAIM"),
-          false).close() // overwrite=false: atomic claim
-        claimed = true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => v += 1
-        case _: java.io.IOException if fs.exists(
-          new org.apache.hadoop.fs.Path(s"$dir/v_$v/_CLAIM")) => v += 1
-      }
-    }
+    // start above every claimed OR committed version
+    var v = fs.listStatus(root).toSeq
+      .map(_.getPath.getName).filter(_.startsWith("v_"))
+      .flatMap(_.stripPrefix("v_").toLongOption)
+      .maxOption.getOrElse(-1L) + 1
+    val tmp = new Path(root,
+      s".claim-${java.util.UUID.randomUUID().toString.take(12)}.tmp")
+    fs.create(tmp, false).close()
+    try {
+      while ({
+        fs.mkdirs(new Path(s"$dir/v_$v"))
+        !TxnLog.claim(fs, tmp, new Path(s"$dir/v_$v/_CLAIM"))
+      }) v += 1
+    } finally fs.delete(tmp, false)
     build(corpus, s"$dir/v_$v", stride, iters, idCol, vecCol,
       maxCentroids)
     fs.create(markerPath(dir, v), false).close()

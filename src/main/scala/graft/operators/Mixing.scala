@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.expr.TopK
+
 /** Dataset-mixing operators for training-corpus assembly: deterministic
   * CONTENT-HASH sampling and split assignment. `rand()`-based sampling
   * is seed- and partitioning-dependent and unreproducible across
@@ -79,18 +81,22 @@ object Mixing {
     val spark = df.sparkSession
     import spark.implicits._
     val qDf = quotas.toSeq.toDF(stratumCol, "__quota")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(stratumCol)
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    val ranked = df.join(broadcast(qDf), stratumCol)
-      .withColumn("__rank", row_number().over(w))
-      .where(col("__rank") <= col("__quota"))
-      .drop("__quota")
-    rankCol match {
-      case Some(name) => ranked.withColumnRenamed("__rank", name)
-      case None => ranked.drop("__rank")
-    }
+    quotaTake(df.join(broadcast(qDf), stratumCol), stratumCol, idCol,
+      rankCol, "__quota")
   }
+
+  /** The take every quota sampler ends with: keep each stratum's first
+    * `quotaCol` rows of `joined` (the rows with their stratum's quota
+    * joined on) in the deterministic md5 order, ties by id, through
+    * [[TopK.perKey]]; the quota and `helperCols` go, the rank
+    * stays as `rankCol` or goes. */
+  private def quotaTake(joined: DataFrame, stratumCol: String,
+      idCol: String, rankCol: Option[String], quotaCol: String,
+      helperCols: String*): DataFrame =
+    TopK.perKey(joined, Seq(col(stratumCol)),
+        Seq(md5(col(idCol).cast("string")), col(idCol)), col(quotaCol),
+        rankCol)
+      .drop(quotaCol +: helperCols: _*)
 
   /** [[quotaSample]] for strata too large to sort in one window
     * partition — SAME rows out, 100-TB plan: the md5 rank prefix is
@@ -149,17 +155,7 @@ object Mixing {
       else survivors.where(!col(stratumCol).isin(failed: _*))
         .unionByName(joined.where(col(stratumCol).isin(failed: _*))
           .withColumn("__t", lit(full)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(stratumCol)
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    val ranked = windowInput
-      .withColumn("__rank", row_number().over(w))
-      .where(col("__rank") <= col("__quota"))
-      .drop("__quota", "__t")
-    rankCol match {
-      case Some(name) => ranked.withColumnRenamed("__rank", name)
-      case None => ranked.drop("__rank")
-    }
+    quotaTake(windowInput, stratumCol, idCol, rankCol, "__quota", "__t")
   }
 
   private val lastQuotaRelease = ReleaseSlot()
@@ -199,17 +195,8 @@ object Mixing {
       .withColumn("__quota",
         expr(s"($target * __wq) DIV __wtot"))
       .select(col(stratumCol), col("__quota"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(stratumCol)
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    val ranked = df.join(broadcast(quotas), stratumCol)
-      .withColumn("__rank", row_number().over(w))
-      .where(col("__rank") <= col("__quota"))
-      .drop("__quota")
-    rankCol match {
-      case Some(name) => ranked.withColumnRenamed("__rank", name)
-      case None => ranked.drop("__rank")
-    }
+    quotaTake(df.join(broadcast(quotas), stratumCol), stratumCol, idCol,
+      rankCol, "__quota")
   }
 
   /** Water-filling quota vector: the LARGEST uniform cap `c` such
@@ -273,17 +260,8 @@ object Mixing {
   def waterFillMix(df: DataFrame, stratumCol: String, idCol: String,
       target: Long, rankCol: Option[String] = None): DataFrame = {
     val quotas = waterFillQuotas(df, stratumCol, target)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(stratumCol)
-      .orderBy(md5(col(idCol).cast("string")), col(idCol))
-    val ranked = df.join(broadcast(quotas), stratumCol)
-      .withColumn("__rank", row_number().over(w))
-      .where(col("__rank") <= col("quota"))
-      .drop("quota")
-    rankCol match {
-      case Some(name) => ranked.withColumnRenamed("__rank", name)
-      case None => ranked.drop("__rank")
-    }
+    quotaTake(df.join(broadcast(quotas), stratumCol), stratumCol, idCol,
+      rankCol, "quota")
   }
 
   /** Deterministic train/val/test assignment by hash bucket:

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Product quantization for embedding columns (ANN memory tier beyond
@@ -129,14 +128,7 @@ object ProductQuantizer {
     val coded = corpus.select(col(idCol).as("c_id"),
       encode(model)(col(vecCol)).as("codes"))
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-    val scored = coded.crossJoin(broadcast(q))
-      .where(col("c_id") =!= col("q_id"))
-      .withColumn("score",
-        round(adcScore(model)(col("codes"), col("q_vec")) + 1e-9, 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("c_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("q_id", "c_id", "score", "rank")
+    Similarity.rankNeighbors(coded.crossJoin(broadcast(q)),
+      adcScore(model)(col("codes"), col("q_vec")), k)
   }
 }

@@ -5,11 +5,11 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 
+import graft.expr.TopK
 import graft.expr.VectorOps.cosineF32
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -65,18 +65,35 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val c = corpus.select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-    // rank on the ROUNDED score (4 dp) with id tie-break: float-sum noise
-    // across engines/partitionings is ~1e-12, far below the rounding
-    // granularity, so ranks are reproducible bit-for-bit.
-    val scored = c.crossJoin(broadcast(q))
-      .where(col("c_id") =!= col("q_id"))
-      .withColumn("score", round(cosineF32(col("q_vec"), col("c_vec")) + 1e-9, 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("c_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("score"), col("rank"))
+    rankNeighbors(c.crossJoin(broadcast(q)),
+      cosineF32(col("q_vec"), col("c_vec")), k)
   }
+
+  /** The ranking contract of every top-k search (brute force, IVF,
+    * IVF-PQ, PQ and the persisted [[IvfIndex]]): of the candidate
+    * `pairs` (q_id, c_id, ...) drop self-pairs, score each by
+    * `rawScore` ROUNDED to 4 dp, and keep each query's first `k` by
+    * score desc, c_id asc, through [[TopK.perKey]]. Output: q_id, c_id,
+    * score, rank.
+    *
+    * Rank on the rounded score, not the raw double: float-sum noise
+    * across engines and partitionings is ~1e-12, far below the rounding
+    * granularity, so ranks are reproducible bit-for-bit. Under tight
+    * clusters many candidates share a 4-dp score at the rank-k
+    * boundary, and raw-double ordering there made full-probe IVF
+    * disagree with brute force (round-14 clustered-fixture finding:
+    * nProbe = all buckets read recall 0.84, not 1.0). With one
+    * contract, nProbe = centroid count recovers brute force exactly on
+    * any corpus, and the persisted index's results compare
+    * row-for-row with the in-memory ones. */
+  private[operators] def rankNeighbors(pairs: DataFrame, rawScore: Column,
+      k: Int): DataFrame =
+    TopK.perKey(
+        pairs.where(col("c_id") =!= col("q_id"))
+          .withColumn("score", round(rawScore + 1e-9, 4)),
+        Seq(col("q_id")), Seq(col("score").desc, col("c_id").asc), lit(k),
+        Some("rank"))
+      .select("q_id", "c_id", "score", "rank")
 
   /** Deterministic centroid pick: every effective-stride-th vector by
     * id, where the effective stride widens past `stride` whenever the
@@ -322,16 +339,8 @@ object Similarity {
       .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
       .withColumn("centroid_id",
         explode(probesCol(queries, cents, nProbe, col("q_vec"))))
-    val scored = probes.join(coded, "centroid_id")
-      .where(col("c_id") =!= col("q_id"))
-      .withColumn("score", round(
-        ProductQuantizer.adcScore(pq)(col("codes"), col("q_vec"))
-          + 1e-9, 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("c_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select("q_id", "c_id", "score", "rank")
+    rankNeighbors(probes.join(coded, "centroid_id"),
+      ProductQuantizer.adcScore(pq)(col("codes"), col("q_vec")), k)
   }
 
   /** ivfTopK over k-means-refined centroids (same probe/prune plan
@@ -490,23 +499,8 @@ object Similarity {
       .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
       .withColumn("centroid_id",
         explode(probesCol(queries, cents, nProbe, col("q_vec"))))
-    // rank on the ROUNDED score (4 dp) with id tie-break — the
-    // bruteForceTopK contract, NOT the raw double: under tight
-    // clusters many candidates share a 4-dp score at the rank-k
-    // boundary, and raw-double ordering there made full-probe IVF
-    // disagree with brute force (round-14 clustered-fixture finding:
-    // nProbe = all buckets read recall 0.84, not 1.0). With one
-    // contract, nProbe = centroid count recovers brute force exactly
-    // on ANY corpus.
-    val scored = probes.join(assigned, "centroid_id")
-      .where(col("c_id") =!= col("q_id"))
-      .withColumn("score",
-        round(cosineF32(col("q_vec"), col("c_vec")) + 1e-9, 4))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("score").desc, col("c_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("c_id"), col("score"), col("rank"))
+    rankNeighbors(probes.join(assigned, "centroid_id"),
+      cosineF32(col("q_vec"), col("c_vec")), k)
   }
 
   /** Random-hyperplane LSH signature: sign bit of the dot product against

@@ -6,6 +6,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.storage.StorageLevel
 
 import graft.HadoopFs
+import graft.expr.TopK
 
 /** Warehouse writers with the reference's idempotency semantics
   * (SURVEY R9/S16-S18), re-expressed as set operations + partitioned
@@ -40,14 +41,9 @@ object Merge {
     * `orderCol` wins, deterministic). The existing side needs no
     * distinct: a left-anti join ignores duplicate keys. */
   def insertIfAbsentDf(existing: DataFrame, incoming: DataFrame,
-      key: String, orderCol: String): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col(orderCol))
-    incoming
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1).drop("__rn")
+      key: String, orderCol: String): DataFrame =
+    TopK.perKey(incoming, Seq(col(key)), Seq(col(orderCol)), lit(1))
       .join(existing.select(key), Seq(key), "left_anti")
-  }
 
   /** S18 semantics, pure form: `table` with every row whose `key` appears
     * in `replacement` swapped out for the replacement rows. */

@@ -204,6 +204,39 @@ class ApproxQualitySpec extends SparkSuite {
     assert(IvfIndex.currentVersion(idx) === Some(1L))
   }
 
+  test("versioned index builds claim atomically: racing builds get " +
+      "distinct committed versions, a claimed version is skipped, and " +
+      "probes read committed versions only") {
+    val s = initSpark()
+    import graft.operators.IvfIndex
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val emb = s.read.parquet(s"$dir/embeddings.parquet")
+      .where(col("vec_id") < 200)
+    val idx = java.nio.file.Files.createTempDirectory("ivfc").toString
+    // a builder that claimed v_2 and never committed
+    java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(s"$idx/v_2"))
+    java.nio.file.Files.createFile(
+      java.nio.file.Paths.get(s"$idx/v_2/_CLAIM"))
+    val built = Await.result(Future.sequence(Seq.fill(3)(Future(
+      IvfIndex.buildVersioned(emb, idx, stride = 20, iters = 1)))),
+      10.minutes)
+    assert(built.sorted === Seq(3L, 4L, 5L), built)
+    assert(IvfIndex.committedVersions(idx) === Seq(3L, 4L, 5L))
+    // no claim's temporary file is left behind
+    assert(new java.io.File(idx).list().sorted.toSeq ===
+      Seq("v_2", "v_3", "v_4", "v_5"))
+    val q = emb.where(col("vec_id") < 5)
+    assert(IvfIndex.topKVersioned(s, idx, q, k = 3, nProbe = 2)
+      .count() === 15L)
+    val refused = intercept[IllegalArgumentException](
+      IvfIndex.topKVersioned(s, idx, q, k = 3, nProbe = 2,
+        asOf = Some(2L)))
+    assert(refused.getMessage.contains("not committed"))
+  }
+
   test("IVF append: adds route through the FROZEN centroid model " +
       "(equals a bulk assign over the same model), appended vectors " +
       "are probe-able, DPP still prunes") {

@@ -253,6 +253,45 @@ class HarnessSpec extends SparkSuite {
     assert(Bench.stableIds(run2.replace("count(1)", "count(2)")) !== stable)
   }
 
+  test("plan dumps renumber JVM-wide counters and call-site lines: two " +
+      "builds' dumps differing only in them normalize equal") {
+    val build1 = """(1) Scan ExistingRDD
+      |Output [2]: [id#4L, rep#5L]
+      |Arguments: [id#4L, rep#5L], MapPartitionsRDD[503] at createDataFrame at Dedup.scala:1738, ExistingRDD, UnknownPartitioning(0)
+      |
+      |(2) Generate
+      |Arguments: explode(centroid_probes(embedding#7, Broadcast(361), 3)), [id#4L], false, [centroid_id#8L]
+      |
+      |(3) Project [codegen id : 1]
+      |Output [1]: [transform(toks#9, lambdafunction(lower(lambda x_127#10), lambda x_127#10, false)) AS t#11]
+      |
+      |(4) Scan ExistingRDD
+      |Arguments: [id#12L], MapPartitionsRDD[486] at createDataFrame at Dedup.scala:821, ExistingRDD, UnknownPartitioning(0)
+      |
+      |(5) Project [codegen id : 2]
+      |Output [1]: [filter(toks#9, lambdafunction(isnotnull(lambda x_128#13), lambda x_128#13, false)) AS f#14, MapPartitionsRDD[503]]
+      |""".stripMargin
+    val build2 = build1
+      .replace("MapPartitionsRDD[503]", "MapPartitionsRDD[1278]")
+      .replace("MapPartitionsRDD[486]", "MapPartitionsRDD[1260]")
+      .replace("Dedup.scala:1738", "Dedup.scala:1741")
+      .replace("Dedup.scala:821", "Dedup.scala:811")
+      .replace("Broadcast(361)", "Broadcast(406)")
+      .replace("x_127", "x_3").replace("x_128", "x_4")
+    val stable = Bench.stableIds(build1)
+    assert(Bench.stableIds(build2) === stable)
+    for (text <- Seq("MapPartitionsRDD[1] at createDataFrame at " +
+        "Dedup.scala:N", "MapPartitionsRDD[2] at createDataFrame at " +
+        "Dedup.scala:N", "Broadcast(1)", "lambda x_1#6", "lambda x_2#9",
+        "AS f#10, MapPartitionsRDD[1]]"))
+      assert(stable.contains(text), text)
+    // a changed call site, or a second RDD where one was, still shows
+    assert(Bench.stableIds(build2.replace("Dedup.scala:811",
+      "Mixing.scala:811")) !== stable)
+    assert(Bench.stableIds(build2.replace("MapPartitionsRDD[1260]",
+      "MapPartitionsRDD[1278]")) !== stable)
+  }
+
   private def sleepyJob(s: SparkSession, ms: Long): Unit = {
     s.sparkContext.parallelize(1 to 2, 2).map { i => Thread.sleep(ms); i }
       .count()

@@ -51,6 +51,18 @@ class PlanSpec extends SparkSuite {
       s"expected 1 shuffle, saw $exchanges:\n" + plan.take(2000))
   }
 
+  test("a literal TopK.perKey limit plans WindowGroupLimit Partial and " +
+      "Final (the group limit runs below the shuffle)") {
+    // q03: latestState, k = 1; q05: top-2 per user
+    for (q <- Seq("q03_latest_event", "q05_top2_per_user")) {
+      val plan = planOf(SparkEntry.queries(q)(initSpark(), dir))
+      val limits = plan.linesIterator.filter(_.contains("WindowGroupLimit"))
+        .toSeq
+      assert(limits.exists(_.contains("Partial")) &&
+        limits.exists(_.contains("Final")), s"$q:\n" + plan.take(3000))
+    }
+  }
+
   test("ann brute force keeps the corpus side shuffle-free pre-ranking") {
     val df = SparkEntry.queries("q24_ann_topk")(initSpark(), dir)
     val plan = planOf(df)

@@ -4,10 +4,52 @@ import org.apache.spark.sql.functions._
 
 import graft.expr.TopK
 
-/** Bounded top-k TypedImperativeAggregate: equivalence with the window
-  * formulation across partitionings (exercises partial update, shuffle
-  * serialize/deserialize, and heap merge). */
+/** Both forms of top-k-per-group. The bounded TypedImperativeAggregate:
+  * equivalence with the window formulation across partitionings
+  * (exercises partial update, shuffle serialize/deserialize, and heap
+  * merge). The window operator `perKey`: equivalence with a hand-written
+  * `row_number` window, for literal and per-row limits. */
 class TopKSpec extends SparkSuite {
+
+  test("perKey == hand-written row_number window on randomized frames " +
+      "(score ties, null keys and order values, repartitioning; literal " +
+      "and per-row limits; rank kept and dropped) (property)") {
+    val s = initSpark()
+    import s.implicits._
+    import org.scalacheck.{Gen, Test => SCTest}
+    import org.scalacheck.Prop.forAll
+    val gen = for {
+      n <- Gen.choose(0, 150)
+      rows <- Gen.listOfN(n, for {
+        g <- Gen.option(Gen.choose(0, 4))
+        score <- Gen.option(Gen.choose(-3L, 3L))
+        quota <- Gen.choose(0, 3)
+      } yield (g, score, quota))
+      k <- Gen.choose(1, 4)
+      parts <- Gen.choose(1, 9)
+      perRow <- Gen.oneOf(true, false)
+    } yield (rows, k, parts, perRow)
+    val prop = forAll(gen) { case (rows, k, parts, perRow) =>
+      val df = rows.zipWithIndex
+        .map { case ((g, score, quota), id) => (g, score, quota, id.toLong) }
+        .toDF("g", "score", "quota", "id").repartition(parts)
+      val order = Seq(col("score").desc, col("id").asc)
+      val limit = if (perRow) col("quota") else lit(k)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("g")).orderBy(order: _*)
+      val want = df.withColumn("rk", row_number().over(w))
+        .where(col("rk") <= limit)
+      val kept = TopK.perKey(df, Seq(col("g")), order, limit, Some("rk"))
+      val dropped = TopK.perKey(df, Seq(col("g")), order, limit)
+      kept.columns.toSeq == df.columns.toSeq :+ "rk" &&
+        dropped.columns.toSeq == df.columns.toSeq &&
+        kept.collect().toSet == want.collect().toSet &&
+        dropped.collect().toSet == want.drop("rk").collect().toSet
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(12), prop)
+    assert(res.passed, res.status.toString)
+  }
 
   test("topKBy matches row_number window top-k under repartitioning") {
     val s = initSpark()
